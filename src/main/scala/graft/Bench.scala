@@ -92,19 +92,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
       .foreach(d => builder.config("spark.graft.checkpointDir", d))
-    // SPARK_GRAFT_CONF: semicolon-separated k=v pairs applied LAST — the
-    // A/B knob for scale experiments (e.g. AQE initialPartitionNum at
-    // gen-100) so a conf probe never needs a code edit; a malformed pair
-    // fails loudly rather than silently benching the default.
-    sys.env.get("SPARK_GRAFT_CONF").filter(_.nonEmpty).foreach { s =>
-      s.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_CONF: malformed pair '$kv'")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
+    // SPARK_GRAFT_CONF k=v pairs apply LAST (see GraftSession.withEnvConf)
+    val spark = GraftSession.withEnvConf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Bounded-frame windows are audited + plan-pinned; see the scaladoc
     // on GraftSession.silenceBoundedWindowWarning for why this is honest.

@@ -95,6 +95,24 @@ object GraftSession {
         CodegenCacheMaxEntries.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
+  /** Apply `SPARK_GRAFT_CONF` — semicolon-separated k=v pairs — to `b`.
+    * The harness mains (Bench, PlanDump) call it LAST, as the A/B knob
+    * for scale experiments (e.g. AQE initialPartitionNum at gen-100), so
+    * a conf probe or a before/after plan diff never needs a code edit. A
+    * malformed pair fails loudly rather than silently running the
+    * default. */
+  def withEnvConf(b: SparkSession.Builder): SparkSession.Builder = {
+    sys.env.get("SPARK_GRAFT_CONF").filter(_.nonEmpty).foreach { s =>
+      s.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.nonEmpty => b.config(k, v)
+          case _ => sys.error(s"SPARK_GRAFT_CONF: malformed pair '$kv'")
+        }
+      }
+    }
+    b
+  }
+
   /** s3a configuration profile mirroring the reference's actual object
     * layout (raw `s3://…/Day_Wise/<date>/event.csv` reads, mart
     * `s3://…/aggregates/<metric>/dt=…` partitioned parquet writes —

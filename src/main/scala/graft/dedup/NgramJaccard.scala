@@ -175,37 +175,12 @@ object NgramJaccard {
     * the small-corpus idle-core fix, same story as the scan spread. */
   def invertedIndexPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
                          threshold: Double = 0.6, dfCap: Int = 50,
-                         postingParts: Option[Int] = None): DataFrame = {
-    val grams0 = docs.select(col("doc_id"),
-      explode(wordShingleHashSet(col(textCol), lit(w))).as("gram"))
-    val grams = postingParts.map(p => grams0.repartition(p, col("gram")))
-      .getOrElse(grams0)
-    // Build the posting list per gram in ONE exchange and cap it there —
-    // stop-gram pruning (df > dfCap → dropped) happens before any pair is
-    // produced, and the pair expansion is a double explode of the capped
-    // id list, never a second shuffle (the [[MinHashLSH.candidatePairs]]
-    // shape). cappedIds bounds the aggregation BUFFER at dfCap+1 ids too:
-    // a viral gram never materializes its full posting list before being
-    // dropped. Both the per-doc sizes and the intersection counts derive
-    // from the same exchange, which ReuseExchange runs once.
-    val postings = grams.groupBy("gram")
-      .agg(graft.functions.CappedCollect.cappedIds(dfCap)(col("doc_id")).as("ids"))
-      .filter(col("ids").isNotNull)
-    val posts = postings.select(explode(col("ids")).as("doc_id"), col("ids"))
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = posts
-      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("shared"))
-    inter
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "n" -> "n_a")), Seq("doc_a"))
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "n" -> "n_b")), Seq("doc_b"))
+                         postingParts: Option[Int] = None): DataFrame =
+    sharedGramCounts(docs, textCol, w, dfCap, postingParts)
       .withColumn("jaccard", col("shared").cast("double") /
         (col("n_a") + col("n_b") - col("shared")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-  }
 
   /** Asymmetric CONTAINMENT pairs (m113, Broder 1997's "roughly
     * contained" resemblance variant — public): containment_a =
@@ -225,29 +200,44 @@ object NgramJaccard {
     * convention the Jaccard tier and its oracle use. */
   def containmentPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
                        threshold: Double = 0.8, dfCap: Int = 50,
-                       postingParts: Option[Int] = None): DataFrame = {
-    // postingParts: same gated exchange pin as [[invertedIndexPairs]]
-    val grams0 = docs.select(col("doc_id"),
-      explode(wordShingleHashSet(col(textCol), lit(w))).as("gram"))
-    val grams = postingParts.map(p => grams0.repartition(p, col("gram")))
-      .getOrElse(grams0)
-    val postings = grams.groupBy("gram")
-      .agg(graft.functions.CappedCollect.cappedIds(dfCap)(col("doc_id")).as("ids"))
-      .filter(col("ids").isNotNull)
-    val posts = postings.select(explode(col("ids")).as("doc_id"), col("ids"))
-    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = posts
-      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("shared"))
-    inter
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "n" -> "n_a")), Seq("doc_a"))
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "n" -> "n_b")), Seq("doc_b"))
+                       postingParts: Option[Int] = None): DataFrame =
+    sharedGramCounts(docs, textCol, w, dfCap, postingParts)
       .withColumn("containment_a", col("shared").cast("double") / col("n_a"))
       .withColumn("containment_b", col("shared").cast("double") / col("n_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)
       .select("doc_a", "doc_b", "n_a", "n_b", "shared",
         "containment_a", "containment_b")
+
+  /** The posting-list core both pair tiers score: one row per doc pair
+    * (doc_a < doc_b) sharing at least one kept gram, with the shared-gram
+    * count and each doc's kept-gram count (doc_a, doc_b, shared, n_a, n_b).
+    * `postingParts` pins the gram exchange (see [[invertedIndexPairs]]). */
+  private def sharedGramCounts(docs: DataFrame, textCol: String, w: Int,
+                               dfCap: Int,
+                               postingParts: Option[Int]): DataFrame = {
+    val grams0 = docs.select(col("doc_id"),
+      explode(wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+    val grams = postingParts.map(p => grams0.repartition(p, col("gram")))
+      .getOrElse(grams0)
+    // Build the posting list per gram in ONE exchange and cap it there —
+    // stop-gram pruning (df > dfCap → dropped) happens before any pair is
+    // produced, and the pair expansion is a double explode of the capped
+    // id list, never a second shuffle (the [[MinHashLSH.candidatePairs]]
+    // shape). cappedIds bounds the aggregation BUFFER at dfCap+1 ids too:
+    // a viral gram never materializes its full posting list before being
+    // dropped. Both the per-doc sizes and the intersection counts derive
+    // from the same exchange, which ReuseExchange runs once.
+    val postings = grams.groupBy("gram")
+      .agg(graft.functions.CappedCollect.cappedIds(dfCap)(col("doc_id")).as("ids"))
+      .filter(col("ids").isNotNull)
+    val posts = postings.select(explode(col("ids")).as("doc_id"), col("ids"))
+    val sizes = posts.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    posts
+      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("shared"))
+      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "n" -> "n_a")), Seq("doc_a"))
+      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "n" -> "n_b")), Seq("doc_b"))
   }
 }

@@ -86,11 +86,9 @@ object PageRank {
     // halving the checkpoint jobs. Values are unchanged by construction:
     // the dataflow between pins is the same exchanges with the same
     // partial-aggregation shape, checkpointed or not (oracle-verified).
-    // clamped to >= 1 (ADVICE r20): 0 would throw at `i % PinEvery`,
-    // and a negative value would never pin, letting the plan grow
-    // unboundedly across iterations
-    val PinEvery = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.pinEvery").map(_.toInt.max(1)).getOrElse(2)
+    // A fixed cadence, not a knob: r20 measured 2 fastest of 1–3, and the
+    // r21 re-sweep of 2–10 found the cadences within noise.
+    val PinEvery = 2
     for (i <- 1 to iterations) {
       val contribs = base.join(ranks, col("src") === col("node"))
         .select(col("dst"), (col("rank") / col("od")).as("c"))

@@ -25,21 +25,27 @@ import graft.Snapshot.SnapshotOps
   */
 object CorpusPipeline {
 
-  /** `snapshot = false` skips the mid-pipeline localCheckpoint so the whole
-    * dataflow stays ONE inspectable plan — PlanSpec uses it to pin that no
-    * exchange carries document text (a checkpoint truncates the plan into
-    * a LogicalRDD scan, hiding the upstream exchanges from assertion).
-    * Production callers keep the default: the deduped set feeds three
-    * consumers and must not recompute per consumer. */
+  /** The pins split the dataflow into several physical plans (the eager
+    * gate pin, the lazy deduped pin, the clustering rounds' pins, the
+    * final read); PlanSpec asserts on every plan a
+    * `QueryExecutionListener` captures from this production call. */
   def prepare(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
               jaccardThreshold: Double = 0.6, dfCap: Int = 50,
               chunkSize: Int = 50, chunkStride: Int = 40,
-              snapshot: Boolean = true,
               postingParts: Option[Int] = None): DataFrame = {
-    val gatedPlan = docs
+    val gated = docs
       .select(col("doc_id"), col("text"), TextOps.profile(col("text")).as("p"))
       .filter(col("p.lang_pred") === lang && col("p.quality") >= minQuality)
       .select("doc_id", "text")
+    dedupAndChunk(gated, jaccardThreshold, dfCap, chunkSize, chunkStride,
+      postingParts)
+  }
+
+  /** The shared tail of [[prepare]] and [[prepareV2]]: pin the gated set,
+    * exact dedup, near-dup pairs, clusters, canonical docs, chunks. */
+  private def dedupAndChunk(gated: DataFrame, jaccardThreshold: Double,
+                            dfCap: Int, chunkSize: Int, chunkStride: Int,
+                            postingParts: Option[Int]): DataFrame = {
     // EAGER pin of the gated set (round 21, guide §1.2 "per-task work" +
     // §3.3 plan-size note): ExactDedup's semi-join references the gate on
     // BOTH sides (winners subtree + probe side), so without this pin one
@@ -51,7 +57,9 @@ object CorpusPipeline {
     // everything downstream (dedup, pair mining, clustering, chunking)
     // plans over a scan-of-snapshot. Same no-text-exchange story as the
     // deduped pin below: a localCheckpoint is storage, not an exchange.
-    val gated = if (snapshot) gatedPlan.pinned(true) else gatedPlan
+    // v2's gate+scrub tree is bigger still (profile + PII regexes +
+    // collapse), so the duplicated-subtree cost is larger there.
+    val gatePin = gated.pinned(true)
     // The deduped set feeds three consumers (pair mining, the canonical
     // anti-join, and chunking) — checkpoint it once instead of re-running
     // the fingerprint semi-join per consumer. Lazy: it materializes with
@@ -60,8 +68,7 @@ object CorpusPipeline {
     // sessions must release them once the result is consumed
     // (Bench/Verify unpersist all snapshots between queries — queries
     // share no state, so anything still pinned is dead weight).
-    val deduped = ExactDedup.dedup(gated)
-    val exact = if (snapshot) deduped.pinned(false) else deduped
+    val exact = ExactDedup.dedup(gatePin).pinned(false)
     val pairs = NgramJaccard
       .invertedIndexPairs(exact, threshold = jaccardThreshold, dfCap = dfCap,
         postingParts = postingParts)
@@ -90,13 +97,12 @@ object CorpusPipeline {
   def prepareV2(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
                 jaccardThreshold: Double = 0.6, dfCap: Int = 50,
                 chunkSize: Int = 50, chunkStride: Int = 40,
-                snapshot: Boolean = true,
                 postingParts: Option[Int] = None): DataFrame = {
     // Each scrub stage lands in its own projection so the collapse lambda
     // references an ATTRIBUTE, not the upstream expression tree — see
     // Repetition.collapseTokens' contract (inlining the chain re-runs the
     // triple-regex scrub once per token).
-    val gatedPlan = docs
+    val gated = docs
       .select(col("doc_id"), col("text"), TextOps.profile(col("text")).as("p"))
       .filter(col("p.lang_pred") === lang && col("p.quality") >= minQuality)
       .select(col("doc_id"),
@@ -104,20 +110,7 @@ object CorpusPipeline {
       .select(col("doc_id"), split(lower(trim(col("text"))), " +").as("t"))
       .select(col("doc_id"),
         graft.text.Repetition.collapseTokens(col("t")).as("text"))
-    // eager pin, same rationale as [[prepare]] — v2's gate+scrub tree is
-    // even bigger (profile + PII regexes + collapse), so the duplicated-
-    // subtree and re-optimization cost is larger still
-    val gated = if (snapshot) gatedPlan.pinned(true) else gatedPlan
-    val deduped = ExactDedup.dedup(gated)
-    val exact = if (snapshot) deduped.pinned(false) else deduped
-    val pairs = NgramJaccard
-      .invertedIndexPairs(exact, threshold = jaccardThreshold, dfCap = dfCap,
-        postingParts = postingParts)
-      .select("doc_a", "doc_b")
-    val nonCanonical = DedupClusters.components(pairs)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select("doc_id")
-    val canon = exact.join(nonCanonical, Seq("doc_id"), "left_anti")
-    TextOps.chunk(canon, size = chunkSize, stride = chunkStride)
+    dedupAndChunk(gated, jaccardThreshold, dfCap, chunkSize, chunkStride,
+      postingParts)
   }
 }

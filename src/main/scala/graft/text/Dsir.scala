@@ -74,8 +74,7 @@ object Dsir {
   def importanceWeights(docs: DataFrame, isTarget: Column,
                         buckets: Int = 1024, selectFrac: Double = 0.2,
                         textCol: String = "text",
-                        shufflePartitions: Option[Int] = None,
-                        snapshot: Boolean = true): DataFrame = {
+                        shufflePartitions: Option[Int] = None): DataFrame = {
     require(selectFrac > 0.0 && selectFrac < 1.0, "selectFrac must be in (0,1)")
     require(shufflePartitions.forall(_ > 0), "shufflePartitions must be > 0")
     val t = col("t")
@@ -106,12 +105,8 @@ object Dsir {
     // storing the (doc_id, is_target, bucket, n_db) partials once beats
     // recomputing the corpus gram walk per consumer outright. Values
     // are unchanged (a pin moves bytes, not math — Snapshot contract).
-    // `snapshot = false` keeps the whole dataflow one inspectable plan
-    // (the CorpusPipeline convention): PlanSpec/ScalePartitionsSpec pin
-    // the exchange shape on it, and the snapshot-free plan IS the shape
-    // the pins protect.
-    def pin(df: DataFrame): DataFrame =
-      if (snapshot) graft.Snapshot.pin(df, eager = false) else df
+    // PlanSpec/ScalePartitionsSpec pin the exchange shape on the plans a
+    // `QueryExecutionListener` captures, the pinned frames' own included.
     // The docBuckets pin is additionally gated on the UN-escalated path:
     // docBuckets is gram-granular (~4 KB/doc of partials — the
     // ShuffleBytesPerDoc calibration), the storage class whose pin
@@ -132,7 +127,8 @@ object Dsir {
       .groupBy("doc_id", "is_target", "bucket")
       .agg(count(lit(1)).as("n_db"))
     val docBuckets =
-      if (shufflePartitions.isEmpty) pin(docBuckets0) else docBuckets0
+      if (shufflePartitions.isEmpty) graft.Snapshot.pin(docBuckets0, eager = false)
+      else docBuckets0
     // ONE bucket table for raw and target counts (round 21, guide §2.3
     // "aggregate before you shuffle" / fewer passes): the previous shape
     // derived rawC, tgtC and the totals as three separate reduce stages
@@ -210,7 +206,7 @@ object Dsir {
     }
     // scored is doc-sized (three scalars per doc) and read twice — pin
     // (same rationale as docBuckets; the fold then runs exactly once)
-    val scored = pin(scored0)
+    val scored = graft.Snapshot.pin(scored0, eager = false)
     val thr = scored.agg(
       percentile(col("logw"), lit(1.0 - selectFrac)).as("thr"))
     scored.crossJoin(broadcast(thr))

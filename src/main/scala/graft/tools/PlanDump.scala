@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer tool: print the formatted physical plan for one or more
   * registered queries against a given sf dir — the ".explain and iterate"
   * loop from the build notes, runnable without a REPL.
@@ -21,15 +19,7 @@ object PlanDump {
       .appName("graft-plandump")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").filter(_.nonEmpty).foreach { s =>
-      s.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_CONF: malformed pair '$kv'")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.withEnvConf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       args.drop(1).foreach { name =>

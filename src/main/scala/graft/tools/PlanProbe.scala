@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch: execute a query, then print the FINAL adaptive plan
-  * (shows runtime stage reuse that the pre-execution explain hides). */
+  * (shows runtime stage reuse that the pre-execution explain hides).
+  * Built on GraftSession.builder so the plan carries the engine's session
+  * contract (extensions, ANSI, AQE, codegen cache), as PlanDump's does. */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .appName("graft-planprobe").master("local[8]")
+    val spark = graft.GraftSession.builder("local[8]")
+      .appName("graft-planprobe")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -89,33 +89,37 @@ class ScanSpreadSpec extends SparkSpec {
   }
 
   test("posting pin (round 21): one gram exchange at the pinned width, reused by the aggregate") {
-    // NgramJaccard.invertedIndexPairs(postingParts = Some(p)) replaces
-    // the gram groupBy's exchange with an explicit repartition(p, gram):
-    // REPARTITION_BY_NUM (exempt from AQE coalescing), exactly ONE
-    // gram-keyed exchange (the aggregate reuses it — a second one would
-    // mean the pin ADDED a shuffle), and rows identical to the unpinned
-    // form (counts/jaccard are partition-invariant).
+    // NgramJaccard.invertedIndexPairs / containmentPairs(postingParts =
+    // Some(p)) replace the gram groupBy's exchange with an explicit
+    // repartition(p, gram): REPARTITION_BY_NUM (exempt from AQE
+    // coalescing), exactly ONE gram-keyed exchange (the aggregate reuses
+    // it — a second one would mean the pin ADDED a shuffle), and rows
+    // identical to the unpinned form (counts/jaccard/containment are
+    // partition-invariant). containmentPairs is m113's posting pin.
     val docs = Tables.documents(spark, dir)
-    val pinned = graft.dedup.NgramJaccard.invertedIndexPairs(
-      docs, threshold = 0.5, dfCap = 50, postingParts = Some(5))
-    pinned.collect()
-    val p = pinned.queryExecution.executedPlan.toString
-    p should include("REPARTITION_BY_NUM")
-    // EVERY gram-keyed exchange in the plan carries the pinned width —
-    // the aggregate reused the repartition rather than adding its own
-    // shuffle at the session default. (The plan TEXT prints the posting
-    // subtree once per consumer; at runtime AQE dedupes the identical
-    // exchanges into one shuffle stage — JobProfile shows one posting
-    // build — so the pin is asserted on widths, not node counts.)
-    val gramEx = p.linesIterator
-      .filter(_.contains("hashpartitioning(gram")).toSeq
-    gramEx should not be empty
-    all(gramEx) should include(", 5)")
-    val bare = graft.dedup.NgramJaccard.invertedIndexPairs(
-      docs, threshold = 0.5, dfCap = 50)
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    rows(pinned) shouldBe rows(bare)
+    for (pairsOf <- Seq[Option[Int] => DataFrame](
+      pp => graft.dedup.NgramJaccard.invertedIndexPairs(
+        docs, threshold = 0.5, dfCap = 50, postingParts = pp),
+      pp => graft.dedup.NgramJaccard.containmentPairs(
+        docs, threshold = 0.5, dfCap = 50, postingParts = pp))) {
+      val pinned = pairsOf(Some(5))
+      pinned.collect()
+      val p = pinned.queryExecution.executedPlan.toString
+      p should include("REPARTITION_BY_NUM")
+      // EVERY gram-keyed exchange in the plan carries the pinned width —
+      // the aggregate reused the repartition rather than adding its own
+      // shuffle at the session default. (The plan TEXT prints the posting
+      // subtree once per consumer; at runtime AQE dedupes the identical
+      // exchanges into one shuffle stage — JobProfile shows one posting
+      // build — so the pin is asserted on widths, not node counts.)
+      val gramEx = p.linesIterator
+        .filter(_.contains("hashpartitioning(gram")).toSeq
+      gramEx should not be empty
+      all(gramEx) should include(", 5)")
+      rows(pinned) shouldBe rows(pairsOf(None))
+    }
   }
 
   test("result parity: a sketch aggregate and a heavy-gram card are spread-invariant") {

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.graft.BenchListenerBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all specs. One JVM-wide session (getOrCreate)
   * keeps the suite fast; tests must not mutate global catalog state they
@@ -10,6 +14,29 @@ import org.scalatest.matchers.should.Matchers
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Every physical plan that runs while `body` executes, as
+    * (action name, final plan text) — the production call's pins
+    * (`localCheckpoint`) as well as its terminal action. Call the operator
+    * INSIDE `body`: an eager pin runs while the operator builds its frame.
+    * Listener callbacks arrive asynchronously, so the bus is drained
+    * before registering (no stale plans from earlier tests) and again
+    * before reading. */
+  def capturedPlans(body: => Any): Seq[(String, String)] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def drain(): Unit =
+      assert(BenchListenerBus.drain(spark.sparkContext, 60000L), "listener bus did not drain")
+    drain()
+    spark.listenerManager.register(listener)
+    try { body; drain() }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
 }
 
 object SparkSpec {

@@ -66,13 +66,13 @@ class ScalePartitionsSpec extends SparkSpec {
   test("m95 under the rule: the keyed repartition plans exactly one exchange per aggregate") {
     val docs = Seq((1L, "a b c d"), (2L, "b c d e"), (3L, "c d e f"))
       .toDF("doc_id", "text")
-    // snapshot = false: the pinned production path truncates the plan
-    // into LogicalRDD scans, hiding the repartition this test pins
-    val df = graft.text.Dsir.importanceWeights(
+    // every plan the production call runs: the scored pin's
+    // localCheckpoint plan carries the repartitions, the final collect
+    // reads the pin
+    val p = capturedPlans(graft.text.Dsir.importanceWeights(
       docs, isTarget = col("doc_id") % 2 === 0, buckets = 16,
-      shufflePartitions = Some(11), snapshot = false)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+      shufflePartitions = Some(11)).collect())
+      .map(_._2).mkString("\n")
     // the repartition IS the aggregate's exchange: hashpartitioning at
     // width 11 appears, and no exchange follows a partial aggregate on
     // the same keys (no double shuffle)

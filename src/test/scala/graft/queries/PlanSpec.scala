@@ -97,21 +97,25 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("m18/m28: end-to-end corpus pipeline exchanges never carry document text") {
-    // snapshot=false keeps the whole dataflow one inspectable plan (the
-    // production checkpoint truncates it into a LogicalRDD scan). After
-    // AQE finalizes, every exchange must carry fingerprints, gram hashes,
-    // posting ids or pair ids — document bodies move only inside a stage,
-    // never across one. The id-only winner/non-canonical sides must
-    // broadcast back (semi/anti), not drag the corpus into a shuffle.
+    // The production (pinned) call runs as several physical plans — the
+    // gate and deduped pins and the clustering rounds' pins
+    // (localCheckpoint) plus the final collect — and the assertions cover
+    // every one the listener captured. After AQE finalizes, every
+    // exchange must carry fingerprints, gram hashes, posting ids or pair
+    // ids — document bodies move only inside a stage, never across one.
+    // The id-only winner/non-canonical sides must broadcast back
+    // (semi/anti), not drag the corpus into a shuffle.
     val docs = graft.Tables.documents(spark, dir)
-    for (df <- Seq(
-      graft.pipeline.CorpusPipeline.prepare(docs, snapshot = false),
-      graft.pipeline.CorpusPipeline.prepareV2(docs, snapshot = false))) {
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      val exchanges = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
-      (exchanges should not).include("text#")
-      (p should not).include("CartesianProduct")
+    for (prep <- Seq[DataFrame => DataFrame](
+      graft.pipeline.CorpusPipeline.prepare(_),
+      graft.pipeline.CorpusPipeline.prepareV2(_))) {
+      val plans = capturedPlans(prep(docs).collect())
+      plans.map(_._1) should contain allOf ("localCheckpoint", "collect")
+      for ((_, p) <- plans) {
+        val exchanges = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
+        (exchanges should not).include("text#")
+        (p should not).include("CartesianProduct")
+      }
     }
   }
 
@@ -473,23 +477,25 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("m95: DSIR exchanges carry hashed buckets, never gram or document text") {
-    // snapshot = false (the CorpusPipeline convention): the production
-    // path lazily pins docBuckets/scored — a checkpoint truncates the
-    // plan into LogicalRDD scans, hiding the gram exchanges from this
-    // assertion; the snapshot-free dataflow IS the shape being pinned
-    val p = plan(graft.text.Dsir.importanceWeights(
+    // The production call lazily pins docBuckets and scored, so the
+    // dataflow runs as the pins' localCheckpoint plans plus the final
+    // collect; the assertions cover every plan the listener captured.
+    val plans = capturedPlans(graft.text.Dsir.importanceWeights(
       CorpusQueries.withSyntheticDomain(graft.Tables.documents(spark, dir)),
-      isTarget = org.apache.spark.sql.functions.col("doc_id") % 10 < 2,
-      snapshot = false))
+      isTarget = org.apache.spark.sql.functions.col("doc_id") % 10 < 2)
+      .collect())
+    plans.map(_._1) should contain allOf ("localCheckpoint", "collect")
     // grams are hashed in the projection that creates them, so every
     // exchange in the chain carries (doc_id, bucket, count) partials; the
     // λ table and the percentile threshold come back as broadcasts
-    val ex = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
-    (ex should not).include("text#")
-    (ex should not).include("gram#")
-    p should include("partial_count")
-    (p should not).include("CartesianProduct")
-    (p should not).include("SortMergeJoin")
+    for ((_, p) <- plans) {
+      val ex = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
+      (ex should not).include("text#")
+      (ex should not).include("gram#")
+      (p should not).include("CartesianProduct")
+      (p should not).include("SortMergeJoin")
+    }
+    plans.map(_._2).mkString("\n") should include("partial_count")
   }
 
   test("m96: keep-first race partial-aggregates before its exchange; no corpus window") {
