@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.Harness
+import graft.tools.Harness.materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
@@ -14,105 +16,14 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
   */
 object Bench {
 
-  /** Per-query executor-level stats (SPARK_GRAFT_STAGE_STATS=1): bytes
-    * read/shuffled/spilled and the largest single-task shuffle read (the
-    * max-partition proxy), accumulated from task-end events. The scale
-    * report reads these to grade the 100 TB design with numbers — a row
-    * whose shuffle bytes grow super-linearly with the multiplier is a
-    * redesign candidate even when its wall-clock hides behind fixed
-    * overhead. Listener events are async, so [[quiesce]] first drains the
-    * bus (`LiveListenerBus.waitUntilEmpty` via
-    * [[org.apache.spark.graft.BenchListenerBus]] — counters compared
-    * BEFORE the drain can be equal at stale values if the final job's
-    * start event hasn't dispatched), then requires started == ended on
-    * the freshly-dispatched counters, looping until both hold. */
-  // private[graft]: BackfillProbe reuses this listener (review r19d —
-  // its first cut re-implemented the fields and drain loop verbatim
-  // minus the started==ended guard, and two copies drift)
-  private[graft] final class QueryStatsListener(sc: org.apache.spark.SparkContext)
-      extends org.apache.spark.scheduler.SparkListener {
-    private val started = new java.util.concurrent.atomic.AtomicLong
-    private val ended = new java.util.concurrent.atomic.AtomicLong
-    private var in, sr, sw, ms, ds, peak, maxTaskSr = 0L
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      started.incrementAndGet(); ()
-    }
-    override def onJobEnd(
-        j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      ended.incrementAndGet(); ()
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized {
-        val m = t.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.totalBytesRead
-          in += m.inputMetrics.bytesRead
-          sr += r; sw += m.shuffleWriteMetrics.bytesWritten
-          ms += m.memoryBytesSpilled; ds += m.diskBytesSpilled
-          peak = math.max(peak, m.peakExecutionMemory)
-          maxTaskSr = math.max(maxTaskSr, r)
-        }
-      }
-    def reset(): Unit = synchronized {
-      in = 0; sr = 0; sw = 0; ms = 0; ds = 0; peak = 0; maxTaskSr = 0
-    }
-    def quiesce(): Unit = {
-      val deadline = System.nanoTime + 10000000000L
-      var settled = false
-      while (!settled && System.nanoTime < deadline) {
-        val drained = org.apache.spark.graft.BenchListenerBus.drain(sc, 2000)
-        settled = drained && started.get == ended.get
-        if (!settled) Thread.sleep(10)
-      }
-      if (!settled)
-        System.err.println("[bench] stats listener did not quiesce in 10 s")
-    }
-    def snapshot: String = synchronized {
-      s"""{"input":$in,"shuffle_read":$sr,"shuffle_write":$sw,""" +
-        s""""mem_spill":$ms,"disk_spill":$ds,"peak_exec_mem":$peak,""" +
-        s""""max_task_shuffle_read":$maxTaskSr}"""
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_CHECKPOINT_DIR: route the snapshot tier through durable
     // Dataset.checkpoint (graft.Snapshot reliable mode) so the overhead of
     // the fault-tolerant configuration is measurable — the 100 TB deploy
     // recipe needs a number, not a claim (DESIGN.md §5a).
-    // GraftSession.builder IS the session contract (UTC, ANSI pin, AQE,
-    // aggregate threshold, extensions) — review r19d: after three rounds
-    // of hand-rolled builders each missing a pin, the harness mains
-    // build on the shared factory and add only their own knobs.
-    val builder = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
-      .foreach(d => builder.config("spark.graft.checkpointDir", d))
-    // SPARK_GRAFT_CONF k=v pairs apply LAST (see GraftSession.withEnvConf)
-    val spark = GraftSession.withEnvConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bounded-frame windows are audited + plan-pinned; see the scaladoc
-    // on GraftSession.silenceBoundedWindowWarning for why this is honest.
-    GraftSession.silenceBoundedWindowWarning()
-    GraftSession.silenceSnapshotFreeWarning()
-
-    def materialize(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Operators that truncate lineage (DedupClusters, CorpusPipeline,
-    // SimHash) leave localCheckpoint blocks pinned for the lifetime of
-    // their result frame. Queries share nothing across invocations, so
-    // between queries every such block is dead weight squeezing execution
-    // memory — round 3 measured q24/q25/q26 regressing 2.6-8× purely from
-    // snapshots accumulated by earlier m-queries. Released OUTSIDE the
-    // timed section so cleanup cost is not attributed to the next query.
-    def releaseSnapshots(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    val spark = Harness.session(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
+      .filter(_.nonEmpty).map("spark.graft.checkpointDir" -> _).toSeq: _*)
 
     // CANARY normalization (round-16 verdict ask #3): three rounds of
     // host-noise rows were adjudicated by narrative ("host-speed shift"
@@ -125,8 +36,7 @@ object Bench {
     // tools/update_bench_ref.py compare RATIOS to the same-run canary
     // instead of wall-clock: a row whose seconds doubled while its
     // canary doubled is host noise (ratio flat); a row whose ratio
-    // moved is a real plan change. SPARK_GRAFT_CANARY=0 disables.
-    val canaryOn = sys.env.get("SPARK_GRAFT_CANARY").forall(_ != "0")
+    // moved is a real plan change.
     val CanaryPlan = "range12m-xxhash64-xor-p64"
     val CanaryEvery = 10
     var canaryNow = 0.0
@@ -140,12 +50,11 @@ object Bench {
       // ~0.1 s plan spreading 0.088–0.203 s within one run (GC/settle
       // jitter ~ the plan's own cost) — tripling the work drops the
       // RELATIVE sample noise while one refresh stays ~1 s
-      spark.range(0L, 12000000L, 1L, 64)
-        .select(bit_xor(xxhash64(col("id"))))
-        .write.format("noop").mode("overwrite").save()
+      materialize(spark.range(0L, 12000000L, 1L, 64)
+        .select(bit_xor(xxhash64(col("id")))))
       (System.nanoTime() - t0) / 1e9
     }
-    def refreshCanary(): Unit = if (canaryOn) {
+    def refreshCanary(): Unit = {
       // min of 3: the first execution after a cold start pays codegen,
       // and the canary must measure the HOST, not the JIT
       val s = (1 to 3).map(_ => canaryOnce()).min
@@ -153,19 +62,18 @@ object Bench {
       canaryNow = s
       sinceCanary = 0
     }
-    def canaryTick(name: String, force: Boolean = false): Unit = if (canaryOn) {
+    def canaryTick(name: String, force: Boolean = false): Unit = {
       if (force || canarySamples.isEmpty || sinceCanary >= CanaryEvery)
         refreshCanary()
       sinceCanary += 1
       canaryUsed(name) = canaryNow
     }
 
-    // Warm-up pass (disable with SPARK_GRAFT_WARMUP=0): each distinct plan
-    // pays one-time Janino codegen compilation + JIT on first execution —
-    // a fixed cost that amortizes to zero at production scale. The
-    // baseline's pandas/Postgres numbers are warm steady-state, so the
-    // measured pass reports the comparable quantity; the JSON carries
-    // "warm" so the methodology is explicit.
+    // Warm-up pass: each distinct plan pays one-time Janino codegen
+    // compilation + JIT on first execution — a fixed cost that amortizes
+    // to zero at production scale. The baseline's pandas/Postgres numbers
+    // are warm steady-state, so the measured pass reports the comparable
+    // quantity; the JSON carries "warm" so the methodology is explicit.
     // NonFatal only: swallowing OutOfMemoryError/InterruptedException here
     // would run the measured pass in a corrupted JVM.
     // SPARK_GRAFT_BENCH_SUBSET: comma-separated query names to bench only
@@ -179,20 +87,15 @@ object Bench {
     val benchQueries = SparkEntry.queries
       .filter { case (k, _) => subset.forall(_.contains(k)) }
 
-    // Per-query executor stats (see QueryStatsListener): created BEFORE
+    // Per-query executor stats (see Harness.StatsListener): created BEFORE
     // the asset builds since round 14, so asset rows — the single biggest
     // line items in the suite — carry the same input/shuffle/spill fields
     // as every query row, and a round-over-round asset drift is
     // adjudicable from the record (round-13 verdict ask #1: the
     // asset:pairs 10.0 → 11.4 s drift could not be judged noise-vs-plan
-    // because asset rows had no stats). DEFAULT ON; set
-    // SPARK_GRAFT_STAGE_STATS=0 to disable.
-    val statsListener =
-      if (sys.env.get("SPARK_GRAFT_STAGE_STATS").forall(_ != "0")) {
-        val l = new QueryStatsListener(spark.sparkContext)
-        spark.sparkContext.addSparkListener(l)
-        Some(l)
-      } else None
+    // because asset rows had no stats).
+    val statsListener = new Harness.StatsListener(spark.sparkContext)
+    spark.sparkContext.addSparkListener(statsListener)
     val statsOut = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
     // Asset-build cost, measured COLD before the warm-up pass builds
@@ -224,7 +127,7 @@ object Bench {
         case Some(only) =>
           def timed(name: String)(body: => Unit): (String, Double, Boolean) = {
             canaryTick(name)
-            statsListener.foreach { l => l.quiesce(); l.reset() }
+            statsListener.quiesce(); statsListener.reset()
             val t0 = System.nanoTime()
             val ok =
               try { body; true }
@@ -233,7 +136,7 @@ object Bench {
                 false
               }
             val t = (System.nanoTime() - t0) / 1e9
-            statsListener.foreach { l => l.quiesce(); statsOut(name) = l.snapshot }
+            statsListener.quiesce(); statsOut(name) = statsListener.snapshot
             (name, t, ok)
           }
           import graft.pipeline.DedupAssets
@@ -351,33 +254,26 @@ object Bench {
               }
             }
           }
-          releaseSnapshots()
+          Harness.releaseSnapshots(spark)
           rows
       }
 
-    val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    if (warm) {
-      benchQueries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try materialize(fn(spark, sfDir))
-        catch { case scala.util.control.NonFatal(_) => }
-        releaseSnapshots()
-      }
-    } else {
-      try materialize(Tables.lineitem(spark, sfDir).limit(1))
+    benchQueries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+      try materialize(fn(spark, sfDir))
       catch { case scala.util.control.NonFatal(_) => }
+      Harness.releaseSnapshots(spark)
     }
 
     // Two measured passes, per-query MIN: a single pass is exposed to GC /
     // scheduler noise (observed 2× outliers on otherwise-identical runs);
     // the min of two is the standard noise-floor estimate and still
     // includes plan + execute end-to-end.
-    val passes = sys.env.get("SPARK_GRAFT_PASSES")
-      .flatMap(_.toIntOption).getOrElse(2).max(1)
+    val passes = 2
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
         try { materialize(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
+        catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
@@ -485,14 +381,10 @@ object Bench {
     val firstResults = benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
       canaryTick(name)
       var runs = (1 to passes).map { i =>
-        statsListener.filter(_ => i == passes).foreach { l =>
-          l.quiesce(); l.reset()
-        }
+        if (i == passes) { statsListener.quiesce(); statsListener.reset() }
         val r = timeOne(name, fn)
-        statsListener.filter(_ => i == passes).foreach { l =>
-          l.quiesce(); statsOut(name) = l.snapshot
-        }
-        releaseSnapshots()
+        if (i == passes) { statsListener.quiesce(); statsOut(name) = statsListener.snapshot }
+        Harness.releaseSnapshots(spark)
         r
       }
       // Variance guard: min-of-2 defends against ONE noisy pass, but a
@@ -522,7 +414,7 @@ object Bench {
           g.min > 3 * r * canaryScale(name) && g.min > 0.2)
       }
       var extra = 0
-      while (passes > 1 && extra < 2 &&
+      while (extra < 2 &&
              (spread(runs) > 5.0 || refExceeded(runs)) &&
              runs.filter(_._2).map(_._1).min > 0.05) {
         val why =
@@ -530,7 +422,7 @@ object Bench {
           else f"min ${runs.filter(_._2).map(_._1).min}%.2fs > 3x committed ${benchRef(name)}%.2fs (canary scale ${canaryScale(name)}%.2f)"
         System.err.println(s"[bench] $name $why — re-measuring")
         runs = runs :+ timeOne(name, fn)
-        releaseSnapshots()
+        Harness.releaseSnapshots(spark)
         extra += 1
       }
       // Min over SUCCESSFUL runs when any succeeded — a fast transient
@@ -573,10 +465,10 @@ object Bench {
             val prevCanary = canaryUsed.get(name)
             val prevStats = statsOut.get(name)
             canaryTick(name, force = true)
-            statsListener.foreach { l => l.quiesce(); l.reset() }
+            statsListener.quiesce(); statsListener.reset()
             val (t2, ok2) = timeOne(name, benchQueries(name))
-            statsListener.foreach { l => l.quiesce(); statsOut(name) = l.snapshot }
-            releaseSnapshots()
+            statsListener.quiesce(); statsOut(name) = statsListener.snapshot
+            Harness.releaseSnapshots(spark)
             val keepRequeue = ok2 && t2 < t
             if (!keepRequeue) {
               // original pass's timing kept → restore ITS canary and
@@ -621,7 +513,7 @@ object Bench {
     // real). Asset rows carry ratios too (their drift adjudication,
     // round-13 ask #1, wants the same mechanics).
     val canaryJson =
-      if (!canaryOn || canarySamples.isEmpty) ""
+      if (canarySamples.isEmpty) ""
       else {
         val sorted = canarySamples.sorted
         val med = sorted(sorted.size / 2)
@@ -682,7 +574,7 @@ object Bench {
       }.sorted
       if (shared.size < 5) "null" else f"${shared(shared.size / 2)}%.3f"
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"assets":$assetsJson,"asset_failures":$assetFailures,"failures":$failures,"requeued":$requeuedJson,"suite_scale":$suiteScaleJson,"suite_wall_ratio":$suiteWallJson,"asset_scale":$assetScaleJson,"warm":$warm,"passes":$passes,"sf":"$sfDir"$canaryJson$statsJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"assets":$assetsJson,"asset_failures":$assetFailures,"failures":$failures,"requeued":$requeuedJson,"suite_scale":$suiteScaleJson,"suite_wall_ratio":$suiteWallJson,"asset_scale":$assetScaleJson,"warm":true,"passes":$passes,"sf":"$sfDir"$canaryJson$statsJson}"""
     // Persist the FULL-fidelity line to a file first: this is the
     // canonical record (every query, full precision, optional stats).
     // The stdout contract below is a derived view of it.
@@ -706,7 +598,7 @@ object Bench {
     // slowest are the ones a grader reads first), omission explicit,
     // pointer to the full record.
     val byTime = results.sortBy(-_._2).map { case (k, v, _) => "\"" + k + "\":" + ms(v) }
-    val fixed = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":{},"assets":$assetsJson,"asset_failures":$assetFailures,"queries_omitted":${results.size},"full_record":"$outFile","failures":$failures,"warm":$warm,"passes":$passes,"sf":"$sfDir"}"""
+    val fixed = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":{},"assets":$assetsJson,"asset_failures":$assetFailures,"queries_omitted":${results.size},"full_record":"$outFile","failures":$failures,"warm":true,"passes":$passes,"sf":"$sfDir"}"""
     var budget = 1000 - fixed.length
     val kept = byTime.takeWhile { s =>
       val c = s.length + 1
@@ -714,7 +606,7 @@ object Bench {
       if (fits) budget -= c
       fits
     }
-    val compact = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"assets":$assetsJson,"asset_failures":$assetFailures,"queries_omitted":${results.size - kept.size},"full_record":"$outFile","failures":$failures,"warm":$warm,"passes":$passes,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${kept.mkString("{", ",", "}")},"assets":$assetsJson,"asset_failures":$assetFailures,"queries_omitted":${results.size - kept.size},"full_record":"$outFile","failures":$failures,"warm":true,"passes":$passes,"sf":"$sfDir"}"""
     spark.stop()
     println(compact)
     Console.out.flush()

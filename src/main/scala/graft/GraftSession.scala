@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    pin makes that contract immune to ambient conf or a future
   *    default drift.
   *
-  * The harness mains (Verify/Bench) build their own sessions to the
-  * driver's contract; this factory is the library entry point.
+  * The harness mains build their sessions on this factory through
+  * [[graft.tools.Harness.session]]; this factory is the library entry
+  * point.
   */
 object GraftSession {
 
@@ -96,9 +97,9 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
   /** Apply `SPARK_GRAFT_CONF` — semicolon-separated k=v pairs — to `b`.
-    * The harness mains (Bench, PlanDump) call it LAST, as the A/B knob
-    * for scale experiments (e.g. AQE initialPartitionNum at gen-100), so
-    * a conf probe or a before/after plan diff never needs a code edit. A
+    * The harness session ([[graft.tools.Harness.session]]) applies it
+    * LAST, as the A/B knob for scale experiments (e.g. AQE
+    * initialPartitionNum at gen-100), so a conf probe or a before/after plan diff never needs a code edit. A
     * malformed pair fails loudly rather than silently running the
     * default. */
   def withEnvConf(b: SparkSession.Builder): SparkSession.Builder = {
@@ -175,8 +176,8 @@ object GraftSession {
     * even when an earlier session without them already exists.
     *
     * NOTE: no log suppression here (ADVICE r14) — the audited-noise
-    * suppressions below are opt-in per entrypoint (Bench/Verify call
-    * them explicitly), so a library consumer's genuinely corpus-sized
+    * suppressions below are opt-in per entrypoint (the harness session
+    * calls them), so a library consumer's genuinely corpus-sized
     * unpartitioned window still warns. */
   def getOrCreate(master: String = "local[*]"): SparkSession = {
     val s = builder(master).getOrCreate()
@@ -185,10 +186,11 @@ object GraftSession {
   }
 
   /** DOCUMENTED log4j suppression of WindowExec's "No Partition Defined"
-    * warning (WARN → ERROR on that one logger). Called by the Bench and
-    * Verify ENTRYPOINTS only — never from [[getOrCreate]] — so the
-    * suppression covers exactly the surface whose windows are audited
-    * and plan-pinned, not every library consumer.
+    * warning (WARN → ERROR on that one logger). Called by the harness
+    * session ([[graft.tools.Harness.session]]) only — never from
+    * [[getOrCreate]] — so the suppression covers exactly the surface
+    * whose windows are audited and plan-pinned, not every library
+    * consumer.
     *
     * Every unpartitioned window in this engine runs over a frame that is
     * BOUNDED BY CONSTRUCTION — k+1 rows (PrioritySample), the top-V
@@ -214,16 +216,17 @@ object GraftSession {
   /** DOCUMENTED log4j suppression of the localCheckpoint-unpersist
     * caveat ("RDD N was locally checkpointed ... can no longer be
     * recomputed after unpersisting") — same clean-bench-tail policy,
-    * same scoping (Bench/Verify entrypoints only).
+    * same scoping (the harness session only).
     *
     * The [[graft.Snapshot]] free path unpersists superseded snapshot
     * blocks ON PURPOSE: queries share no state, the pinned frame is
     * never read again, and retaining dead rounds measurably squeezed
-    * execution memory (round-3 regression notes in Bench). Spark logs a
+    * execution memory (round-3 regression notes on
+    * [[graft.tools.Harness.releaseSnapshots]]). Spark logs a
     * blanket WARN on every such unpersist because it cannot know the
-    * block is dead — here that is proved by construction (Bench/Verify
-    * release only BETWEEN queries) and pinned by SnapshotModeSpec, so
-    * the per-run flood is noise, not signal.
+    * block is dead — here that is proved by construction (the harness
+    * mains release only BETWEEN queries) and pinned by SnapshotModeSpec,
+    * so the per-run flood is noise, not signal.
     *
     * Scoped to the MESSAGE, not the logger level (ADVICE r15: a level
     * cut on the class logger would swallow every other WARN

@@ -1,8 +1,6 @@
 package graft
 
 import graft.pipeline.RetailPipeline
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** End-to-end demo main: backfill the ENTIRE reference dataset (all 31
   * real Day_Wise CSVs, ~500k events) through the warehouse pipeline and
@@ -16,17 +14,9 @@ object RunReference {
   def main(args: Array[String]): Unit = {
     val rawRoot = args.headOption.getOrElse("/root/reference/data/raw")
     val wh = args.lift(1).getOrElse(s"/tmp/graft-reference-wh-${ProcessHandle.current().pid()}")
-    // GraftSession.builder: the backfill's evidence rows sit in the same
-    // BENCH_sf1 table as BackfillProbe's, so both must measure under the
-    // suite session contract (ANSI, AQE, aggregate threshold) —
-    // review r19b found this main still on a hand-rolled builder.
-    val spark = GraftSession.builder(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // The backfill's evidence rows sit in the same BENCH_sf1 table as
+    // BackfillProbe's, so both measure under the harness session.
+    val spark = graft.tools.Harness.session("spark.sql.warehouse.dir" -> wh)
 
     val pipeline = new RetailPipeline(spark, rawRoot, s"$wh/mart")
     val t0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,19 +13,7 @@ object Verify {
     val unknown = subset -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown queries in subset: ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GraftSession.builder IS the session contract (UTC, the explicit
-    // ANSI pin from round-15 ask #7, AQE, aggregate threshold,
-    // extensions) — review r19d: the harness mains build on the shared
-    // factory and add only their own knobs, so a future contract pin
-    // cannot be missed in one of three hand-rolled copies.
-    val spark = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning()
-    GraftSession.silenceSnapshotFreeWarning()
+    val spark = graft.tools.Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset.contains(name) }
@@ -36,11 +23,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Queries share no state: drop any localCheckpoint snapshots the
-      // query pinned (DedupClusters/CorpusPipeline/SimHash) so 61 queries
-      // don't accumulate dead blocks in one session.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // Queries share no state: drop the snapshots the query pinned.
+      graft.tools.Harness.releaseSnapshots(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

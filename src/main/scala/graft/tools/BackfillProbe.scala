@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Retail-tier backfill at amplified scale (round-19 verdict ask #7):
@@ -35,18 +34,7 @@ object BackfillProbe {
     val rawOut = args.lift(1).getOrElse(s"/tmp/graft-amp-$amp")
     val refRoot = args.lift(2).getOrElse("/root/reference/data/raw")
     val wh = s"/tmp/graft-probe-wh-${ProcessHandle.current().pid()}"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // GraftSession.builder carries the engine session contract (UTC,
-    // ANSI, AQE, extensions, the ObjectHashAggregate threshold) so the
-    // probe measures the pipeline under the SAME aggregate-execution
-    // settings as the suite it extends — review r19: a fifth hand-rolled
-    // builder had silently omitted the threshold pin.
-    val spark = graft.GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("spark.sql.warehouse.dir" -> wh)
 
     val days = (1 to 31).map(d => f"2019-10-$d%02d")
 
@@ -87,11 +75,7 @@ object BackfillProbe {
     val ampSec = (System.nanoTime() - t0) / 1e9
 
     // ---- backfill under the stats listener ----
-    // Bench's own QueryStatsListener (shared since review r19d — the
-    // probe's first cut re-implemented it verbatim minus the
-    // started==ended drain guard): same fields, same quiesce discipline,
-    // one definition to evolve.
-    val listener = new graft.Bench.QueryStatsListener(spark.sparkContext)
+    val listener = new Harness.StatsListener(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     val pipeline = new graft.pipeline.RetailPipeline(spark, rawOut, s"$wh/mart")
     val t1 = System.nanoTime()

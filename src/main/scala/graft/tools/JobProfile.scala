@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
-
 /** Dev profiling main (round-20 optimization loop): run ONE registered
   * query warm and print its per-JOB wall decomposition — job duration,
   * stage count, task count, input/shuffle bytes — plus the dead time
@@ -12,94 +9,57 @@ import scala.collection.mutable
   * executor compute), which is the §1 "empirical" loop without a UI.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <query> [query...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROFILE_PASSES
-  * (default 2 — pass 1 warms codegen, pass 2 is printed).
+  * Runs two passes per query: pass 1 warms codegen, pass 2 is printed.
+  * Env: SPARK_GRAFT_CPUS (see [[Harness.session]]).
   */
 object JobProfile {
-  private final class JobListener extends SparkListener {
-    final case class Job(id: Int, start: Long, var end: Long = 0L,
-                         var stages: Int = 0, var tasks: Int = 0,
-                         var input: Long = 0L, var sr: Long = 0L,
-                         var sw: Long = 0L)
-    val jobs = mutable.LinkedHashMap.empty[Int, Job]
-    private val stageToJob = mutable.HashMap.empty[Int, Int]
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      val job = Job(j.jobId, j.time, stages = j.stageIds.size)
-      j.stageIds.foreach(s => stageToJob(s) = j.jobId)
-      jobs(j.jobId) = job
-    }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(j.jobId).foreach(_.end = j.time)
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      for (jid <- stageToJob.get(t.stageId); job <- jobs.get(jid)) {
-        job.tasks += 1
-        val m = t.taskMetrics
-        if (m != null) {
-          job.input += m.inputMetrics.bytesRead
-          job.sr += m.shuffleReadMetrics.totalBytesRead
-          job.sw += m.shuffleWriteMetrics.bytesWritten
-        }
+  private val Passes = 2
+
+  /** The per-job report for one query: one line per job, then a summary
+    * line. A job with no JobEnd event (still running / dropped event) is
+    * marked instead of computing (0 - start), which printed a huge
+    * negative duration and corrupted the sums (ADVICE r20); it counts in
+    * `jobs=` but not in `sum(job)`. */
+  def report(name: String, wall: Double, jobs: Seq[Harness.Job]): Seq[String] = {
+    var prevEnd = 0L
+    var jobSum = 0.0
+    val lines = jobs.map { j =>
+      val counts = f"stages=${j.stages}%2d tasks=${j.tasks}%4d  in=${j.input / 1e6}%7.2fMB " +
+        f"sr=${j.shuffleRead / 1e6}%7.2fMB sw=${j.shuffleWrite / 1e6}%7.2fMB"
+      j.end match {
+        case None => f"  job ${j.id}%4d  (no end event)  " + counts
+        case Some(end) =>
+          val dur = (end - j.start) / 1e3
+          val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3
+          jobSum += dur
+          prevEnd = math.max(prevEnd, end)
+          f"  job ${j.id}%4d  ${dur}%7.3fs  gap=${gap}%6.3fs  " + counts
       }
     }
-    def reset(): Unit = synchronized { jobs.clear(); stageToJob.clear() }
+    (f"\n===== $name%s  wall=$wall%.3fs (pass $Passes of $Passes) =====" +: lines) :+
+      f"  jobs=${jobs.size}%d  sum(job)=${jobSum}%.3fs  wall-sum=${wall - jobSum}%.3fs (driver/plan/gaps)"
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JobProfile <sfDir> <query> [query...]")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.get("SPARK_GRAFT_PROFILE_PASSES")
-      .flatMap(_.toIntOption).getOrElse(2).max(1)
-    val spark = graft.GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.silenceBoundedWindowWarning()
-    graft.GraftSession.silenceSnapshotFreeWarning()
-    val listener = new JobListener
+    val spark = Harness.session()
+    val listener = new Harness.StatsListener(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    def releaseSnapshots(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     args.drop(1).foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(
         name, sys.error(s"unknown query: $name"))
       var wall = 0.0
-      (1 to passes).foreach { i =>
-        org.apache.spark.graft.BenchListenerBus.drain(spark.sparkContext, 2000)
+      (1 to Passes).foreach { _ =>
+        listener.quiesce()
         listener.reset()
         val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        Harness.materialize(fn(spark, dir))
         wall = (System.nanoTime() - t0) / 1e9
-        releaseSnapshots()
+        Harness.releaseSnapshots(spark)
       }
-      org.apache.spark.graft.BenchListenerBus.drain(spark.sparkContext, 2000)
-      println(f"\n===== $name%s  wall=$wall%.3fs (pass $passes of $passes) =====")
-      val js = listener.jobs.values.toSeq.sortBy(_.start)
-      var prevEnd = 0L
-      var jobSum = 0.0
-      js.foreach { j =>
-        // a job with no JobEnd event (still running / dropped event)
-        // keeps end=0 — mark it instead of computing (0 - start), which
-        // printed a huge negative duration and corrupted the sums
-        // (ADVICE r20)
-        if (j.end == 0L) {
-          println(f"  job ${j.id}%4d  (no end event)  " +
-            f"stages=${j.stages}%2d tasks=${j.tasks}%4d  in=${j.input / 1e6}%7.2fMB " +
-            f"sr=${j.sr / 1e6}%7.2fMB sw=${j.sw / 1e6}%7.2fMB")
-        } else {
-          val dur = (j.end - j.start) / 1e3
-          val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3
-          jobSum += dur
-          prevEnd = math.max(prevEnd, j.end)
-          println(f"  job ${j.id}%4d  ${dur}%7.3fs  gap=${gap}%6.3fs  " +
-            f"stages=${j.stages}%2d tasks=${j.tasks}%4d  in=${j.input / 1e6}%7.2fMB " +
-            f"sr=${j.sr / 1e6}%7.2fMB sw=${j.sw / 1e6}%7.2fMB")
-        }
-      }
-      println(f"  jobs=${js.size}%d  sum(job)=${jobSum}%.3fs  wall-sum=${wall - jobSum}%.3fs (driver/plan/gaps)")
+      listener.quiesce()
+      report(name, wall, listener.jobs).foreach(println)
     }
     spark.stop()
   }

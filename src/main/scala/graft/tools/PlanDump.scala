@@ -10,17 +10,11 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <sfDir> <query> [query...]")
     val dir = args(0)
-    // GraftSession.builder: plans must be dumped under the suite's session
+    // The harness session: plans must be dumped under the suite's session
     // contract (extensions, ANSI, AQE) or the dump lies about the bench
-    // plan. SPARK_GRAFT_CONF k=v pairs apply LAST (the Bench A/B knob) so
-    // a before/after plan diff never needs a code edit.
-    val builder = graft.GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.GraftSession.withEnvConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // plan; its SPARK_GRAFT_CONF pairs make a before/after plan diff a
+    // conf change, never a code edit.
+    val spark = Harness.session()
     try {
       args.drop(1).foreach { name =>
         val q = graft.SparkEntry.queries.getOrElse(

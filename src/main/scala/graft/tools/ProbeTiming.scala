@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-evidence main (dev tooling, not a production operator): times
   * the m72 incremental-admission query as two consecutive ingests against
   * a stable asset root — ingest 1 builds and atomically publishes the
@@ -21,19 +19,10 @@ object ProbeTiming {
     val sfDir = args(0)
     val root = java.nio.file.Files.createTempDirectory("graft-probe-amort")
     sys.props("graft.dedup.assetRoot") = root.toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // GraftSession.builder: every evidence-producing main measures under
-    // the suite's session contract (ANSI, AQE, aggregate threshold) —
-    // review r19b found this probe still on a hand-rolled builder.
-    val spark = graft.GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     def run(): Double = {
       val t0 = System.nanoTime()
-      graft.queries.CorpusQueries.incrementalNearDup(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Harness.materialize(graft.queries.CorpusQueries.incrementalNearDup(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
     val p1 = run()

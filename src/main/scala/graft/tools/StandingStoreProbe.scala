@@ -34,16 +34,11 @@ object StandingStoreProbe {
   def main(args: Array[String]): Unit = {
     val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nChunks = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import graft.operators.HyperLogLog
 
     val root = java.nio.file.Files.createTempDirectory("graft-standing-probe")
-    val listener = new graft.Bench.QueryStatsListener(spark.sparkContext)
+    val listener = new Harness.StatsListener(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       // ---- stage the corpus as nChunks single-file parquet chunks ----

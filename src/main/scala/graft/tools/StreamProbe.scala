@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** stream:ingest cost decomposition (round-17 verdict ask #7): how much
@@ -28,16 +27,9 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // GraftSession.builder: this probe's decomposition explains the
-    // bench's stream:ingest row, so it must measure under the same
-    // session contract (review r19c — the last hand-rolled
-    // evidence-producing builder).
-    val spark = graft.GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // This probe's decomposition explains the bench's stream:ingest row,
+    // so it measures under the same harness session.
+    val spark = Harness.session()
 
     val root = java.nio.file.Files.createTempDirectory("graft-stream-probe")
     try {
