@@ -14,8 +14,8 @@ object RunReference {
   def main(args: Array[String]): Unit = {
     val rawRoot = args.headOption.getOrElse("/root/reference/data/raw")
     val wh = args.lift(1).getOrElse(s"/tmp/graft-reference-wh-${ProcessHandle.current().pid()}")
-    // The backfill's evidence rows sit in the same BENCH_sf1 table as
-    // BackfillProbe's, so both measure under the harness session.
+    // The backfill's evidence rows sit in BENCH_sf1.md next to the
+    // harness mains' rows, so it measures under the harness session.
     val spark = graft.tools.Harness.session("spark.sql.warehouse.dir" -> wh)
 
     val pipeline = new RetailPipeline(spark, rawRoot, s"$wh/mart")

@@ -53,11 +53,9 @@ object Tables {
     * all-tables sweep knob.
     *
     * Row counts come from [[graft.operators.ScalePartitions.tableRows]],
-    * which memoizes footer counts per path per JVM — the gate assumes a
-    * table is generated ONCE per session (true for the harness mains;
-    * an in-process regeneration at a different size would reuse the
-    * stale count until the JVM restarts — ADVICE r20, documented
-    * single-generation contract). */
+    * which memoizes footer counts per path per JVM against the path's
+    * file listing, so an in-process regeneration at a different size is
+    * counted again. */
   private[graft] def spreadSmallScan(spark: SparkSession, df: DataFrame,
                                      path: String, key: String, table: String,
                                      maxRowsDefault: Long = 262144L,

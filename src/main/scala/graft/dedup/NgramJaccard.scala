@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Snapshot.SnapshotOps
 
@@ -15,16 +15,6 @@ import graft.Snapshot.SnapshotOps
   *    stop-gram cap.
   */
 object NgramJaccard {
-
-  /** Distinct character n-grams of the lowercased text (Column form, used
-    * by the specs; production scoring uses [[charNgramHashes]] — the
-    * per-element substr lambda is interpreted and measured hot). */
-  def charNgrams(text: Column, n: Int = 3): Column = {
-    val t = lower(text)
-    array_distinct(
-      transform(sequence(lit(0), greatest(length(t) - n, lit(0))),
-        i => t.substr(i + lit(1), lit(n))))
-  }
 
   /** Distinct n-gram hashes in one compiled pass per document — grams never
     * materialize as strings; Jaccard over hash sets is identical up to

@@ -19,14 +19,6 @@ object RetailOps {
   def fillNa(df: DataFrame, fills: Map[String, String]): DataFrame =
     df.na.fill(fills)
 
-  // ------------------------------------------------------------------- P3
-  /** Literal column adds (retail_pipeline_assets.py:44-45): event_date +
-    * loaded_at. `loadedAt` is injected (not wall-clock) so runs are
-    * reproducible and the column can participate in tests. */
-  def stampBatch(df: DataFrame, eventDate: String, loadedAt: Column): DataFrame =
-    df.withColumn("event_date", to_date(lit(eventDate)))
-      .withColumn("loaded_at", loadedAt)
-
   // ------------------------------------------------------------------- P7
   /** Conditional measure (retail_pipeline_assets.py:67; retail_pipeline.py:39-41):
     * CASE WHEN event_type='purchase' THEN value ELSE 0 END. */

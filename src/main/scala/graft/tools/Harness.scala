@@ -6,8 +6,8 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
-/** The machinery every harness main shares (Bench, Verify, RunReference
-  * and the mains under graft.tools): one session recipe, one executor
+/** The machinery every harness main shares (Bench, Verify, RunReference,
+  * JobProfile and PlanDump): one session recipe, one executor
   * stats listener, one snapshot release and one materialize. One copy,
   * so a pin, a drain guard or a metric added here reaches every main. */
 object Harness {

@@ -19,10 +19,14 @@ object JobProfile {
     * line. A job with no JobEnd event (still running / dropped event) is
     * marked instead of computing (0 - start), which printed a huge
     * negative duration and corrupted the sums (ADVICE r20); it counts in
-    * `jobs=` but not in `sum(job)`. */
+    * `jobs=` but not in `union(job)`. `union(job)` is the time covered by
+    * at least one completed job, so concurrent jobs count once, and
+    * `wall-union` is the time no job ran — perfbench's `driver.gap_s`.
+    * `jobs` must be in start order, as [[Harness.StatsListener.jobs]]
+    * returns them. */
   def report(name: String, wall: Double, jobs: Seq[Harness.Job]): Seq[String] = {
     var prevEnd = 0L
-    var jobSum = 0.0
+    var unionMs = 0L
     val lines = jobs.map { j =>
       val counts = f"stages=${j.stages}%2d tasks=${j.tasks}%4d  in=${j.input / 1e6}%7.2fMB " +
         f"sr=${j.shuffleRead / 1e6}%7.2fMB sw=${j.shuffleWrite / 1e6}%7.2fMB"
@@ -31,13 +35,14 @@ object JobProfile {
         case Some(end) =>
           val dur = (end - j.start) / 1e3
           val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3
-          jobSum += dur
+          unionMs += math.max(0L, end - math.max(j.start, prevEnd))
           prevEnd = math.max(prevEnd, end)
           f"  job ${j.id}%4d  ${dur}%7.3fs  gap=${gap}%6.3fs  " + counts
       }
     }
+    val union = unionMs / 1e3
     (f"\n===== $name%s  wall=$wall%.3fs (pass $Passes of $Passes) =====" +: lines) :+
-      f"  jobs=${jobs.size}%d  sum(job)=${jobSum}%.3fs  wall-sum=${wall - jobSum}%.3fs (driver/plan/gaps)"
+      f"  jobs=${jobs.size}%d  union(job)=$union%.3fs  wall-union=${wall - union}%.3fs (driver/plan/gaps)"
   }
 
   def main(args: Array[String]): Unit = {

@@ -50,6 +50,20 @@ class SourcesSpec extends SparkSpec {
     } finally df.unpersist()
   }
 
+  test("legacyEventsCsv reads the legacy schema and keeps the first n rows") {
+    val path = write("events.csv",
+      """timestamp,visitorid,event,itemid,transactionid
+        |1433221332117,257597,view,355908,
+        |1433224214164,992329,addtocart,248676,
+        |1433221999827,111016,transaction,318965,4000
+        |""".stripMargin)
+    val df = Sources.legacyEventsCsv(spark, path, limit = Some(2))
+    // file sources read every column as nullable; names and types hold
+    df.schema.map(f => f.name -> f.dataType) shouldBe
+      graft.schema.Schemas.legacyEvent.map(f => f.name -> f.dataType)
+    df.collect().map(_.getAs[Long]("visitorid")) shouldBe Array(257597L, 992329L)
+  }
+
   test("documentsJsonl reads the declared schema and quarantines bad lines") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toFile
     val f = new java.io.File(dir, "docs.jsonl")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.graft.BenchListenerBus
 import org.apache.spark.sql.functions.col
 
 class ScalePartitionsSpec extends SparkSpec {
@@ -36,11 +37,22 @@ class ScalePartitionsSpec extends SparkSpec {
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
     ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 3L
     ScalePartitions.tableRows(spark, s"$dir/absent.parquet") shouldBe 0L
-    // memo: a second call must not re-count (observable via timing is
-    // flaky — instead overwrite the table and demand the OLD stat, the
-    // memo's defining behavior)
+    // the memo follows the files: a rewritten table and a path created
+    // after it was missing are counted again
     Seq(1L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 3L
+    ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 1L
+    Seq(1L, 2L).toDF("x").write.parquet(s"$dir/absent.parquet")
+    ScalePartitions.tableRows(spark, s"$dir/absent.parquet") shouldBe 2L
+    // an unchanged table is answered from the memo: no Spark job runs
+    val sc = spark.sparkContext
+    assert(BenchListenerBus.drain(sc, 60000L), "listener bus did not drain")
+    val listener = new graft.tools.Harness.StatsListener(sc)
+    sc.addSparkListener(listener)
+    try {
+      ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 1L
+      listener.quiesce()
+      listener.jobs shouldBe empty
+    } finally sc.removeSparkListener(listener)
   }
 
   test("m95 under the rule: a forced repartition width returns bit-identical rows") {

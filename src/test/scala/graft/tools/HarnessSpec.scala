@@ -36,7 +36,7 @@ class HarnessSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("JobProfile marks a job with no end event and leaves it out of sum(job)") {
+  test("JobProfile marks a job with no end event and leaves it out of union(job)") {
     val listener = new Harness.StatsListener(spark.sparkContext)
     listener.onJobStart(SparkListenerJobStart(7, 1000L, Seq.empty))
     listener.onJobStart(SparkListenerJobStart(8, 2000L, Seq.empty))
@@ -45,6 +45,18 @@ class HarnessSpec extends SparkSpec {
     lines.filter(_.contains("(no end event)")).map(_.trim.split("\\s+").take(2).mkString(" ")) shouldBe
       Seq("job 7")
     lines.last should include("jobs=2")
-    lines.last should include("sum(job)=0.500s")
+    lines.last should include("union(job)=0.500s")
+  }
+
+  test("JobProfile counts the overlap of concurrent jobs once in union(job)") {
+    val listener = new Harness.StatsListener(spark.sparkContext)
+    listener.onJobStart(SparkListenerJobStart(1, 1000L, Seq.empty))
+    listener.onJobStart(SparkListenerJobStart(2, 1500L, Seq.empty))
+    listener.onJobEnd(SparkListenerJobEnd(1, 2000L, JobSucceeded))
+    listener.onJobEnd(SparkListenerJobEnd(2, 2500L, JobSucceeded))
+    // a summed 2.000 s would leave the driver gap 0.5 s too small
+    val last = JobProfile.report("q", 2.0, listener.jobs).last
+    last should include("union(job)=1.500s")
+    last should include("wall-union=0.500s")
   }
 }
