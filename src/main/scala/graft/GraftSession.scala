@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    (`try_element_at`, overflow-safe minhash arithmetic), and the
   *    pin makes that contract immune to ambient conf or a future
   *    default drift.
+  *  - parquet TIMESTAMP(NANOS) read as a nanos long
+  *    (`spark.sql.legacy.parquet.nanosAsLong`), set once here so
+  *    [[Tables.events]] reads the driver corpus without writing the
+  *    session conf on every read.
   *
   * The harness mains build their sessions on this factory through
   * [[graft.tools.Harness.session]]; this factory is the library entry
@@ -95,6 +99,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheMaxEntries.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Apply `SPARK_GRAFT_CONF` — semicolon-separated k=v pairs — to `b`.
     * The harness session ([[graft.tools.Harness.session]]) applies it

@@ -149,28 +149,42 @@ object NgramJaccard {
     * every step is relational over the gram SETS, so the DuckDB oracle
     * (m14) replays it verbatim on the gram strings; the engine shuffles
     * their 64-bit hashes ([[wordShingleHashSet]]), identical up to 2^-64
-    * collisions. */
-  /** `postingParts` (round 21, guide §2.5 "AQE coalescing vs CPU-dense
-    * reduce stages"): when Some(p), the gram exchange is pinned at p
-    * partitions via an explicit `repartition(p, gram)` — the aggregate
-    * reuses it (same key ⇒ no second exchange), and REPARTITION_BY_NUM is
-    * exempt from AQE coalescing, so the posting build AND the pair
-    * expansion reading it keep p tasks instead of being crammed into 1–4
-    * tasks by byte-count (measured at sf0.1: the pair stage ran 0.5–0.9 s
-    * single-task — AQE sizes partitions by bytes, but these stages are
-    * CPU-bound at ~KB/ms). Callers gate p through
-    * [[graft.Tables.spreadParts]]: above the corpus row gate it is None
-    * and the plan is byte-identical — at real scale the gram exchange is
-    * big enough that AQE never coalesces it anyway, so the pin is purely
-    * the small-corpus idle-core fix, same story as the scan spread. */
+    * collisions.
+    *
+    * The posting PIN (round 21, guide §2.5 "AQE coalescing vs CPU-dense
+    * reduce stages"): below the corpus scan-spread gate
+    * ([[graft.Tables.spreadParts]], sized from `docs`' own source rows),
+    * the gram exchange is an explicit `repartition(p, gram)` at the
+    * gate's width — the aggregate reuses it (same key ⇒ no second
+    * exchange), and REPARTITION_BY_NUM is exempt from AQE coalescing, so
+    * the posting build AND the pair expansion reading it keep p tasks
+    * instead of being crammed into 1–4 tasks by byte-count (measured at
+    * sf0.1: the pair stage ran 0.5–0.9 s single-task — AQE sizes
+    * partitions by bytes, but these stages are CPU-bound at ~KB/ms).
+    * Above the gate, or for a frame that reads no files, the plan is
+    * byte-identical to the unpinned one — at real scale the gram
+    * exchange is big enough that AQE never coalesces it anyway, so the
+    * pin is purely the small-corpus idle-core fix, same story as the
+    * scan spread. */
   def invertedIndexPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
-                         threshold: Double = 0.6, dfCap: Int = 50,
-                         postingParts: Option[Int] = None): DataFrame =
-    sharedGramCounts(docs, textCol, w, dfCap, postingParts)
+                         threshold: Double = 0.6, dfCap: Int = 50): DataFrame =
+    jaccardPairs(docs, textCol, w, threshold, dfCap, postingPin(docs))
+
+  /** [[invertedIndexPairs]] with the pin already decided — for a caller
+    * whose `docs` is a checkpoint (no input files) and that sized the pin
+    * from the frame it started with ([[graft.pipeline.CorpusPipeline]]). */
+  private[graft] def jaccardPairs(docs: DataFrame, textCol: String, w: Int,
+                                  threshold: Double, dfCap: Int,
+                                  pin: Option[Int]): DataFrame =
+    sharedGramCounts(docs, textCol, w, dfCap, pin)
       .withColumn("jaccard", col("shared").cast("double") /
         (col("n_a") + col("n_b") - col("shared")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
+
+  /** The posting pin's width for a pair tier over `docs`. */
+  private[graft] def postingPin(docs: DataFrame): Option[Int] =
+    graft.Tables.spreadParts(docs, graft.Tables.CorpusSpread)
 
   /** Asymmetric CONTAINMENT pairs (m113, Broder 1997's "roughly
     * contained" resemblance variant — public): containment_a =
@@ -186,12 +200,12 @@ object NgramJaccard {
     * Scale shape: identical to [[invertedIndexPairs]] (one capped
     * posting exchange, pair expansion inside it, df > dfCap stop-grams
     * dropped before any pair exists); only the final scoring projection
-    * differs. Sizes are over KEPT grams — the same pruned-shingle
-    * convention the Jaccard tier and its oracle use. */
+    * differs, and the posting pin is the same. Sizes are over KEPT
+    * grams — the same pruned-shingle convention the Jaccard tier and its
+    * oracle use. */
   def containmentPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
-                       threshold: Double = 0.8, dfCap: Int = 50,
-                       postingParts: Option[Int] = None): DataFrame =
-    sharedGramCounts(docs, textCol, w, dfCap, postingParts)
+                       threshold: Double = 0.8, dfCap: Int = 50): DataFrame =
+    sharedGramCounts(docs, textCol, w, dfCap, postingPin(docs))
       .withColumn("containment_a", col("shared").cast("double") / col("n_a"))
       .withColumn("containment_b", col("shared").cast("double") / col("n_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)
@@ -201,14 +215,12 @@ object NgramJaccard {
   /** The posting-list core both pair tiers score: one row per doc pair
     * (doc_a < doc_b) sharing at least one kept gram, with the shared-gram
     * count and each doc's kept-gram count (doc_a, doc_b, shared, n_a, n_b).
-    * `postingParts` pins the gram exchange (see [[invertedIndexPairs]]). */
+    * `pin` pins the gram exchange (see [[invertedIndexPairs]]). */
   private def sharedGramCounts(docs: DataFrame, textCol: String, w: Int,
-                               dfCap: Int,
-                               postingParts: Option[Int]): DataFrame = {
+                               dfCap: Int, pin: Option[Int]): DataFrame = {
     val grams0 = docs.select(col("doc_id"),
       explode(wordShingleHashSet(col(textCol), lit(w))).as("gram"))
-    val grams = postingParts.map(p => grams0.repartition(p, col("gram")))
-      .getOrElse(grams0)
+    val grams = pin.fold(grams0)(p => grams0.repartition(p, col("gram")))
     // Build the posting list per gram in ONE exchange and cap it there —
     // stop-gram pruning (df > dfCap → dropped) happens before any pair is
     // produced, and the pair expansion is a double explode of the capped

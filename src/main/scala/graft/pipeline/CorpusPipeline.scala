@@ -28,24 +28,29 @@ object CorpusPipeline {
   /** The pins split the dataflow into several physical plans (the eager
     * gate pin, the lazy deduped pin, the clustering rounds' pins, the
     * final read); PlanSpec asserts on every plan a
-    * `QueryExecutionListener` captures from this production call. */
+    * `QueryExecutionListener` captures from this production call.
+    *
+    * The near-dup tier's posting pin
+    * ([[graft.dedup.NgramJaccard.invertedIndexPairs]]) is sized HERE,
+    * from `docs`' own source rows, because the frame it pins is a
+    * checkpoint that reads no files. Every caller runs the same plan:
+    * pinned below the corpus scan-spread gate, unpinned above it. */
   def prepare(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
               jaccardThreshold: Double = 0.6, dfCap: Int = 50,
-              chunkSize: Int = 50, chunkStride: Int = 40,
-              postingParts: Option[Int] = None): DataFrame = {
+              chunkSize: Int = 50, chunkStride: Int = 40): DataFrame = {
+    val pin = NgramJaccard.postingPin(docs)
     val gated = docs
       .select(col("doc_id"), col("text"), TextOps.profile(col("text")).as("p"))
       .filter(col("p.lang_pred") === lang && col("p.quality") >= minQuality)
       .select("doc_id", "text")
-    dedupAndChunk(gated, jaccardThreshold, dfCap, chunkSize, chunkStride,
-      postingParts)
+    dedupAndChunk(gated, pin, jaccardThreshold, dfCap, chunkSize, chunkStride)
   }
 
   /** The shared tail of [[prepare]] and [[prepareV2]]: pin the gated set,
     * exact dedup, near-dup pairs, clusters, canonical docs, chunks. */
-  private def dedupAndChunk(gated: DataFrame, jaccardThreshold: Double,
-                            dfCap: Int, chunkSize: Int, chunkStride: Int,
-                            postingParts: Option[Int]): DataFrame = {
+  private def dedupAndChunk(gated: DataFrame, pin: Option[Int],
+                            jaccardThreshold: Double, dfCap: Int,
+                            chunkSize: Int, chunkStride: Int): DataFrame = {
     // EAGER pin of the gated set (round 21, guide §1.2 "per-task work" +
     // §3.3 plan-size note): ExactDedup's semi-join references the gate on
     // BOTH sides (winners subtree + probe side), so without this pin one
@@ -70,8 +75,7 @@ object CorpusPipeline {
     // share no state, so anything still pinned is dead weight).
     val exact = ExactDedup.dedup(gatePin).pinned(false)
     val pairs = NgramJaccard
-      .invertedIndexPairs(exact, threshold = jaccardThreshold, dfCap = dfCap,
-        postingParts = postingParts)
+      .jaccardPairs(exact, "text", 3, jaccardThreshold, dfCap, pin)
       .select("doc_a", "doc_b")
     val nonCanonical = DedupClusters.components(pairs)
       .filter(col("doc_id") =!= col("cluster_id"))
@@ -92,12 +96,13 @@ object CorpusPipeline {
     * variance collapses to identical `<EMAIL>`/`<IP>`/`<PHONE>`
     * placeholders and the copies fingerprint identically (spec-pinned).
     * Both scrub stages are pure projections, so v2 adds ZERO shuffles
-    * over [[prepare]]. Hash-checked end-to-end as m28.
+    * over [[prepare]], and sizes its posting pin the same way.
+    * Hash-checked end-to-end as m28.
     */
   def prepareV2(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
                 jaccardThreshold: Double = 0.6, dfCap: Int = 50,
-                chunkSize: Int = 50, chunkStride: Int = 40,
-                postingParts: Option[Int] = None): DataFrame = {
+                chunkSize: Int = 50, chunkStride: Int = 40): DataFrame = {
+    val pin = NgramJaccard.postingPin(docs)
     // Each scrub stage lands in its own projection so the collapse lambda
     // references an ATTRIBUTE, not the upstream expression tree — see
     // Repetition.collapseTokens' contract (inlining the chain re-runs the
@@ -110,7 +115,6 @@ object CorpusPipeline {
       .select(col("doc_id"), split(lower(trim(col("text"))), " +").as("t"))
       .select(col("doc_id"),
         graft.text.Repetition.collapseTokens(col("t")).as("text"))
-    dedupAndChunk(gated, jaccardThreshold, dfCap, chunkSize, chunkStride,
-      postingParts)
+    dedupAndChunk(gated, pin, jaccardThreshold, dfCap, chunkSize, chunkStride)
   }
 }

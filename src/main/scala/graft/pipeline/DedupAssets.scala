@@ -202,11 +202,9 @@ object DedupAssets {
     materialized(s, "pairs", dir, Seq("doc_a", "doc_b"))(
       graft.dedup.NgramJaccard.invertedIndexPairs(
         graft.queries.CorpusQueries.augmentedDocs(s, dir),
-        threshold = 0.5, dfCap = 50,
-        // gated posting-exchange pin (NgramJaccard doc): the pair
+        // the gated posting pin (NgramJaccard doc) applies: the pair
         // expansion was the build's dominant single-task stage
-        postingParts = graft.Tables.spreadParts(s,
-          s"$dir/documents.parquet", "documents")))
+        threshold = 0.5, dfCap = 50))
 
   def pairs(s: SparkSession, dir: String): DataFrame =
     pairsLoose(s, dir).filter(col("jaccard") >= 0.6)
@@ -246,10 +244,10 @@ object DedupAssets {
           // encode+decode is pure codec CPU fused into the scan stage —
           // the round-20 A/B measured this build 4.9 -> 2.9 s once the
           // walk left the single-task scan
-          graft.Tables.spreadSmallScan(s,
+          graft.Tables.spread(
             graft.queries.CorpusQueries.augmentedDocs(s, dir)
               .filter(col("text").isNotNull && length(col("text")) > 0),
-            s"$dir/documents.parquet", "doc_id", "documents"))))
+            "doc_id", graft.Tables.CorpusSpread))))
 
   /** Per-media feature table (doc_id, n_bytes, byte_mean, head_hash,
     * format, width, height, channels, luma_mean) — the full decode +

@@ -43,31 +43,6 @@ object CorpusQueries {
   private[graft] def docOff(s: SparkSession, dir: String): Long =
     synthOffset(Tables.documents(s, dir), s"$dir::documents", "doc_id")
 
-  /** The adaptive scan spread ([[Tables.documentsSpread]]) applied to a
-    * documents-DERIVED frame (an augmented fixture) — same gate, same
-    * stats source (the documents footer; the fixture adds a bounded
-    * number of synthetic rows, so the gate arithmetic is unchanged).
-    * Opt-in at the CPU-dense sites only; each use is justified by the
-    * round-20 A/B in OPTIMIZATION_r20.md. */
-  private def spreadDocs(s: SparkSession, dir: String, df: DataFrame): DataFrame =
-    Tables.spreadSmallScan(s, df, s"$dir/documents.parquet", "doc_id",
-      "documents")
-
-  /** The adaptive scan spread applied to an embeddings-DERIVED frame
-    * (the [[vectors]] projection, possibly dup-augmented) — same gate,
-    * same stats source (the embeddings footer). Round 21: the vector
-    * tier's CPU-dense per-PAIR stages (within-cell/within-bucket cosine
-    * scoring) run at scan parallelism because their small side is
-    * broadcast — at sub-gate scale that is the 1–2 tasks of a
-    * single-row-group parquet file. Applied ONLY where the A/B measured a
-    * win (m33 −23 %, m10 −17 %; the m74/m104 probe scans measured flat
-    * and stay unspread); quantizer TRAINING keeps the unspread frame
-    * (its sample is an orderBy+limit — partition-invariant — but the
-    * Lloyd refinement's float sums are not, and the captured-model
-    * contract stays bit-identical by not touching the train input). */
-  private def spreadVecs(s: SparkSession, dir: String, df: DataFrame): DataFrame =
-    Tables.spreadSmallScan(s, df, s"$dir/embeddings.parquet", "id",
-      "embeddings")
   private[graft] def vecOff(s: SparkSession, dir: String): Long =
     synthOffset(Tables.embeddings(s, dir), s"$dir::embeddings", "vec_id")
 
@@ -123,7 +98,7 @@ object CorpusQueries {
   /** PII scrub over the PII-augmented corpus (m20). */
   def piiRedact(s: SparkSession, dir: String): DataFrame =
     graft.text.PiiRedact.redact(
-      spreadDocs(s, dir, withSyntheticPii(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticPii(Tables.documents(s, dir)), "doc_id", Tables.CorpusSpread))
 
   /** Deterministic card-number augmentation for m141 — a pure function
     * of doc_id (the withSyntheticPii recipe), replayed verbatim in the
@@ -145,7 +120,7 @@ object CorpusQueries {
     * order-id/serial false positives). Zero-exchange projection. */
   def ccLuhn(s: SparkSession, dir: String): DataFrame =
     graft.text.Luhn.cardCounts(
-      spreadDocs(s, dir, withSyntheticCards(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticCards(Tables.documents(s, dir)), "doc_id", Tables.CorpusSpread))
 
   /** Per-source quota sample, cap 7 (m21) — two-phase pruned sampler. */
   def sourceQuotaSample(s: SparkSession, dir: String): DataFrame =
@@ -236,7 +211,8 @@ object CorpusQueries {
     * and m92 (line rules). */
   def repetitionRules(s: SparkSession, dir: String): DataFrame =
     graft.text.TextOps.repetitionRulesCompiled(
-      spreadDocs(s, dir, withSyntheticRepetition(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticRepetition(Tables.documents(s, dir)), "doc_id",
+        Tables.CorpusSpread))
 
   /** Heavy-hitter 3-grams (m111) over the m93 repetition fixture (the
     * planted spam phrase is exactly the boilerplate the diagnostic
@@ -246,7 +222,8 @@ object CorpusQueries {
     * guarantee, so the oracle replays it sketch-free. */
   def heavyGrams(s: SparkSession, dir: String): DataFrame =
     graft.text.HeavyGrams.heavyGrams(
-      spreadDocs(s, dir, withSyntheticRepetition(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticRepetition(Tables.documents(s, dir)), "doc_id",
+        Tables.CorpusSpread))
 
   /** Paper-exact position-union repetition card (m109): same families,
     * thresholds and fixture as m93, but a character counts at most once
@@ -254,7 +231,8 @@ object CorpusQueries {
     * side by side. */
   def repetitionRulesUnion(s: SparkSession, dir: String): DataFrame =
     graft.text.TextOps.repetitionRulesUnion(
-      spreadDocs(s, dir, withSyntheticRepetition(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticRepetition(Tables.documents(s, dir)), "doc_id",
+        Tables.CorpusSpread))
 
   /** m94's corpus: [[withSyntheticLines]] plus the deterministic noise
     * every C4 rule needs to fire both ways — the base boilerplate lines
@@ -290,7 +268,7 @@ object CorpusQueries {
     * counterpart to the Gopher scoring battery (m91–m93). */
   def c4Rules(s: SparkSession, dir: String): DataFrame =
     graft.text.C4Rules.c4Rules(
-      spreadDocs(s, dir, withSyntheticC4Noise(Tables.documents(s, dir))))
+      Tables.spread(withSyntheticC4Noise(Tables.documents(s, dir)), "doc_id", Tables.CorpusSpread))
 
   /** m95's corpus: a six-word domain phrase appended to doc_id ≡ 0,1
     * (mod 10) — the corpus vocabulary is uniform across sources, so
@@ -321,14 +299,13 @@ object CorpusQueries {
     * committed bench scale) the plan is byte-identical to before. */
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.ScalePartitions
-    val n = ScalePartitions.forShuffle(
-      ScalePartitions.tableRows(s, s"$dir/documents.parquet"),
-      graft.text.Dsir.ShuffleBytesPerDoc,
-      floor = ScalePartitions.sessionFloor(s))
+    val docs = withSyntheticDomain(Tables.documents(s, dir))
     graft.text.Dsir.importanceWeights(
-      spreadDocs(s, dir, withSyntheticDomain(Tables.documents(s, dir))),
+      Tables.spread(docs, "doc_id", Tables.CorpusSpread),
       isTarget = col("doc_id") % 10 < 2,
-      shufflePartitions = n)
+      shufflePartitions = ScalePartitions.forShuffle(
+        ScalePartitions.sourceRows(docs), graft.text.Dsir.ShuffleBytesPerDoc,
+        floor = ScalePartitions.sessionFloor(s)))
   }
 
   /** Global keep-first line dedup (m96) over the m92 noise corpus (its
@@ -348,7 +325,7 @@ object CorpusQueries {
     // are CPU-dense and ran at single-row-group scan parallelism; all
     // consumers are aggregation-based (partition-invariant)
     graft.text.NgramNovelty.bigramNovelty(
-      spreadDocs(s, dir, Tables.documents(s, dir)), rareMax = 25)
+      Tables.documentsSpread(s, dir), rareMax = 25)
 
   /** Temperature-smoothed mix rebalance (m34) over a deterministically
     * SKEWED grouping — the corpus's sources are uniform, so the group key
@@ -457,18 +434,15 @@ object CorpusQueries {
     * partial-aggregated exchange of (source, counters); the median is the
     * only non-decomposable statistic and rides the same narrow rows.
     *
-    * The 100 TB swap is a CONFIG, not a rewrite:
-    * `spark.graft.approxPercentiles=true` switches every median/MAD in
-    * m35/m69 to `percentile_approx` (bounded-memory t-digest sketch,
-    * mergeable in partial aggregation) with the identical plan shape —
-    * ApproxSwapSpec pins exact≈approx at test scale. */
+    * The registered query is exact (the driver oracle replays
+    * interpolated quantile_cont semantics). The 100 TB swap is the
+    * library call `corpusReportOver(docs, approx = true)`: every
+    * median/MAD in m35/m69 becomes `percentile_approx` (bounded-memory
+    * t-digest sketch, mergeable in partial aggregation) with the
+    * identical plan shape — ApproxSwapSpec pins exact≈approx at test
+    * scale. */
   def corpusReport(s: SparkSession, dir: String): DataFrame =
-    corpusReportOver(Tables.documents(s, dir), approxPercentiles(s))
-
-  /** Session flag for the exact→approx percentile swap (default exact:
-    * the driver oracle replays interpolated quantile_cont semantics). */
-  def approxPercentiles(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.approxPercentiles").exists(_.toBoolean)
+    corpusReportOver(Tables.documents(s, dir))
 
   private def median(c: org.apache.spark.sql.Column, approx: Boolean) =
     if (approx) percentile_approx(c, lit(0.5), lit(10000))
@@ -1782,11 +1756,9 @@ object CorpusQueries {
     * contained direction where the symmetric m14 tier is blind. */
   def containmentPairs(s: SparkSession, dir: String): DataFrame =
     graft.dedup.NgramJaccard.containmentPairs(
-      spreadDocs(s, dir, quotedAugmentedDocs(s, dir)),
-      // gated posting-exchange pin (NgramJaccard doc): the pair
+      // the gated posting pin (NgramJaccard doc) applies: the pair
       // expansion ran 0.48 s over 4 AQE-coalesced tasks at sf0.1
-      postingParts = graft.Tables.spreadParts(s,
-        s"$dir/documents.parquet", "documents"))
+      Tables.spread(quotedAugmentedDocs(s, dir), "doc_id", Tables.CorpusSpread))
 
   /** Stored-index BM25 probe (m112): same queries, same k as m103, but
     * served from the persisted term-sorted postings asset instead of
@@ -2303,7 +2275,8 @@ object CorpusQueries {
     * realized recall. */
   def lshBucketDrops(s: SparkSession, dir: String): DataFrame =
     graft.dedup.MinHashLSH.bucketDropReport(
-      spreadDocs(s, dir, augmentedDocs(s, dir)), bucketCaps = Seq(3, 1000))
+      Tables.spread(augmentedDocs(s, dir), "doc_id", Tables.CorpusSpread),
+      bucketCaps = Seq(3, 1000))
 
   /** Per-source token-count quantile card (m132): exact p0/p25/p50/p75/
     * p90/p100 of document token counts per source, by nearest-rank
@@ -2330,7 +2303,7 @@ object CorpusQueries {
     * which is the point of the tier. */
   def editSimilarityPairs(s: SparkSession, dir: String): DataFrame =
     graft.dedup.EditSimilarity.scorePairs(
-      spreadDocs(s, dir, augmentedDocs(s, dir)),
+      Tables.spread(augmentedDocs(s, dir), "doc_id", Tables.CorpusSpread),
       graft.pipeline.DedupAssets.minhashCandidates(s, dir))
 
   /** Kolmogorov–Smirnov drift test (m127): per source, the KS statistic
@@ -2573,11 +2546,12 @@ object CorpusQueries {
     // the fixture offset travels with the model so the SQL replay rebuilds
     // the exact corpus the engine ran on, whatever the organic id range
     graft.OracleCapture.put("m33_semantic_dedup", (model, off))
-    // pair side spread (spreadVecs note): the within-cell cosine scoring
+    // pair side spread (the embeddings-derived frame's footer gates it;
+    // measured m33 −23 %): the within-cell cosine scoring
     // ran as 2 AQE-coalesced tasks; per-pair sims + min/max agg are
     // partition-invariant, and the model above trains on the unspread frame
     graft.similarity.SemanticDedup.dropNearDups(
-      spreadVecs(s, dir, all), model, threshold = 0.99)
+      Tables.spread(all, "id", Tables.CorpusSpread), model, threshold = 0.99)
   }
 
   /** Product-quantized ADC top-k (m37): train codebooks on the corpus,
@@ -2697,10 +2671,10 @@ object CorpusQueries {
     // The bucket space scales with the corpus ([[scaledPlanes]]; recall
     // at cosine 0.999 stays ≥ 0.999 through p = 24 with 3 OR tables).
     val all = withPerturbedDups(vectors(s, dir), vecOff(s, dir))
-    // bucket-pair side spread (spreadVecs note): hyperplanes are seeded
+    // bucket-pair side spread (measured m10 −17 %): hyperplanes are seeded
     // and data-oblivious, within-bucket cosines per-pair exact — the
     // spread only raises the scoring stage's parallelism
-    Ann.nearDupPairs(spreadVecs(s, dir, all), threshold = 0.99,
+    Ann.nearDupPairs(Tables.spread(all, "id", Tables.CorpusSpread), threshold = 0.99,
       numPlanes = scaledPlanes(all.count()), tables = 3)
   }
 
@@ -2893,11 +2867,11 @@ object CorpusQueries {
     * stddev would be dragged by the very outliers being hunted. Exact
     * `percentile` twice (median, then MAD) with the same quantile_cont
     * parity as m35; the 100 TB swap to `percentile_approx` is the same
-    * `spark.graft.approxPercentiles` config as m35 (identical plan shape,
+    * `approx = true` library call as m35 (identical plan shape,
     * ApproxSwapSpec-pinned). Both per-source stat tables are
     * source-count-sized and broadcast. */
   def lengthOutliers(s: SparkSession, dir: String): DataFrame =
-    lengthOutliersOver(Tables.documents(s, dir), approxPercentiles(s))
+    lengthOutliersOver(Tables.documents(s, dir))
 
   def lengthOutliersOver(docs: DataFrame, approx: Boolean = false): DataFrame = {
     val d = docs.filter(col("text").isNotNull)
@@ -3094,9 +3068,7 @@ object CorpusQueries {
     * over the augmented corpus — one hash-checked composite (m18). */
   def corpusPipeline(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.CorpusPipeline.prepare(
-      withSyntheticDups(Tables.documents(s, dir), docOff(s, dir)),
-      postingParts = Tables.spreadParts(s, s"$dir/documents.parquet",
-        "documents"))
+      withSyntheticDups(Tables.documents(s, dir), docOff(s, dir)))
 
   /** Incremental exact dedup (m29): docs ≥ 400 plus replayed copies of
     * already-ingested content play today's delta; docs < 400 play the
@@ -3121,9 +3093,7 @@ object CorpusQueries {
     * PII to placeholders. One hash-checked oracle end-to-end. */
   def corpusPipelineV2(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.CorpusPipeline.prepareV2(
-      withSyntheticPii(withSyntheticDups(Tables.documents(s, dir), docOff(s, dir))),
-      postingParts = Tables.spreadParts(s, s"$dir/documents.parquet",
-        "documents"))
+      withSyntheticPii(withSyntheticDups(Tables.documents(s, dir), docOff(s, dir))))
 
   // ---- multimodal -----------------------------------------------------
 

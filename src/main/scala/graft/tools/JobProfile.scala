@@ -22,6 +22,8 @@ object JobProfile {
     * `jobs=` but not in `union(job)`. `union(job)` is the time covered by
     * at least one completed job, so concurrent jobs count once, and
     * `wall-union` is the time no job ran — perfbench's `driver.gap_s`.
+    * A job that starts before an earlier one ends prints `overlap=`,
+    * the time it shares with those jobs, instead of a negative gap.
     * `jobs` must be in start order, as [[Harness.StatsListener.jobs]]
     * returns them. */
   def report(name: String, wall: Double, jobs: Seq[Harness.Job]): Seq[String] = {
@@ -34,10 +36,12 @@ object JobProfile {
         case None => f"  job ${j.id}%4d  (no end event)  " + counts
         case Some(end) =>
           val dur = (end - j.start) / 1e3
-          val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3
+          val idle =
+            if (j.start < prevEnd) f"overlap=${(math.min(end, prevEnd) - j.start) / 1e3}%.3fs"
+            else f"gap=${if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e3}%6.3fs"
           unionMs += math.max(0L, end - math.max(j.start, prevEnd))
           prevEnd = math.max(prevEnd, end)
-          f"  job ${j.id}%4d  ${dur}%7.3fs  gap=${gap}%6.3fs  " + counts
+          f"  job ${j.id}%4d  ${dur}%7.3fs  $idle  " + counts
       }
     }
     val union = unionMs / 1e3

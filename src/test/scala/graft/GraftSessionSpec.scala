@@ -24,6 +24,8 @@ class GraftSessionSpec extends SparkSpec {
     // (round 21: the 100-entry default thrashes on a 200-query library)
     s.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
       GraftSession.CodegenCacheMaxEntries.toString
+    // set once here, so Tables.events never writes the session conf
+    s.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
   }
 
   test("withS3aProfile pins the magic committer and pool settings; never credentials") {

@@ -1,36 +1,52 @@
 package graft
 
+import graft.operators.ScalePartitions
+import graft.queries.CorpusQueries
 import org.apache.spark.sql.DataFrame
 
-/** Pins for the adaptive scan spread (Tables.spreadSmallScan, round-20
-  * optimization): the gate arithmetic, the plan shape on both sides of
-  * the gate, and result parity spread-on vs spread-off. The spec
-  * session keeps the spread OFF (SparkSpec — PlanSpec pins the scale
-  * shape, which is exactly the spread-off plan); this suite flips the
-  * conf locally and restores it, relying on the forked test JVM running
-  * suites sequentially. The spread is OPT-IN per call site
-  * (Tables.documentsSpread / embeddingsSpread / spreadSmallScan) — the
-  * blanket form measured a net loss on light-scan consumers
-  * (OPTIMIZATION_r20.md). */
+/** Pins for the one size gate (Tables.spreadParts): the scan spread
+  * (round-20 optimization) and the posting pin (round 21) it sizes — the
+  * gate arithmetic at its boundaries, the plan shape on both sides of the
+  * gate, and result parity gate-on vs gate-off. The spec session keeps
+  * the gate CLOSED (SparkSpec — PlanSpec pins the scale shape, which is
+  * exactly the unspread plan); this suite opens it locally and restores
+  * it, relying on the forked test JVM running suites sequentially. The
+  * spread is OPT-IN per call site (Tables.spread and the `*Spread`
+  * loaders) — the blanket form measured a net loss on light-scan
+  * consumers (OPTIMIZATION_r20.md). */
 class ScanSpreadSpec extends SparkSpec {
+  import spark.implicits._
 
   private val dir = sf("sf0.001")
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+  private def withSpread[A](body: => A): A = {
+    val key = "spark.graft.scanSpread.enabled"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
     try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  // expression ids differ between constructions; normalize them away
+  private def norm(p: String): String = p.replaceAll("#\\d+", "#")
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-spread").toString
+
+  /** A parquet table of `n` ids: its footer rows are exactly `n`. */
+  private def ids(n: Long): DataFrame = {
+    val path = s"$tmp/ids-$n.parquet"
+    spark.range(n).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
   test("gate fires on a small corpus: one REPARTITION_BY_NUM hash exchange on the key") {
-    withConf("spark.graft.scanSpread.enabled" -> "true") {
+    withSpread {
       val p = plan(Tables.documentsSpread(spark, dir))
       p should include("REPARTITION_BY_NUM")
       p should include("hashpartitioning(doc_id")
@@ -38,48 +54,63 @@ class ScanSpreadSpec extends SparkSpec {
   }
 
   test("above maxRows the plan is identical to the unspread one (the 100 TB side)") {
-    // expression ids differ between constructions; normalize them away
-    def norm(p: String): String = p.replaceAll("#\\d+", "#")
-    val off = norm(plan(Tables.documents(spark, dir)))
-    val gated = withConf(
-      "spark.graft.scanSpread.enabled" -> "true",
-      "spark.graft.scanSpread.maxRows" -> "10") {
-      norm(plan(Tables.documentsSpread(spark, dir)))
+    for (policy <- Seq(Tables.CorpusSpread, Tables.NarrowSpread)) {
+      Tables.spreadWidth(policy.maxRows, 4, policy) shouldBe Some(4)
+      Tables.spreadWidth(policy.maxRows + 1, 4, policy) shouldBe None
     }
-    gated shouldBe off
-    (gated should not).include("REPARTITION_BY_NUM")
+    // the frame gate reads the table's own footer rows, at and one above
+    // the corpus gate
+    val at = ids(Tables.CorpusSpread.maxRows)
+    val above = ids(Tables.CorpusSpread.maxRows + 1)
+    withSpread {
+      plan(Tables.spread(at, "id", Tables.CorpusSpread)) should
+        include("REPARTITION_BY_NUM")
+      val gated = norm(plan(Tables.spread(above, "id", Tables.CorpusSpread)))
+      gated shouldBe norm(plan(above))
+      (gated should not).include("REPARTITION_BY_NUM")
+    }
   }
 
   test("below 2 x rowsPerTask the spread stays off — task overhead must never exceed the work") {
-    val gated = withConf(
-      "spark.graft.scanSpread.enabled" -> "true",
-      "spark.graft.scanSpread.rowsPerTask" -> "1000000") {
-      plan(Tables.documentsSpread(spark, dir))
+    for (policy <- Seq(Tables.CorpusSpread, Tables.NarrowSpread)) {
+      Tables.spreadWidth(2 * policy.rowsPerTask - 1, 4, policy) shouldBe None
+      Tables.spreadWidth(2 * policy.rowsPerTask, 4, policy) shouldBe Some(2)
     }
-    (gated should not).include("REPARTITION_BY_NUM")
-  }
-
-  test("per-table override beats the global knob (ADVICE r20 namespacing)") {
-    // global maxRows=10 would close the gate; the documents-scoped key
-    // reopens it for this table only — lineitem's different defaults can
-    // no longer be clobbered by a documents tuning pass
-    val p = withConf(
-      "spark.graft.scanSpread.enabled" -> "true",
-      "spark.graft.scanSpread.maxRows" -> "10",
-      "spark.graft.scanSpread.documents.maxRows" -> "262144") {
-      plan(Tables.documentsSpread(spark, dir))
+    val below = ids(2 * Tables.CorpusSpread.rowsPerTask - 1)
+    val at = ids(2 * Tables.CorpusSpread.rowsPerTask)
+    withSpread {
+      (plan(Tables.spread(below, "id", Tables.CorpusSpread)) should not)
+        .include("REPARTITION_BY_NUM")
+      plan(Tables.spread(at, "id", Tables.CorpusSpread)) should
+        include(", 2), REPARTITION_BY_NUM")
     }
-    p should include("REPARTITION_BY_NUM")
   }
 
   test("plain Tables.documents never spreads — the opt-in contract") {
-    withConf("spark.graft.scanSpread.enabled" -> "true") {
+    withSpread {
       (plan(Tables.documents(spark, dir)) should not).include("REPARTITION_BY_NUM")
     }
   }
 
+  test("a toDF frame never spreads or pins: it reads no files") {
+    val local = (1 to 500).map(i => (i.toLong, s"doc $i shares these common words"))
+      .toDF("doc_id", "text")
+    withSpread {
+      ScalePartitions.sourceRows(local) shouldBe 0L
+      Tables.spreadParts(local, Tables.CorpusSpread) shouldBe None
+      val plans = capturedPlans {
+        Tables.spread(local, "doc_id", Tables.CorpusSpread).collect()
+        dedup.NgramJaccard.invertedIndexPairs(local, threshold = 0.5).collect()
+        dedup.NgramJaccard.containmentPairs(local, threshold = 0.5).collect()
+        pipeline.CorpusPipeline.prepareV2(local).collect()
+      }
+      plans should not be empty
+      for ((_, p) <- plans) (p should not).include("REPARTITION_BY_NUM")
+    }
+  }
+
   test("pushdown and pruning survive the spread: filters and ReadSchema still reach the scan") {
-    withConf("spark.graft.scanSpread.enabled" -> "true") {
+    withSpread {
       val p = plan(Tables.documentsSpread(spark, dir)
         .filter(org.apache.spark.sql.functions.col("text").isNotNull)
         .select("doc_id", "text"))
@@ -89,47 +120,65 @@ class ScanSpreadSpec extends SparkSpec {
   }
 
   test("posting pin (round 21): one gram exchange at the pinned width, reused by the aggregate") {
-    // NgramJaccard.invertedIndexPairs / containmentPairs(postingParts =
-    // Some(p)) replace the gram groupBy's exchange with an explicit
-    // repartition(p, gram): REPARTITION_BY_NUM (exempt from AQE
-    // coalescing), exactly ONE gram-keyed exchange (the aggregate reuses
-    // it — a second one would mean the pin ADDED a shuffle), and rows
-    // identical to the unpinned form (counts/jaccard/containment are
-    // partition-invariant). containmentPairs is m113's posting pin.
+    // Below the gate, NgramJaccard.invertedIndexPairs / containmentPairs
+    // replace the gram groupBy's exchange with an explicit
+    // repartition(p, gram) at the gate's width: REPARTITION_BY_NUM
+    // (exempt from AQE coalescing), every gram-keyed exchange at that
+    // width (the aggregate reuses it — a second one would mean the pin
+    // ADDED a shuffle), and rows identical to the unpinned form
+    // (counts/jaccard/containment are partition-invariant).
+    // containmentPairs is m113's posting pin.
     val docs = Tables.documents(spark, dir)
-    def rows(df: DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    for (pairsOf <- Seq[Option[Int] => DataFrame](
-      pp => graft.dedup.NgramJaccard.invertedIndexPairs(
-        docs, threshold = 0.5, dfCap = 50, postingParts = pp),
-      pp => graft.dedup.NgramJaccard.containmentPairs(
-        docs, threshold = 0.5, dfCap = 50, postingParts = pp))) {
-      val pinned = pairsOf(Some(5))
-      pinned.collect()
-      val p = pinned.queryExecution.executedPlan.toString
-      p should include("REPARTITION_BY_NUM")
-      // EVERY gram-keyed exchange in the plan carries the pinned width —
-      // the aggregate reused the repartition rather than adding its own
-      // shuffle at the session default. (The plan TEXT prints the posting
-      // subtree once per consumer; at runtime AQE dedupes the identical
-      // exchanges into one shuffle stage — JobProfile shows one posting
-      // build — so the pin is asserted on widths, not node counts.)
-      val gramEx = p.linesIterator
-        .filter(_.contains("hashpartitioning(gram")).toSeq
-      gramEx should not be empty
-      all(gramEx) should include(", 5)")
-      rows(pinned) shouldBe rows(pairsOf(None))
+    val width = math.min(4L, docs.count() / Tables.CorpusSpread.rowsPerTask)
+    width shouldBe 4L
+    for (pairsOf <- Seq[DataFrame => DataFrame](
+      dedup.NgramJaccard.invertedIndexPairs(_, threshold = 0.5, dfCap = 50),
+      dedup.NgramJaccard.containmentPairs(_, threshold = 0.5, dfCap = 50))) {
+      val unpinned = rows(pairsOf(docs))
+      withSpread {
+        val pinned = pairsOf(docs)
+        pinned.collect()
+        val p = pinned.queryExecution.executedPlan.toString
+        // The plan TEXT prints the posting subtree once per consumer; at
+        // runtime AQE dedupes the identical exchanges into one shuffle
+        // stage (JobProfile shows one posting build), so the pin is
+        // asserted on widths, not node counts.
+        val gramEx = p.linesIterator
+          .filter(_.contains("hashpartitioning(gram")).toSeq
+        gramEx should not be empty
+        all(gramEx) should include(s", $width), REPARTITION_BY_NUM")
+        rows(pinned) shouldBe unpinned
+      }
     }
   }
 
+  test("perfbench's prepareV2 call shape runs m28's posting pin at min(4, rows/64)") {
+    // The call perfbench's corpus_prep makes: no pin argument exists, so
+    // the pipeline sizes it from the frame it is given — the same plan
+    // the registered m28 runs. Every gram exchange of every captured plan
+    // (the pins and the final collect) is the pin; rows equal the
+    // gate-off run's.
+    def docs = CorpusQueries.withSyntheticPii(CorpusQueries.augmentedDocs(spark, dir))
+    val width = math.min(4L, Tables.documents(spark, dir).count() /
+      Tables.CorpusSpread.rowsPerTask)
+    def run(): (Seq[String], Seq[String]) = {
+      var out = Seq.empty[String]
+      val plans = capturedPlans { out = rows(pipeline.CorpusPipeline.prepareV2(docs)) }
+      (plans.flatMap(_._2.linesIterator).filter(_.contains("hashpartitioning(gram")), out)
+    }
+    val (_, off) = run()
+    val (gramEx, on) = withSpread(run())
+    gramEx should not be empty
+    all(gramEx) should include(s", $width), REPARTITION_BY_NUM")
+    on shouldBe off
+  }
+
   test("result parity: a sketch aggregate and a heavy-gram card are spread-invariant") {
-    def rows(df: DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    val cmsOff = rows(graft.queries.CorpusQueries.cmsFrequencyCard(spark, dir))
-    val hgOff = rows(graft.queries.CorpusQueries.heavyGrams(spark, dir))
-    withConf("spark.graft.scanSpread.enabled" -> "true") {
-      rows(graft.queries.CorpusQueries.cmsFrequencyCard(spark, dir)) shouldBe cmsOff
-      rows(graft.queries.CorpusQueries.heavyGrams(spark, dir)) shouldBe hgOff
+    val cmsOff = rows(CorpusQueries.cmsFrequencyCard(spark, dir))
+    val hgOff = rows(CorpusQueries.heavyGrams(spark, dir))
+    withSpread {
+      rows(CorpusQueries.cmsFrequencyCard(spark, dir)) shouldBe cmsOff
+      rows(CorpusQueries.heavyGrams(spark, dir)) shouldBe hgOff
     }
   }
 }

@@ -55,16 +55,18 @@ object SparkSpec {
       // builder sets the same value; see GraftSession.CodegenCacheMaxEntries)
       .config("spark.sql.codegen.cache.maxEntries",
         GraftSession.CodegenCacheMaxEntries.toString)
-      // Scan spread OFF for the spec session: PlanSpec pins the 100 TB
-      // plan shape, and the size-gated spread (Tables.spreadSmallScan)
-      // vanishes above its row gate by construction — so the spread-off
-      // plan IS the scale plan the pins exist to protect. The spread's
-      // own gate arithmetic, plan shape and result parity are pinned by
+      // Scan spread and posting pin OFF for the spec session: PlanSpec
+      // pins the 100 TB plan shape, and the size gate (Tables.spreadParts)
+      // closes above its row gate by construction — so the spread-off
+      // plan IS the scale plan the pins exist to protect. The gate's
+      // arithmetic, plan shape and result parity are pinned by
       // ScanSpreadSpec (which toggles this conf locally — suites run
       // sequentially in the forked test JVM); spread-ON correctness of
       // all 203 registered queries is gated by Verify + the DuckDB
       // oracle at sf0.001/sf0.01, which run with the production default.
       .config("spark.graft.scanSpread.enabled", "false")
+      // as GraftSession.builder sets it: events.parquet's nanos timestamps
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -32,24 +32,26 @@ class ScalePartitionsSpec extends SparkSpec {
       ScalePartitions.forShuffle(1L, 1L, 64, cap = 32)
   }
 
-  test("tableRows reads parquet footers; missing path is 0; memoized per JVM") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sp-rows").toString
+  test("sourceRows counts a frame's parquet footers, memoized per JVM") {
+    // a space in the path: inputFiles hands back URI-encoded strings
+    val dir = java.nio.file.Files.createTempDirectory("graft sp rows").toString
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 3L
-    ScalePartitions.tableRows(spark, s"$dir/absent.parquet") shouldBe 0L
-    // the memo follows the files: a rewritten table and a path created
-    // after it was missing are counted again
+    val t = spark.read.parquet(s"$dir/t.parquet")
+    ScalePartitions.sourceRows(t) shouldBe 3L
+    // the SOURCE rows: the frame's own filters and self-unions leave them
+    ScalePartitions.sourceRows(t.filter(col("x") > 1L).unionByName(t)) shouldBe 3L
+    ScalePartitions.sourceRows(Seq(1L, 2L).toDF("x")) shouldBe 0L
+    // the memo follows the files: a rewritten table is counted again
     Seq(1L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 1L
-    Seq(1L, 2L).toDF("x").write.parquet(s"$dir/absent.parquet")
-    ScalePartitions.tableRows(spark, s"$dir/absent.parquet") shouldBe 2L
+    val rewritten = spark.read.parquet(s"$dir/t.parquet")
+    ScalePartitions.sourceRows(rewritten) shouldBe 1L
     // an unchanged table is answered from the memo: no Spark job runs
     val sc = spark.sparkContext
     assert(BenchListenerBus.drain(sc, 60000L), "listener bus did not drain")
     val listener = new graft.tools.Harness.StatsListener(sc)
     sc.addSparkListener(listener)
     try {
-      ScalePartitions.tableRows(spark, s"$dir/t.parquet") shouldBe 1L
+      ScalePartitions.sourceRows(rewritten) shouldBe 1L
       listener.quiesce()
       listener.jobs shouldBe empty
     } finally sc.removeSparkListener(listener)

@@ -2,9 +2,9 @@ package graft.queries
 
 import graft.SparkSpec
 
-/** The exact→approx percentile swap (m35/m69) is a session config, not a
-  * rewrite: `spark.graft.approxPercentiles=true` switches every median/MAD
-  * to percentile_approx (bounded-memory, mergeable t-digest) with the same
+/** The exact→approx percentile swap (m35/m69) is a library argument, not
+  * a rewrite: `approx = true` switches every median/MAD to
+  * percentile_approx (bounded-memory, mergeable t-digest) with the same
   * plan shape, and the answers stay within discretization tolerance of the
   * exact interpolated quantiles. */
 class ApproxSwapSpec extends SparkSpec {
@@ -36,19 +36,5 @@ class ApproxSwapSpec extends SparkSpec {
       math.abs(r.getDouble(2) - em) should be <= 3.0
       math.abs(r.getDouble(3) - emad) should be <= 3.0
     }
-  }
-
-  test("the session config flips the production queries to the sketch") {
-    val key = "spark.graft.approxPercentiles"
-    spark.conf.set(key, "true")
-    try {
-      CorpusQueries.corpusReport(spark, sf("sf0.001"))
-        .queryExecution.executedPlan.toString should include("percentile_approx")
-      CorpusQueries.lengthOutliers(spark, sf("sf0.001"))
-        .queryExecution.executedPlan.toString should include("percentile_approx")
-    } finally spark.conf.unset(key)
-    // and default stays exact (oracle parity)
-    CorpusQueries.corpusReport(spark, sf("sf0.001"))
-      .queryExecution.executedPlan.toString should not include "percentile_approx"
   }
 }

@@ -58,5 +58,10 @@ class HarnessSpec extends SparkSpec {
     val last = JobProfile.report("q", 2.0, listener.jobs).last
     last should include("union(job)=1.500s")
     last should include("wall-union=0.500s")
+    // job 2 shares [1500, 2000] with job 1: an overlap, never a negative gap
+    val lines = JobProfile.report("q", 2.0, listener.jobs)
+    lines.find(_.trim.split("\\s+").take(2).mkString(" ") == "job 2").get should
+      include("overlap=0.500s")
+    lines.filter(_.contains("gap=-")) shouldBe empty
   }
 }
