@@ -1,7 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Writers (SURVEY §2.1 sinks).
   *
@@ -44,24 +47,45 @@ object Sinks {
   }
 
   /** S5 — mart parquet under `aggregates/<name>/dt=<date>/` (retail_pipeline
-    * .py:78-84). The Hive-style `dt=` path is load-bearing downstream
-    * (partition discovery); S6 empty guard included (py:79). */
+    * .py:78-84), written once: the row count rides on the write as an
+    * `Observation`, so no job runs the aggregate a second time to ask
+    * whether it is empty. Returns that count. The Hive-style `dt=` path is
+    * load-bearing downstream (partition discovery).
+    *
+    * S6 (py:79): an empty frame leaves no partition. The write of 0 rows
+    * is deleted after the fact: its `dt=` directory, and the table
+    * directory too when this write created it. An empty re-run of a day
+    * that already holds rows therefore REMOVES that day (the reference
+    * skips the write and keeps the stale day): the mart mirrors the day's
+    * current result, and [[registerMartTable]] drops the day's catalog
+    * partition to match. */
   def writeMartParquet(df: DataFrame, martRoot: String, name: String,
-                       date: String): Unit = {
-    if (!df.isEmpty) {
-      df.write.mode(SaveMode.Overwrite)
-        .parquet(s"$martRoot/aggregates/$name/dt=$date/")
-    }
+                       date: String): Long = {
+    val table = new Path(s"$martRoot/aggregates/$name")
+    val day = new Path(table, s"dt=$date")
+    val fs = table.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val tableExisted = fs.exists(table)
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(day.toString)
+    val n = rows.get("rows").asInstanceOf[Long]
+    if (n == 0L) fs.delete(if (tableExisted) day else table, true)
+    n
   }
 
   /** S7 — catalog registration replacing the Glue crawler: tables get the
     * crawler's `agg_` prefix (aws-stack.ts:54) and — like the crawler's
     * table — span EVERY `dt=` partition under the mart root, not just the
     * day that was written. The table is external over the partitioned
-    * parquet tree; `recoverPartitions` is the crawler-run analogue that
-    * discovers newly-landed days. (A per-day `saveAsTable` overwrite would
-    * leave the catalog holding only the last day — observed on the full
-    * 31-day reference backfill.)
+    * parquet tree. When the table is created (first use, or re-created
+    * below) `recoverPartitions` crawls every `dt=` directory once; after
+    * that each call registers only `date`, the day just written (`ADD IF
+    * NOT EXISTS PARTITION`), or drops it when an empty re-run removed its
+    * directory (S6). The schema and location come from the catalog's table
+    * metadata, so a call on a standing table runs no Spark job and does
+    * not grow with the days loaded. (A per-day `saveAsTable` overwrite
+    * would leave the catalog holding only the last day — observed on the
+    * full 31-day reference backfill.)
     *
     * Schema evolution — the crawler's `UPDATE_IN_DATABASE` policy
     * (aws-stack.ts:55-61): when the mart frame's schema no longer matches
@@ -70,39 +94,41 @@ object Sinks {
     * table: dropping it touches metadata only, history stays on disk, and
     * columns absent from old partitions read as null (evolution-on-read,
     * exactly how Glue-over-parquet behaves). */
-  def registerMartTable(df: DataFrame, martRoot: String, name: String): Unit = {
+  def registerMartTable(df: DataFrame, martRoot: String, name: String,
+                        date: String): Unit = {
     val spark = df.sparkSession
     val table = s"agg_$name"
-    val location = new org.apache.hadoop.fs.Path(s"$martRoot/aggregates/$name")
+    val location = new Path(s"$martRoot/aggregates/$name")
     val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // An all-empty history (S6 skipped every write) leaves nothing to crawl.
+    // An all-empty history (S6 removed every write) leaves nothing to crawl.
     if (fs.exists(location)) {
       // Name+type comparison, case-insensitive, nullability ignored (the
       // catalog and parquet footers disagree on nullability routinely).
-      def shape(s: org.apache.spark.sql.types.StructType) =
+      def shape(s: StructType) =
         s.fields.toSeq.map(f => (f.name.toLowerCase(java.util.Locale.ROOT), f.dataType))
-      val expected = shape(df.schema) :+ ("dt", org.apache.spark.sql.types.StringType)
+      val expected = shape(df.schema) :+ ("dt", StringType)
+      val catalog = spark.sessionState.catalog
+      val ident = TableIdentifier(table)
       // LOCATION mismatch re-creates too (review r18): a session whose
       // second pipeline/mart uses a different root must not keep serving
       // the FIRST root's partitions through a schema-matching stale
       // table — the crawler analogue re-points at the root it crawls.
-      def locationDiffers: Boolean = {
-        val current = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-          .filter(col("col_name") === "Location")
-          .select("data_type").collect().headOption.map(_.getString(0))
-        val want = fs.makeQualified(location).toUri.toString
-        !current.map(c => new org.apache.hadoop.fs.Path(c).toUri.toString)
-          .contains(want)
+      val want = fs.makeQualified(location).toUri.toString
+      val standing = catalog.tableExists(ident) && {
+        val meta = catalog.getTableMetadata(ident)
+        val current = meta.storage.locationUri.map(u => new Path(u).toUri.toString)
+        shape(meta.schema) == expected && current.contains(want)
       }
-      if (spark.catalog.tableExists(table) &&
-          (shape(spark.table(table).schema) != expected || locationDiffers)) {
-        spark.sql(s"DROP TABLE $table")
-      }
-      if (!spark.catalog.tableExists(table)) {
+      if (!standing) {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
         spark.sql(s"CREATE TABLE $table (${df.schema.toDDL}, dt STRING) " +
           s"USING parquet PARTITIONED BY (dt) LOCATION '$location'")
+        spark.catalog.recoverPartitions(table)
+      } else if (fs.exists(new Path(location, s"dt=$date"))) {
+        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION (dt='$date')")
+      } else {
+        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (dt='$date')")
       }
-      spark.catalog.recoverPartitions(table)
     }
   }
 

@@ -47,14 +47,12 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
     // fact_events (A1): 4-key grain, conditional revenue.
     val fact = RetailOps.factBuild(staging, "event_date", "event_type",
       Seq("product_id", "user_id"), "price")
-    Sinks.upsertDatePartition(fact, "fact_events")
 
     // dim_user (A4/P5): DISTINCT projection of non-null users.
     val dimUser = staging
       .filter(col("user_id").isNotNull)
       .select("user_id", "user_session").distinct()
       .withColumn("updated_at", loadedAt)
-    Sinks.replaceTable(dimUser, "dim_user")
 
     // dim_product (A5/P2/F1/D1): DISTINCT + 'other' fill + hierarchy split
     // + deterministic keep-first dedup on product_id (§7.4.3 — pandas'
@@ -71,18 +69,25 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
     val dimProduct = RetailOps.dedupKeepFirst(products, Seq("product_id"),
         Seq(col("price").asc, col("brand").asc_nulls_last, col("category_id").asc))
       .withColumn("updated_at", loadedAt)
-    Sinks.replaceTable(dimProduct, "dim_product")
 
-    // dim_date (F2/F3): one-shot calendar (reference @once asset).
-    if (!spark.catalog.tableExists("dim_date")) {
-      Sinks.replaceTable(DimDate.build(spark, "2019-10-01", "2020-03-31"), "dim_date")
-    }
+    // The fact upsert runs alone: it swaps partitionOverwriteMode on the
+    // shared session conf for the length of its write. The dimension
+    // replacements are unpartitioned tables of their own, so they run
+    // together; dim_date (F2/F3) is the one-shot calendar (reference @once
+    // asset) and joins them on the first day.
+    Sinks.upsertDatePartition(fact, "fact_events")
+    val dimDate =
+      if (spark.catalog.tableExists("dim_date")) None
+      else Some(() =>
+        Sinks.replaceTable(DimDate.build(spark, "2019-10-01", "2020-03-31"), "dim_date"))
+    RetailPipeline.together(Seq(
+      () => Sinks.replaceTable(dimUser, "dim_user"),
+      () => Sinks.replaceTable(dimProduct, "dim_product")) ++ dimDate)
   }
 
-  /** Mart aggregation for one day (retail_pipeline.py:28-105): three
-    * aggregate tables → partitioned parquet (`dt=` layout) → catalog
-    * registration with the crawler's `agg_` prefix. */
-  def buildMart(date: String): Map[String, DataFrame] = {
+  /** The day's three mart aggregates by name (retail_pipeline.py:28-105),
+    * as plans; [[buildMart]] writes them. */
+  def martTables(date: String): Map[String, DataFrame] = {
     val d = to_date(lit(date))
     val fact = spark.table("fact_events").filter(col("event_date") === d)
 
@@ -117,14 +122,22 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
     val topBrands = RetailOps.topK(funnel, 10,
       Seq(col("revenue").desc, col("brand").asc_nulls_last))
 
-    val tables = Map(
+    Map(
       "daily_revenue_summary" -> revenue,
       "daily_funnel_by_brand" -> funnel,
       "top_brands_by_revenue" -> topBrands)
-    tables.foreach { case (name, df) =>
+  }
+
+  /** Mart stage for one day: each of [[martTables]] → partitioned parquet
+    * (`dt=` layout) → catalog registration with the crawler's `agg_`
+    * prefix. The three (write, register) pairs share no path and no table,
+    * so they run together. */
+  def buildMart(date: String): Map[String, DataFrame] = {
+    val tables = martTables(date)
+    RetailPipeline.together(tables.toSeq.map { case (name, df) => () =>
       Sinks.writeMartParquet(df, martRoot, name, date)
-      Sinks.registerMartTable(df, martRoot, name)
-    }
+      Sinks.registerMartTable(df, martRoot, name, date)
+    })
     tables
   }
 
@@ -161,9 +174,14 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
 
   /** Multi-day backfill (SURVEY §7.2 M5): sequential day runs, each
     * idempotent, so a failed backfill resumes by re-running its range.
-    * Days are independent partitions — a scheduler may fan these out;
-    * within one driver, sequential keeps the cluster fully busy per day
-    * without cross-day shuffle interference. */
+    * Days are independent partitions — a scheduler may fan these out.
+    * Within one driver the days run one after another: a day of a few
+    * thousand rows per stage leaves most task slots idle, and what fills
+    * them is the overlap WITHIN a stage — the dimension replacements run
+    * together, and so do the three mart writes — so one write's planning
+    * and commit on the driver overlap another write's jobs. Running days
+    * at once would first need a `partitionOverwriteMode` swap that does
+    * not mutate the shared session conf. */
   def backfill(startDate: String, endDate: String): Seq[String] = {
     val start = java.time.LocalDate.parse(startDate)
     val end = java.time.LocalDate.parse(endDate)
@@ -177,16 +195,44 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
 }
 
 object RetailPipeline {
+  /** Runs `writes` at once, one thread each, and returns only when every
+    * one has ended; the first failure in `writes` order is rethrown with
+    * the others suppressed-attached. Each thread is started here, so it
+    * inherits a copy of the caller's SparkContext local properties (job
+    * group, job tags, scheduler pool): Spark keeps them in an
+    * InheritableThreadLocal that clones into every new thread. */
+  private[pipeline] def together(writes: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (write, i) =>
+      val t = new Thread(() => try write() catch { case e: Throwable => failures(i) = e },
+        s"retail-write-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ => ()
+    }
+  }
+
   /** Day-run outcome delivered to the notification hook — the engine's
     * analogue of the reference's complete/failed notification tasks.
     * Carries table NAMES, not frames: a notification channel gets
     * identifiers to report, never live plans to re-execute. */
-  // single-writer enforcement for manifestNotify's read-max+append
-  private val manifestLock = new Object
-
   sealed trait RunOutcome { def date: String }
   final case class RunComplete(date: String, tables: Set[String]) extends RunOutcome
   final case class RunFailed(date: String, error: Throwable) extends RunOutcome
+
+  // Single-writer enforcement for manifestNotify's mint+append, and the
+  // run_seq it last minted per manifest table: table → (the table's
+  // catalog createTime, last run_seq), per catalog (a session's shared
+  // state: sessions of one SparkContext share it, and so share the
+  // sequence). Guarded by the lock.
+  private val manifestLock = new Object
+  private val lastRunSeq = new java.util.WeakHashMap[AnyRef,
+    scala.collection.mutable.Map[org.apache.spark.sql.catalyst.TableIdentifier, (Long, Long)]]
 
   /** A ready-made notify hook that turns the branch DECISION into an
     * OBSERVABLE ARTIFACT: each outcome appends one row to a catalog
@@ -202,19 +248,24 @@ object RetailPipeline {
     * documented current-state query pick a stale row, review r18), so
     * the manifest is the run HISTORY and `max(run_seq)` per date IS
     * the current state; the full table is the audit trail.
+    * The persisted max is read once per catalog and table, then the
+    * sequence continues from the last value minted. The value is keyed
+    * on the table's catalog `createTime`, so a table dropped and
+    * re-created (or first created) is read again: a missing table starts
+    * at 1. A day's notify is then one append job, not a scan of the
+    * whole history per day.
     * Single-writer contract (one scheduler appends, the reference's
     * own model) — ENFORCED within the JVM, not just documented: the
-    * read-max-then-append below is not atomic, so concurrent per-day
+    * mint-then-append below is not atomic, so concurrent per-day
     * backfill notifies in one driver would mint duplicate run_seq
     * values and break the max(run_seq)-per-date current-state query on
     * ties (ADVICE r18). `manifestLock` serializes the whole
-    * read+append; cross-JVM writers remain out of contract (one
-    * scheduler process, as in the reference). At scale this is a
-    * metadata-tier append + one metadata-tier max() read per DAG-day,
-    * never a data-plane cost — the lock holds for that metadata read,
-    * never a data-plane job. */
+    * mint+append, across every hook on the table; cross-JVM writers
+    * remain out of contract (one scheduler process, as in the
+    * reference). */
   def manifestNotify(spark: org.apache.spark.sql.SparkSession,
                      table: String = "pipeline_runs"): RunOutcome => Unit = {
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     out => manifestLock.synchronized {
       import spark.implicits._
       val (branch, tables, error) = out match {
@@ -224,20 +275,32 @@ object RetailPipeline {
           ("failed", null: String,
             s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
+      val catalog = spark.sessionState.catalog
+      val minted = lastRunSeq.computeIfAbsent(spark.sharedState,
+        _ => scala.collection.mutable.Map.empty)
+      val exists = catalog.tableExists(ident)
       val next =
-        if (spark.catalog.tableExists(table))
-          spark.table(table)
-            .agg(org.apache.spark.sql.functions.max("run_seq")).head()
-            .getAs[Any](0) match {
-              case null => 1L
-              case n: Long => n + 1L
-            }
-        else 1L
+        if (!exists) 1L
+        else {
+          val meta = catalog.getTableMetadata(ident)
+          minted.get(meta.identifier) match {
+            case Some((created, last)) if created == meta.createTime => last + 1L
+            case _ =>
+              spark.table(table)
+                .agg(org.apache.spark.sql.functions.max("run_seq")).head()
+                .getAs[Any](0) match {
+                  case null => 1L
+                  case n: Long => n + 1L
+                }
+          }
+        }
       val row = Seq((next, out.date, branch, tables, error))
         .toDF("run_seq", "date", "branch", "tables", "error")
-      if (spark.catalog.tableExists(table))
+      if (exists)
         row.write.mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(table)
       else row.write.saveAsTable(table)
+      val meta = catalog.getTableMetadata(ident)
+      minted(meta.identifier) = (meta.createTime, next)
     }
   }
 }

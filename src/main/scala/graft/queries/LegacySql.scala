@@ -119,9 +119,10 @@ object LegacySql {
   // ------------------------------------------------- S3/S5/S6/S7
   /** Mart write-path round-trip: aggregate one day → S5 `dt=` parquet
     * layout under the mart root (S3 overwrite semantics) → S6
-    * skip-empty guard exercised with a genuinely empty day → S7
-    * crawler-style catalog registration (`agg_` prefix, partition
-    * recovery) → read back through `spark.table` — so the sink tier's
+    * empty-day removal exercised with a genuinely empty day → S7
+    * crawler-style catalog registration (`agg_` prefix, a full partition
+    * crawl on create, the day's partition after) → read back through
+    * `spark.table` — so the sink tier's
     * lineage ends in a hash the DuckDB oracle must reproduce from the
     * raw events, not in a spec assertion (round-17 verdict ask #3).
     *
@@ -144,7 +145,7 @@ object LegacySql {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("value_sum"))
     Sinks.writeMartParquet(daily, root, "daily_counts_rt", day)
-    // S6: a day with no rows writes NOTHING (no empty dt= directory)
+    // S6: a day with no rows leaves NOTHING (no empty dt= directory)
     Sinks.writeMartParquet(daily.filter(lit(false)), root,
       "daily_counts_rt", "1999-01-01")
     // registerMartTable itself re-creates the table when the standing
@@ -152,7 +153,7 @@ object LegacySql {
     // lives in the sink, so every caller — the pipeline's three mart
     // tables included — gets it, not just this query); the cross-dir
     // spec below proves it through this call.
-    Sinks.registerMartTable(daily, root, "daily_counts_rt")
+    Sinks.registerMartTable(daily, root, "daily_counts_rt", day)
     s.table("agg_daily_counts_rt")
       .select(col("event_type"), col("n"), col("value_sum"), col("dt"))
   }

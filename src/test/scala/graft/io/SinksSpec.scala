@@ -74,12 +74,12 @@ class SinksSpec extends SparkSpec {
     val mart = Files.createTempDirectory("sinks-reg").toString
     val df = Seq((1, 2)).toDF("x", "y")
     Sinks.writeMartParquet(df, mart, "sinkspec_probe", "2019-10-01")
-    Sinks.registerMartTable(df, mart, "sinkspec_probe")
+    Sinks.registerMartTable(df, mart, "sinkspec_probe", "2019-10-01")
     spark.catalog.tableExists("agg_sinkspec_probe") shouldBe true
     spark.table("agg_sinkspec_probe").count() shouldBe 1
     // a later day lands; re-registration (crawler re-run) discovers it
     Sinks.writeMartParquet(df, mart, "sinkspec_probe", "2019-10-02")
-    Sinks.registerMartTable(df, mart, "sinkspec_probe")
+    Sinks.registerMartTable(df, mart, "sinkspec_probe", "2019-10-02")
     spark.table("agg_sinkspec_probe").count() shouldBe 2
     spark.table("agg_sinkspec_probe").select("dt").distinct().count() shouldBe 2
     spark.sql("DROP TABLE agg_sinkspec_probe")
@@ -89,12 +89,12 @@ class SinksSpec extends SparkSpec {
     val mart = Files.createTempDirectory("sinks-evolve").toString
     val v1 = Seq((1, 2)).toDF("x", "y")
     Sinks.writeMartParquet(v1, mart, "sinkspec_evolve", "2019-10-01")
-    Sinks.registerMartTable(v1, mart, "sinkspec_evolve")
+    Sinks.registerMartTable(v1, mart, "sinkspec_evolve", "2019-10-01")
     spark.table("agg_sinkspec_evolve").columns.toSeq shouldBe Seq("x", "y", "dt")
     // the mart grows a column; re-registration re-creates the definition
     val v2 = Seq((1, 2, 9L)).toDF("x", "y", "z")
     Sinks.writeMartParquet(v2, mart, "sinkspec_evolve", "2019-10-02")
-    Sinks.registerMartTable(v2, mart, "sinkspec_evolve")
+    Sinks.registerMartTable(v2, mart, "sinkspec_evolve", "2019-10-02")
     val evolved = spark.table("agg_sinkspec_evolve")
     evolved.columns.toSeq shouldBe Seq("x", "y", "z", "dt")
     // history stayed on disk; the old partition reads the new column as null
@@ -104,9 +104,63 @@ class SinksSpec extends SparkSpec {
     evolved.filter(col("dt") === "2019-10-02")
       .select("z").as[Long].collect() shouldBe Array(9L)
     // unchanged schema → no churn, registration stays idempotent
-    Sinks.registerMartTable(v2, mart, "sinkspec_evolve")
+    Sinks.registerMartTable(v2, mart, "sinkspec_evolve", "2019-10-02")
     spark.table("agg_sinkspec_evolve").count() shouldBe 2
     spark.sql("DROP TABLE agg_sinkspec_evolve")
+  }
+
+  private def partitions(table: String): Seq[String] =
+    spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSeq.sorted
+
+  test("writeMartParquet returns the row count; an empty day leaves no dt= directory and no catalog partition (S6)") {
+    val mart = Files.createTempDirectory("sinks-s6").toString
+    val df = Seq((1, 2), (3, 4)).toDF("x", "y")
+    Sinks.writeMartParquet(df, mart, "sinkspec_s6", "2019-10-01") shouldBe 2L
+    Sinks.registerMartTable(df, mart, "sinkspec_s6", "2019-10-01")
+    Sinks.writeMartParquet(df.filter(lit(false)), mart, "sinkspec_s6", "2019-10-02") shouldBe 0L
+    Sinks.registerMartTable(df, mart, "sinkspec_s6", "2019-10-02")
+    Files.exists(Paths.get(s"$mart/aggregates/sinkspec_s6/dt=2019-10-02")) shouldBe false
+    partitions("agg_sinkspec_s6") shouldBe Seq("dt=2019-10-01")
+    spark.table("agg_sinkspec_s6").count() shouldBe 2
+    spark.sql("DROP TABLE agg_sinkspec_s6")
+  }
+
+  test("an empty re-run of a written day removes its directory and its catalog partition (S6)") {
+    val mart = Files.createTempDirectory("sinks-rerun").toString
+    val df = Seq((1, 2)).toDF("x", "y")
+    Seq("2019-10-01", "2019-10-02").foreach { d =>
+      Sinks.writeMartParquet(df, mart, "sinkspec_rerun", d)
+      Sinks.registerMartTable(df, mart, "sinkspec_rerun", d)
+    }
+    partitions("agg_sinkspec_rerun") shouldBe Seq("dt=2019-10-01", "dt=2019-10-02")
+    // the day's current result is empty: the mart mirrors it
+    Sinks.writeMartParquet(df.filter(lit(false)), mart, "sinkspec_rerun", "2019-10-02") shouldBe 0L
+    Sinks.registerMartTable(df, mart, "sinkspec_rerun", "2019-10-02")
+    Files.exists(Paths.get(s"$mart/aggregates/sinkspec_rerun/dt=2019-10-02")) shouldBe false
+    Files.exists(Paths.get(s"$mart/aggregates/sinkspec_rerun/dt=2019-10-01")) shouldBe true
+    partitions("agg_sinkspec_rerun") shouldBe Seq("dt=2019-10-01")
+    spark.table("agg_sinkspec_rerun").select("dt").as[String].collect().toSeq shouldBe
+      Seq("2019-10-01")
+    spark.sql("DROP TABLE agg_sinkspec_rerun")
+  }
+
+  test("registerMartTable on a standing table with matching schema and location runs no Spark job") {
+    val mart = Files.createTempDirectory("sinks-nojob").toString
+    val df = Seq((1, 2)).toDF("x", "y")
+    Sinks.writeMartParquet(df, mart, "sinkspec_nojob", "2019-10-01")
+    Sinks.registerMartTable(df, mart, "sinkspec_nojob", "2019-10-01") // creates it
+    Sinks.writeMartParquet(df, mart, "sinkspec_nojob", "2019-10-02")
+    val sc = spark.sparkContext
+    assert(org.apache.spark.graft.BenchListenerBus.drain(sc, 60000L), "listener bus did not drain")
+    val listener = new graft.tools.Harness.StatsListener(sc)
+    sc.addSparkListener(listener)
+    try {
+      Sinks.registerMartTable(df, mart, "sinkspec_nojob", "2019-10-02")
+      listener.quiesce()
+      listener.jobs shouldBe empty
+    } finally sc.removeSparkListener(listener)
+    partitions("agg_sinkspec_nojob") shouldBe Seq("dt=2019-10-01", "dt=2019-10-02")
+    spark.sql("DROP TABLE agg_sinkspec_nojob")
   }
 
   test("writeCsvSummary produces a single readable CSV with header (S9)") {

@@ -2,6 +2,9 @@ package graft.pipeline
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.BenchListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test of the reference DAG semantics (SURVEY §5.2)
@@ -176,5 +179,82 @@ class RetailPipelineSpec extends SparkSpec {
     val ex = intercept[RuntimeException](p.runDayNotified("2019-10-03"))
     ex.getMessage shouldBe "pager down"
     ex.getSuppressed.head shouldBe an[IllegalStateException]
+  }
+
+  private def drainBus(): Unit =
+    assert(BenchListenerBus.drain(spark.sparkContext, 60000L), "listener bus did not drain")
+
+  test("manifest run_seq: two hooks on one table interleave without a duplicate, and a re-created table is read again") {
+    spark.sql("DROP TABLE IF EXISTS pipeline_runs_pair")
+    def seqs = spark.table("pipeline_runs_pair").select("run_seq").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    val h1 = RetailPipeline.manifestNotify(spark, "pipeline_runs_pair")
+    val h2 = RetailPipeline.manifestNotify(spark, "pipeline_runs_pair")
+    Seq(h1, h2, h1, h2).zipWithIndex.foreach { case (h, i) =>
+      h(RetailPipeline.RunComplete(s"2019-10-0${i + 1}", Set("m")))
+    }
+    seqs shouldBe Seq(1L, 2L, 3L, 4L)
+    spark.sql("DROP TABLE pipeline_runs_pair")
+    h1(RetailPipeline.RunComplete("2019-10-05", Set("m")))
+    seqs shouldBe Seq(1L)
+    // a table re-created behind the hooks' back is seeded from its rows
+    spark.sql("DROP TABLE pipeline_runs_pair")
+    import spark.implicits._
+    Seq((41L, "2019-10-06", "complete", "m", null: String))
+      .toDF("run_seq", "date", "branch", "tables", "error").write.saveAsTable("pipeline_runs_pair")
+    h2(RetailPipeline.RunComplete("2019-10-07", Set("m")))
+    seqs shouldBe Seq(41L, 42L)
+    spark.sql("DROP TABLE pipeline_runs_pair")
+  }
+
+  test("a mart that fails at write time fails the day once, after every other write has ended") {
+    val failMart = Files.createTempDirectory("graft-mart-fail").toString
+    val events = scala.collection.mutable.ArrayBuffer.empty[RetailPipeline.RunOutcome]
+    val p = new RetailPipeline(spark, root, failMart,
+        loadedAt = lit("2019-10-03 00:00:00").cast("timestamp"), notify = events += _) {
+      override def martTables(date: String): Map[String, DataFrame] = {
+        val tables = super.martTables(date)
+        tables.updated("top_brands_by_revenue", tables("top_brands_by_revenue")
+          .withColumn("boom", raise_error(lit("mart write failed")).cast("string")))
+      }
+    }
+    val result = p.runDayNotified("2019-10-01")
+    drainBus()
+    spark.sparkContext.statusTracker.getActiveJobIds shouldBe empty
+    result.isFailure shouldBe true
+    val error = result.failed.get
+    Iterator.iterate(error)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("mart write failed")) shouldBe true
+    events.toSeq match {
+      case Seq(RetailPipeline.RunFailed(d, e)) =>
+        d shouldBe "2019-10-01"
+        e shouldBe theSameInstanceAs(error)
+      case other => fail(s"expected exactly one failed event, got $other")
+    }
+    for (m <- Seq("daily_revenue_summary", "daily_funnel_by_brand"))
+      spark.table(s"agg_$m").filter(col("dt") === "2019-10-01").count() should be > 0L
+  }
+
+  test("a warm day runs within its job budget, every job under the caller's job group") {
+    pipeline.runDay("2019-10-01") // warm: tables, calendar and codegen in place
+    val sc = spark.sparkContext
+    drainBus()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id"))); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("retail-day-spec", "warm day")
+    try { pipeline.runDay("2019-10-02"); drainBus() }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    // ingest 2, star 7, mart 9 (three single-write marts, registered
+    // without a job); the isEmpty pre-pass and the DESCRIBE collect
+    // made the mart alone 18
+    seen.size should be <= 18
+    seen.toSet shouldBe Set("retail-day-spec")
   }
 }
