@@ -246,12 +246,7 @@ object Bench {
               } catch { case scala.util.control.NonFatal(e) =>
                 System.err.println(s"[bench] stream:ingest setup failed: ${e.getMessage}")
                 Seq.empty
-              } finally {
-                val walk = java.nio.file.Files.walk(streamRoot)
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path])
-                  .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-                finally walk.close()
-              }
+              } finally graft.pipeline.DedupAssets.deleteRecursively(streamRoot)
             }
           }
           Harness.releaseSnapshots(spark)

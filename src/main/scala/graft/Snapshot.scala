@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Central snapshot (plan-pinning) primitive for the iterative /
   * multi-pass tier — prefix sums, connected components, PageRank, LSH
@@ -48,29 +48,22 @@ object Snapshot {
       case None => df.localCheckpoint(eager)
     }
 
-  /** [[pin]] plus the block-manager RDD handles the snapshot pinned,
-    * captured by diffing `sc.getPersistentRDDs` around the call — the
-    * only handle Spark exposes (`Dataset.unpersist` cannot reach a
-    * localCheckpoint's internal RDD). Pass them to [[free]] when the
-    * snapshot is superseded: at billions of rows, retained dead rounds
-    * are real executor storage. Single-threaded per session by contract;
-    * a concurrent persist from another query would be mis-attributed.
-    * In reliable mode the diff is naturally empty (bytes live in files,
-    * not the block manager) and [[free]] is a no-op. */
-  def pinTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Seq[RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = pin(df, eager)
-    val added = sc.getPersistentRDDs.collect {
-      case (id, rdd) if !before.contains(id) => rdd
-    }.toSeq
-    (out, added)
+  /** Release the blocks of `pinned`, a frame that [[pin]] returned, once
+    * nothing reads it again: at billions of rows, retained dead rounds are
+    * real executor storage. The frame itself is the handle — its plan is
+    * the `LogicalRDD` leaf over the pinned RDD (`Dataset.unpersist`
+    * cannot reach that RDD), so concurrent queries in one session free
+    * only their own pins. In reliable mode the RDD holds no blocks and the
+    * frame keeps reading its checkpoint files. Non-blocking: eviction
+    * proceeds asynchronously. Throws `IllegalArgumentException` for any
+    * other frame (a derivation of a pin is not one). */
+  def free(pinned: DataFrame*): Unit = pinned.foreach { df =>
+    df.queryExecution.logical match {
+      case leaf: LogicalRDD => leaf.rdd.unpersist(blocking = false)
+      case plan => throw new IllegalArgumentException(
+        s"Snapshot.free takes the frame pin returned, not a ${plan.nodeName} plan")
+    }
   }
-
-  /** Release a superseded snapshot's blocks. Non-blocking: nothing will
-    * read them again; eviction proceeds asynchronously. */
-  def free(rdds: Seq[RDD[_]]): Unit =
-    rdds.foreach(_.unpersist(blocking = false))
 
   /** Chain syntax: `df.transform(...).pinned(eager)` reads like the
     * `localCheckpoint` call it replaces. */

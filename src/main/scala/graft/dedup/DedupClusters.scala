@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.rdd.RDD
+import graft.Snapshot.SnapshotOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,60 +23,49 @@ import org.apache.spark.sql.functions._
   * (hash-to-min); at 100 TB of docs the edge set from verified pairs is
   * orders of magnitude smaller than the corpus.
   *
-  * Memory contract: each round's lineage is truncated with a
-  * localCheckpoint, whose blocks stay pinned until explicitly
-  * unpersisted — a long-lived session would otherwise accumulate one
-  * dead label snapshot per round per invocation. `components` therefore
-  * frees every intermediate snapshot (edges + all superseded rounds) as
-  * soon as its successor materializes, returning a frame backed by
-  * exactly ONE small snapshot of (long, long) labels. Callers that can
-  * scope the result's lifetime should prefer `withComponents`, which
-  * also frees that final snapshot on exit — leaving ZERO persisted RDDs
-  * behind (spec-asserted via sc.getPersistentRDDs).
+  * Memory contract: each round's lineage is truncated with an eager
+  * [[graft.Snapshot]] pin, whose blocks stay pinned until explicitly
+  * freed — a long-lived session would otherwise accumulate one dead
+  * label snapshot per round per invocation. `components` therefore
+  * frees every intermediate pin (edges + all superseded rounds) through
+  * the pinned frame itself as soon as its successor materializes,
+  * returning the ONE pinned frame of (long, long) labels. A build frees
+  * only its own pins, so builds may run concurrently in one session.
+  * Callers that can scope the result's lifetime should prefer
+  * `withComponents`, which also frees that final pin on exit — leaving
+  * ZERO persisted RDDs behind (spec-asserted via sc.getPersistentRDDs).
   */
 object DedupClusters {
-
-  /** Snapshot `df` eagerly and return the frame plus the pinned-RDD
-    * handles for [[graft.Snapshot.free]] — local blocks by default,
-    * durable checkpoint files when `spark.graft.checkpointDir` is set
-    * (the cluster fault-tolerance mode; see [[graft.Snapshot]]). */
-  private def snapshot(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
-    graft.Snapshot.pinTracked(df, eager = true)
-
-  private def free(rdds: Seq[RDD[_]]): Unit = graft.Snapshot.free(rdds)
-
-  /** (doc_id, cluster_id) for every document that appears in `pairs`
-    * (doc_a, doc_b); cluster_id = min doc_id of the component.
-    *
-    * The result is backed by one materialized snapshot (two longs per
-    * clustered doc). Use `withComponents` to release it deterministically
-    * when the consumption is scoped. */
-  def components(pairs: DataFrame, maxIters: Int = 10): DataFrame =
-    componentsOwned(pairs, maxIters)._1
 
   /** Run `f` over the component labels, then free the final snapshot too:
     * net persisted-RDD delta is zero. `f` must fully consume the frame —
     * the labels are not usable after the bracket returns. */
   def withComponents[T](pairs: DataFrame, maxIters: Int = 10)(
       f: DataFrame => T): T = {
-    val (labels, owned) = componentsOwned(pairs, maxIters)
-    try f(labels) finally free(owned)
+    val labels = components(pairs, maxIters)
+    try f(labels) finally graft.Snapshot.free(labels)
   }
 
-  private def componentsOwned(
-      pairs: DataFrame, maxIters: Int): (DataFrame, Seq[RDD[_]]) = {
+  /** (doc_id, cluster_id) for every document that appears in `pairs`
+    * (doc_a, doc_b); cluster_id = min doc_id of the component.
+    *
+    * The result is the pinned frame of one materialized snapshot (two
+    * longs per clustered doc), which [[graft.Snapshot.free]] releases.
+    * Use `withComponents` to release it deterministically when the
+    * consumption is scoped. */
+  def components(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
     // Symmetric edge list, materialized ONCE: every round re-reads the
     // edges, and without the checkpoint each reference would re-execute
     // the entire upstream pair-verification pipeline (measured 4× the
     // query cost at sf0.1).
-    val (edges, edgesRdds) = snapshot(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct())
-    var (labels, labelsRdds) = snapshot(
-      edges.select(col("src").as("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", col("doc_id")))
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .distinct()
+      .pinned(true)
+    var labels = edges.select(col("src").as("doc_id"))
+      .distinct()
+      .withColumn("cluster_id", col("doc_id"))
+      .pinned(true)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -100,11 +89,14 @@ object DedupClusters {
       // Dataset.checkpoint computes the plan twice within one action
       // (metrics may double-accumulate): the probe only tests == 0,
       // which doubling preserves. A zero-row round yields sum = null
-      // (empty input) — also converged, matching the old probe.
+      // (empty input) — also converged, matching the old probe. The
+      // `changed` flag is projected away after the probe, so the pin holds
+      // the labels alone.
       val obs = org.apache.spark.sql.Observation()
-      val (next, nextRdds) = snapshot(
-        stepped.observe(obs,
-          sum(when(col("changed"), 1L).otherwise(0L)).as("nchanged")))
+      val next = stepped
+        .observe(obs, sum(when(col("changed"), 1L).otherwise(0L)).as("nchanged"))
+        .select("doc_id", "cluster_id")
+        .pinned(true)
       converged = obs.get.get("nchanged") match {
         case Some(v: java.lang.Long) => v.longValue() == 0L
         case _ => true // null / absent: zero rows this round
@@ -113,26 +105,25 @@ object DedupClusters {
         // Fixpoint: `next` carries the same labels as `labels` (nothing
         // changed) — the last snapshot is redundant, drop it and keep
         // the previous round as the result.
-        free(nextRdds)
+        graft.Snapshot.free(next)
       } else {
-        free(labelsRdds) // superseded round — nothing references it now
-        labels = next.select("doc_id", "cluster_id")
-        labelsRdds = nextRdds
+        graft.Snapshot.free(labels) // superseded round — nothing references it now
+        labels = next
       }
       i += 1
     }
-    free(edgesRdds)
+    graft.Snapshot.free(edges)
     // A silent cap would return intermediate labels that LOOK like
     // clusters but split long chains — fail loudly instead (components of
     // diameter > maxIters mean either raise maxIters or revisit the pair
     // threshold producing such chains).
     if (!converged) {
-      free(labelsRdds)
+      graft.Snapshot.free(labels)
       throw new IllegalStateException(
         s"label propagation did not converge within $maxIters rounds — " +
           "a near-dup component has diameter > maxIters; raise maxIters")
     }
-    (labels, labelsRdds)
+    labels
   }
 
   /** Dedup verdict per clustered doc: keep the canonical (min) member. */

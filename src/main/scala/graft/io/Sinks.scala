@@ -20,31 +20,41 @@ object Sinks {
   def replaceTable(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).saveAsTable(table)
 
-  /** S3 (incremental) — overwrite only the date partitions present in `df`
-    * (partitionOverwriteMode=dynamic scoped to this write). Re-running a
-    * day replaces exactly that day: idempotent AND incremental, which is
-    * what the reference's README claims and its code doesn't do. */
+  /** S3 (incremental) — overwrite only the date partitions present in `df`.
+    * The table owns its overwrite mode: it is created with the table
+    * option `partitionOverwriteMode=dynamic`, which every later overwrite
+    * `insertInto` honours whatever the session conf says, so concurrent
+    * writers share no session state. Re-running a day replaces exactly
+    * that day: idempotent AND incremental, which is what the reference's
+    * README claims and its code doesn't do. A standing table without that
+    * option is refused: an overwrite of it would be STATIC and wipe every
+    * other day. */
   def upsertDatePartition(df: DataFrame, table: String,
                           partitionCol: String = "event_date"): Unit = {
     val spark = df.sparkSession
     if (!spark.catalog.tableExists(table)) {
-      df.write.partitionBy(partitionCol).saveAsTable(table)
+      df.write.partitionBy(partitionCol)
+        .option(OverwriteModeKey, "dynamic").saveAsTable(table)
     } else {
+      // The table option, not a writer option: a writer option is not
+      // honored on the catalog-table insertInto path and silently degrades
+      // to a STATIC overwrite. Catalog metadata, so the check runs no job.
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table))
+      require(meta.storage.properties.exists { case (k, v) =>
+        k.equalsIgnoreCase(OverwriteModeKey) && v.equalsIgnoreCase("dynamic") },
+        s"table $table lacks the table option $OverwriteModeKey=dynamic; an " +
+          "overwrite would replace every partition, not just the day's")
       // insertInto resolves BY POSITION, and saveAsTable+partitionBy moved
       // the partition column to the end of the table schema — realign the
       // frame to the table's column order or every later insert writes
       // values into the wrong columns.
-      val ordered = df.select(spark.table(table).columns.toIndexedSeq.map(df.col): _*)
-      // The session conf, not the write option: the option is not honored
-      // on the catalog-table insertInto path and silently degrades to a
-      // STATIC overwrite (wiping every other partition).
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try ordered.write.mode(SaveMode.Overwrite).insertInto(table)
-      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      df.select(meta.schema.fieldNames.toIndexedSeq.map(df.col): _*)
+        .write.mode(SaveMode.Overwrite).insertInto(table)
     }
   }
+
+  private val OverwriteModeKey = "partitionOverwriteMode"
 
   /** S5 — mart parquet under `aggregates/<name>/dt=<date>/` (retail_pipeline
     * .py:78-84), written once: the row count rides on the write as an

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Snapshot.SnapshotOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,10 +35,14 @@ import org.apache.spark.sql.functions._
   *    one node-sized outer join for the floor — the standard
   *    distributed power-iteration step; nothing ever collects except N
   *    (one long);
-  *  - each iteration's rank table is localCheckpoint-pinned
+  *  - the rank table is localCheckpoint-pinned every second iteration
+  *    and after the last one
   *    ([[DedupClusters]]'s hygiene) so the plan stays flat across
-  *    iterations instead of nesting 10 joins deep. Snapshots release
-  *    under the session's usual unpersist sweep (Bench/Verify).
+  *    iterations instead of nesting 10 joins deep. Each superseded pin
+  *    is freed through its own pinned frame ([[graft.Snapshot.free]]), so
+  *    concurrent queries in one session never free each other's blocks;
+  *    the returned ranks stay pinned until the caller frees them or the
+  *    session's unpersist sweep runs (Bench/Verify).
   */
 object PageRank {
 
@@ -47,28 +52,22 @@ object PageRank {
             srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0,1)")
-    val sc = edges.sparkSession.sparkContext
-    // DedupClusters' snapshot hygiene: track each localCheckpoint's
-    // blocks so a superseded iteration frees immediately — at billions
-    // of nodes, 10 retained rank tables is real executor storage.
-    def snapshot(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-      graft.Snapshot.pinTracked(df, eager = true)
-    // Pin the raw edges FIRST: base and nodes both derive from them, and
-    // without this the upstream edge pipeline (e.g. m14's pair
+    // DedupClusters' snapshot hygiene: a superseded pin frees at once —
+    // at billions of nodes, 10 retained rank tables is real executor
+    // storage. Pin the raw edges FIRST: base and nodes both derive from
+    // them, and without this the upstream edge pipeline (e.g. m14's pair
     // verification) would execute once per derivation.
-    val (e, eRdds) = snapshot(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).pinned(true)
     val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
-    val (base, baseRdds) = snapshot(e.join(outdeg, Seq("src")))
-    val (nodes, nodesRdds) = snapshot(e.select(col("src").as("node")).distinct())
-    eRdds.foreach(_.unpersist(blocking = false)) // base+nodes now pinned
+    val base = e.join(outdeg, Seq("src")).pinned(true)
+    val nodes = e.select(col("src").as("node")).distinct().pinned(true)
+    graft.Snapshot.free(e) // base+nodes now pinned
     val n = nodes.count().toDouble
     // Empty graph (e.g. a near-dup pass whose stop-gram pruning dropped
     // every pair at a larger corpus): rank nobody, don't divide by N=0
     // (ANSI makes (1−d)/0 a runtime error — observed at sf1).
     if (n == 0) {
-      baseRdds.foreach(_.unpersist(blocking = false))
-      nodesRdds.foreach(_.unpersist(blocking = false))
+      graft.Snapshot.free(base, nodes)
       val spark = edges.sparkSession
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -76,7 +75,7 @@ object PageRank {
           .add("rank", org.apache.spark.sql.types.DoubleType))
     }
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var ranksRdds: Seq[org.apache.spark.rdd.RDD[_]] = Seq.empty
+    var pinnedRanks: Option[DataFrame] = None
     // Pin CADENCE (round-20 optimization): an eager localCheckpoint per
     // iteration kept the plan flat but cost one materialization job +
     // sync per step — at sf0.1 the loop's wall was ~50 % job-scheduling
@@ -101,14 +100,12 @@ object PageRank {
           (lit(1.0 - damping) / n +
             lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
       if (i % PinEvery == 0 || i == iterations) {
-        val (next, nextRdds) = snapshot(stepped)
-        ranksRdds.foreach(_.unpersist(blocking = false)) // superseded round
-        ranks = next
-        ranksRdds = nextRdds
+        ranks = stepped.pinned(true)
+        pinnedRanks.foreach(graft.Snapshot.free(_)) // superseded round
+        pinnedRanks = Some(ranks)
       } else ranks = stepped
     }
-    baseRdds.foreach(_.unpersist(blocking = false))
-    nodesRdds.foreach(_.unpersist(blocking = false))
+    graft.Snapshot.free(base, nodes)
     ranks
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
+import graft.Snapshot.SnapshotOps
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -19,9 +19,11 @@ import org.apache.spark.sql.types.LongType
   *
   * The ranged dataset is localCheckpoint-pinned so both passes read the
   * SAME partitioning (re-evaluation could legally re-sample range
-  * bounds). Same snapshot policy as DedupClusters: the returned frame's
-  * snapshot stays pinned until the session releases it (Bench/Verify
-  * unpersist between queries).
+  * bounds). Same snapshot policy as DedupClusters: the input pin is freed
+  * through its own pinned frame ([[graft.Snapshot.free]]) once the ranged
+  * pin exists, so concurrent callers in one session free only their own
+  * pins; the ranged snapshot behind the returned frame stays pinned until
+  * the session releases it (Bench/Verify unpersist between queries).
   *
   * EAGER, by necessity: the per-partition offsets must exist before the
   * result RDD can be defined, so calling this runs two jobs over the
@@ -31,15 +33,6 @@ import org.apache.spark.sql.types.LongType
   * release snapshots afterwards in long-lived sessions.
   */
 object PrefixSum {
-
-  /** Snapshot `df` eagerly and return the frame plus the pinned-RDD
-    * handles for [[graft.Snapshot.free]] — local blocks by default,
-    * durable checkpoint files when `spark.graft.checkpointDir` is set
-    * (the cluster fault-tolerance mode; see [[graft.Snapshot]]). */
-  private def snapshot(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
-    graft.Snapshot.pinTracked(df, eager = true)
-
-  private def free(rdds: Seq[RDD[_]]): Unit = graft.Snapshot.free(rdds)
 
   /** (orderCol, valueCol, running) where `running` is the EXCLUSIVE
     * prefix total of valueCol in ascending orderCol order. orderCol must
@@ -66,13 +59,13 @@ object PrefixSum {
     // snapshot-accumulation pressure round 3 measured as 2.6-8x
     // regressions. Dataset.unpersist would be a no-op here (it clears
     // cacheManager entries, not the checkpoint-pinned internal RDD).
-    val (input, inputPins) =
-      if (pinInput) snapshot(proj) else (proj, Seq.empty[RDD[_]])
-    val ranged = graft.Snapshot.pin(input
+    val input = if (pinInput) proj.pinned(true) else proj
+    val ranged = input
       .repartitionByRange(p, col(orderCol))
-      .sortWithinPartitions(orderCol), eager = true)
+      .sortWithinPartitions(orderCol)
+      .pinned(true)
       .as[(Long, Long)]
-    free(inputPins)
+    if (pinInput) graft.Snapshot.free(input)
     val partSums = ranged.rdd
       .mapPartitionsWithIndex { (pid, it) =>
         var s = 0L
@@ -111,14 +104,14 @@ object PrefixSum {
     val p = spark.sessionState.conf.numShufflePartitions
     // Same input pin + snapshot/free as [[exclusiveRunningTotals]]: the
     // range-bounds sketch would otherwise evaluate the upstream plan a
-    // second time, and the pin must be freed via captured RDD handles
+    // second time, and the pin must be freed through its pinned frame
     // (Dataset.unpersist cannot reach a localCheckpoint's internal RDD).
-    val (input, inputPins) =
-      if (pinInput) snapshot(df) else (df, Seq.empty[RDD[_]])
-    val ranged = graft.Snapshot.pin(input
+    val input = if (pinInput) df.pinned(true) else df
+    val ranged = input
       .repartitionByRange(p, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*), eager = true)
-    free(inputPins)
+      .sortWithinPartitions(orderCols: _*)
+      .pinned(true)
+    if (pinInput) graft.Snapshot.free(input)
     val valIdx = ranged.schema.fieldIndex(valueCol)
     val partSums = ranged.rdd
       .mapPartitionsWithIndex { (pid, it) =>

@@ -180,7 +180,8 @@ object DedupAssets {
   }
 
   /** Shared close-the-walk recursive delete (also used by
-    * [[graft.queries.LegacySql]] — keep the single leak-free copy). */
+    * [[graft.queries.LegacySql]], StreamingCorpus and Bench — keep the
+    * single leak-free copy). */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)

@@ -70,17 +70,17 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
         Seq(col("price").asc, col("brand").asc_nulls_last, col("category_id").asc))
       .withColumn("updated_at", loadedAt)
 
-    // The fact upsert runs alone: it swaps partitionOverwriteMode on the
-    // shared session conf for the length of its write. The dimension
-    // replacements are unpartitioned tables of their own, so they run
-    // together; dim_date (F2/F3) is the one-shot calendar (reference @once
-    // asset) and joins them on the first day.
-    Sinks.upsertDatePartition(fact, "fact_events")
+    // The fact upsert and the dimension replacements each write a table of
+    // their own and share no session state (fact_events carries its own
+    // overwrite mode), so they run together; dim_date (F2/F3) is the
+    // one-shot calendar (reference @once asset) and joins them on the
+    // first day.
     val dimDate =
       if (spark.catalog.tableExists("dim_date")) None
       else Some(() =>
         Sinks.replaceTable(DimDate.build(spark, "2019-10-01", "2020-03-31"), "dim_date"))
     RetailPipeline.together(Seq(
+      () => Sinks.upsertDatePartition(fact, "fact_events"),
       () => Sinks.replaceTable(dimUser, "dim_user"),
       () => Sinks.replaceTable(dimProduct, "dim_product")) ++ dimDate)
   }
@@ -177,11 +177,9 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
     * Days are independent partitions — a scheduler may fan these out.
     * Within one driver the days run one after another: a day of a few
     * thousand rows per stage leaves most task slots idle, and what fills
-    * them is the overlap WITHIN a stage — the dimension replacements run
-    * together, and so do the three mart writes — so one write's planning
-    * and commit on the driver overlap another write's jobs. Running days
-    * at once would first need a `partitionOverwriteMode` swap that does
-    * not mutate the shared session conf. */
+    * them is the overlap WITHIN a stage — the star stage's fact upsert and
+    * dimension replacements run together, and so do the three mart writes — so one write's planning
+    * and commit on the driver overlap another write's jobs. */
   def backfill(startDate: String, endDate: String): Seq[String] = {
     val start = java.time.LocalDate.parse(startDate)
     val end = java.time.LocalDate.parse(endDate)

@@ -1409,7 +1409,7 @@ object CorpusQueries {
     // join) — pin it once (review r18; the harness frees snapshots
     // between queries). kMin is duplicate-insensitive (spec-pinned), so
     // the sketch builds from the same distinct stream.
-    val (gd, _) = graft.Snapshot.pinTracked(hashed.distinct())
+    val gd = hashed.distinct().pinned(true)
     val sk = gd.groupBy("source").agg(KmvSketch.kMin(k)(col("h")).as("sk"))
     val pairs = sk.select(col("source").as("src_a"), col("sk").as("ska"))
       .crossJoin(broadcast(
@@ -1457,7 +1457,7 @@ object CorpusQueries {
       .select(col("source"), HyperLogLog.hash48(col("gram")).as("h"))
     // one distinct pass feeds all three consumers (sketches, source
     // count, exact certificate) — the m153 pin-once discipline
-    val (gd, _) = graft.Snapshot.pinTracked(hashed.distinct())
+    val gd = hashed.distinct().pinned(true)
     val sk = gd.groupBy("source").agg(KmvSketch.kMin(k)(col("h")).as("sk"))
     // the k-way merge: every source sketch's entries re-aggregated
     // through kMin — duplicate-insensitive sorted-set state, so this IS

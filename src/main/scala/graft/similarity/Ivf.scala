@@ -161,8 +161,6 @@ object Ivf {
   def train(vectors: DataFrame, nlist: Int, iters: Int = 3,
             trainCap: Int = 16384): Model = {
     require(nlist > 0, "nlist must be positive")
-    val sc = vectors.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val sample = vectors
       .orderBy(xxhash64(col("id")).asc, col("id").asc)
       .limit(math.max(trainCap, nlist * 4))
@@ -194,9 +192,7 @@ object Ivf {
     } finally {
       // The sample snapshot is training-internal state — free it so train
       // leaves no persisted blocks behind (same contract as DedupClusters).
-      sc.getPersistentRDDs.collect {
-        case (id, rdd) if !before.contains(id) => rdd
-      }.foreach(_.unpersist(blocking = false))
+      graft.Snapshot.free(sample)
     }
   }
 

@@ -163,6 +163,41 @@ class SinksSpec extends SparkSpec {
     spark.sql("DROP TABLE agg_sinkspec_nojob")
   }
 
+  private val overwriteModeConf = "spark.sql.sources.partitionOverwriteMode"
+
+  test("upsertDatePartition tables own their dynamic overwrite: a plain insertInto on a STATIC session replaces one day only (S3)") {
+    spark.sql("DROP TABLE IF EXISTS sinkspec_fact_events")
+    def day(d: String, n: Long) =
+      Seq((1L, "view", n)).toDF("product_id", "event_type", "n")
+        .withColumn("event_date", to_date(lit(d)))
+    // unset on the session, so the STATIC default holds
+    spark.conf.getAll.get(overwriteModeConf) shouldBe None
+    spark.conf.get(overwriteModeConf) shouldBe "STATIC"
+    Sinks.upsertDatePartition(day("2019-10-01", 1L), "sinkspec_fact_events")
+    Sinks.upsertDatePartition(day("2019-10-02", 2L), "sinkspec_fact_events")
+    spark.conf.getAll.get(overwriteModeConf) shouldBe None
+    day("2019-10-02", 3L)
+      .select("product_id", "event_type", "n", "event_date")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).insertInto("sinkspec_fact_events")
+    spark.table("sinkspec_fact_events")
+      .select(col("event_date").cast("string"), col("n")).as[(String, Long)]
+      .collect().sorted.toSeq shouldBe Seq("2019-10-01" -> 1L, "2019-10-02" -> 3L)
+    spark.conf.getAll.get(overwriteModeConf) shouldBe None
+    spark.sql("DROP TABLE sinkspec_fact_events")
+  }
+
+  test("upsertDatePartition refuses a standing table without the dynamic overwrite option (S3)") {
+    spark.sql("DROP TABLE IF EXISTS sinkspec_static")
+    val df = Seq((1L, 1L)).toDF("id", "n").withColumn("event_date", to_date(lit("2019-10-01")))
+    df.write.partitionBy("event_date").saveAsTable("sinkspec_static")
+    val err = intercept[IllegalArgumentException] {
+      Sinks.upsertDatePartition(df, "sinkspec_static")
+    }
+    err.getMessage should include("sinkspec_static")
+    spark.table("sinkspec_static").count() shouldBe 1
+    spark.sql("DROP TABLE sinkspec_static")
+  }
+
   test("writeCsvSummary produces a single readable CSV with header (S9)") {
     val out = Files.createTempDirectory("sinks-csv").toString + "/summary"
     Sinks.writeCsvSummary(Seq(("2019-10-01", "view", 3L)).toDF("d", "e", "n"), out)
