@@ -168,7 +168,7 @@ object GraftSession {
   //    warehouse upsert uses. The deploy recipe is therefore split by
   //    write path: the mart tier's per-day writes replace an explicit
   //    `dt=` directory (path-grain, magic-committer-compatible —
-  //    Sinks.writeMartParquet); warehouse-table day upserts on S3
+  //    Sinks.publishMartDay); warehouse-table day upserts on S3
   //    should route through the same path-grain replacement, or accept
   //    the rename-based default committer for that table family. Add
   //    the two protocol confs only on a build that ships

@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * Algorithm: iterative min-label propagation. Every node starts labeled
   * with itself; each round, a node takes the minimum label among itself
   * and its neighbors; stop when a round changes nothing. A component of
-  * diameter d converges in ≤ d rounds — near-dup components are
-  * overwhelmingly tiny (pairs/triangles from template families), so 2-3
-  * rounds settle real corpora, and `maxIters` caps adversarial chains.
+  * diameter d converges in ≤ d rounds plus one round that changes nothing
+  * — near-dup components are overwhelmingly tiny (pairs/triangles from
+  * template families), so 2-3 rounds settle real corpora. No round cap is
+  * set by the caller: d is below the node count, so the node count bounds
+  * the rounds of every valid input.
   *
   * Scale shape per round: one shuffle of the (edge ⋈ label) join keyed on
   * doc_id and one min-aggregate — label rows are two longs, document text
@@ -30,30 +32,21 @@ import org.apache.spark.sql.functions._
   * frees every intermediate pin (edges + all superseded rounds) through
   * the pinned frame itself as soon as its successor materializes,
   * returning the ONE pinned frame of (long, long) labels. A build frees
-  * only its own pins, so builds may run concurrently in one session.
-  * Callers that can scope the result's lifetime should prefer
-  * `withComponents`, which also frees that final pin on exit — leaving
-  * ZERO persisted RDDs behind (spec-asserted via sc.getPersistentRDDs).
+  * only its own pins, so builds may run concurrently in one session. A
+  * caller that can scope the result's lifetime frees that final pin too
+  * (`try … finally Snapshot.free(labels)`), leaving ZERO persisted RDDs
+  * behind (spec-asserted via sc.getPersistentRDDs).
   */
 object DedupClusters {
-
-  /** Run `f` over the component labels, then free the final snapshot too:
-    * net persisted-RDD delta is zero. `f` must fully consume the frame —
-    * the labels are not usable after the bracket returns. */
-  def withComponents[T](pairs: DataFrame, maxIters: Int = 10)(
-      f: DataFrame => T): T = {
-    val labels = components(pairs, maxIters)
-    try f(labels) finally graft.Snapshot.free(labels)
-  }
 
   /** (doc_id, cluster_id) for every document that appears in `pairs`
     * (doc_a, doc_b); cluster_id = min doc_id of the component.
     *
     * The result is the pinned frame of one materialized snapshot (two
     * longs per clustered doc), which [[graft.Snapshot.free]] releases.
-    * Use `withComponents` to release it deterministically when the
-    * consumption is scoped. */
-  def components(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
+    * The canonical (kept) member of each cluster is the row with
+    * doc_id = cluster_id. */
+  def components(pairs: DataFrame): DataFrame = {
     // Symmetric edge list, materialized ONCE: every round re-reads the
     // edges, and without the checkpoint each reference would re-execute
     // the entire upstream pair-verification pipeline (measured 4× the
@@ -62,13 +55,21 @@ object DedupClusters {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
       .pinned(true)
+    // The node count rides on the initial-labels pin as an Observation, in
+    // the job that pin runs anyway. It bounds the rounds: a component's
+    // diameter is below its node count, and one more round finds nothing
+    // changed. (Reliable-checkpoint mode may count twice; the bound stays
+    // valid.)
+    val nodes = org.apache.spark.sql.Observation()
     var labels = edges.select(col("src").as("doc_id"))
       .distinct()
       .withColumn("cluster_id", col("doc_id"))
+      .observe(nodes, count(lit(1)).as("nodes"))
       .pinned(true)
+    val maxRounds = nodes.get("nodes").asInstanceOf[Long] + 1L
     var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
+    var i = 0L
+    while (!converged && i < maxRounds) {
       // New label = min(own label, neighbors' labels).
       val stepped = edges
         .join(labels.withColumnsRenamed(
@@ -113,21 +114,13 @@ object DedupClusters {
       i += 1
     }
     graft.Snapshot.free(edges)
-    // A silent cap would return intermediate labels that LOOK like
-    // clusters but split long chains — fail loudly instead (components of
-    // diameter > maxIters mean either raise maxIters or revisit the pair
-    // threshold producing such chains).
+    // Invariant check: min-label propagation cannot exceed the bound, and
+    // labels cut off early would LOOK like clusters but split long chains.
     if (!converged) {
       graft.Snapshot.free(labels)
       throw new IllegalStateException(
-        s"label propagation did not converge within $maxIters rounds — " +
-          "a near-dup component has diameter > maxIters; raise maxIters")
+        s"label propagation did not converge within $maxRounds rounds")
     }
     labels
   }
-
-  /** Dedup verdict per clustered doc: keep the canonical (min) member. */
-  def canonical(pairs: DataFrame, maxIters: Int = 10): DataFrame =
-    components(pairs, maxIters)
-      .withColumn("keep", col("doc_id") === col("cluster_id"))
 }

@@ -77,14 +77,6 @@ object NgramJaccard {
     scorePairs(docs, MinHashLSH.candidatePairs(docs, textCol), textCol, n)
       .filter(col("jaccard") >= threshold)
 
-  /** Distinct word w-shingle STRINGS per document (space-joined, over
-    * space-split tokens of trim(lower(text))); a doc shorter than w words
-    * contributes its whole normalized text as one shingle. The readable
-    * reference form (what the DuckDB oracle computes); the production
-    * posting path uses [[wordShingleHashSet]]. Empty/whitespace-only docs
-    * yield NO shingles — same policy as [[MinHashLSH]]: exact dedup owns
-    * the empty-content case (otherwise every blank doc would pair with
-    * every other blank doc at jaccard 1.0 through the shared "" gram). */
   /** ONE definition of the SQL-parity shingle walk (trim 0x20 only, split
     * on space runs, w-token windows joined by single spaces, short doc →
     * whole text, empty doc → nothing): both gram forms below feed from it,
@@ -111,6 +103,14 @@ object NgramJaccard {
     }
   }
 
+  /** Distinct word w-shingle STRINGS per document (space-joined, over
+    * space-split tokens of trim(lower(text))); a doc shorter than w words
+    * contributes its whole normalized text as one shingle. The readable
+    * reference form (what the DuckDB oracle computes); the production
+    * posting path uses [[wordShingleHashSet]]. Empty/whitespace-only docs
+    * yield NO shingles — same policy as [[MinHashLSH]]: exact dedup owns
+    * the empty-content case (otherwise every blank doc would pair with
+    * every other blank doc at jaccard 1.0 through the shared "" gram). */
   val wordShingleSet: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String, w: Int) =>
       val set = new java.util.LinkedHashSet[String]()

@@ -56,21 +56,22 @@ object Sinks {
 
   private val OverwriteModeKey = "partitionOverwriteMode"
 
-  /** S5 — mart parquet under `aggregates/<name>/dt=<date>/` (retail_pipeline
-    * .py:78-84), written once: the row count rides on the write as an
-    * `Observation`, so no job runs the aggregate a second time to ask
-    * whether it is empty. Returns that count. The Hive-style `dt=` path is
-    * load-bearing downstream (partition discovery).
+  /** S5–S7 — one day of a mart table: parquet under
+    * `aggregates/<name>/dt=<date>/` (retail_pipeline.py:78-84), then the
+    * catalog table `agg_<name>` ([[registerMartTable]]). The write runs
+    * once: the row count rides on it as an `Observation`, so no job runs
+    * the aggregate a second time to ask whether it is empty. Returns that
+    * count. The Hive-style `dt=` path is load-bearing downstream
+    * (partition discovery).
     *
     * S6 (py:79): an empty frame leaves no partition. The write of 0 rows
     * is deleted after the fact: its `dt=` directory, and the table
     * directory too when this write created it. An empty re-run of a day
     * that already holds rows therefore REMOVES that day (the reference
     * skips the write and keeps the stale day): the mart mirrors the day's
-    * current result, and [[registerMartTable]] drops the day's catalog
-    * partition to match. */
-  def writeMartParquet(df: DataFrame, martRoot: String, name: String,
-                       date: String): Long = {
+    * current result, and its catalog partition is dropped to match. */
+  def publishMartDay(df: DataFrame, martRoot: String, name: String,
+                     date: String): Long = {
     val table = new Path(s"$martRoot/aggregates/$name")
     val day = new Path(table, s"dt=$date")
     val fs = table.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
@@ -80,22 +81,26 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(day.toString)
     val n = rows.get("rows").asInstanceOf[Long]
     if (n == 0L) fs.delete(if (tableExisted) day else table, true)
+    registerMartTable(df, martRoot, name, date, n)
     n
   }
 
-  /** S7 — catalog registration replacing the Glue crawler: tables get the
+  /** S7 — catalog registration replacing the Glue crawler, for a day
+    * [[publishMartDay]] just wrote with `rows` rows: tables get the
     * crawler's `agg_` prefix (aws-stack.ts:54) and — like the crawler's
     * table — span EVERY `dt=` partition under the mart root, not just the
     * day that was written. The table is external over the partitioned
-    * parquet tree. When the table is created (first use, or re-created
-    * below) `recoverPartitions` crawls every `dt=` directory once; after
-    * that each call registers only `date`, the day just written (`ADD IF
-    * NOT EXISTS PARTITION`), or drops it when an empty re-run removed its
-    * directory (S6). The schema and location come from the catalog's table
-    * metadata, so a call on a standing table runs no Spark job and does
-    * not grow with the days loaded. (A per-day `saveAsTable` overwrite
-    * would leave the catalog holding only the last day — observed on the
-    * full 31-day reference backfill.)
+    * parquet tree. When the table is created (first day with rows, or
+    * re-created below) `recoverPartitions` crawls every `dt=` directory
+    * once; after that each call registers only `date` (`ADD IF NOT EXISTS
+    * PARTITION`), or drops it when the day is empty (S6: its directory is
+    * gone). An empty day creates no table: the first day with rows does,
+    * and its crawl finds every day. The schema and location come from the
+    * catalog's table metadata and the row count from the write, so a call
+    * on a standing table runs no Spark job and does not grow with the days
+    * loaded. (A per-day `saveAsTable` overwrite would
+    * leave the catalog holding only the last day — observed on the full
+    * 31-day reference backfill.)
     *
     * Schema evolution — the crawler's `UPDATE_IN_DATABASE` policy
     * (aws-stack.ts:55-61): when the mart frame's schema no longer matches
@@ -104,21 +109,23 @@ object Sinks {
     * table: dropping it touches metadata only, history stays on disk, and
     * columns absent from old partitions read as null (evolution-on-read,
     * exactly how Glue-over-parquet behaves). */
-  def registerMartTable(df: DataFrame, martRoot: String, name: String,
-                        date: String): Unit = {
+  private[io] def registerMartTable(df: DataFrame, martRoot: String, name: String,
+                                    date: String, rows: Long): Unit = {
     val spark = df.sparkSession
     val table = s"agg_$name"
-    val location = new Path(s"$martRoot/aggregates/$name")
-    val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // An all-empty history (S6 removed every write) leaves nothing to crawl.
-    if (fs.exists(location)) {
+    val catalog = spark.sessionState.catalog
+    val ident = TableIdentifier(table)
+    if (rows == 0L) {
+      if (catalog.tableExists(ident))
+        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (dt='$date')")
+    } else {
+      val location = new Path(s"$martRoot/aggregates/$name")
+      val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // Name+type comparison, case-insensitive, nullability ignored (the
       // catalog and parquet footers disagree on nullability routinely).
       def shape(s: StructType) =
         s.fields.toSeq.map(f => (f.name.toLowerCase(java.util.Locale.ROOT), f.dataType))
       val expected = shape(df.schema) :+ ("dt", StringType)
-      val catalog = spark.sessionState.catalog
-      val ident = TableIdentifier(table)
       // LOCATION mismatch re-creates too (review r18): a session whose
       // second pipeline/mart uses a different root must not keep serving
       // the FIRST root's partitions through a schema-matching stale
@@ -129,15 +136,13 @@ object Sinks {
         val current = meta.storage.locationUri.map(u => new Path(u).toUri.toString)
         shape(meta.schema) == expected && current.contains(want)
       }
-      if (!standing) {
+      if (standing) {
+        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION (dt='$date')")
+      } else {
         spark.sql(s"DROP TABLE IF EXISTS $table")
         spark.sql(s"CREATE TABLE $table (${df.schema.toDDL}, dt STRING) " +
           s"USING parquet PARTITIONED BY (dt) LOCATION '$location'")
         spark.catalog.recoverPartitions(table)
-      } else if (fs.exists(new Path(location, s"dt=$date"))) {
-        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION (dt='$date')")
-      } else {
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (dt='$date')")
       }
     }
   }

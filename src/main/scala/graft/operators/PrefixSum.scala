@@ -34,78 +34,42 @@ import org.apache.spark.sql.types.LongType
   */
 object PrefixSum {
 
-  /** (orderCol, valueCol, running) where `running` is the EXCLUSIVE
-    * prefix total of valueCol in ascending orderCol order. orderCol must
-    * be unique; both columns must be integral (cast to long).
+  /** (orderCol, valueCol, running): [[exclusiveRunningTotalsBy]] over the
+    * two columns cast to long, in ascending orderCol order. orderCol must
+    * be unique. */
+  def exclusiveRunningTotals(df: DataFrame, orderCol: String,
+                             valueCol: String,
+                             pinInput: Boolean = true): DataFrame =
+    exclusiveRunningTotalsBy(
+      df.select(col(orderCol).cast("long"), col(valueCol).cast("long")),
+      Seq(col(orderCol)), valueCol, pinInput)
+
+  /** EXCLUSIVE prefix total of `valueCol` (must be a long; cast it
+    * beforehand) in the order given by `orderCols` — arbitrary sort
+    * expressions (e.g. `col("quality").desc, col("doc_id")`), which must be
+    * a total order over the rows (add a unique tie-break column or offsets
+    * within ties are partition-dependent). Keeps every input column and
+    * appends `running`.
     *
     * `pinInput` (default true): repartitionByRange first runs a
     * range-bounds sketch job that evaluates the whole child plan, then
     * evaluates it AGAIN for the real exchange — so an expensive upstream
     * (tokenize/profile over document text) would run twice. The pin
-    * materializes the narrow (order, value) projection once and feeds
-    * both. Pass false when the input is already a snapshot or a trivial
-    * derivation of one (the extra materialization would be the only
-    * cost). */
-  def exclusiveRunningTotals(df: DataFrame, orderCol: String,
-                             valueCol: String,
-                             pinInput: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val p = spark.sessionState.conf.numShufflePartitions
-    val proj = df.select(col(orderCol).cast("long"), col(valueCol).cast("long"))
-    // Snapshot/free, not Dataset.unpersist: the input pin is dead the
-    // moment `ranged` materializes, and at 100 TB holding a second
-    // corpus-row-sized snapshot for the query's lifetime is the exact
-    // snapshot-accumulation pressure round 3 measured as 2.6-8x
-    // regressions. Dataset.unpersist would be a no-op here (it clears
-    // cacheManager entries, not the checkpoint-pinned internal RDD).
-    val input = if (pinInput) proj.pinned(true) else proj
-    val ranged = input
-      .repartitionByRange(p, col(orderCol))
-      .sortWithinPartitions(orderCol)
-      .pinned(true)
-      .as[(Long, Long)]
-    if (pinInput) graft.Snapshot.free(input)
-    val partSums = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach { case (_, v) => s += v }
-        Iterator((pid, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    // offsets(i) = total of partitions before i (exclusive).
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): the index
-    // must be the RANGE partition's, bound at RDD definition. A downstream
-    // coalesce (e.g. a single-file write) fuses many range partitions into
-    // one task, and the task-level id would hand every fused partition
-    // offset 0 — silently wrong running totals.
-    val out = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = bc.value(pid)
-      it.map { case (k, v) => val start = acc; acc += v; (k, v, start) }
-    }
-    spark.createDataset(out).toDF(orderCol, valueCol, "running")
-  }
-
-  /** Generalized form: EXCLUSIVE prefix total of `valueCol` (must be
-    * integral; cast to long beforehand) in the order given by `orderCols`
-    * — arbitrary sort expressions (e.g. `col("quality").desc,
-    * col("doc_id")`), which must be a total order over the rows (add a
-    * unique tie-break column or offsets within ties are
-    * partition-dependent). Keeps every input column and appends
-    * `running`. Same two-pass scheme, same eager contract, same snapshot
-    * policy as [[exclusiveRunningTotals]].
+    * materializes the input once and feeds both. Pass false when the
+    * input is already a snapshot or a trivial derivation of one (the extra
+    * materialization would be the only cost).
     */
   def exclusiveRunningTotalsBy(df: DataFrame, orderCols: Seq[Column],
                                valueCol: String,
                                pinInput: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val p = spark.sessionState.conf.numShufflePartitions
-    // Same input pin + snapshot/free as [[exclusiveRunningTotals]]: the
-    // range-bounds sketch would otherwise evaluate the upstream plan a
-    // second time, and the pin must be freed through its pinned frame
-    // (Dataset.unpersist cannot reach a localCheckpoint's internal RDD).
+    // Snapshot/free, not Dataset.unpersist: the input pin is dead the
+    // moment `ranged` materializes, and at 100 TB holding a second
+    // corpus-row-sized snapshot for the query's lifetime is the exact
+    // snapshot-accumulation pressure round 3 measured as 2.6-8x
+    // regressions. Dataset.unpersist would be a no-op here (it clears
+    // cacheManager entries, not the checkpoint-pinned internal RDD).
     val input = if (pinInput) df.pinned(true) else df
     val ranged = input
       .repartitionByRange(p, orderCols: _*)
@@ -120,9 +84,14 @@ object PrefixSum {
         Iterator((pid, s))
       }
       .collect().sortBy(_._1).map(_._2)
+    // offsets(i) = total of partitions before i (exclusive).
     val offsets = partSums.scanLeft(0L)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)
-    // Range-partition index, not task id — see the comment above.
+    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): the index
+    // must be the RANGE partition's, bound at RDD definition. A downstream
+    // coalesce (e.g. a single-file write) fuses many range partitions into
+    // one task, and the task-level id would hand every fused partition
+    // offset 0 — silently wrong running totals.
     val out = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
       var acc = bc.value(pid)
       it.map { r =>

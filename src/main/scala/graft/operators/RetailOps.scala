@@ -21,32 +21,36 @@ object RetailOps {
 
   // ------------------------------------------------------------------- P7
   /** Conditional measure (retail_pipeline_assets.py:67; retail_pipeline.py:39-41):
-    * CASE WHEN event_type='purchase' THEN value ELSE 0 END. */
-  def purchaseRevenue(eventType: Column, value: Column): Column =
-    when(eventType === "purchase", value).otherwise(lit(0.0))
+    * CASE WHEN <is a purchase> THEN value ELSE 0 END. */
+  def purchaseRevenue(isPurchase: Column, value: Column): Column =
+    when(isPurchase, value).otherwise(lit(0.0))
 
   /** 1/0 conditional counter (retail_pipeline.py:39-41,60-63). */
   def flag(eventType: Column, kind: String): Column =
     when(eventType === kind, lit(1L)).otherwise(lit(0L))
 
+  /** Decimal-exact sum of 2-dp amounts, cast back to double: the result is
+    * order-independent — a double sum over a shuffled 100 TB scan is not
+    * reproducible; a decimal sum is. */
+  private def exactSum(amount: Column): Column =
+    sum(amount.cast("decimal(18,2)")).cast("double")
+
   // ------------------------------------------------------------------- A1
   /** Fact build (retail_pipeline_assets.py:60-70): filter one date then
-    * GROUP BY (date, type, product, user) with COUNT(*) + conditional SUM.
-    * Decimal-exact revenue (sum of 2-dp decimals) cast back to double so the
-    * result is order-independent — a double sum over a shuffled 100 TB scan
-    * is not reproducible; a decimal sum is. */
+    * GROUP BY (date, type, product, user) with COUNT(*) + conditional SUM
+    * (decimal-exact, [[exactSum]]). */
   def factBuild(staging: DataFrame, dateCol: String, typeCol: String,
                 keyCols: Seq[String], valueCol: String,
                 purchaseKind: String = "purchase"): DataFrame = {
     // purchaseKind parameterized: the legacy RetailRocket schema calls the
     // revenue event "transaction", and a hard-coded literal would silently
     // zero total_revenue there.
-    val revenue = when(col(typeCol) === purchaseKind, col(valueCol)).otherwise(lit(0.0))
     staging
       .groupBy((dateCol +: typeCol +: keyCols).map(col): _*)
       .agg(
         count(lit(1)).as("total_events"),
-        sum(revenue.cast("decimal(18,2)")).cast("double").as("total_revenue"))
+        exactSum(purchaseRevenue(col(typeCol) === purchaseKind, col(valueCol)))
+          .as("total_revenue"))
   }
 
   // --------------------------------------------------------------- A2 + P6
@@ -62,12 +66,11 @@ object RetailOps {
     events
       .groupBy(dateCol.as("event_date"))
       .agg(
-        sum(when(et === purchaseKind, col("value")).otherwise(lit(0.0))
-          .cast("decimal(18,2)")).cast("double").as("revenue"),
+        exactSum(purchaseRevenue(et === purchaseKind, col("value"))).as("revenue"),
         countDistinct(col("user_id")).as("unique_users"),
-        sum(when(et === purchaseKind, 1L).otherwise(0L)).as("purchases"),
-        sum(when(et === cartKind, 1L).otherwise(0L)).as("carts"),
-        sum(when(et === viewKind, 1L).otherwise(0L)).as("views"))
+        sum(flag(et, purchaseKind)).as("purchases"),
+        sum(flag(et, cartKind)).as("carts"),
+        sum(flag(et, viewKind)).as("views"))
       .withColumn("cart_rate", col("carts") / nullif(col("views"), lit(0L)))
       .withColumn("purchase_rate", col("purchases") / nullif(col("views"), lit(0L)))
   }
@@ -86,11 +89,10 @@ object RetailOps {
     fact.join(broadcast(dim), joinKeys, "inner")
       .groupBy(groupCols.map(col): _*)
       .agg(
-        sum(when(et === viewKind, 1L).otherwise(0L)).as("views"),
-        sum(when(et === cartKind, 1L).otherwise(0L)).as("carts"),
-        sum(when(et === purchaseKind, 1L).otherwise(0L)).as("purchases"),
-        sum(when(et === purchaseKind, col("value")).otherwise(lit(0.0))
-          .cast("decimal(18,2)")).cast("double").as("revenue"))
+        sum(flag(et, viewKind)).as("views"),
+        sum(flag(et, cartKind)).as("carts"),
+        sum(flag(et, purchaseKind)).as("purchases"),
+        exactSum(purchaseRevenue(et === purchaseKind, col("value"))).as("revenue"))
   }
 
   // ------------------------------------------------------------------- D1

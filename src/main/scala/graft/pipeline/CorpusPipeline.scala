@@ -47,7 +47,9 @@ object CorpusPipeline {
   }
 
   /** The shared tail of [[prepare]] and [[prepareV2]]: pin the gated set,
-    * exact dedup, near-dup pairs, clusters, canonical docs, chunks. */
+    * exact dedup, near-dup pairs, clusters, canonical docs, chunks. The
+    * clustering takes no round cap: [[DedupClusters.components]] bounds
+    * its rounds by the pair graph's node count. */
   private def dedupAndChunk(gated: DataFrame, pin: Option[Int],
                             jaccardThreshold: Double, dfCap: Int,
                             chunkSize: Int, chunkStride: Int): DataFrame = {

@@ -191,14 +191,12 @@ object DedupAssets {
     }
 
   /** Verified near-dup pairs (doc_a, doc_b, jaccard) over the augmented
-    * `documents` corpus of `dir` — m14's inverted-index verification, run
-    * once and stored. */
-  /** The stored pair table is built at the LOOSE θ = 0.5 so every
-    * consumer tier shares one artifact: curation reads the ≥ 0.6 slice
-    * ([[pairs]]), while the recall audit (m85) needs the 0.5–0.6 band —
-    * jaccard is threshold-independent (the cut is a final filter), so
-    * filtering the loose table is row-identical to running the chain at
-    * the tighter threshold. */
+    * `documents` corpus of `dir` at the LOOSE θ = 0.5 — m14's
+    * inverted-index verification, run once and stored, so every consumer
+    * tier shares one artifact: the recall audit (m85) needs the 0.5–0.6
+    * band. Jaccard is threshold-independent (the cut is a final filter),
+    * so filtering the loose table is row-identical to running the chain at
+    * a tighter threshold. */
   def pairsLoose(s: SparkSession, dir: String): DataFrame =
     materialized(s, "pairs", dir, Seq("doc_a", "doc_b"))(
       graft.dedup.NgramJaccard.invertedIndexPairs(
@@ -207,6 +205,7 @@ object DedupAssets {
         // expansion was the build's dominant single-task stage
         threshold = 0.5, dfCap = 50))
 
+  /** The ≥ 0.6 slice of [[pairsLoose]] that curation reads. */
   def pairs(s: SparkSession, dir: String): DataFrame =
     pairsLoose(s, dir).filter(col("jaccard") >= 0.6)
 

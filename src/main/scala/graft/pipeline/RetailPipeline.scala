@@ -86,57 +86,35 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
   }
 
   /** The day's three mart aggregates by name (retail_pipeline.py:28-105),
-    * as plans; [[buildMart]] writes them. */
+    * as plans; [[buildMart]] writes them. Faithful to retail_pipeline.py:
+    * 34-45, the measures are over FACT rows (the (date,type,product,user)
+    * grain), not re-expanded raw events; fact revenue is already 0 on every
+    * row but a purchase, so the aggregates' conditional revenue is its sum. */
   def martTables(date: String): Map[String, DataFrame] = {
-    val d = to_date(lit(date))
-    val fact = spark.table("fact_events").filter(col("event_date") === d)
-
-    // Faithful to retail_pipeline.py:34-45: measures are over FACT rows
-    // (the (date,type,product,user) grain), not re-expanded raw events.
-    val et = col("event_type")
-    val revenue = fact
-      .groupBy("event_date")
-      .agg(
-        sum(col("total_revenue").cast("decimal(18,2)")).cast("double").as("revenue"),
-        countDistinct(col("user_id")).as("unique_users"),
-        sum(when(et === "purchase", 1L).otherwise(0L)).as("purchases"),
-        sum(when(et === "cart", 1L).otherwise(0L)).as("carts"),
-        sum(when(et === "view", 1L).otherwise(0L)).as("views"))
-      .withColumn("cart_rate",
-        col("carts") / when(col("views") === 0L, lit(null)).otherwise(col("views")))
-      .withColumn("purchase_rate",
-        col("purchases") / when(col("views") === 0L, lit(null)).otherwise(col("views")))
-
+    val fact = spark.table("fact_events")
+      .filter(col("event_date") === to_date(lit(date)))
+      .withColumnRenamed("total_revenue", "value")
+    val revenue = RetailOps.dailyRevenueSummary(fact, col("event_date"), cartKind = "cart")
     // retail_pipeline.py:54-67 — fact ⋈ broadcast dim_product funnel.
-    val funnel = fact
-      .join(broadcast(spark.table("dim_product")
-        .select("product_id", "brand", "category_code")), Seq("product_id"))
-      .groupBy("event_date", "brand", "category_code")
-      .agg(
-        sum(when(et === "view", 1L).otherwise(0L)).as("views"),
-        sum(when(et === "cart", 1L).otherwise(0L)).as("carts"),
-        sum(when(et === "purchase", 1L).otherwise(0L)).as("purchases"),
-        sum(when(et === "purchase", col("total_revenue")).otherwise(lit(0.0))
-          .cast("decimal(18,2)")).cast("double").as("revenue"))
-
+    val funnel = RetailOps.funnelByDim(fact,
+      spark.table("dim_product").select("product_id", "brand", "category_code"),
+      Seq("product_id"), Seq("event_date", "brand", "category_code"), cartKind = "cart")
     val topBrands = RetailOps.topK(funnel, 10,
       Seq(col("revenue").desc, col("brand").asc_nulls_last))
-
     Map(
       "daily_revenue_summary" -> revenue,
       "daily_funnel_by_brand" -> funnel,
       "top_brands_by_revenue" -> topBrands)
   }
 
-  /** Mart stage for one day: each of [[martTables]] → partitioned parquet
-    * (`dt=` layout) → catalog registration with the crawler's `agg_`
-    * prefix. The three (write, register) pairs share no path and no table,
-    * so they run together. */
+  /** Mart stage for one day: each of [[martTables]] is published as one
+    * `dt=` day of its mart table ([[Sinks.publishMartDay]]: partitioned
+    * parquet, then catalog registration with the crawler's `agg_` prefix).
+    * The three publishes share no path and no table, so they run together. */
   def buildMart(date: String): Map[String, DataFrame] = {
     val tables = martTables(date)
     RetailPipeline.together(tables.toSeq.map { case (name, df) => () =>
-      Sinks.writeMartParquet(df, martRoot, name, date)
-      Sinks.registerMartTable(df, martRoot, name, date)
+      Sinks.publishMartDay(df, martRoot, name, date)
     })
     tables
   }
@@ -294,9 +272,8 @@ object RetailPipeline {
         }
       val row = Seq((next, out.date, branch, tables, error))
         .toDF("run_seq", "date", "branch", "tables", "error")
-      if (exists)
-        row.write.mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(table)
-      else row.write.saveAsTable(table)
+      // Append creates the table when it is missing.
+      row.write.mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(table)
       val meta = catalog.getTableMetadata(ident)
       minted(meta.identifier) = (meta.createTime, next)
     }

@@ -144,16 +144,16 @@ object LegacySql {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("value_sum"))
-    Sinks.writeMartParquet(daily, root, "daily_counts_rt", day)
-    // S6: a day with no rows leaves NOTHING (no empty dt= directory)
-    Sinks.writeMartParquet(daily.filter(lit(false)), root,
+    // The sink's registration re-creates the table when the standing one
+    // points at a DIFFERENT root (the review-r18 stale-read fix lives in
+    // the sink, so every caller — the pipeline's three mart tables
+    // included — gets it, not just this query); the cross-dir spec below
+    // proves it through this call.
+    Sinks.publishMartDay(daily, root, "daily_counts_rt", day)
+    // S6: a day with no rows leaves NOTHING (no empty dt= directory, no
+    // catalog partition)
+    Sinks.publishMartDay(daily.filter(lit(false)), root,
       "daily_counts_rt", "1999-01-01")
-    // registerMartTable itself re-creates the table when the standing
-    // one points at a DIFFERENT root (the review-r18 stale-read fix
-    // lives in the sink, so every caller — the pipeline's three mart
-    // tables included — gets it, not just this query); the cross-dir
-    // spec below proves it through this call.
-    Sinks.registerMartTable(daily, root, "daily_counts_rt", day)
     s.table("agg_daily_counts_rt")
       .select(col("event_type"), col("n"), col("value_sum"), col("dt"))
   }

@@ -51,7 +51,7 @@ object RetailQueries {
   def caseWhenRevenue(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).select(
       col("event_id"),
-      RetailOps.purchaseRevenue(col("event_type"), col("value")).as("revenue"),
+      RetailOps.purchaseRevenue(col("event_type") === "purchase", col("value")).as("revenue"),
       RetailOps.flag(col("event_type"), "purchase").as("is_purchase"))
 
   // A1 — fact build: 3-key group with COUNT(*) + conditional decimal-exact SUM.

@@ -50,8 +50,11 @@ class SnapshotSpec extends SparkSpec {
     // unpersist them behind the persisted-RDD count below.
     type Run = (Option[DataFrame], Seq[(Long, Double)])
     val ops: Seq[() => Run] = Seq(
-      () => None -> DedupClusters.withComponents(pairs)(
-        _.as[(Long, Long)].collect().toSeq.map { case (d, c) => (d, c.toDouble) }),
+      () => {
+        val labels = DedupClusters.components(pairs)
+        try None -> labels.as[(Long, Long)].collect().toSeq.map { case (d, c) => (d, c.toDouble) }
+        finally Snapshot.free(labels)
+      },
       () => {
         val ranks = PageRank.ranks(edges, iterations = 5)
         Some(ranks) -> ranks.as[(Long, Double)].collect().toSeq

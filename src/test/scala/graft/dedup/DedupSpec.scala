@@ -150,9 +150,33 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     got shouldBe Map(10L -> 10L, 20L -> 10L, 30L -> 10L, 40L -> 10L,
       1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
-    val keep = DedupClusters.canonical(pairs)
-      .filter(col("keep")).select("doc_id").as[Long].collect().sorted
+    val keep = DedupClusters.components(pairs)
+      .filter(col("doc_id") === col("cluster_id")).select("doc_id").as[Long].collect().sorted
     keep shouldBe Array(1L, 7L, 10L)
+  }
+
+  test("components of 12- and 30-node chains match a driver-side union-find") {
+    // Union by smaller root, so each root is its component's min doc_id.
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    // The min label starts at one end, so it needs n - 1 rounds to reach
+    // the other and one more to see nothing change.
+    for (n <- Seq(12L, 30L)) {
+      val chain = (1L until n).map(i => (i, i + 1))
+      val labels = DedupClusters.components(chain.toDF("doc_a", "doc_b"))
+      try labels.as[(Long, Long)].collect().toMap shouldBe unionFind(chain)
+      finally graft.Snapshot.free(labels)
+    }
   }
 
   test("components frees all intermediate snapshots; bracket frees everything") {
@@ -170,9 +194,10 @@ class DedupSpec extends SparkSpec {
     val afterComponents = sc.getPersistentRDDs.keySet.toSet -- before
     afterComponents.size shouldBe 1
 
-    // Bracket form: zero persisted-RDD delta once it returns.
-    val got = DedupClusters.withComponents(pairs)(
-      _.as[(Long, Long)].collect().toMap)
+    // Scoped form: zero persisted-RDD delta once the labels are freed.
+    val scoped = DedupClusters.components(pairs)
+    val got = try scoped.as[(Long, Long)].collect().toMap
+      finally graft.Snapshot.free(scoped)
     got(40L) shouldBe 10L
     (sc.getPersistentRDDs.keySet.toSet -- before -- afterComponents) shouldBe empty
 

@@ -14,13 +14,14 @@ class SinksSpec extends SparkSpec {
     spark.sql("DROP TABLE t_replace")
   }
 
-  test("writeMartParquet writes dt= layout and skips empty frames (S5/S6)") {
+  test("publishMartDay writes dt= layout and skips empty frames (S5/S6)") {
     val mart = Files.createTempDirectory("sinks-mart").toString
-    Sinks.writeMartParquet(Seq((1, 2.0)).toDF("a", "b"), mart, "m1", "2019-10-01")
+    Sinks.publishMartDay(Seq((1, 2.0)).toDF("a", "b"), mart, "m1", "2019-10-01")
     Files.exists(Paths.get(s"$mart/aggregates/m1/dt=2019-10-01")) shouldBe true
-    Sinks.writeMartParquet(Seq((1, 2.0)).toDF("a", "b").filter(lit(false)),
+    Sinks.publishMartDay(Seq((1, 2.0)).toDF("a", "b").filter(lit(false)),
       mart, "m_empty", "2019-10-01")
     Files.exists(Paths.get(s"$mart/aggregates/m_empty")) shouldBe false
+    spark.sql("DROP TABLE agg_m1")
   }
 
   test("events round-trip losslessly through ORC and JSON sinks") {
@@ -73,13 +74,11 @@ class SinksSpec extends SparkSpec {
   test("registerMartTable spans every dt= partition like the crawler (S7)") {
     val mart = Files.createTempDirectory("sinks-reg").toString
     val df = Seq((1, 2)).toDF("x", "y")
-    Sinks.writeMartParquet(df, mart, "sinkspec_probe", "2019-10-01")
-    Sinks.registerMartTable(df, mart, "sinkspec_probe", "2019-10-01")
+    Sinks.publishMartDay(df, mart, "sinkspec_probe", "2019-10-01")
     spark.catalog.tableExists("agg_sinkspec_probe") shouldBe true
     spark.table("agg_sinkspec_probe").count() shouldBe 1
     // a later day lands; re-registration (crawler re-run) discovers it
-    Sinks.writeMartParquet(df, mart, "sinkspec_probe", "2019-10-02")
-    Sinks.registerMartTable(df, mart, "sinkspec_probe", "2019-10-02")
+    Sinks.publishMartDay(df, mart, "sinkspec_probe", "2019-10-02")
     spark.table("agg_sinkspec_probe").count() shouldBe 2
     spark.table("agg_sinkspec_probe").select("dt").distinct().count() shouldBe 2
     spark.sql("DROP TABLE agg_sinkspec_probe")
@@ -88,13 +87,11 @@ class SinksSpec extends SparkSpec {
   test("registerMartTable refreshes the catalog schema on mart evolution (UPDATE_IN_DATABASE)") {
     val mart = Files.createTempDirectory("sinks-evolve").toString
     val v1 = Seq((1, 2)).toDF("x", "y")
-    Sinks.writeMartParquet(v1, mart, "sinkspec_evolve", "2019-10-01")
-    Sinks.registerMartTable(v1, mart, "sinkspec_evolve", "2019-10-01")
+    Sinks.publishMartDay(v1, mart, "sinkspec_evolve", "2019-10-01")
     spark.table("agg_sinkspec_evolve").columns.toSeq shouldBe Seq("x", "y", "dt")
     // the mart grows a column; re-registration re-creates the definition
     val v2 = Seq((1, 2, 9L)).toDF("x", "y", "z")
-    Sinks.writeMartParquet(v2, mart, "sinkspec_evolve", "2019-10-02")
-    Sinks.registerMartTable(v2, mart, "sinkspec_evolve", "2019-10-02")
+    Sinks.publishMartDay(v2, mart, "sinkspec_evolve", "2019-10-02")
     val evolved = spark.table("agg_sinkspec_evolve")
     evolved.columns.toSeq shouldBe Seq("x", "y", "z", "dt")
     // history stayed on disk; the old partition reads the new column as null
@@ -104,7 +101,7 @@ class SinksSpec extends SparkSpec {
     evolved.filter(col("dt") === "2019-10-02")
       .select("z").as[Long].collect() shouldBe Array(9L)
     // unchanged schema → no churn, registration stays idempotent
-    Sinks.registerMartTable(v2, mart, "sinkspec_evolve", "2019-10-02")
+    Sinks.registerMartTable(v2, mart, "sinkspec_evolve", "2019-10-02", rows = 1L)
     spark.table("agg_sinkspec_evolve").count() shouldBe 2
     spark.sql("DROP TABLE agg_sinkspec_evolve")
   }
@@ -112,13 +109,11 @@ class SinksSpec extends SparkSpec {
   private def partitions(table: String): Seq[String] =
     spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0)).toSeq.sorted
 
-  test("writeMartParquet returns the row count; an empty day leaves no dt= directory and no catalog partition (S6)") {
+  test("publishMartDay returns the row count; an empty day leaves no partition (S6)") {
     val mart = Files.createTempDirectory("sinks-s6").toString
     val df = Seq((1, 2), (3, 4)).toDF("x", "y")
-    Sinks.writeMartParquet(df, mart, "sinkspec_s6", "2019-10-01") shouldBe 2L
-    Sinks.registerMartTable(df, mart, "sinkspec_s6", "2019-10-01")
-    Sinks.writeMartParquet(df.filter(lit(false)), mart, "sinkspec_s6", "2019-10-02") shouldBe 0L
-    Sinks.registerMartTable(df, mart, "sinkspec_s6", "2019-10-02")
+    Sinks.publishMartDay(df, mart, "sinkspec_s6", "2019-10-01") shouldBe 2L
+    Sinks.publishMartDay(df.filter(lit(false)), mart, "sinkspec_s6", "2019-10-02") shouldBe 0L
     Files.exists(Paths.get(s"$mart/aggregates/sinkspec_s6/dt=2019-10-02")) shouldBe false
     partitions("agg_sinkspec_s6") shouldBe Seq("dt=2019-10-01")
     spark.table("agg_sinkspec_s6").count() shouldBe 2
@@ -129,13 +124,11 @@ class SinksSpec extends SparkSpec {
     val mart = Files.createTempDirectory("sinks-rerun").toString
     val df = Seq((1, 2)).toDF("x", "y")
     Seq("2019-10-01", "2019-10-02").foreach { d =>
-      Sinks.writeMartParquet(df, mart, "sinkspec_rerun", d)
-      Sinks.registerMartTable(df, mart, "sinkspec_rerun", d)
+      Sinks.publishMartDay(df, mart, "sinkspec_rerun", d)
     }
     partitions("agg_sinkspec_rerun") shouldBe Seq("dt=2019-10-01", "dt=2019-10-02")
     // the day's current result is empty: the mart mirrors it
-    Sinks.writeMartParquet(df.filter(lit(false)), mart, "sinkspec_rerun", "2019-10-02") shouldBe 0L
-    Sinks.registerMartTable(df, mart, "sinkspec_rerun", "2019-10-02")
+    Sinks.publishMartDay(df.filter(lit(false)), mart, "sinkspec_rerun", "2019-10-02") shouldBe 0L
     Files.exists(Paths.get(s"$mart/aggregates/sinkspec_rerun/dt=2019-10-02")) shouldBe false
     Files.exists(Paths.get(s"$mart/aggregates/sinkspec_rerun/dt=2019-10-01")) shouldBe true
     partitions("agg_sinkspec_rerun") shouldBe Seq("dt=2019-10-01")
@@ -147,15 +140,15 @@ class SinksSpec extends SparkSpec {
   test("registerMartTable on a standing table with matching schema and location runs no Spark job") {
     val mart = Files.createTempDirectory("sinks-nojob").toString
     val df = Seq((1, 2)).toDF("x", "y")
-    Sinks.writeMartParquet(df, mart, "sinkspec_nojob", "2019-10-01")
-    Sinks.registerMartTable(df, mart, "sinkspec_nojob", "2019-10-01") // creates it
-    Sinks.writeMartParquet(df, mart, "sinkspec_nojob", "2019-10-02")
+    Sinks.publishMartDay(df, mart, "sinkspec_nojob", "2019-10-01") // creates it
+    // the day's files alone: the registration below is the one measured
+    df.write.parquet(s"$mart/aggregates/sinkspec_nojob/dt=2019-10-02")
     val sc = spark.sparkContext
     assert(org.apache.spark.graft.BenchListenerBus.drain(sc, 60000L), "listener bus did not drain")
     val listener = new graft.tools.Harness.StatsListener(sc)
     sc.addSparkListener(listener)
     try {
-      Sinks.registerMartTable(df, mart, "sinkspec_nojob", "2019-10-02")
+      Sinks.registerMartTable(df, mart, "sinkspec_nojob", "2019-10-02", rows = 1L)
       listener.quiesce()
       listener.jobs shouldBe empty
     } finally sc.removeSparkListener(listener)

@@ -16,7 +16,7 @@ class RetailOpsSpec extends SparkSpec {
 
   test("purchaseRevenue is CASE WHEN purchase THEN value ELSE 0 (P7)") {
     val df = Seq(("purchase", 10.0), ("view", 99.0)).toDF("et", "v")
-    val out = df.select(RetailOps.purchaseRevenue($"et", $"v")).as[Double].collect()
+    val out = df.select(RetailOps.purchaseRevenue($"et" === "purchase", $"v")).as[Double].collect()
     out.toSeq shouldBe Seq(10.0, 0.0)
   }
 

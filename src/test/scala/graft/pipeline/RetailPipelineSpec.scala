@@ -84,6 +84,24 @@ class RetailPipelineSpec extends SparkSpec {
     spark.table("agg_top_brands_by_revenue").count() should be <= 10L
   }
 
+  test("day 1 funnel by brand and top brands match hand-computed goldens") {
+    pipeline.runDay("2019-10-01")
+    // Fact rows of day 1 ⋈ dim_product: apple (1001) has two viewers, one
+    // cart and the 999.00 purchase; Generic/Unknown (1002, filled at
+    // ingest) one view; nike (1003) the price-0 purchase.
+    val golden = Set(
+      ("apple", "electronics.smartphone", 2L, 1L, 1L, 999.0),
+      ("Generic", "Unknown", 1L, 0L, 0L, 0.0),
+      ("nike", "apparel", 0L, 0L, 1L, 0.0))
+    import spark.implicits._
+    def day1(table: String) = spark.table(table).filter(col("dt") === "2019-10-01")
+      .select("brand", "category_code", "views", "carts", "purchases", "revenue")
+      .as[(String, String, Long, Long, Long, Double)].collect().toSet
+    day1("agg_daily_funnel_by_brand") shouldBe golden
+    // fewer than 10 brands that day: the top-10 holds every one of them
+    day1("agg_top_brands_by_revenue") shouldBe golden
+  }
+
   test("day 2: zero views → null rates, not inf (§7.4.1)") {
     pipeline.runDay("2019-10-02")
     val rev = spark.table("agg_daily_revenue_summary")
