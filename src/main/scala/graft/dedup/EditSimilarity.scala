@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Snapshot.SnapshotOps
 
 /** Edit-distance near-duplicate verification — the third verify style
   * over the stored LSH candidate pairs, beside shingle-hash Jaccard
@@ -19,10 +18,11 @@ import graft.Snapshot.SnapshotOps
   *
   * Scale shape: the expensive half (candidate GENERATION) is the stored
   * banded-LSH asset ([[graft.pipeline.DedupAssets.minhashCandidates]]);
-  * this stage probes it exactly like the other verify styles (candidate
-  * ids semi-join the corpus, the capped text projection is pinned once,
-  * both joins read the snapshot). Levenshtein is O(len²) per pair, which
-  * is why `prefix` caps the compared text (512 chars default): cost per
+  * this stage probes it through the shared candidate verifier
+  * ([[PairVerify]]: candidate ids semi-join the corpus, the capped text
+  * projection is pinned once, both joins read the snapshot).
+  * Levenshtein is O(len²) per pair, which is why `prefix` caps the
+  * compared text (512 chars default): cost per
   * pair is bounded at prefix² regardless of document length — the
   * standard truncation for edit-verify over long documents (full-length
   * edit distance at corpus scale is what the Jaccard tiers exist to
@@ -37,23 +37,14 @@ object EditSimilarity {
   /** (doc_a, doc_b, edit_dist, max_len, edit_sim) for every candidate
     * pair whose normalized edit similarity over the first `prefix`
     * lowercased chars reaches `threshold`. Same eager-pin contract as
-    * [[MinHashLSH.verifiedPairsOver]]. */
+    * [[PairVerify.withFeature]]. */
   def scorePairs(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
                  prefix: Int = 512, threshold: Double = 0.7): DataFrame = {
     require(prefix >= 1, s"prefix must be >= 1, got $prefix")
-    val p = pairs.select("doc_a", "doc_b").pinned(true)
-    val ids = p.select(col("doc_a").as("doc_id"))
-      .unionByName(p.select(col("doc_b").as("doc_id"))).distinct()
-    val txt = docs.filter(col(textCol).isNotNull)
-      .join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        substring(lower(col(textCol)), 1, prefix).as("t"))
-      .pinned(true)
     val sim = lit(1.0) -
       col("edit_dist").cast("double") / col("max_len").cast("double")
-    p
-      .join(txt.withColumnsRenamed(Map("doc_id" -> "doc_a", "t" -> "t_a")), Seq("doc_a"))
-      .join(txt.withColumnsRenamed(Map("doc_id" -> "doc_b", "t" -> "t_b")), Seq("doc_b"))
+    PairVerify.withFeature(docs.filter(col(textCol).isNotNull), pairs, "t",
+        substring(lower(col(textCol)), 1, prefix))
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("t_a"), col("t_b")).cast("long").as("edit_dist"),
         greatest(length(col("t_a")), length(col("t_b"))).cast("long").as("max_len"))

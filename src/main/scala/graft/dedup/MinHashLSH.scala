@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Snapshot.SnapshotOps
 
 /** MinHash + LSH near-duplicate detection:
   * shingle → minhash signature → band → bucket-join → verified Jaccard.
@@ -228,20 +227,14 @@ object MinHashLSH {
   }
 
   /** Exact Jaccard over shingle-hash sets for the candidate pairs — the
-    * verify stage. The pair table is tiny (bucketCap-bounded), so AQE
-    * broadcasts it into each join — which means a bare full-corpus
-    * shingle projection would STREAM through both joins, paying the
-    * shingle UDF over every document twice. Instead the candidate id set
-    * (derived from the pinned pairs) semi-joins the corpus first, the
-    * shingle sets are computed for candidate docs only and pinned once,
-    * and both joins probe that snapshot. Sets are 31-bit hashes
-    * (set-identical to string shingles up to 2^-31 collisions).
+    * verify stage, through the shared verifier ([[PairVerify]]: the
+    * shingle sets are computed for candidate docs only, pinned once, and
+    * joined onto both sides). Sets are 31-bit hashes (set-identical to
+    * string shingles up to 2^-31 collisions).
     *
-    * EAGER, like [[graft.operators.PrefixSum]]: the localCheckpoint pins
-    * run candidate generation and the shingle walk AT CALL TIME — this is
-    * not a lazy plan. Don't build it speculatively; call when the result
-    * will be consumed, and release snapshots afterwards in long-lived
-    * sessions. */
+    * EAGER ([[PairVerify.withFeature]]): candidate generation and the
+    * shingle walk run AT CALL TIME — call when the result will be
+    * consumed, and release snapshots afterwards in long-lived sessions. */
   def verifiedPairs(docs: DataFrame, textCol: String = "text",
                     threshold: Double = 0.7, numHashes: Int = 64,
                     bands: Int = 16, bucketCap: Int = 1000,
@@ -254,25 +247,15 @@ object MinHashLSH {
     * production split: candidate GENERATION is the expensive banded
     * shuffle and a storable per-corpus artifact
     * ([[graft.pipeline.DedupAssets.minhashCandidates]]); each verify
-    * style (shingle-hash here, char-gram [[NgramJaccard.scorePairs]])
-    * probes it. Same eager contract as [[verifiedPairs]]. */
+    * style (shingle-hash here, char-gram [[NgramJaccard.scorePairs]],
+    * edit [[EditSimilarity.scorePairs]]) probes it through
+    * [[PairVerify]]. Same eager contract as [[verifiedPairs]]. */
   def verifiedPairsOver(docs: DataFrame, candidates: DataFrame,
                         textCol: String = "text",
-                        threshold: Double = 0.7): DataFrame = {
-    val pairs = candidates.select("doc_a", "doc_b").pinned(true)
-    val ids = pairs.select(col("doc_a").as("doc_id"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = docs.join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(shingleHashes(col(textCol), lit(3))).as("sh"))
-      .pinned(true)
-    pairs
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_a", "sh" -> "sh_a")), Seq("doc_a"))
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_b", "sh" -> "sh_b")), Seq("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+                        threshold: Double = 0.7): DataFrame =
+    PairVerify.withFeature(docs, candidates, "sh",
+        array_distinct(shingleHashes(col(textCol), lit(3))))
+      .withColumn("jaccard", PairVerify.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-  }
 }

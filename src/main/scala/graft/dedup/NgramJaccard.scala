@@ -2,13 +2,13 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Snapshot.SnapshotOps
 
 /** N-gram Jaccard similarity — the classic fuzzy-dedup verifier.
   *
   * Two pair-generation modes, both shuffle-bounded (never all-pairs):
   *  - delegated: score MinHashLSH/SimHash candidate pairs with exact
-  *    char-n-gram Jaccard ([[scorePairs]]) — probabilistic recall;
+  *    char-n-gram Jaccard ([[scorePairs]], through the shared candidate
+  *    verifier [[PairVerify]]) — probabilistic recall;
   *  - inverted index: [[invertedIndexPairs]] finds ALL pairs sharing a
   *    sub-dfCap word shingle — deterministic recall, SQL-replayable
   *    (the m14 oracle), with the posting-list join bounded by the
@@ -41,41 +41,15 @@ object NgramJaccard {
       }
     }
 
-  /** Score (doc_a, doc_b) pairs with exact n-gram Jaccard by joining the
-    * n-gram sets back on. The pair table is small, so AQE broadcasts it
-    * into each join — a bare full-corpus gram projection would then
-    * STREAM through both joins, paying the gram UDF over every document
-    * twice. The candidate id set (from the pinned pairs) semi-joins the
-    * corpus first, gram sets are computed for candidate docs only and
-    * pinned once, and both joins probe that snapshot (the
-    * [[graft.dedup.MinHashLSH.verifiedPairs]] shape).
-    *
-    * EAGER, like [[graft.operators.PrefixSum]]: the localCheckpoint pins
-    * run jobs over `pairs` and the candidate docs AT CALL TIME — this is
-    * not a lazy plan. Don't build it speculatively; call when the result
-    * will be consumed, and release snapshots afterwards in long-lived
-    * sessions. */
+  /** Score (doc_a, doc_b) pairs with exact n-gram Jaccard: the shared
+    * candidate verifier ([[PairVerify]]) joins each candidate doc's
+    * n-gram set onto both sides of its pairs. Same eager contract as
+    * [[PairVerify.withFeature]]. */
   def scorePairs(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-                 n: Int = 3): DataFrame = {
-    val p = pairs.pinned(true)
-    val ids = p.select(col("doc_a").as("doc_id"))
-      .unionByName(p.select(col("doc_b").as("doc_id"))).distinct()
-    val grams = docs.join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), charNgramHashes(col(textCol), lit(n)).as("g"))
-      .pinned(true)
-    p
-      .join(grams.withColumnsRenamed(Map("doc_id" -> "doc_a", "g" -> "g_a")), Seq("doc_a"))
-      .join(grams.withColumnsRenamed(Map("doc_id" -> "doc_b", "g" -> "g_b")), Seq("doc_b"))
+                 n: Int = 3): DataFrame =
+    PairVerify.withFeature(docs, pairs, "g", charNgramHashes(col(textCol), lit(n)))
       .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("g_a"), col("g_b"))).cast("double") /
-          size(array_union(col("g_a"), col("g_b"))).cast("double")).as("jaccard"))
-  }
-
-  /** End-to-end: LSH candidates → n-gram Jaccard ≥ threshold. */
-  def nearDuplicates(docs: DataFrame, textCol: String = "text", n: Int = 3,
-                     threshold: Double = 0.6): DataFrame =
-    scorePairs(docs, MinHashLSH.candidatePairs(docs, textCol), textCol, n)
-      .filter(col("jaccard") >= threshold)
+        PairVerify.jaccard(col("g_a"), col("g_b")).as("jaccard"))
 
   /** ONE definition of the SQL-parity shingle walk (trim 0x20 only, split
     * on space runs, w-token windows joined by single spaces, short doc →

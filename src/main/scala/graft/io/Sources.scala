@@ -17,19 +17,18 @@ object Sources {
     * S3 object per day; here the day directory is the unit, so one call
     * scans one partition and a glob scans the history. */
   def rawEventsCsv(spark: SparkSession, root: String, date: String): DataFrame =
-    spark.read
-      .schema(Schemas.rawEvent)
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ssXXX")
+    spark.read.options(RawEventOptions).schema(Schemas.rawEvent)
       .csv(s"$root/Day_Wise/$date/event.csv")
 
   /** All days at once (used by backfills and the streaming parity test). */
   def rawEventsCsvAll(spark: SparkSession, root: String): DataFrame =
-    spark.read
-      .schema(Schemas.rawEvent)
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ssXXX")
+    spark.read.options(RawEventOptions).schema(Schemas.rawEvent)
       .csv(s"$root/Day_Wise/*/event.csv")
+
+  /** The raw event CSV's reader options — every raw-event reader (batch
+    * day, batch history, stream) parses the feed identically. */
+  private val RawEventOptions = Map(
+    "header" -> "true", "timestampFormat" -> "yyyy-MM-dd HH:mm:ssXXX")
 
   /** Dev-mode permissive ingest (SURVEY §1.2) — the pandas-`read_csv`
     * inference experience for exploring a NEW feed whose schema isn't in
@@ -100,10 +99,7 @@ object Sources {
     * equivalent of the reference's daily scheduled pulls). */
   def rawEventsStream(spark: SparkSession, root: String,
                       maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .schema(Schemas.rawEvent)
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ssXXX")
+    spark.readStream.options(RawEventOptions).schema(Schemas.rawEvent)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(s"$root/Day_Wise/*/event.csv")
 }

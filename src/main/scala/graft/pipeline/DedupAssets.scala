@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions.{bit_xor, col, count, length, lit, xxhash6
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
 
 /** Materialized dedup assets — the production topology for the near-dup
   * pair graph and its cluster labels.
@@ -28,11 +27,11 @@ import java.util.concurrent.ConcurrentHashMap
   * the pair-table bytes (pairs are two longs + a double per row, orders of
   * magnitude smaller than the corpus).
   *
-  * Concurrency: builds coordinate on a PER-KEY latch, not an object-wide
-  * lock — a caller building the pairs asset for corpus A never blocks a
-  * caller building clusters, or corpus B (the Spark job runs outside any
-  * global mutex; only same-key callers wait, and exactly one of them
-  * builds).
+  * Concurrency: builds coordinate on a PER-PATH latch ([[graft.Memo]]),
+  * not an object-wide lock — a caller building the pairs asset for
+  * corpus A never blocks a caller building clusters, or corpus B (the
+  * Spark job runs outside any global mutex; only callers of the same
+  * stored path wait, and exactly one of them builds).
   *
   * Reuse across JVMs is opt-in: with `graft.dedup.assetRoot` (system
   * property, or GRAFT_DEDUP_ASSET_ROOT env) pointing at a stable
@@ -59,9 +58,8 @@ object DedupAssets {
   private val SemanticsVersion = "v2" // v2: pair asset stored at loose θ=0.5
 
   private case class Asset(path: String, schema: StructType)
-  private val cache = new ConcurrentHashMap[String, Asset]
-  private val keyLocks = new ConcurrentHashMap[String, Object]
-  private val fingerprints = new ConcurrentHashMap[String, String]
+  private val assets = new graft.Memo[Asset]
+  private val fingerprints = new graft.Memo[String]
   private lazy val tempRoot =
     Files.createTempDirectory("graft-dedup-assets").toString
 
@@ -82,7 +80,7 @@ object DedupAssets {
     // fpCols is part of the memo key: two assets over the same source
     // table but fingerprinting different columns must not share a cached
     // fingerprint (a collision would silently reuse a stale asset).
-    fingerprints.computeIfAbsent(s"$key::$fpTable::${fpCols.mkString(",")}", { _ =>
+    fingerprints(s"$key::$fpTable::${fpCols.mkString(",")}") {
       val src = Paths.get(key, fpTable)
       if (Files.exists(src)) {
         val r = s.read.parquet(src.toString)
@@ -91,49 +89,40 @@ object DedupAssets {
         val x = if (r.isNullAt(1)) 0L else r.getLong(1)
         f"${r.getLong(0)}%x-$x%016x"
       } else f"k${key.hashCode}%08x"
-    })
+    }
 
   /** Materialize `build` once per (asset, key) per JVM — or once per
     * (asset, corpus-fingerprint, semantics version) across JVMs when a
     * stable asset root is configured; always return a reader over the
     * stored copy.
     *
-    * The in-JVM lock is keyed by the FINAL PATH, not the (asset, key)
+    * The in-JVM memo is keyed by the FINAL PATH, not the (asset, key)
     * pair: two keys that fingerprint to the same stored path (same corpus
-    * reached via two dir spellings) must serialize on one latch, or both
-    * would build into the shared path concurrently. */
+    * reached via two dir spellings) share one latch and one build, or
+    * both would build into the shared path concurrently. */
   def materialized(s: SparkSession, asset: String, key: String,
                    sortCols: Seq[String],
                    fpTable: String = "documents.parquet",
                    fpCols: Seq[String] = Seq("doc_id", "text"))
                   (build: => DataFrame): DataFrame = {
-    val ck = s"$asset::$key"
-    val a = Option(cache.get(ck)).getOrElse {
-      // Fingerprinting runs a (memoized) Spark job — outside any lock, so
-      // concurrent different-key callers still overlap.
-      val (path, stable) = stableRoot match {
-        case Some(root) =>
-          (s"$root/$asset-${fingerprint(s, key, fpTable, fpCols)}-$SemanticsVersion", true)
-        case None =>
-          (s"$tempRoot/$asset-${java.lang.Integer.toHexString(key.hashCode)}",
-            false)
-      }
-      val lock = keyLocks.computeIfAbsent(path, _ => new Object)
-      lock.synchronized {
-        Option(cache.get(ck)).getOrElse {
-          val built =
-            if (stable)
-              loadStored(path).getOrElse(
-                writeAsset(path, build, sortCols, overwrite = false))
-            else
-              // Per-JVM temp root: reset() demands a fresh build, so a
-              // leftover path from before the reset is replaced, not
-              // reused. No cross-process concern — the root is private.
-              writeAsset(path, build, sortCols, overwrite = true)
-          cache.put(ck, built)
-          built
-        }
-      }
+    // Fingerprinting runs a (memoized) Spark job — outside the path's
+    // latch, so concurrent different-key callers still overlap.
+    val (path, stable) = stableRoot match {
+      case Some(root) =>
+        (s"$root/$asset-${fingerprint(s, key, fpTable, fpCols)}-$SemanticsVersion", true)
+      case None =>
+        (s"$tempRoot/$asset-${java.lang.Integer.toHexString(key.hashCode)}",
+          false)
+    }
+    val a = assets(path) {
+      if (stable)
+        loadStored(path).getOrElse(
+          writeAsset(path, build, sortCols, overwrite = false))
+      else
+        // Per-JVM temp root: reset() demands a fresh build, so a
+        // leftover path from before the reset is replaced, not
+        // reused. No cross-process concern — the root is private.
+        writeAsset(path, build, sortCols, overwrite = true)
     }
     s.read.schema(a.schema).parquet(a.path)
   }
@@ -321,5 +310,5 @@ object DedupAssets {
   /** Test hook: drop the per-JVM memo (and fingerprint memo) so a spec can
     * observe a fresh build. Stored files stay on disk; with a stable root
     * the next call reuses them via the marker. */
-  def reset(): Unit = { cache.clear(); fingerprints.clear() }
+  def reset(): Unit = { assets.clear(); fingerprints.clear() }
 }

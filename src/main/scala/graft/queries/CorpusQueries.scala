@@ -30,16 +30,15 @@ object CorpusQueries {
     * because 10000 was hardcoded against a 50k-id corpus. Cached per
     * (dir, table): one narrow max() scan per JVM — fixture plumbing, not
     * a production operator. */
-  private val offsetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+  private val offsets = new graft.Memo[Long]
   private def synthOffset(df: DataFrame, key: String, idCol: String): Long =
-    offsetCache.computeIfAbsent(key, { _ =>
+    offsets(key) {
       val mx = Option(df.agg(max(col(idCol))).head().get(0))
         .fold(0L)(_.asInstanceOf[Long])
       var off = 10000L
       while (off <= mx) off *= 10
       off
-    })
+    }
   private[graft] def docOff(s: SparkSession, dir: String): Long =
     synthOffset(Tables.documents(s, dir), s"$dir::documents", "doc_id")
 
@@ -552,7 +551,8 @@ object CorpusQueries {
     graft.text.Bpe.tokenCoverage(Tables.documents(s, dir), model)
   }
 
-  /** One trained BPE model per corpus per JVM: m40 and m79 share the same
+  /** One trained BPE model per corpus per JVM ([[graft.Memo]]): m40 and
+    * m79 share the same
     * tokenizer (the production contract — fertility is a property OF a
     * tokenizer, so retraining per report would both double the bounded
     * driver train and risk auditing a different model than the one that
@@ -562,15 +562,10 @@ object CorpusQueries {
     * 4096-doc sample (BpeSpec pins trainDistributed ≡ train when the
     * sample covers the corpus — which also means the captured-model
     * oracles were unaffected by the switch at fixture scale). */
-  private val bpeModels = scala.collection.mutable.Map.empty[String, graft.text.Bpe.Model]
-  private[graft] val bpeTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val bpeModels = new graft.Memo[graft.text.Bpe.Model]
   private def bpeModel(s: SparkSession, dir: String, nMerges: Int = 40): graft.text.Bpe.Model =
-    bpeModels.synchronized {
-      bpeModels.getOrElseUpdate(s"$dir::$nMerges", {
-        val m = graft.text.Bpe.trainDistributed(Tables.documents(s, dir), nMerges)
-        bpeTrainCount.incrementAndGet() // counts SUCCESSFUL trains (spec hook)
-        m
-      })
+    bpeModels(s"$dir::$nMerges") {
+      graft.text.Bpe.trainDistributed(Tables.documents(s, dir), nMerges)
     }
 
   /** WordPiece tokenizer-token accounting (m139): train likelihood-scored
@@ -617,33 +612,21 @@ object CorpusQueries {
             sum(col("n_words")).cast("double")).as("unk_rate"))
   }
 
-  /** One trained WordPiece model per corpus per JVM — the [[bpeModel]]
-    * convention for the third tokenizer family. */
-  private val wpModels = scala.collection.mutable.Map.empty[String, graft.text.WordPiece.Model]
-  private[graft] val wpTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** One trained WordPiece model per corpus per JVM ([[graft.Memo]]) —
+    * the third tokenizer family. */
+  private[graft] val wpModels = new graft.Memo[graft.text.WordPiece.Model]
   private def wpModel(s: SparkSession, dir: String, nMerges: Int = 30): graft.text.WordPiece.Model =
-    wpModels.synchronized {
-      wpModels.getOrElseUpdate(s"$dir::$nMerges", {
-        val m = graft.text.WordPiece.trainDistributed(Tables.documents(s, dir), nMerges)
-        wpTrainCount.incrementAndGet() // counts SUCCESSFUL trains (spec hook)
-        m
-      })
+    wpModels(s"$dir::$nMerges") {
+      graft.text.WordPiece.trainDistributed(Tables.documents(s, dir), nMerges)
     }
 
-  /** One trained unigram-LM tokenizer per corpus per JVM — the
-    * [[bpeModel]] convention for the OTHER tokenizer family. Training
+  /** One trained unigram-LM tokenizer per corpus per JVM ([[graft.Memo]])
+    * — the OTHER tokenizer family. Training
     * is deterministic (sorted word-table EM fold), so the memo serves
     * every consumer the weights a private train would produce. */
-  private val uniModels = scala.collection.mutable.Map.empty[String, graft.text.UnigramLm.Model]
-  private[graft] val uniTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val uniModels = new graft.Memo[graft.text.UnigramLm.Model]
   private def uniModel(s: SparkSession, dir: String): graft.text.UnigramLm.Model =
-    uniModels.synchronized {
-      uniModels.getOrElseUpdate(dir, {
-        val m = graft.text.UnigramLm.train(Tables.documents(s, dir))
-        uniTrainCount.incrementAndGet() // counts SUCCESSFUL trains (spec hook)
-        m
-      })
-    }
+    uniModels(dir)(graft.text.UnigramLm.train(Tables.documents(s, dir)))
 
   /** Unigram-LM tokenizer accounting (m135): per-document Viterbi token
     * counts under the EM-trained SentencePiece-style unigram model
@@ -770,8 +753,8 @@ object CorpusQueries {
     graft.text.MaximalRepeats.spans(
       withSyntheticDups(Tables.documents(s, dir), docOff(s, dir)), w = 10)
 
-  /** One trained quality-classifier model per corpus per JVM — the
-    * [[bpeModel]] convention: training is deterministic (exact
+  /** One trained quality-classifier model per corpus per JVM
+    * ([[graft.Memo]]): training is deterministic (exact
     * fixed-point gradient sums, weights a pure function of the corpus),
     * so the four consumers (m83 scoring, m86 ROC, m98 calibration,
     * m101/m118 gate fusion) share one train instead of re-running the
@@ -785,34 +768,20 @@ object CorpusQueries {
     * the (identical) weights under its OWN key, so each oracle replays
     * exactly its run's model.
     *
-    * Memo durability contract (DedupAssetsSpec pins all three for both
-    * model memos): concurrent same-corpus callers serialize on the memo
-    * lock and exactly one trains; a FAILED train never poisons the memo
-    * (getOrElseUpdate stores nothing on throw — the next caller
-    * retrains); staleness is per-JVM ([[resetModelMemos]] ≙ new process
-    * → retrain sees the current corpus), matching the in-JVM
-    * fingerprint memo of [[graft.pipeline.DedupAssets]]. */
-  private val qcModels = scala.collection.mutable.Map.empty[String, graft.text.QualityClassifier.Model]
-  private[graft] val qcTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
+    * Memo durability: the [[graft.Memo]] contract (MemoSpec; the
+    * DedupAssetsSpec model-memo tests pin it per model) — exactly one
+    * same-corpus caller trains, a FAILED train never poisons the memo,
+    * and staleness is per-JVM ([[resetModelMemos]] ≙ new process →
+    * retrain sees the current corpus). */
+  private[graft] val qcModels = new graft.Memo[graft.text.QualityClassifier.Model]
   private def qcModel(s: SparkSession, dir: String): graft.text.QualityClassifier.Model =
-    qcModels.synchronized {
-      qcModels.getOrElseUpdate(dir, {
-        val m = graft.text.QualityClassifier.trainDistributed(Tables.documentsSpread(s, dir))
-        qcTrainCount.incrementAndGet() // counts SUCCESSFUL trains (spec hook)
-        m
-      })
-    }
+    qcModels(dir)(graft.text.QualityClassifier.trainDistributed(Tables.documentsSpread(s, dir)))
 
   /** Test hook (DedupAssetsSpec): drop the per-JVM model memos so a spec
     * can observe retrain-on-fresh-process semantics. */
-  private[graft] def resetModelMemos(): Unit = {
-    qcModels.synchronized { qcModels.clear() }
-    bpeModels.synchronized { bpeModels.clear() }
-    uniModels.synchronized { uniModels.clear() }
-    langModels.synchronized { langModels.clear() }
-    wpModels.synchronized { wpModels.clear() }
-    labeledModels.synchronized { labeledModels.clear() }
-  }
+  private[graft] def resetModelMemos(): Unit =
+    Seq(qcModels, bpeModels, uniModels, langModels, wpModels, labeledModels)
+      .foreach(_.clear())
 
   /** The planted per-language labeled set (m137/m67): 300 docs, 60 per
     * language, text = trim(repeat(phrase ∥ ' ', 1 + i % 3)) over
@@ -838,15 +807,12 @@ object CorpusQueries {
   private[graft] def langOff(s: SparkSession, dir: String): Long =
     3 * docOff(s, dir)
 
-  /** One trained language-ID model per corpus per JVM (the [[qcModel]]
-    * memo convention — training is deterministic, so the two consumers
+  /** One trained language-ID model per corpus per JVM ([[graft.Memo]] —
+    * training is deterministic, so the two consumers
     * (m137 scoring, m67 confusion card) share one distributed train). */
-  private val langModels = scala.collection.mutable.Map.empty[String, graft.text.LangId.Model]
+  private val langModels = new graft.Memo[graft.text.LangId.Model]
   private def langModel(s: SparkSession, dir: String): graft.text.LangId.Model =
-    langModels.synchronized {
-      langModels.getOrElseUpdate(dir,
-        graft.text.LangId.train(syntheticLangDocs(s, langOff(s, dir))))
-    }
+    langModels(dir)(graft.text.LangId.train(syntheticLangDocs(s, langOff(s, dir))))
 
   /** The m137/m67 scoring corpus: every real doc plus the planted
     * labeled block. */
@@ -915,7 +881,7 @@ object CorpusQueries {
     * reader must shed it into `_corrupt_record`, not fail the load
     * (spec-pinned; the all-null quarantined row falls to the
     * doc_id-null filter in [[labeledSet]]). */
-  private val labeledJsonlPaths = scala.collection.mutable.Map.empty[String, String]
+  private val labeledJsonlPaths = new graft.Memo[String]
 
   /** Minimal JSON string escaper (\\, ", and control chars < 0x20):
     * the labeled JSONL is built by interpolation, so a planted phrase
@@ -934,18 +900,16 @@ object CorpusQueries {
   }
 
   private[graft] def labeledJsonlPath(s: SparkSession, dir: String): String =
-    labeledJsonlPaths.synchronized {
-      labeledJsonlPaths.getOrElseUpdate(dir, {
-        val p = java.nio.file.Files.createTempDirectory("graft-labeled-jsonl")
-        val lines = labeledLangRows(labeledOff(s, dir)).map {
-          case (id, text, lang, source, n) =>
-            s"""{"doc_id":$id,"text":"${jsonStr(text)}","lang":"${jsonStr(lang)}","source":"${jsonStr(source)}","n_chars":$n}"""
-        } :+ """{"doc_id":"""  // the truncated shipment line
-        val f = p.resolve("labeled.jsonl")
-        java.nio.file.Files.write(f,
-          lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        f.toString
-      })
+    labeledJsonlPaths(dir) {
+      val p = java.nio.file.Files.createTempDirectory("graft-labeled-jsonl")
+      val lines = labeledLangRows(labeledOff(s, dir)).map {
+        case (id, text, lang, source, n) =>
+          s"""{"doc_id":$id,"text":"${jsonStr(text)}","lang":"${jsonStr(lang)}","source":"${jsonStr(source)}","n_chars":$n}"""
+      } :+ """{"doc_id":"""  // the truncated shipment line
+      val f = p.resolve("labeled.jsonl")
+      java.nio.file.Files.write(f,
+        lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f.toString
     }
 
   /** The labeled set as the trainer sees it: JSONL → production reader
@@ -964,16 +928,13 @@ object CorpusQueries {
   private[graft] def labeledTrainFilter(off: Long) =
     ((col("doc_id") - lit(off)) / lit(5)).cast("long") % 5 < 4
 
-  /** One labeled-set-trained model per corpus per JVM (the langModel
-    * memo convention) — trained ONLY on the 80% train split; m146
+  /** One labeled-set-trained model per corpus per JVM ([[graft.Memo]])
+    * — trained ONLY on the 80% train split; m146
     * scores the held-out 20%, m147 calibrates over the full set. */
-  private val labeledModels = scala.collection.mutable.Map.empty[String, graft.text.LangId.Model]
+  private val labeledModels = new graft.Memo[graft.text.LangId.Model]
   private[graft] def labeledModel(s: SparkSession, dir: String): graft.text.LangId.Model =
-    labeledModels.synchronized {
-      labeledModels.getOrElseUpdate(dir,
-        graft.text.LangId.train(
-          labeledSet(s, dir).filter(labeledTrainFilter(labeledOff(s, dir)))))
-    }
+    labeledModels(dir)(graft.text.LangId.train(
+      labeledSet(s, dir).filter(labeledTrainFilter(labeledOff(s, dir)))))
 
   /** Held-out labeled-set scoring (m146): the m137 scorer under a REAL
     * labeled-data contract — the model trains on the external set's
@@ -2048,7 +2009,7 @@ object CorpusQueries {
 
   def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame =
     NgramJaccard.scorePairs(augmentedDocs(s, dir),
-        graft.pipeline.DedupAssets.minhashCandidates(s, dir).select("doc_a", "doc_b"))
+        graft.pipeline.DedupAssets.minhashCandidates(s, dir))
       .filter(col("jaccard") >= 0.6)
 
   /** Inverted-index word-shingle Jaccard — the SQL-exact near-dup path

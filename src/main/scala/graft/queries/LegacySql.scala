@@ -33,7 +33,7 @@ object LegacySql {
       System.getProperty("java.io.tmpdir"),
       s"graft-legacy-users-${ProcessHandle.current().pid()}")
     s.sql("DROP TABLE IF EXISTS graft_users")
-    deleteRecursively(loc)
+    graft.pipeline.DedupAssets.deleteRecursively(loc)
     // Pre-create the LOCATION directory: CREATE TABLE ... LOCATION on a
     // missing path self-heals but logs a FileNotFoundException stack
     // trace first — and a clean gate log is a correctness tool (a real
@@ -49,10 +49,6 @@ object LegacySql {
             |  (2, 'Jane', 'Roe', 'jr@example.com', TIMESTAMP '2025-07-24 10:01:00')""".stripMargin)
     s.sql("SELECT id, firstname, lastname, email, created_at FROM graft_users")
   }
-
-  // the shared leak-free recursive delete (closes its walk stream)
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.pipeline.DedupAssets.deleteRecursively(p)
 
   // -------------------------------------------------------------- A7
   /** The legacy 7-key wide fact rollup (pyc .281472805440288: GROUP BY
@@ -134,10 +130,8 @@ object LegacySql {
     * partition-pruned slice; the write is `dt=` partitioned so the
     * crawler table prunes on read. */
   def martRoundTrip(s: SparkSession, dir: String): DataFrame = {
-    val root = martRoots.synchronized {
-      martRoots.getOrElseUpdate(dir,
-        java.nio.file.Files.createTempDirectory("graft-mart-rt").toString)
-    }
+    val root = martRoots(dir)(
+      java.nio.file.Files.createTempDirectory("graft-mart-rt").toString)
     val day = "2024-01-15"
     val daily = Tables.events(s, dir)
       .filter(to_date(col("ts")) === lit(day))
@@ -158,5 +152,5 @@ object LegacySql {
       .select(col("event_type"), col("n"), col("value_sum"), col("dt"))
   }
 
-  private val martRoots = scala.collection.mutable.Map.empty[String, String]
+  private val martRoots = new graft.Memo[String]
 }

@@ -141,8 +141,7 @@ object IvfPq {
     import spark.implicits._
     val (cents, cdim) = model.coarseFlat
     val nlist = model.coarse.nlist
-    val (flat, m, ksub, dsub) =
-      (model.pq.flat, model.pq.m, model.pq.ksub, model.pq.dsub)
+    val (m, ksub) = (model.pq.m, model.pq.ksub)
     val probes = queries.select(col("id"), col("vec")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     require(probes.length <= MaxServingProbes,
@@ -154,25 +153,7 @@ object IvfPq {
     val np = math.min(nprobe, nlist)
     val probeCells = probes.map { case (_, q) => nearestCells(q, cents, cdim, nlist, np) }
     val tables = probes.zipWithIndex.map { case ((_, q), pi) =>
-      probeCells(pi).map { cell =>
-        val t = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var c = 0
-          while (c < ksub) {
-            var d = 0.0; var j = 0
-            val voff = s * dsub; val coff = (s * ksub + c) * dsub
-            while (j < dsub) {
-              val x = q(voff + j) - cents(cell * cdim + voff + j) - flat(coff + j)
-              d += x * x; j += 1
-            }
-            t(s * ksub + c) = d
-            c += 1
-          }
-          s += 1
-        }
-        cell -> t
-      }.toMap
+      probeCells(pi).map(cell => cell -> residualLut(q, cell, cents, cdim, model.pq)).toMap
     }
     val qids = probes.map(_._1)
     val bc = spark.sparkContext.broadcast((qids, probeCells, tables))
@@ -180,21 +161,14 @@ object IvfPq {
       .as[(Long, Int, Seq[Int])]
       .mapPartitions { it =>
         val (ids, pcells, tabs) = bc.value
-        val ord = Ordering.by[(Double, Long), (Double, Long)](identity)
         val heaps = Array.fill(ids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
+          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](HeapOrd))
         it.foreach { case (vid, cell, cs) =>
           val codesArr = cs.toArray
           var q = 0
           while (q < ids.length) {
-            if (ids(q) != vid && pcells(q).contains(cell)) {
-              val t = tabs(q)(cell)
-              var d = 0.0; var s = 0
-              while (s < m) { d += t(s * ksub + codesArr(s)); s += 1 }
-              val h = heaps(q)
-              if (h.size < k) h.enqueue((d, vid))
-              else if (ord.lt((d, vid), h.head)) { h.dequeue(); h.enqueue((d, vid)) }
-            }
+            if (ids(q) != vid && pcells(q).contains(cell))
+              offer(heaps(q), k, tabs(q)(cell), codesArr, m, ksub, vid)
             q += 1
           }
         }
@@ -264,43 +238,17 @@ object IvfPq {
         else {
           val mod = bc.value
           val (cents, cdim) = mod.coarseFlat
-          val (flat, m, ksub, dsub) =
-            (mod.pq.flat, mod.pq.m, mod.pq.ksub, mod.pq.dsub)
-          // one residual LUT per probe for THIS cell — topK's exact loops
-          val tabs = ps.map { case (_, _, q) =>
-            val t = new Array[Double](m * ksub)
-            var s = 0
-            while (s < m) {
-              var c = 0
-              while (c < ksub) {
-                var d = 0.0; var j = 0
-                val voff = s * dsub; val coff = (s * ksub + c) * dsub
-                while (j < dsub) {
-                  val x = q(voff + j) - cents(cell * cdim + voff + j) - flat(coff + j)
-                  d += x * x; j += 1
-                }
-                t(s * ksub + c) = d
-                c += 1
-              }
-              s += 1
-            }
-            t
-          }
-          val ord = Ordering.by[(Double, Long), (Double, Long)](identity)
+          val (m, ksub) = (mod.pq.m, mod.pq.ksub)
+          // one residual LUT per probe for THIS cell (topK builds the same)
+          val tabs = ps.map { case (_, _, q) => residualLut(q, cell, cents, cdim, mod.pq) }
           val heaps = Array.fill(ps.length)(
-            scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
+            scala.collection.mutable.PriorityQueue.empty[(Double, Long)](HeapOrd))
           codeIt.foreach { case (vid, _, cs) =>
             val codesArr = cs.toArray
             var q = 0
             while (q < ps.length) {
-              if (ps(q)._2 != vid) {
-                val t = tabs(q)
-                var d = 0.0; var s = 0
-                while (s < m) { d += t(s * ksub + codesArr(s)); s += 1 }
-                val h = heaps(q)
-                if (h.size < k) h.enqueue((d, vid))
-                else if (ord.lt((d, vid), h.head)) { h.dequeue(); h.enqueue((d, vid)) }
-              }
+              if (ps(q)._2 != vid)
+                offer(heaps(q), k, tabs(q), codesArr, m, ksub, vid)
               q += 1
             }
           }
@@ -314,5 +262,46 @@ object IvfPq {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "adist")
+  }
+
+  /** Residual ADC table of query `q` in coarse `cell`, shared by [[topK]]
+    * and [[topKBatch]]: t(s·ksub + c) = ‖(q − centroid(cell))_s −
+    * codeword(s, c)‖² over sub-space s's `dsub` coordinates, summed in
+    * coordinate order — one loop, so both paths' distances are
+    * bit-identical. */
+  private def residualLut(q: Array[Double], cell: Int, cents: Array[Double],
+                          cdim: Int, pq: Pq.Model): Array[Double] = {
+    val (flat, m, ksub, dsub) = (pq.flat, pq.m, pq.ksub, pq.dsub)
+    val t = new Array[Double](m * ksub)
+    var s = 0
+    while (s < m) {
+      var c = 0
+      while (c < ksub) {
+        var d = 0.0; var j = 0
+        val voff = s * dsub; val coff = (s * ksub + c) * dsub
+        while (j < dsub) {
+          val x = q(voff + j) - cents(cell * cdim + voff + j) - flat(coff + j)
+          d += x * x; j += 1
+        }
+        t(s * ksub + c) = d
+        c += 1
+      }
+      s += 1
+    }
+    t
+  }
+
+  /** The candidate heaps' order: (adist, neighbor_id) ascending. */
+  private val HeapOrd = Ordering.by[(Double, Long), (Double, Long)](identity)
+
+  /** Offer code vector `codes` (ADC distance summed over LUT `t` in
+    * sub-space order) to the bounded max-heap `h` of the `k` nearest. */
+  private def offer(h: scala.collection.mutable.PriorityQueue[(Double, Long)],
+                    k: Int, t: Array[Double], codes: Array[Int], m: Int,
+                    ksub: Int, vid: Long): Unit = {
+    var d = 0.0; var s = 0
+    while (s < m) { d += t(s * ksub + codes(s)); s += 1 }
+    if (h.size < k) h.enqueue((d, vid))
+    else if (HeapOrd.lt((d, vid), h.head)) { h.dequeue(); h.enqueue((d, vid)) }
   }
 }

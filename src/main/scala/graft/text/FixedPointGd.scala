@@ -1,5 +1,8 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
+
 /** Shared machinery for exact fixed-point full-batch gradient descent —
   * the determinism discipline behind the learned gates
   * ([[QualityClassifier]] m83, [[LangId]] m137): every per-row
@@ -47,20 +50,6 @@ private[text] object FixedPointGd {
 
   /** Consecutive calm iterations required before stopping. */
   val StopPatience = 3
-
-  /** Driver-local training gate (round-20 optimization): when the
-    * feature set is at most this many rows, the trainers collect it
-    * ONCE and run every GD iteration as a driver fold instead of a
-    * Spark job — the quantized integer accumulation is order-
-    * independent by construction (object doc), so the driver fold is
-    * BIT-IDENTICAL to the per-partition fold; only the scheduling
-    * changes. Measured at sf0.1/local[32]: the 500-iteration loops were
-    * one ~10–15 ms single-partition job per iteration — pure barrier
-    * cost, 5–6 s per train — while the features were a few thousand
-    * rows. 2^17 rows caps the collected footprint at ~100 MB worst
-    * case (well inside the bench driver's 8 GB); a corpus above the
-    * gate keeps the distributed loop unchanged. */
-  val LocalTrainMaxRows = 1L << 17
 
   /** Default progress divisor: stop once an iteration recovers ≤ 1/4000
     * of the total loss drop so far (for [[StopPatience]] consecutive
@@ -126,5 +115,84 @@ private[text] object FixedPointGd {
       it += 1
     }
     (w, losses.toArray)
+  }
+
+  /** A trained weight vector: `n` rows folded, the per-iteration mean
+    * losses (the convergence certificate). */
+  final case class Fit(n: Long, w: Array[Double], losses: Array[Double])
+
+  /** The one training fold behind both learned gates ([[QualityClassifier]]
+    * m83, [[LangId]] m137/m146): full-batch exact GD ([[loop]]) over
+    * `rows`, with `accumulate(acc, w, row)` folding one row's quantized
+    * (loss, gradient) into a `dim + 1`-slot [[ExactAcc]] (slot 0 the
+    * loss). `rows` is persisted here and released before returning.
+    *
+    *  - 0 rows → None (the trainer's empty model — the degrade-to-empty
+    *    contract, not an error).
+    *  - At most `localMaxRows` rows → collect them ONCE and fold every
+    *    iteration on the driver (round-20 optimization: the 500-iteration
+    *    loops were one ~10–15 ms single-partition job per iteration —
+    *    pure barrier cost, 5–6 s per train at sf0.1 — over a few thousand
+    *    rows). Each trainer sizes its gate from its row width so the
+    *    collected set stays ~100 MB worst case.
+    *  - Otherwise → re-cache at `rowsPerPartition`-sized partitions (the
+    *    frame's OWN size, never the corpus layout — inheriting the
+    *    corpus's partition count paid iters × that many near-empty tasks:
+    *    measured 39 s → ~4 s at fixture scale), release the input cache
+    *    once the re-cache materializes (holding both through the loop
+    *    doubled the cached footprint for no reader, review r15), and sum
+    *    each iteration's per-partition partials — #partitions × (dim + 1)
+    *    integers on the wire.
+    *
+    * The quantized integer sums are order-independent (object doc), so
+    * both branches and every partitioning give BIT-IDENTICAL weights and
+    * losses — FixedPointGdFitSpec runs both on each trainer's rows. */
+  def fit[R](rows: RDD[R], dim: Int, localMaxRows: Long,
+             rowsPerPartition: Long, iters: Int, lr: Double, stopInv: Long)
+            (accumulate: (ExactAcc, Array[Double], R) => Unit): Option[Fit] = {
+    val cached = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = cached.count()
+      if (n == 0L) None
+      else if (n <= localMaxRows) {
+        val local = cached.collect()
+        Some(fitted(n, dim, iters, lr, stopInv) { w =>
+          val acc = new ExactAcc(dim + 1)
+          local.foreach(accumulate(acc, w, _))
+          acc.sums
+        })
+      } else {
+        val parts = math.min(cached.getNumPartitions.toLong,
+          (n - 1) / rowsPerPartition + 1).toInt
+        val rdd =
+          if (parts < cached.getNumPartitions) {
+            val r = cached.coalesce(parts).persist(StorageLevel.MEMORY_AND_DISK)
+            r.count() // materialize from the input's cache, then drop it
+            cached.unpersist(blocking = false)
+            r
+          } else cached
+        try Some(fitted(n, dim, iters, lr, stopInv) { w =>
+          val wSnap = w.clone() // the closure must ship THIS iteration's w
+          val partials = rdd.mapPartitions { it =>
+            val acc = new ExactAcc(dim + 1)
+            it.foreach(accumulate(acc, wSnap, _))
+            Iterator.single(acc.sums)
+          }.collect() // ≤ #partitions rows × (dim + 1) BigInts
+          val tot = Array.fill(dim + 1)(BigInt(0))
+          partials.foreach { p =>
+            var j = 0
+            while (j < tot.length) { tot(j) += p(j); j += 1 }
+          }
+          tot
+        })
+        finally if (!(rdd eq cached)) rdd.unpersist(blocking = false)
+      }
+    } finally cached.unpersist(blocking = false)
+  }
+
+  private def fitted(n: Long, dim: Int, iters: Int, lr: Double, stopInv: Long)
+                    (step: Array[Double] => Array[BigInt]): Fit = {
+    val (w, losses) = loop(n, dim, iters, lr, stopInv, step)
+    Fit(n, w, losses)
   }
 }

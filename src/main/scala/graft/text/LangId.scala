@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,8 +21,9 @@ import org.apache.spark.sql.functions._
   * engine-portability contract every operator here follows. A doc's
   * feature vector is its normalized bucket counts (x_i = cnt_i / n).
   *
-  * Training — the [[QualityClassifier.trainDistributed]] recipe, shared
-  * loop ([[FixedPointGd]]): full-batch softmax-cross-entropy GD where
+  * Training — the [[QualityClassifier.trainDistributed]] recipe through
+  * the one shared fold ([[FixedPointGd.fit]]): full-batch
+  * softmax-cross-entropy GD where
   * each iteration's (loss, gradient) is ONE distributed aggregate of
   * exact fixed-point integers (#partitions × (1 + K·D) integers on
   * the wire), so the trained weights are bit-identical under any input
@@ -186,53 +188,31 @@ object LangId {
     n
   }
 
-  /** Feature rows per cached training partition (fat rows: a sparse
-    * vector up to D entries ≈ 12 KB/doc → ~200 MB per partition). */
-  private val TrainRowsPerPartition = 1L << 14
+  /** Feature rows per cached training partition above the driver-local
+    * gate (fat rows: a sparse vector up to D entries ≈ 12 KB/doc →
+    * ~200 MB per partition). */
+  private[text] val TrainRowsPerPartition = 1L << 14
 
-  /** Driver-local train gate for THIS trainer (ADVICE r20): the shared
-    * [[FixedPointGd.LocalTrainMaxRows]] (2^17) budgets ~100 MB from the
-    * quality classifier's slim rows, but LangId rows are sparse vectors
-    * up to D=1024 idx/value entries (~12 KB/row worst case — the same
-    * sizing as [[TrainRowsPerPartition]]), so 2^17 of them could
-    * collect ~1.6 GB onto the driver. 2^13 rows × 12 KB ≈ 96 MB keeps
-    * the same worst-case budget; corpora above it take the distributed
-    * loop (bit-identical weights either way). */
-  private val LocalTrainMaxRows = 1L << 13
+  /** Driver-local train gate ([[FixedPointGd.fit]]) for THIS trainer's
+    * row size: LangId rows are sparse vectors up to D=1024 idx/value
+    * entries (~12 KB/row worst case), so the quality classifier's 2^17
+    * slim rows would collect ~1.6 GB here; 2^13 rows × 12 KB ≈ 96 MB
+    * keeps the same worst-case budget. */
+  private[text] val LocalTrainMaxRows = 1L << 13
 
   /** PRODUCTION trainer over the labeled set: multinomial LR by exact
-    * fixed-point full-batch GD ([[FixedPointGd.loop]] — one distributed
-    * aggregate per iteration, deterministic early stop, bit-identical
-    * under any partitioning). `docs` needs (`langCol`, `textCol`); rows
-    * with null label/text or no grams are excluded. */
+    * fixed-point full-batch GD through the shared fold
+    * ([[FixedPointGd.fit]] — driver fold below its gate, one distributed
+    * aggregate per iteration above it, deterministic early stop,
+    * bit-identical either way and under any partitioning). `docs` needs
+    * (`langCol`, `textCol`); rows with null label/text or no grams are
+    * excluded. */
   def train(docs: DataFrame, textCol: String = "text",
             langCol: String = "lang", iters: Int = 500, lr: Double = 300.0,
             stopInv: Long = FixedPointGd.DefaultStopInv): Model = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val narrowed = docs
-      .filter(col(langCol).isNotNull && col(textCol).isNotNull)
-      .select(col(langCol).cast("string"), col(textCol))
-      .as[(String, String)]
-    // (label, sorted bucket ids, normalized counts): the sufficient rows
-    val feats = narrowed.rdd.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { case (lang, text) =>
-        val t = normalize(text)
-        val counts = new Array[Int](D)
-        val n = eachGram(md, t)(i => counts(i) += 1)
-        if (n == 0L) None
-        else {
-          val idxs = (0 until D).filter(counts(_) > 0).toArray
-          val xs = idxs.map(i => counts(i).toDouble / n)
-          Some((lang, idxs, xs))
-        }
-      }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = trainRows(docs, textCol, langCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = feats.count()
-      if (n == 0L)
-        return Model(Array.empty, Array.empty, 0L, Array.empty, Array.empty)
       // class list: bounded by the number of languages, sorted; the
       // per-class support rides the same bounded reduction
       val byClass = feats.map(l => (l._1, 1L)).reduceByKey(_ + _)
@@ -240,72 +220,50 @@ object LangId {
       val classes = byClass.keys.toArray.sorted
       val clsIdx = classes.zipWithIndex.toMap
       val k = classes.length
-      val dim = k * D
-      val rdd0 = feats.map { case (lang, idxs, xs) => (clsIdx(lang), idxs, xs) }
-      // Driver-local fast path (LangId's own byte-aware gate above): the
-      // quantized accumulation is order-independent, so the driver fold
-      // is bit-identical to the per-partition fold — it just skips one
-      // scheduling barrier per iteration (asset:langmodel/labeledlang
-      // were ~3 s each, mostly the 500 per-iteration job barriers).
-      if (n <= LocalTrainMaxRows) {
-        val local = rdd0.collect()
-        val (wFlat, losses) = FixedPointGd.loop(n, dim, iters, lr, stopInv, { w =>
-          val acc = new FixedPointGd.ExactAcc(dim + 1)
-          local.foreach { case (y, idxs, xs) => accumulate(acc, w, k, y, idxs, xs) }
-          acc.sums
-        })
-        val wL = Array.tabulate(k)(c => Array.tabulate(D)(j => wFlat(c * D + j)))
-        return Model(classes, wL, n, losses, classes.map(byClass))
+      val fit = FixedPointGd.fit(feats, k * D, LocalTrainMaxRows,
+        TrainRowsPerPartition, iters, lr, stopInv) {
+        case (acc, w, (lang, idxs, xs)) => accumulate(acc, w, k, clsIdx(lang), idxs, xs)
       }
-      val parts = math.min(feats.getNumPartitions.toLong,
-        (n - 1) / TrainRowsPerPartition + 1).toInt
-      // re-cache frame-sized (the QualityClassifier.trainDistributed
-      // partitioning rule: iterate over partitions sized by THIS frame,
-      // not the corpus layout), releasing the scan-shaped cache once
-      val rdd =
-        if (parts < feats.getNumPartitions) {
-          val r = rdd0.coalesce(parts)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          r.count()
-          feats.unpersist(blocking = false)
-          r
-        } else {
-          val r = rdd0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          r.count()
-          feats.unpersist(blocking = false)
-          r
-        }
-      try {
-        val (wFlat, losses) = FixedPointGd.loop(n, dim, iters, lr, stopInv, { w =>
-          val wSnap = w.clone()
-          val partials = rdd.mapPartitions { it =>
-            val acc = new FixedPointGd.ExactAcc(dim + 1)
-            it.foreach { case (y, idxs, xs) =>
-              accumulate(acc, wSnap, k, y, idxs, xs)
-            }
-            Iterator.single(acc.sums)
-          }.collect() // ≤ #partitions rows × (dim+1) BigInts
-          val tot = Array.fill(dim + 1)(BigInt(0))
-          partials.foreach { p =>
-            var j = 0
-            while (j < tot.length) { tot(j) += p(j); j += 1 }
-          }
-          tot
-        })
-        val w = Array.tabulate(k)(c =>
-          Array.tabulate(D)(j => wFlat(c * D + j)))
-        Model(classes, w, n, losses, classes.map(byClass))
-      } finally rdd.unpersist(blocking = false)
+      fit.fold(Model(Array.empty, Array.empty, 0L, Array.empty, Array.empty)) { f =>
+        Model(classes, Array.tabulate(k)(c => f.w.slice(c * D, (c + 1) * D)),
+          f.n, f.losses, classes.map(byClass))
+      }
     } finally feats.unpersist(blocking = false)
+  }
+
+  /** The training rows (label, sorted bucket ids, normalized counts) —
+    * the sufficient statistic of every labeled doc with grams. */
+  private[text] def trainRows(docs: DataFrame, textCol: String,
+                              langCol: String): RDD[(String, Array[Int], Array[Double])] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .filter(col(langCol).isNotNull && col(textCol).isNotNull)
+      .select(col(langCol).cast("string"), col(textCol))
+      .as[(String, String)]
+      .rdd.mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.flatMap { case (lang, text) =>
+          val t = normalize(text)
+          val counts = new Array[Int](D)
+          val n = eachGram(md, t)(i => counts(i) += 1)
+          if (n == 0L) None
+          else {
+            val idxs = (0 until D).filter(counts(_) > 0).toArray
+            val xs = idxs.map(i => counts(i).toDouble / n)
+            Some((lang, idxs, xs))
+          }
+        }
+      }
   }
 
   /** One row's quantized (loss, gradient) contribution — softmax
     * cross-entropy, z folded in fixed (class, ascending-bucket) order,
     * every contribution rint(·2^53)-quantized before the integer sum
     * (the [[QualityClassifier]] accumulate contract, K classes wide). */
-  private def accumulate(acc: FixedPointGd.ExactAcc, w: Array[Double],
-                         k: Int, y: Int, idxs: Array[Int],
-                         xs: Array[Double]): Unit = {
+  private[text] def accumulate(acc: FixedPointGd.ExactAcc, w: Array[Double],
+                               k: Int, y: Int, idxs: Array[Int],
+                               xs: Array[Double]): Unit = {
     val z = new Array[Double](k)
     var c = 0
     while (c < k) {

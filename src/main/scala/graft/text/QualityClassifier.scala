@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -98,9 +99,10 @@ object QualityClassifier {
     * folded into `acc` — slot 0 is the clamped log-loss, slots 1..6 the
     * gradient (bias first). The SINGLE arithmetic path both trainers
     * share: z left-associated exactly as [[score]]'s literal plan and
-    * the oracle SQL write it. */
-  private def accumulate(acc: ExactAcc, w: Array[Double],
-                         y: Double, f: Array[Double]): Unit = {
+    * the oracle SQL write it. A row is (label y, features f1..f5). */
+  private[text] def accumulate(acc: ExactAcc, w: Array[Double],
+                               row: (Double, Array[Double])): Unit = {
+    val (y, f) = row
     var z = w(0)
     var j = 0
     while (j < NumFeatures) { z += w(j + 1) * f(j); j += 1 }
@@ -117,22 +119,11 @@ object QualityClassifier {
     }
   }
 
-  /** The shared full-batch GD loop ([[FixedPointGd.loop]]) over an exact
-    * per-iteration (loss, gradient) aggregate — `step` returns the 7
-    * exact integer sums under the current weights; where it folds them
-    * (driver sample or distributed partitions) is the only difference
-    * between the two trainers. Early stop (round-15 verdict ask #3):
-    * the loop exits once an iteration's exact loss drop × stopInv ≤
-    * the total drop so far, [[FixedPointGd.StopPatience]] consecutive
-    * times — a pure BigInt rule over integers BOTH trainers compute
-    * identically, so the bit-identity contract survives the stop.
-    * stopInv = 0 runs the full budget (the spec's reference). */
-  private def gdLoop(n: Long, iters: Int, lr: Double, stopInv: Long,
-                     step: Array[Double] => Array[BigInt]): Model = {
-    val (w, losses) =
-      FixedPointGd.loop(n, NumFeatures + 1, iters, lr, stopInv, step)
-    Model(w, n, losses)
-  }
+  /** The zero model an empty corpus trains to (it scores nothing
+    * anyway): the operator tier's degrade-to-empty contract
+    * (EmptyCorpusSpec), not an error. */
+  private def emptyModel: Model =
+    Model(Array.fill(NumFeatures + 1)(0.0), 0L, Array.empty)
 
   /** Feature + label projection: (doc_id[, keep…], y, f1..f5), one
     * compiled profile pass, null text excluded (no features to score).
@@ -175,99 +166,53 @@ object QualityClassifier {
       .map(r => (r.getDouble(1),
         Array(r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
           r.getDouble(6))))
-    // Empty corpus → zero model (scores nothing anyway): the operator
-    // tier's degrade-to-empty contract (EmptyCorpusSpec), not an error.
-    if (sample.isEmpty)
-      return Model(Array.fill(NumFeatures + 1)(0.0), 0L, Array.empty)
-    gdLoop(sample.length.toLong, iters, lr, stopInv, { w =>
-      val acc = new ExactAcc(NumFeatures + 2)
-      sample.foreach { case (y, f) => accumulate(acc, w, y, f) }
-      acc.sums
-    })
+    if (sample.isEmpty) return emptyModel
+    val (w, losses) = FixedPointGd.loop(sample.length.toLong, NumFeatures + 1,
+      iters, lr, stopInv, { w =>
+        val acc = new ExactAcc(NumFeatures + 2)
+        sample.foreach(accumulate(acc, w, _))
+        acc.sums
+      })
+    Model(w, sample.length.toLong, losses)
   }
 
-  /** PRODUCTION trainer: the same GD loop with each iteration's
-    * (loss, gradient) computed as one distributed aggregate over the
-    * FULL feature frame. The frame (6 doubles + label per doc) is
-    * projected once and cached; per iteration each partition folds its
-    * rows into the 7-slot exact accumulator and ships the integer sums —
-    * #partitions × 7 numbers cross the wire, nothing corpus-sized moves,
-    * and the total is bit-identical under any partitioning. At 100 TB
-    * this is the trainer that sees every document instead of a 4096-doc
-    * sample; on a 5k-doc fixture it is spec-pinned bit-identical to
-    * [[train]] with `trainCap` ≥ corpus. The driver-side collect is
-    * partition-count-bounded (the [[graft.operators.PrefixSum]] rule). */
-  /** Feature rows per cached partition (2M rows ≈ 100 MB at ~48 B/row):
-    * the cached frame is partitioned by ITS OWN size, never the corpus
-    * layout — the projection collapses each document to 6 doubles, so
-    * inheriting the corpus's partition count would pay 2000 × that many
-    * task schedulings to iterate over near-empty partitions (measured
-    * 39 s → ~4 s at fixture scale). A 10^10-doc corpus still gets
-    * ~5,000 partitions; a 5k-doc fixture gets 1. */
-  private val TrainRowsPerPartition = 1L << 21
-
+  /** PRODUCTION trainer: the same GD loop over the FULL feature frame,
+    * through the shared fold ([[FixedPointGd.fit]]). The frame (5
+    * doubles + label per doc) is projected once and cached; above the
+    * driver-local gate each iteration is one distributed aggregate in
+    * which each partition folds its rows into the 7-slot exact
+    * accumulator and ships the integer sums — #partitions × 7 numbers
+    * cross the wire, nothing corpus-sized moves, and the total is
+    * bit-identical under any partitioning. At 100 TB this is the
+    * trainer that sees every document instead of a 4096-doc sample; on
+    * a 5k-doc fixture it is spec-pinned bit-identical to [[train]] with
+    * `trainCap` ≥ corpus. */
   def trainDistributed(docs: DataFrame, textCol: String = "text",
                        iters: Int = 500, lr: Double = 8.0,
-                       stopInv: Long = FixedPointGd.DefaultStopInv): Model = {
-    val raw = featuresOf(docs, textCol)
+                       stopInv: Long = FixedPointGd.DefaultStopInv): Model =
+    FixedPointGd.fit(trainRows(docs, textCol), NumFeatures + 1,
+        LocalTrainMaxRows, TrainRowsPerPartition, iters, lr, stopInv)(accumulate)
+      .fold(emptyModel)(f => Model(f.w, f.n, f.losses))
+
+  /** The training rows (y, f1..f5) of every doc with text. */
+  private[text] def trainRows(docs: DataFrame,
+                              textCol: String): RDD[(Double, Array[Double])] =
+    featuresOf(docs, textCol)
       .select("y", "f1", "f2", "f3", "f4", "f5")
       .rdd
       .map(r => (r.getDouble(0),
         Array(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
           r.getDouble(5))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = raw.count()
-      if (n == 0L)
-        return Model(Array.fill(NumFeatures + 1)(0.0), 0L, Array.empty)
-      // Driver-local fast path (FixedPointGd.LocalTrainMaxRows): the
-      // quantized accumulation is order-independent, so folding the
-      // collected rows on the driver is bit-identical to the
-      // distributed per-partition fold — it just skips one scheduling
-      // barrier per iteration (asset:qcmodel measured 6.0 s of which
-      // ~5 s was the 500 single-partition job barriers).
-      if (n <= FixedPointGd.LocalTrainMaxRows) {
-        val local = raw.collect()
-        return gdLoop(n, iters, lr, stopInv, { w =>
-          val acc = new ExactAcc(NumFeatures + 2)
-          local.foreach { case (y, f) => accumulate(acc, w, y, f) }
-          acc.sums
-        })
-      }
-      val parts = math.min(raw.getNumPartitions.toLong,
-        (n - 1) / TrainRowsPerPartition + 1).toInt
-      // Re-cache at the frame-sized partitioning (one pass over raw's
-      // cached blocks), so every GD iteration schedules `parts` tasks
-      // against locally-cached partitions — not the corpus's layout.
-      // raw's cache is released as soon as the re-cache materializes:
-      // holding BOTH copies through 500 iterations would double the
-      // cached feature-frame footprint for no reader (review r15).
-      val rdd =
-        if (parts < raw.getNumPartitions) {
-          val r = raw.coalesce(parts)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          r.count() // materialize from raw's cache, then drop raw
-          raw.unpersist(blocking = false)
-          r
-        } else raw
-      try {
-        gdLoop(n, iters, lr, stopInv, { w =>
-          val wSnap = w.clone() // the closure must ship THIS iteration's w
-          val partials = rdd.mapPartitions { it =>
-            val acc = new ExactAcc(NumFeatures + 2)
-            it.foreach { case (y, f) => accumulate(acc, wSnap, y, f) }
-            Iterator.single(acc.sums)
-          }.collect() // ≤ #partitions rows × 7 BigInts
-          val tot = Array.fill(NumFeatures + 2)(BigInt(0))
-          partials.foreach { p =>
-            var j = 0
-            while (j < tot.length) { tot(j) += p(j); j += 1 }
-          }
-          tot
-        })
-      } finally if (!(rdd eq raw)) rdd.unpersist(blocking = false)
-    } finally raw.unpersist(blocking = false)
-  }
+
+  /** Driver-local train gate ([[FixedPointGd.fit]]): 2^17 rows of ~48 B
+    * cap the collected set at ~100 MB worst case (well inside the bench
+    * driver's 8 GB). Measured: asset:qcmodel took 6.0 s, ~5 s of it the
+    * 500 single-partition job barriers, before the gate. */
+  private[text] val LocalTrainMaxRows = 1L << 17
+
+  /** Feature rows per cached partition above the gate (2M rows ≈ 100 MB
+    * at ~48 B/row): a 10^10-doc corpus still gets ~5,000 partitions. */
+  private[text] val TrainRowsPerPartition = 1L << 21
 
   /** Score every doc with the trained weights as plan literals: one
     * codegen'd pass, (doc_id, label, logit, pred). `label` is the gate's

@@ -279,7 +279,7 @@ class DedupAssetsSpec extends SparkSpec {
 
   test("asset:qcmodel memo — concurrent consumers train exactly once; a failed train never poisons") {
     CorpusQueries.resetModelMemos()
-    val before = CorpusQueries.qcTrainCount.get()
+    val before = CorpusQueries.qcModels.builds
     // a consumer pointed at a corpus that does not exist fails its train
     // — and must leave the memo empty, not cache the failure or a junk model
     an[Exception] should be thrownBy
@@ -289,53 +289,53 @@ class DedupAssetsSpec extends SparkSpec {
     }))
     threads.foreach(_.start()); threads.foreach(_.join(300000))
     // exactly ONE successful train across the three concurrent consumers
-    CorpusQueries.qcTrainCount.get() - before shouldBe 1
+    CorpusQueries.qcModels.builds - before shouldBe 1
     // fresh "JVM" (reset) → the staleness contract: retrain, don't reuse
     CorpusQueries.resetModelMemos()
     CorpusQueries.qualityClassifier(spark, dir).count()
-    CorpusQueries.qcTrainCount.get() - before shouldBe 2
+    CorpusQueries.qcModels.builds - before shouldBe 2
   }
 
   test("asset:bpemodel memo — concurrent consumers train exactly once; reset retrains") {
     CorpusQueries.resetModelMemos()
-    val before = CorpusQueries.bpeTrainCount.get()
+    val before = CorpusQueries.bpeModels.builds
     val threads = (1 to 3).map(_ => new Thread(() => {
       CorpusQueries.tokenizerFertility(spark, dir).count(); ()
     }))
     threads.foreach(_.start()); threads.foreach(_.join(300000))
-    CorpusQueries.bpeTrainCount.get() - before shouldBe 1
+    CorpusQueries.bpeModels.builds - before shouldBe 1
     CorpusQueries.resetModelMemos()
     CorpusQueries.tokenizerFertility(spark, dir).count()
-    CorpusQueries.bpeTrainCount.get() - before shouldBe 2
+    CorpusQueries.bpeModels.builds - before shouldBe 2
   }
 
   test("asset:unimodel memo — concurrent consumers train exactly once; reset retrains") {
     CorpusQueries.resetModelMemos()
-    val before = CorpusQueries.uniTrainCount.get()
+    val before = CorpusQueries.uniModels.builds
     val threads = (1 to 3).map(_ => new Thread(() => {
       CorpusQueries.unigramTokens(spark, dir).count(); ()
     }))
     threads.foreach(_.start()); threads.foreach(_.join(300000))
-    CorpusQueries.uniTrainCount.get() - before shouldBe 1
+    CorpusQueries.uniModels.builds - before shouldBe 1
     CorpusQueries.resetModelMemos()
     CorpusQueries.unigramTokens(spark, dir).count()
-    CorpusQueries.uniTrainCount.get() - before shouldBe 2
+    CorpusQueries.uniModels.builds - before shouldBe 2
   }
 
   test("WordPiece model memo — concurrent consumers train exactly once; reset retrains") {
     CorpusQueries.resetModelMemos()
-    val before = CorpusQueries.wpTrainCount.get()
+    val before = CorpusQueries.wpModels.builds
     val threads = (1 to 3).map(_ => new Thread(() => {
       CorpusQueries.wordPieceTokenStats(spark, dir).count(); ()
     }))
     threads.foreach(_.start()); threads.foreach(_.join(300000))
-    CorpusQueries.wpTrainCount.get() - before shouldBe 1
+    CorpusQueries.wpModels.builds - before shouldBe 1
     // the fertility card shares the memoized model — no second train
     CorpusQueries.wordPieceFertility(spark, dir).count()
-    CorpusQueries.wpTrainCount.get() - before shouldBe 1
+    CorpusQueries.wpModels.builds - before shouldBe 1
     CorpusQueries.resetModelMemos()
     CorpusQueries.wordPieceTokenStats(spark, dir).count()
-    CorpusQueries.wpTrainCount.get() - before shouldBe 2
+    CorpusQueries.wpModels.builds - before shouldBe 2
   }
 
   test("stored media-feature asset round-trips the direct decode pipeline exactly") {
