@@ -56,11 +56,10 @@ object BloomDecontaminate {
     * distinct-gram hit ratio against the benchmark gram set reaches
     * `ratioThreshold` → (doc_id, n_hits, n_grams, hit_ratio). */
   def contaminated(corpus: DataFrame, benchmark: DataFrame,
-                   textCol: String = "text", w: Int = 3,
                    ratioThreshold: Double = 0.5,
                    fpp: Double = 0.03): DataFrame = {
     val spark = corpus.sparkSession
-    val shingles = NgramJaccard.wordShingleHashSet(col(textCol), lit(w))
+    val shingles = NgramJaccard.wordShingleHashSet(col("text"), lit(Decontaminate.GramWords))
     // Pinned once (round 21): the benchmark gram set has THREE consumers —
     // the sizing count, the tree-aggregate filter build, and the exact
     // verify join — and each re-ran the bench-side shingle walk plus its

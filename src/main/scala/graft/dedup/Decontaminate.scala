@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
+  /** Word-shingle width of the gram sets both sides are compared on —
+    * the contamination checks here and [[BloomDecontaminate]]'s. */
+  private[dedup] val GramWords = 3
+
   /** Span-level decontamination (m90): instead of DROPPING a
     * contaminated document ([[contaminated]]'s verdict), cut the
     * contaminated span out and keep the rest — the surgical policy a
@@ -34,17 +38,16 @@ object Decontaminate {
     * sized and BROADCAST into a semi join against the corpus windows
     * (whose text never leaves its document — only 16-byte fps move);
     * the rewrite is the m82 join + O(L) sweep. */
-  def exciseSpans(corpus: DataFrame, benchmark: DataFrame, w: Int = 8,
-                  textCol: String = "text"): DataFrame = {
+  def exciseSpans(corpus: DataFrame, benchmark: DataFrame, w: Int = 8): DataFrame = {
     val corpusWindows = graft.text.RepeatedWindows
-      .windowFingerprintsRaw(corpus, w, textCol)
+      .windowFingerprintsRaw(corpus, w)
     val benchFps = graft.text.RepeatedWindows
-      .windowFingerprintsRaw(benchmark, w, textCol)
+      .windowFingerprintsRaw(benchmark, w)
       .select("fp").distinct()
     val flagged = corpusWindows
       .join(broadcast(benchFps), Seq("fp"), "left_semi")
       .select("doc_id", "window_idx")
-    graft.text.SpanScrub.scrubWith(corpus, flagged, w, textCol)
+    graft.text.SpanScrub.scrubWith(corpus, flagged, w)
   }
 
   /** The benchmark-side leakage report (m126) — the INVERSE view of
@@ -64,10 +67,9 @@ object Decontaminate {
     * after the per-partition semi-prune); the final aggregate is
     * benchmark-doc-sized. Unleaked items are kept via the left join
     * with zero counts — absence of evidence is the report's good news. */
-  def benchmarkLeakage(corpus: DataFrame, benchmark: DataFrame,
-                       textCol: String = "text", w: Int = 3): DataFrame = {
+  def benchmarkLeakage(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
     val bg = benchmark.select(col("doc_id").as("bench_id"),
-        explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+        explode(NgramJaccard.wordShingleHashSet(col("text"), lit(GramWords))).as("gram"))
       .distinct()
     val totals = bg.groupBy("bench_id").agg(count(lit(1)).as("n_grams"))
     // No distinct on the corpus side: the broadcast join prunes to
@@ -76,7 +78,7 @@ object Decontaminate {
     // here shuffled every corpus gram hash — 118 MB at gen-30 vs the
     // pruned hits' aggregate — for nothing.
     val cg = corpus.select(col("doc_id"),
-      explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+      explode(NgramJaccard.wordShingleHashSet(col("text"), lit(GramWords))).as("gram"))
     val hits = cg.join(broadcast(bg), Seq("gram"))
       .groupBy("bench_id")
       .agg(count_distinct(col("gram")).as("n_hit_grams"),
@@ -92,15 +94,14 @@ object Decontaminate {
   /** Corpus docs whose distinct-gram hit ratio against the benchmark gram
     * set reaches `ratioThreshold`: (doc_id, n_hits, n_grams, hit_ratio). */
   def contaminated(corpus: DataFrame, benchmark: DataFrame,
-                   textCol: String = "text", w: Int = 3,
                    ratioThreshold: Double = 0.5): DataFrame = {
     val benchGrams = benchmark
-      .select(explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+      .select(explode(NgramJaccard.wordShingleHashSet(col("text"), lit(GramWords))).as("gram"))
       .distinct()
       .withColumn("hit", lit(1L))
     val corpusGrams = corpus
       .select(col("doc_id"),
-        explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+        explode(NgramJaccard.wordShingleHashSet(col("text"), lit(GramWords))).as("gram"))
     corpusGrams
       .join(broadcast(benchGrams), Seq("gram"), "left")
       .groupBy("doc_id")

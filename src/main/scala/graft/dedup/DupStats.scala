@@ -47,10 +47,9 @@ object DupStats {
   /** (family_size, n_families, n_docs, token_mass, excess_token_mass) —
     * one row per distinct family size k. excess = token mass of the
     * non-canonical members (what keep-one dedup deletes). */
-  def familyHistogram(docs: DataFrame, clusters: DataFrame,
-                      textCol: String = "text"): DataFrame = {
+  def familyHistogram(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      tokenCount(col(textCol)).as("n_tokens"))
+      tokenCount(col("text")).as("n_tokens"))
     val fs = families(docs, clusters).join(toks, Seq("doc_id"))
       .groupBy("family_id")
       .agg(count(lit(1)).as("family_size"),
@@ -72,10 +71,9 @@ object DupStats {
     * cross_source_tokens, dup_doc_share). A doc is a duplicate iff it is
     * a non-canonical family member; it is CROSS-source iff its family's
     * canonical doc carries a different source. */
-  def sourceDupMass(docs: DataFrame, clusters: DataFrame,
-                    textCol: String = "text"): DataFrame = {
+  def sourceDupMass(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val meta = docs.select(col("doc_id"), col("source"),
-      tokenCount(col(textCol)).as("n_tokens"))
+      tokenCount(col("text")).as("n_tokens"))
     val canonSrc = meta.select(col("doc_id").as("family_id"),
       col("source").as("canon_source"))
     val joined = families(docs, clusters)

@@ -38,13 +38,13 @@ object EditSimilarity {
     * pair whose normalized edit similarity over the first `prefix`
     * lowercased chars reaches `threshold`. Same eager-pin contract as
     * [[PairVerify.withFeature]]. */
-  def scorePairs(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
+  def scorePairs(docs: DataFrame, pairs: DataFrame,
                  prefix: Int = 512, threshold: Double = 0.7): DataFrame = {
     require(prefix >= 1, s"prefix must be >= 1, got $prefix")
     val sim = lit(1.0) -
       col("edit_dist").cast("double") / col("max_len").cast("double")
-    PairVerify.withFeature(docs.filter(col(textCol).isNotNull), pairs, "t",
-        substring(lower(col(textCol)), 1, prefix))
+    PairVerify.withFeature(docs.filter(col("text").isNotNull), pairs, "t",
+        substring(lower(col("text")), 1, prefix))
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("t_a"), col("t_b")).cast("long").as("edit_dist"),
         greatest(length(col("t_a")), length(col("t_b"))).cast("long").as("max_len"))

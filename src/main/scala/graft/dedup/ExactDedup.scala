@@ -17,17 +17,17 @@ import org.apache.spark.sql.functions._
 object ExactDedup {
 
   /** One row per distinct content: winner doc_id, copy count. */
-  def groups(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def groups(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), TextOps.fingerprint(col(textCol)).as("fingerprint"))
+      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fingerprint"))
       .groupBy("fingerprint")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
 
   /** The deduplicated corpus: keeps exactly the winner rows. Implemented as
     * a semi-join of the winners back onto the corpus rather than a window,
     * so the heavy side streams (no per-key sort). */
-  def dedup(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val winners = groups(docs, textCol).select(col("doc_id"))
+  def dedup(docs: DataFrame): DataFrame = {
+    val winners = groups(docs).select(col("doc_id"))
     docs.join(winners, Seq("doc_id"), "left_semi")
   }
 
@@ -43,12 +43,11 @@ object ExactDedup {
     * every collision). One md5 pass; the in-delta dedup and the index
     * anti-join share the fingerprint partitioning, so the delta bodies
     * shuffle once and the corpus bodies never move. */
-  def admitNew(delta: DataFrame, seen: DataFrame,
-               textCol: String = "text"): DataFrame = {
+  def admitNew(delta: DataFrame, seen: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("fingerprint").orderBy("doc_id")
     delta
-      .withColumn("fingerprint", TextOps.fingerprint(col(textCol)))
+      .withColumn("fingerprint", TextOps.fingerprint(col("text")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
       .join(seen.select("fingerprint"), Seq("fingerprint"), "left_anti")

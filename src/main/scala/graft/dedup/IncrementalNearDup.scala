@@ -30,17 +30,17 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalNearDup {
 
-  private def grams(df: DataFrame, idAs: String, textCol: String,
-                    w: Int): DataFrame =
+  /** Word 3-shingles of `text`, as [[NgramJaccard.invertedIndexPairs]]
+    * walks them. */
+  private def grams(df: DataFrame, idAs: String): DataFrame =
     df.select(col("doc_id").as(idAs),
-      explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+      explode(NgramJaccard.wordShingleHashSet(col("text"), lit(3))).as("gram"))
 
   /** The standing-index halves: capped (gram, ids) postings and per-doc
     * KEPT-gram sizes (index_id, n_i) — everything a future ingest needs,
     * none of the corpus text. */
-  def buildIndex(indexed: DataFrame, textCol: String = "text", w: Int = 3,
-                 dfCap: Int = 50): (DataFrame, DataFrame) = {
-    val postings = grams(indexed, "index_id", textCol, w)
+  def buildIndex(indexed: DataFrame, dfCap: Int): (DataFrame, DataFrame) = {
+    val postings = grams(indexed, "index_id")
       .groupBy("gram")
       .agg(graft.functions.CappedCollect.cappedIds(dfCap)(col("index_id")).as("ids"))
       .filter(col("ids").isNotNull)
@@ -52,9 +52,8 @@ object IncrementalNearDup {
   /** Probe prebuilt postings/sizes with a new batch — the per-ingest
     * cost: only the batch's grams exchange. */
   def probePostings(batch: DataFrame, postings: DataFrame, sizes: DataFrame,
-                    textCol: String = "text", w: Int = 3,
-                    threshold: Double = 0.6): DataFrame = {
-    val bGrams = grams(batch, "batch_id", textCol, w)
+                    threshold: Double): DataFrame = {
+    val bGrams = grams(batch, "batch_id")
     val nB = bGrams.groupBy("batch_id").agg(count(lit(1)).as("n_b"))
     val inter = bGrams.join(postings, Seq("gram"))
       .select(col("batch_id"), explode(col("ids")).as("index_id"))
@@ -73,10 +72,9 @@ object IncrementalNearDup {
     * inline (one-shot shape; recurring ingests use
     * [[probeStoredIndex]]). */
   def probeIndex(batch: DataFrame, indexed: DataFrame,
-                 textCol: String = "text", w: Int = 3,
                  threshold: Double = 0.6, dfCap: Int = 50): DataFrame = {
-    val (postings, sizes) = buildIndex(indexed, textCol, w, dfCap)
-    probePostings(batch, postings, sizes, textCol, w, threshold)
+    val (postings, sizes) = buildIndex(indexed, dfCap)
+    probePostings(batch, postings, sizes, threshold)
   }
 
   /** [[probeIndex]] with the index as a MATERIALIZED ASSET keyed by
@@ -87,18 +85,17 @@ object IncrementalNearDup {
     * `indexed` is by-name: a warm asset never evaluates it. */
   def probeStoredIndex(s: org.apache.spark.sql.SparkSession,
                        batch: DataFrame, indexed: => DataFrame,
-                       indexKey: String, textCol: String = "text",
-                       w: Int = 3, threshold: Double = 0.6,
-                       dfCap: Int = 50): DataFrame = {
+                       indexKey: String,
+                       threshold: Double = 0.6): DataFrame = {
     val postings = graft.pipeline.DedupAssets.materialized(
       s, "neardup-postings", indexKey, Seq("gram"))(
-      buildIndex(indexed, textCol, w, dfCap)._1)
+      buildIndex(indexed, 50)._1)
     // sizes derive from the STORED postings, so they can never disagree
     // with them (and a warm postings asset makes this build corpus-free)
     val sizes = graft.pipeline.DedupAssets.materialized(
       s, "neardup-index-sizes", indexKey, Seq("index_id"))(
       postings.select(explode(col("ids")).as("index_id"))
         .groupBy("index_id").agg(count(lit(1)).as("n_i")))
-    probePostings(batch, postings, sizes, textCol, w, threshold)
+    probePostings(batch, postings, sizes, threshold)
   }
 }

@@ -12,24 +12,23 @@ import org.apache.spark.sql.functions._
   * library's optimal-parameter search; the S-curve itself is the
   * classic MMDS/Broder construction) integrates the curve's
   * false-positive area below t and false-negative area above t and
-  * minimizes their weighted sum.
+  * minimizes their sum, each weighted 0.5.
   *
   * Both integrals are midpoint-rule sums over a FIXED 200-point grid —
   * a plan-literal bounded array folded in index order, so the card is
   * deterministic and the DuckDB replay agrees (pow ulp noise vanishes
   * at the 6-dp gate, the m102 convention).
   *
-  * Scale: there is no data — the card is a pure function of (H, t,
-  * weights); one codegen projection over |divisors(H)| rows, zero
+  * Scale: there is no data — the card is a pure function of (H, t);
+  * one codegen projection over |divisors(H)| rows, zero
   * exchanges beyond the trivial local window for the argmin flag. */
 object LshPlanner {
 
   /** One row per (bands, rows) factorization of `totalHashes`:
     * (bands, rows_per_band, fp_area, fn_area, cost, best). `best` marks
-    * the weighted-cost argmin (ties to fewer bands). */
+    * the cost argmin (ties to fewer bands). */
   def plan(spark: SparkSession, totalHashes: Int = 128,
-           threshold: Double = 0.8, fpWeight: Double = 0.5,
-           fnWeight: Double = 0.5): DataFrame = {
+           threshold: Double = 0.8): DataFrame = {
     require(totalHashes >= 1, "totalHashes must be >= 1")
     require(threshold > 0 && threshold < 1, "threshold must be in (0, 1)")
     import spark.implicits._
@@ -48,7 +47,7 @@ object LshPlanner {
       acc + when(s >= lit(threshold), lit(1.0) - pCand(s)).otherwise(lit(0.0))) * lit(0.005)
     val scored = df.select(col("bands"), col("rows_per_band"),
       fp.as("fp_area"), fn.as("fn_area"),
-      (lit(fpWeight) * fp + lit(fnWeight) * fn).as("cost"))
+      (lit(0.5) * fp + lit(0.5) * fn).as("cost"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cost"), col("bands"))
     scored.withColumn("best", row_number().over(w) === 1)

@@ -26,16 +26,19 @@ object MinHashLSH {
 
   private val P = 2147483647L // 2^31 - 1 (Mersenne prime)
 
+  /** Seed of the (a,b) parameter RNG: every signature path and the
+    * oracle's inlined literals must draw the same permutations. */
+  private val Seed = 42L
+
   /** The (a,b) pairs exposed for the SQL-replay oracle: SparkEntry inlines
     * them as literals so DuckDB replays the exact signature permutations
     * without replicating the seeded RNG. */
-  private[graft] def hashParams(k: Int = 64, seed: Long = 42L): Seq[(Long, Long)] =
-    params(k, seed)
+  private[graft] def hashParams(): Seq[(Long, Long)] = params(64)
 
   /** Deterministic (a,b) parameter pairs for the k hash functions,
     * a ∈ [1, p), b ∈ [0, p). */
-  private def params(k: Int, seed: Long): Seq[(Long, Long)] = {
-    val rng = new scala.util.Random(seed)
+  private def params(k: Int): Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(Seed)
     Seq.fill(k)((rng.nextInt((P - 1).toInt).toLong + 1L, rng.nextInt(P.toInt).toLong))
   }
 
@@ -44,7 +47,8 @@ object MinHashLSH {
     * form — readable and used by the property tests; the production path
     * is [[shingleHashes]], because interpreted higher-order lambdas
     * measured ~13µs per shingle.) */
-  def shingles(text: Column, w: Int = 3): Column = {
+  def shingles(text: Column): Column = {
+    val w = 3
     val toks = split(lower(trim(text)), " +")
     val n = size(toks)
     when(n < w, array(concat_ws(" ", toks)))
@@ -89,10 +93,10 @@ object MinHashLSH {
     * incompatible signatures and must never be mixed. Also O(k)
     * re-evaluations of the shingle pipeline per row (Catalyst inlines the
     * shared subtree into every coordinate). */
-  private[dedup] def signature(shingleCol: Column, k: Int = 64, seed: Long = 42L): Column = {
+  private[dedup] def signature(shingleCol: Column, k: Int = 64): Column = {
     // Shingle hashes reduced into [0, p) keep a·x + b within 62 bits.
     val hashes = transform(shingleCol, s => pmod(xxhash64(s), lit(P)))
-    val sigs: Seq[Column] = params(k, seed).map { case (a, b) =>
+    val sigs: Seq[Column] = params(k).map { case (a, b) =>
       array_min(transform(hashes, h => pmod(h * lit(a) + lit(b), lit(P))))
     }
     array(sigs: _*)
@@ -109,9 +113,8 @@ object MinHashLSH {
     * scan-bound. Values are bit-identical (same (a,b) params, same
     * shingle hashes, min is order-free); docs with no shingles are
     * dropped, as the explode formulation did implicitly. */
-  def signatures(docs: DataFrame, textCol: String = "text",
-                 numHashes: Int = 64, seed: Long = 42L): DataFrame = {
-    val ps = params(numHashes, seed)
+  def signatures(docs: DataFrame, numHashes: Int = 64): DataFrame = {
+    val ps = params(numHashes)
     val as = ps.map(_._1).toArray
     val bs = ps.map(_._2).toArray
     val sigUdf = udf { text: String =>
@@ -141,19 +144,17 @@ object MinHashLSH {
     // per document — the same double-eval trap TextOps.profile guards
     // against.
     docs.select(col("doc_id"),
-        sigUdf.asNondeterministic()(col(textCol)).as("sig"))
+        sigUdf.asNondeterministic()(col("text")).as("sig"))
       .filter(col("sig").isNotNull)
   }
 
   /** (doc_id, band, band_hash) — one row per band per doc. */
-  def bandedSignatures(docs: DataFrame, textCol: String = "text",
-                       numHashes: Int = 64, bands: Int = 16,
-                       seed: Long = 42L): DataFrame = {
+  def bandedSignatures(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) — otherwise " +
         "trailing signature coordinates are silently dropped")
     val rows = numHashes / bands
-    signatures(docs, textCol, numHashes, seed)
+    signatures(docs, numHashes)
       .select(col("doc_id"), posexplode(
         array((0 until bands).map(b =>
           xxhash64(concat_ws(",", lit(b) +: (0 until rows).map(r =>
@@ -168,10 +169,9 @@ object MinHashLSH {
     * buckets are a recall trade the caller opts into, as in production
     * dedup systems.
     */
-  def candidatePairs(docs: DataFrame, textCol: String = "text",
-                     numHashes: Int = 64, bands: Int = 16,
-                     bucketCap: Int = 1000, seed: Long = 42L): DataFrame = {
-    val banded = bandedSignatures(docs, textCol, numHashes, bands, seed)
+  def candidatePairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
+                     bucketCap: Int = 1000): DataFrame = {
+    val banded = bandedSignatures(docs, numHashes, bands)
     // cappedIds also bounds the aggregation buffer at bucketCap+1 ids, so
     // a viral bucket is dropped without ever materializing its full list.
     val capped = banded
@@ -205,12 +205,10 @@ object MinHashLSH {
     * CappedCollect buffer — then a (caps × bands)-bounded aggregate.
     * Counts are exact longs; dropped_frac is the one double, in fixed
     * operand order. */
-  def bucketDropReport(docs: DataFrame, textCol: String = "text",
-                       numHashes: Int = 64, bands: Int = 16,
-                       bucketCaps: Seq[Int] = Seq(1000),
-                       seed: Long = 42L): DataFrame = {
+  def bucketDropReport(docs: DataFrame,
+                       bucketCaps: Seq[Int] = Seq(1000)): DataFrame = {
     require(bucketCaps.nonEmpty, "bucketCaps must list at least one cap")
-    val sizes = bandedSignatures(docs, textCol, numHashes, bands, seed)
+    val sizes = bandedSignatures(docs, 64, 16)
       .groupBy("band", "band_hash").agg(count(lit(1)).as("c"))
     sizes
       .select(col("band"), col("c"),
@@ -235,13 +233,8 @@ object MinHashLSH {
     * EAGER ([[PairVerify.withFeature]]): candidate generation and the
     * shingle walk run AT CALL TIME — call when the result will be
     * consumed, and release snapshots afterwards in long-lived sessions. */
-  def verifiedPairs(docs: DataFrame, textCol: String = "text",
-                    threshold: Double = 0.7, numHashes: Int = 64,
-                    bands: Int = 16, bucketCap: Int = 1000,
-                    seed: Long = 42L): DataFrame =
-    verifiedPairsOver(docs,
-      candidatePairs(docs, textCol, numHashes, bands, bucketCap, seed),
-      textCol, threshold)
+  def verifiedPairs(docs: DataFrame, threshold: Double = 0.7): DataFrame =
+    verifiedPairsOver(docs, candidatePairs(docs), threshold)
 
   /** Verify stage over an externally supplied candidate table — the
     * production split: candidate GENERATION is the expensive banded
@@ -251,10 +244,9 @@ object MinHashLSH {
     * edit [[EditSimilarity.scorePairs]]) probes it through
     * [[PairVerify]]. Same eager contract as [[verifiedPairs]]. */
   def verifiedPairsOver(docs: DataFrame, candidates: DataFrame,
-                        textCol: String = "text",
                         threshold: Double = 0.7): DataFrame =
     PairVerify.withFeature(docs, candidates, "sh",
-        array_distinct(shingleHashes(col(textCol), lit(3))))
+        array_distinct(shingleHashes(col("text"), lit(3))))
       .withColumn("jaccard", PairVerify.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")

@@ -45,9 +45,8 @@ object NgramJaccard {
     * candidate verifier ([[PairVerify]]) joins each candidate doc's
     * n-gram set onto both sides of its pairs. Same eager contract as
     * [[PairVerify.withFeature]]. */
-  def scorePairs(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-                 n: Int = 3): DataFrame =
-    PairVerify.withFeature(docs, pairs, "g", charNgramHashes(col(textCol), lit(n)))
+  def scorePairs(docs: DataFrame, pairs: DataFrame): DataFrame =
+    PairVerify.withFeature(docs, pairs, "g", charNgramHashes(col("text"), lit(3)))
       .select(col("doc_a"), col("doc_b"),
         PairVerify.jaccard(col("g_a"), col("g_b")).as("jaccard"))
 
@@ -140,17 +139,16 @@ object NgramJaccard {
     * exchange is big enough that AQE never coalesces it anyway, so the
     * pin is purely the small-corpus idle-core fix, same story as the
     * scan spread. */
-  def invertedIndexPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
-                         threshold: Double = 0.6, dfCap: Int = 50): DataFrame =
-    jaccardPairs(docs, textCol, w, threshold, dfCap, postingPin(docs))
+  def invertedIndexPairs(docs: DataFrame, threshold: Double = 0.6,
+                         dfCap: Int = 50): DataFrame =
+    jaccardPairs(docs, threshold, dfCap, postingPin(docs))
 
   /** [[invertedIndexPairs]] with the pin already decided — for a caller
     * whose `docs` is a checkpoint (no input files) and that sized the pin
     * from the frame it started with ([[graft.pipeline.CorpusPipeline]]). */
-  private[graft] def jaccardPairs(docs: DataFrame, textCol: String, w: Int,
-                                  threshold: Double, dfCap: Int,
-                                  pin: Option[Int]): DataFrame =
-    sharedGramCounts(docs, textCol, w, dfCap, pin)
+  private[graft] def jaccardPairs(docs: DataFrame, threshold: Double,
+                                  dfCap: Int, pin: Option[Int]): DataFrame =
+    sharedGramCounts(docs, dfCap, pin)
       .withColumn("jaccard", col("shared").cast("double") /
         (col("n_a") + col("n_b") - col("shared")))
       .filter(col("jaccard") >= threshold)
@@ -177,9 +175,9 @@ object NgramJaccard {
     * differs, and the posting pin is the same. Sizes are over KEPT
     * grams — the same pruned-shingle convention the Jaccard tier and its
     * oracle use. */
-  def containmentPairs(docs: DataFrame, textCol: String = "text", w: Int = 3,
-                       threshold: Double = 0.8, dfCap: Int = 50): DataFrame =
-    sharedGramCounts(docs, textCol, w, dfCap, postingPin(docs))
+  def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
+                       dfCap: Int = 50): DataFrame =
+    sharedGramCounts(docs, dfCap, postingPin(docs))
       .withColumn("containment_a", col("shared").cast("double") / col("n_a"))
       .withColumn("containment_b", col("shared").cast("double") / col("n_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)
@@ -187,13 +185,14 @@ object NgramJaccard {
         "containment_a", "containment_b")
 
   /** The posting-list core both pair tiers score: one row per doc pair
-    * (doc_a < doc_b) sharing at least one kept gram, with the shared-gram
-    * count and each doc's kept-gram count (doc_a, doc_b, shared, n_a, n_b).
-    * `pin` pins the gram exchange (see [[invertedIndexPairs]]). */
-  private def sharedGramCounts(docs: DataFrame, textCol: String, w: Int,
-                               dfCap: Int, pin: Option[Int]): DataFrame = {
+    * (doc_a < doc_b) sharing at least one kept word 3-shingle, with the
+    * shared-gram count and each doc's kept-gram count (doc_a, doc_b,
+    * shared, n_a, n_b). `pin` pins the gram exchange (see
+    * [[invertedIndexPairs]]). */
+  private def sharedGramCounts(docs: DataFrame, dfCap: Int,
+                               pin: Option[Int]): DataFrame = {
     val grams0 = docs.select(col("doc_id"),
-      explode(wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+      explode(wordShingleHashSet(col("text"), lit(3))).as("gram"))
     val grams = pin.fold(grams0)(p => grams0.repartition(p, col("gram")))
     // Build the posting list per gram in ONE exchange and cap it there —
     // stop-gram pruning (df > dfCap → dropped) happens before any pair is

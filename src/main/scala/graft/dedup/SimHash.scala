@@ -40,8 +40,8 @@ object SimHash {
       }
     }
 
-  def signatures(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"), simhash64(col(textCol)).as("simhash"))
+  def signatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), simhash64(col("text")).as("simhash"))
 
   private def chunk(sim: Column, idx: Int): Column =
     shiftrightunsigned(sim, idx * 16).bitwiseAND(lit(0xFFFFL))
@@ -64,9 +64,9 @@ object SimHash {
     * tiny survivor distinct; a pair sharing several chunks is verified
     * up to 4× redundantly, which is a bit_count each — CPU traded for
     * the candidate shuffle. */
-  def nearDuplicates(docs: DataFrame, textCol: String = "text",
-                     maxDist: Int = 3, bucketCap: Int = 1000): DataFrame =
-    nearDuplicatesFromSigs(signatures(docs, textCol), maxDist, bucketCap)
+  def nearDuplicates(docs: DataFrame, maxDist: Int = 3,
+                     bucketCap: Int = 1000): DataFrame =
+    nearDuplicatesFromSigs(signatures(docs), maxDist, bucketCap)
 
   /** The chunk-bucket + in-bucket Hamming-verify chain over ANY 64-bit
     * signature column (doc_id, simhash) — shared by the token simhash

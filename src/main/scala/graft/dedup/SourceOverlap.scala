@@ -37,10 +37,9 @@ import graft.Snapshot.SnapshotOps
 object SourceOverlap {
 
   /** (source_a, source_b, grams_a, grams_b, n_shared, jaccard) for every
-    * source pair sharing ≥1 distinct w-token shingle; source_a < source_b.
+    * source pair sharing ≥1 distinct word 3-shingle; source_a < source_b.
     * jaccard = |A∩B| / |A∪B| over the distinct-shingle sets. */
-  def overlapMatrix(docs: DataFrame, w: Int = 3,
-                    textCol: String = "text"): DataFrame = {
+  def overlapMatrix(docs: DataFrame): DataFrame = {
     // One corpus pass: gram → sorted distinct source set. Pinned so the
     // totals and pair expansions below don't re-run the shingle walk.
     // Null sources are excluded EXPLICITLY: collect_set would silently
@@ -51,7 +50,7 @@ object SourceOverlap {
     val bySources = docs
       .filter(col("source").isNotNull)
       .select(col("source"),
-        explode(NgramJaccard.wordShingleHashSet(col(textCol), lit(w))).as("gram"))
+        explode(NgramJaccard.wordShingleHashSet(col("text"), lit(3))).as("gram"))
       .groupBy("gram")
       .agg(sort_array(collect_set(col("source"))).as("ss"))
       .select("ss")

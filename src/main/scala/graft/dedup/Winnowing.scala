@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Winnowing document fingerprints (the MOSS scheme): hash every k-gram,
-  * slide a window of `w` consecutive hashes, keep each window's minimum.
+  * slide a window of `w` = 4 consecutive hashes, keep each window's
+  * minimum.
   * Any shared substring of at least w + k - 1 tokens between two documents
   * is guaranteed to surface as a shared fingerprint — position-robust
   * near-dup / clone detection, complementary to MinHash (which estimates
@@ -25,6 +26,9 @@ import org.apache.spark.sql.functions._
   */
 object Winnowing {
 
+  /** The window: hashes per window-minimum (the m23 oracle replays it). */
+  private val W = 4
+
   private def shingles(t: Column): Column =
     when(size(t) < 3, array(array_join(t, " ")))
       .otherwise(transform(sequence(lit(1), size(t) - 2),
@@ -37,21 +41,19 @@ object Winnowing {
     * window slice, and array HOF chains re-evaluate the md5 transform per
     * reference — measured O(n·w) md5 work per doc (~10 s for the corpus
     * at sf0.1 vs ~0.5 s compiled). */
-  def fingerprintsColumnForm(docs: DataFrame, textCol: String = "text",
-                             w: Int = 4): DataFrame = {
-    require(w > 0, "window must be positive")
-    val toks = split(lower(trim(col(textCol))), " +")
+  def fingerprintsColumnForm(docs: DataFrame): DataFrame = {
+    val toks = split(lower(trim(col("text"))), " +")
     docs
       // empty/whitespace-only docs yield no fingerprints (shared policy
       // with NgramJaccard — exact dedup owns the empty-content case).
-      .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
+      .filter(col("text").isNotNull && trim(col("text")) =!= "")
       .select(col("doc_id"), shingles(toks).as("gs"))
       .select(col("doc_id"),
         transform(col("gs"), s => md5(s.cast("binary"))).as("hs"))
       .select(col("doc_id"),
-        when(size(col("hs")) <= w, array(array_min(col("hs"))))
-          .otherwise(transform(sequence(lit(1), size(col("hs")) - (w - 1)),
-            i => array_min(slice(col("hs"), i, lit(w))))).as("sel"))
+        when(size(col("hs")) <= W, array(array_min(col("hs"))))
+          .otherwise(transform(sequence(lit(1), size(col("hs")) - (W - 1)),
+            i => array_min(slice(col("hs"), i, lit(W))))).as("sel"))
       // fingerprint dedup is per-document, so array_distinct does it
       // inside the projection — no DISTINCT exchange.
       .select(col("doc_id"), explode(array_distinct(col("sel"))).as("fp"))
@@ -100,33 +102,29 @@ object Winnowing {
   private lazy val winnowUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String, w: Int) => winnowDoc(text, w) }
 
-  /** Distinct winnowing fingerprints per document, window `w` —
-    * production path (compiled single pass; differential spec pins it to
+  /** Distinct winnowing fingerprints per document — production path
+    * (compiled single pass; differential spec pins it to
     * [[fingerprintsColumnForm]]). Still a pure projection: no shuffle. */
-  def fingerprints(docs: DataFrame, textCol: String = "text",
-                   w: Int = 4): DataFrame = {
-    require(w > 0, "window must be positive")
+  def fingerprints(docs: DataFrame): DataFrame =
     docs
-      .filter(col(textCol).isNotNull)
+      .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        explode(winnowUdf(col(textCol), lit(w))).as("fp"))
-  }
+        explode(winnowUdf(col("text"), lit(W))).as("fp"))
 
-  /** Candidate pairs sharing at least `minShared` fingerprints — the
-    * bucket join over [[fingerprints]], with a per-fingerprint cap so a
+  /** Candidate pairs sharing at least 2 fingerprints — the bucket join
+    * over [[fingerprints]], with a per-fingerprint cap of 50 docs so a
     * corpus-viral passage cannot quadratically explode one bucket. */
-  def candidatePairs(docs: DataFrame, textCol: String = "text", w: Int = 4,
-                     minShared: Int = 2, fpCap: Int = 50): DataFrame = {
-    val fps = fingerprints(docs, textCol, w)
+  def candidatePairs(docs: DataFrame): DataFrame = {
+    val fps = fingerprints(docs)
     val kept = fps
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("fp")))
-      .filter(col("df") <= fpCap)
+      .filter(col("df") <= 50)
       .drop("df")
     kept.as("a").join(kept.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= 2)
   }
 }

@@ -20,7 +20,8 @@ object Sinks {
   def replaceTable(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).saveAsTable(table)
 
-  /** S3 (incremental) — overwrite only the date partitions present in `df`.
+  /** S3 (incremental) — overwrite only the `event_date` partitions present
+    * in `df`.
     * The table owns its overwrite mode: it is created with the table
     * option `partitionOverwriteMode=dynamic`, which every later overwrite
     * `insertInto` honours whatever the session conf says, so concurrent
@@ -29,11 +30,10 @@ object Sinks {
     * README claims and its code doesn't do. A standing table without that
     * option is refused: an overwrite of it would be STATIC and wipe every
     * other day. */
-  def upsertDatePartition(df: DataFrame, table: String,
-                          partitionCol: String = "event_date"): Unit = {
+  def upsertDatePartition(df: DataFrame, table: String): Unit = {
     val spark = df.sparkSession
     if (!spark.catalog.tableExists(table)) {
-      df.write.partitionBy(partitionCol)
+      df.write.partitionBy("event_date")
         .option(OverwriteModeKey, "dynamic").saveAsTable(table)
     } else {
       // The table option, not a writer option: a writer option is not

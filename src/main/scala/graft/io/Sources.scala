@@ -94,12 +94,11 @@ object Sources {
       .json(path)
 
   /** §2.9 — Structured Streaming file source over the same Day_Wise tree.
-    * `maxFilesPerTrigger` bounds micro-batch size; pair with
+    * At most 10 files per micro-batch (`maxFilesPerTrigger`); pair with
     * `Trigger.AvailableNow` for catch-up-then-stop semantics (the idiomatic
     * equivalent of the reference's daily scheduled pulls). */
-  def rawEventsStream(spark: SparkSession, root: String,
-                      maxFilesPerTrigger: Int = 10): DataFrame =
+  def rawEventsStream(spark: SparkSession, root: String): DataFrame =
     spark.readStream.options(RawEventOptions).schema(Schemas.rawEvent)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 10)
       .csv(s"$root/Day_Wise/*/event.csv")
 }

@@ -47,19 +47,23 @@ object Multimodal {
       .as[MediaRow]
   }
 
+  /** The packed raster's width and height in pixels. */
+  private val PackWidth = 16
+  private val PackHeight = 12
+
   /** Pack a text corpus as REAL PNG bytes: each document's bytes are
     * rendered into a 16×12 grayscale-in-RGB raster and encoded with the
     * JDK's PNG writer on the executors. This feeds the image path genuine
     * lossless image bytes (decode recovers the exact raster) without
     * shipping binary fixtures — the multimodal analogue of the synthetic
     * text corpus. */
-  def packImages(docs: DataFrame, width: Int = 16, height: Int = 12): Dataset[MediaRow] = {
+  def packImages(docs: DataFrame): Dataset[MediaRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)].map { case (id, text) =>
       val src = Option(text).getOrElse("").getBytes("UTF-8")
-      val png = ImageCodec.encodePng(width, height) { (x, y) =>
-        val v = if (src.isEmpty) 0 else src(((y * width + x) % src.length + src.length) % src.length) & 0xFF
+      val png = ImageCodec.encodePng(PackWidth, PackHeight) { (x, y) =>
+        val v = if (src.isEmpty) 0 else src(((y * PackWidth + x) % src.length + src.length) % src.length) & 0xFF
         (v << 16) | (v << 8) | v
       }
       MediaRow(id, png, "image/png", png.length.toLong)

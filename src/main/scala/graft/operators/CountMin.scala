@@ -70,9 +70,9 @@ object CountMin {
   /** Union of sketches by ELEMENTWISE ADD over (r, bucket) — the
     * frequency analogue of [[HyperLogLog.merge]]: associative,
     * commutative, and exactly the counter table of the unioned input
-    * (spec-pinned). `keepCols` is the coarser grouping retained. */
-  def merge(cnts: DataFrame, keepCols: Seq[String] = Seq.empty): DataFrame =
-    cnts.groupBy(keepCols.map(col) :+ col("r") :+ col("bucket"): _*)
+    * (spec-pinned); every other grouping column is merged away. */
+  def merge(cnts: DataFrame): DataFrame =
+    cnts.groupBy(col("r"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
 
   /** Point estimates for a probe set: min over the d rows of the

@@ -41,17 +41,20 @@ import org.apache.spark.sql.functions._
   */
 object DoremiWeights {
 
+  /** The MW step size η and the uniform-smoothing mass c; the m117
+    * oracle replays both. */
+  private val Eta = 1.0
+  private val Smoothing = 0.01
+
   /** One MW step from uniform init: (domain, n_docs, n_bigrams, ce,
     * excess, weight). `ce` = pooled per-bigram cross-entropy under the
     * corpus bigram LM; `excess` = max(0, ce − corpus-pooled ce);
-    * `weight` = (1−smoothing)·exp(η·excess)/Σ + smoothing/K. Docs with
+    * `weight` = (1−c)·exp(η·excess)/Σ + c/K, η = 1, c = 0.01, over the
+    * add-0.5 bigram LM. Docs with
     * < 2 tokens carry no bigrams and are absent from every pool (the
     * m43 contract); a domain whose docs are all bigram-free is absent. */
-  def weights(docs: DataFrame, domainCol: String = "lang", eta: Double = 1.0,
-              smoothing: Double = 0.01, alpha: Double = 0.5): DataFrame = {
-    require(eta > 0, "eta must be > 0")
-    require(smoothing >= 0 && smoothing < 1, "smoothing must be in [0, 1)")
-    val scored = graft.text.NgramLm.selfPerplexity(docs, alpha)
+  def weights(docs: DataFrame, domainCol: String = "lang"): DataFrame = {
+    val scored = graft.text.NgramLm.selfPerplexity(docs, 0.5)
       .select(col("doc_id"), col("n_bigrams"),
         // m89's cross-engine quantization: floor on the identical double
         // is bit-stable where a decimal round was not
@@ -77,12 +80,12 @@ object DoremiWeights {
     val den = e.agg(
       aggregate(
         array_sort(collect_list(struct(col("domain"),
-          exp(lit(eta) * col("excess")).as("w")))),
+          exp(lit(Eta) * col("excess")).as("w")))),
         lit(0.0), (acc, x) => acc + x.getField("w")).as("denom"))
     e.crossJoin(broadcast(den))
       .select(col("domain"), col("n_docs"), col("n_bigrams"), col("ce"),
         col("excess"),
-        (lit(1.0 - smoothing) * (exp(lit(eta) * col("excess")) / col("denom")) +
-          lit(smoothing) / col("k").cast("double")).as("weight"))
+        (lit(1.0 - Smoothing) * (exp(lit(Eta) * col("excess")) / col("denom")) +
+          lit(Smoothing) / col("k").cast("double")).as("weight"))
   }
 }

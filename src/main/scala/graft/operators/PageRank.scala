@@ -46,18 +46,20 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** (node, rank) after `iterations` damped power-iteration steps from a
-    * uniform start over the edge list's source-node set. */
-  def ranks(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-            srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  /** The damping factor: the share of rank that follows an out-edge. */
+  private val Damping = 0.85
+
+  /** (node, rank) after `iterations` power-iteration steps, damping
+    * 0.85, from a uniform start over the source-node set of the
+    * (src, dst) edge list. */
+  def ranks(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(damping > 0.0 && damping < 1.0, "damping must be in (0,1)")
     // DedupClusters' snapshot hygiene: a superseded pin frees at once —
     // at billions of nodes, 10 retained rank tables is real executor
     // storage. Pin the raw edges FIRST: base and nodes both derive from
     // them, and without this the upstream edge pipeline (e.g. m14's pair
     // verification) would execute once per derivation.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).pinned(true)
+    val e = edges.select("src", "dst").pinned(true)
     val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
     val base = e.join(outdeg, Seq("src")).pinned(true)
     val nodes = e.select(col("src").as("node")).distinct().pinned(true)
@@ -97,8 +99,8 @@ object PageRank {
       // directed inputs otherwise).
       val stepped = nodes.join(contribs, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(1.0 - damping) / n +
-            lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
+          (lit(1.0 - Damping) / n +
+            lit(Damping) * coalesce(col("s"), lit(0.0))).as("rank"))
       if (i % PinEvery == 0 || i == iterations) {
         ranks = stepped.pinned(true)
         pinnedRanks.foreach(graft.Snapshot.free(_)) // superseded round

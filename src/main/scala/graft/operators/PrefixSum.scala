@@ -38,11 +38,10 @@ object PrefixSum {
     * two columns cast to long, in ascending orderCol order. orderCol must
     * be unique. */
   def exclusiveRunningTotals(df: DataFrame, orderCol: String,
-                             valueCol: String,
-                             pinInput: Boolean = true): DataFrame =
+                             valueCol: String): DataFrame =
     exclusiveRunningTotalsBy(
       df.select(col(orderCol).cast("long"), col(valueCol).cast("long")),
-      Seq(col(orderCol)), valueCol, pinInput)
+      Seq(col(orderCol)), valueCol)
 
   /** EXCLUSIVE prefix total of `valueCol` (must be a long; cast it
     * beforehand) in the order given by `orderCols` — arbitrary sort

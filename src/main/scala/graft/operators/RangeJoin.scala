@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
+  /** The per-interval bucket bound: a wider interval raises an error. */
+  private val MaxBucketsPerInterval = 1000000L
+
   def pointInInterval(left: DataFrame, pointCol: String,
                       right: DataFrame, loCol: String, hiCol: String,
-                      bucketWidth: Double,
-                      maxBucketsPerInterval: Long = 1000000L): DataFrame = {
+                      bucketWidth: Double): DataFrame = {
     require(bucketWidth > 0 && !bucketWidth.isInfinite, "bucketWidth must be positive and finite")
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty,
@@ -52,12 +54,12 @@ object RangeJoin {
     // bounds (whose floor would silently saturate) here too.
     val lbRatio = col(loCol).cast("double") / bucketWidth
     val ubRatio = col(hiCol).cast("double") / bucketWidth
-    val spanOk = (ubRatio - lbRatio < lit(maxBucketsPerInterval.toDouble)) &&
+    val spanOk = (ubRatio - lbRatio < lit(MaxBucketsPerInterval.toDouble)) &&
       abs(lbRatio) < lit(4.0e18) && abs(ubRatio) < lit(4.0e18)
     val raiseExpr = raise_error(concat(
-      lit(s"range-join interval spans >= $maxBucketsPerInterval buckets of width $bucketWidth: ["),
+      lit(s"range-join interval spans >= $MaxBucketsPerInterval buckets of width $bucketWidth: ["),
       col(loCol), lit(", "), col(hiCol),
-      lit(") — raise bucketWidth or maxBucketsPerInterval")))
+      lit(") — raise bucketWidth")))
     val lb = when(spanOk, floor(lbRatio)).otherwise(raiseExpr).cast("long")
     val ub = when(spanOk, floor(ubRatio)).otherwise(raiseExpr).cast("long")
     val r = right

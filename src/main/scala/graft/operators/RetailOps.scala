@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object RetailOps {
 
+  /** The event types the revenue and funnel aggregates count. */
+  private val Purchase = "purchase"
+  private val View = "view"
+
   // ---------------------------------------------------------------- P1/P2
   /** Null-fill (reference retail_pipeline_assets.py:26-31,104):
     * `category_code.fillna('Unknown')`, `brand.fillna('Generic')`. */
@@ -41,7 +45,7 @@ object RetailOps {
     * (decimal-exact, [[exactSum]]). */
   def factBuild(staging: DataFrame, dateCol: String, typeCol: String,
                 keyCols: Seq[String], valueCol: String,
-                purchaseKind: String = "purchase"): DataFrame = {
+                purchaseKind: String = Purchase): DataFrame = {
     // purchaseKind parameterized: the legacy RetailRocket schema calls the
     // revenue event "transaction", and a hard-coded literal would silently
     // zero total_revenue there.
@@ -59,18 +63,16 @@ object RetailOps {
     * Division by zero yields NULL (SURVEY §7.4.1 decision — matches the
     * DuckDB oracle via NULLIF; pandas' `inf` is the bug, not the spec). */
   def dailyRevenueSummary(events: DataFrame, dateCol: Column,
-                          purchaseKind: String = "purchase",
-                          cartKind: String = "click",
-                          viewKind: String = "view"): DataFrame = {
+                          cartKind: String = "click"): DataFrame = {
     val et = col("event_type")
     events
       .groupBy(dateCol.as("event_date"))
       .agg(
-        exactSum(purchaseRevenue(et === purchaseKind, col("value"))).as("revenue"),
+        exactSum(purchaseRevenue(et === Purchase, col("value"))).as("revenue"),
         countDistinct(col("user_id")).as("unique_users"),
-        sum(flag(et, purchaseKind)).as("purchases"),
+        sum(flag(et, Purchase)).as("purchases"),
         sum(flag(et, cartKind)).as("carts"),
-        sum(flag(et, viewKind)).as("views"))
+        sum(flag(et, View)).as("views"))
       .withColumn("cart_rate", col("carts") / nullif(col("views"), lit(0L)))
       .withColumn("purchase_rate", col("purchases") / nullif(col("views"), lit(0L)))
   }
@@ -83,16 +85,15 @@ object RetailOps {
     * star join: broadcast it explicitly — at 100 TB the fact side never
     * moves, only the dim ships to executors. */
   def funnelByDim(fact: DataFrame, dim: DataFrame, joinKeys: Seq[String],
-                  groupCols: Seq[String], purchaseKind: String = "purchase",
-                  cartKind: String = "click", viewKind: String = "view"): DataFrame = {
+                  groupCols: Seq[String], cartKind: String = "click"): DataFrame = {
     val et = col("event_type")
     fact.join(broadcast(dim), joinKeys, "inner")
       .groupBy(groupCols.map(col): _*)
       .agg(
-        sum(flag(et, viewKind)).as("views"),
+        sum(flag(et, View)).as("views"),
         sum(flag(et, cartKind)).as("carts"),
-        sum(flag(et, purchaseKind)).as("purchases"),
-        exactSum(purchaseRevenue(et === purchaseKind, col("value"))).as("revenue"))
+        sum(flag(et, Purchase)).as("purchases"),
+        exactSum(purchaseRevenue(et === Purchase, col("value"))).as("revenue"))
   }
 
   // ------------------------------------------------------------------- D1
@@ -146,10 +147,9 @@ object RetailOps {
     * coalesce pads to 'na' exactly like the reference's python loop.
     * (`try_element_at`, not `element_at`: ANSI mode — Spark 4 default —
     * makes the latter throw on out-of-bounds instead of returning NULL.) */
-  def splitHierarchy(src: Column, sep: String = "\\.", levels: Int = 3,
-                     default: String = "na"): Seq[Column] = {
+  def splitHierarchy(src: Column, sep: String = "\\.", levels: Int = 3): Seq[Column] = {
     val arr = split(src, sep)
-    (1 to levels).map(i => coalesce(try_element_at(arr, lit(i)), lit(default)))
+    (1 to levels).map(i => coalesce(try_element_at(arr, lit(i)), lit("na")))
   }
 
   // ------------------------------------------------------------------- P8
@@ -175,18 +175,18 @@ object RetailOps {
 
   /** Stratified sample for dataset balancing (training-data prep): keep
     * each stratum at its own fraction, deterministically. Implemented as a
-    * pure filter on a seeded hash of a stable row key — unlike
+    * pure filter on a hash (seed 42) of a stable row key — unlike
     * `DataFrameStatFunctions.sampleBy`, the SAME rows are kept however the
     * data is partitioned or re-read, so downstream runs are reproducible
     * and the operator stays a codegen'd scan-level filter (no RNG state,
     * no shuffle, pushdown-friendly). Hash uniformity makes the kept share
     * of each stratum converge to its fraction. */
   def stratifiedSample(df: DataFrame, stratumCol: String, keyCol: String,
-                       fractions: Map[String, Double], seed: Long = 42L): DataFrame = {
+                       fractions: Map[String, Double]): DataFrame = {
     require(fractions.values.forall(f => f >= 0.0 && f <= 1.0),
       "fractions must be in [0,1]")
     // xxhash64 → [0,1) via the positive 2^63 range.
-    val u = (pmod(xxhash64(col(keyCol), lit(seed)), lit(Long.MaxValue)).cast("double")
+    val u = (pmod(xxhash64(col(keyCol), lit(42L)), lit(Long.MaxValue)).cast("double")
       / lit(Long.MaxValue.toDouble))
     val frac = fractions.foldLeft(lit(0.0)) { case (acc, (k, f)) =>
       when(col(stratumCol) === k, lit(f)).otherwise(acc)

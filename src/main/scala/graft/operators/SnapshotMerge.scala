@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-snapshot merge (m61) — [[SnapshotDiff]] folded into the state
@@ -33,15 +33,15 @@ import org.apache.spark.sql.functions._
 object SnapshotMerge {
 
   /** Fold `snaps` (version → snapshot, ascending versions) into the
-    * provenance state table: (key, fp, first_seen_version,
+    * provenance state table, fingerprinting each row by the md5 of its
+    * text (null text as ""): (key, fp, first_seen_version,
     * last_changed_version, last_seen_version, status). Keys must be
     * unique within each snapshot (exact-dedup first, the m44 rule). */
-  def mergeAll(snaps: Seq[(Long, DataFrame)], keyCol: String = "doc_id",
-               fingerprint: Column = md5(coalesce(col("text"), lit("")))): DataFrame = {
+  def mergeAll(snaps: Seq[(Long, DataFrame)], keyCol: String = "doc_id"): DataFrame = {
     require(snaps.nonEmpty, "need at least one snapshot")
     require(snaps.map(_._1) == snaps.map(_._1).sorted, "versions must ascend")
     val fps = snaps.map { case (v, df) =>
-      (v, df.select(col(keyCol), fingerprint.as("snap_fp")))
+      (v, df.select(col(keyCol), md5(coalesce(col("text"), lit(""))).as("snap_fp")))
     }
     val (v0, f0) = fps.head
     val init = f0.select(col(keyCol), col("snap_fp").as("fp"),

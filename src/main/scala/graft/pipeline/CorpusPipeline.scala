@@ -35,24 +35,22 @@ object CorpusPipeline {
     * from `docs`' own source rows, because the frame it pins is a
     * checkpoint that reads no files. Every caller runs the same plan:
     * pinned below the corpus scan-spread gate, unpinned above it. */
-  def prepare(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
-              jaccardThreshold: Double = 0.6, dfCap: Int = 50,
-              chunkSize: Int = 50, chunkStride: Int = 40): DataFrame = {
+  def prepare(docs: DataFrame): DataFrame = {
     val pin = NgramJaccard.postingPin(docs)
     val gated = docs
       .select(col("doc_id"), col("text"), TextOps.profile(col("text")).as("p"))
-      .filter(col("p.lang_pred") === lang && col("p.quality") >= minQuality)
+      .filter(TextOps.passesGate(col("p.lang_pred"), col("p.quality")))
       .select("doc_id", "text")
-    dedupAndChunk(gated, pin, jaccardThreshold, dfCap, chunkSize, chunkStride)
+    dedupAndChunk(gated, pin)
   }
 
   /** The shared tail of [[prepare]] and [[prepareV2]]: pin the gated set,
-    * exact dedup, near-dup pairs, clusters, canonical docs, chunks. The
+    * exact dedup, near-dup pairs (Jaccard ≥ 0.6 over word 3-shingles,
+    * stop-gram cap 50), clusters, canonical docs, chunks (50 tokens,
+    * stride 40). The m18/m28 oracles replay these values. The
     * clustering takes no round cap: [[DedupClusters.components]] bounds
     * its rounds by the pair graph's node count. */
-  private def dedupAndChunk(gated: DataFrame, pin: Option[Int],
-                            jaccardThreshold: Double, dfCap: Int,
-                            chunkSize: Int, chunkStride: Int): DataFrame = {
+  private def dedupAndChunk(gated: DataFrame, pin: Option[Int]): DataFrame = {
     // EAGER pin of the gated set (round 21, guide §1.2 "per-task work" +
     // §3.3 plan-size note): ExactDedup's semi-join references the gate on
     // BOTH sides (winners subtree + probe side), so without this pin one
@@ -76,14 +74,13 @@ object CorpusPipeline {
     // (Bench/Verify unpersist all snapshots between queries — queries
     // share no state, so anything still pinned is dead weight).
     val exact = ExactDedup.dedup(gatePin).pinned(false)
-    val pairs = NgramJaccard
-      .jaccardPairs(exact, "text", 3, jaccardThreshold, dfCap, pin)
+    val pairs = NgramJaccard.jaccardPairs(exact, 0.6, 50, pin)
       .select("doc_a", "doc_b")
     val nonCanonical = DedupClusters.components(pairs)
       .filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
     val canon = exact.join(nonCanonical, Seq("doc_id"), "left_anti")
-    TextOps.chunk(canon, size = chunkSize, stride = chunkStride)
+    TextOps.chunk(canon)
   }
 
   /** [[prepare]] extended with the scrub tier:
@@ -101,9 +98,7 @@ object CorpusPipeline {
     * over [[prepare]], and sizes its posting pin the same way.
     * Hash-checked end-to-end as m28.
     */
-  def prepareV2(docs: DataFrame, lang: String = "en", minQuality: Double = 0.3,
-                jaccardThreshold: Double = 0.6, dfCap: Int = 50,
-                chunkSize: Int = 50, chunkStride: Int = 40): DataFrame = {
+  def prepareV2(docs: DataFrame): DataFrame = {
     val pin = NgramJaccard.postingPin(docs)
     // Each scrub stage lands in its own projection so the collapse lambda
     // references an ATTRIBUTE, not the upstream expression tree — see
@@ -111,12 +106,12 @@ object CorpusPipeline {
     // triple-regex scrub once per token).
     val gated = docs
       .select(col("doc_id"), col("text"), TextOps.profile(col("text")).as("p"))
-      .filter(col("p.lang_pred") === lang && col("p.quality") >= minQuality)
+      .filter(TextOps.passesGate(col("p.lang_pred"), col("p.quality")))
       .select(col("doc_id"),
         graft.text.PiiRedact.redactedText(col("text")).as("text"))
       .select(col("doc_id"), split(lower(trim(col("text"))), " +").as("t"))
       .select(col("doc_id"),
         graft.text.Repetition.collapseTokens(col("t")).as("text"))
-    dedupAndChunk(gated, pin, jaccardThreshold, dfCap, chunkSize, chunkStride)
+    dedupAndChunk(gated, pin)
   }
 }

@@ -33,8 +33,8 @@ import java.nio.file.{Files, Paths}
   * Spark job runs outside any global mutex; only callers of the same
   * stored path wait, and exactly one of them builds).
   *
-  * Reuse across JVMs is opt-in: with `graft.dedup.assetRoot` (system
-  * property, or GRAFT_DEDUP_ASSET_ROOT env) pointing at a stable
+  * Reuse across JVMs is opt-in: with the `graft.dedup.assetRoot` system
+  * property pointing at a stable
   * directory, the asset path carries a STALENESS KEY — a corpus
   * fingerprint (count + order-insensitive bit_xor of xxhash64(doc_id,
   * text), one cheap column scan, memoized per JVM) plus a semantics
@@ -64,14 +64,14 @@ object DedupAssets {
     Files.createTempDirectory("graft-dedup-assets").toString
 
   private def stableRoot: Option[String] =
-    sys.props.get("graft.dedup.assetRoot")
-      .orElse(sys.env.get("GRAFT_DEDUP_ASSET_ROOT"))
-      .filter(_.nonEmpty)
+    sys.props.get("graft.dedup.assetRoot").filter(_.nonEmpty)
 
   /** Order-insensitive corpus fingerprint: row count + bit_xor of
     * xxhash64(doc_id, text) over `$dir/documents.parquet`, hex-joined.
-    * One narrow scan, memoized per (dir) per JVM. Keys that are not a
-    * corpus dir hash textually (generic materialized callers). Assets
+    * One narrow scan, memoized per (dir) per JVM. The dir may be a local
+    * path or any Hadoop URI (`file://`, `hdfs://`, `s3a://`): existence
+    * is asked of the key's own FileSystem. Keys that are not a corpus dir
+    * hash textually (generic materialized callers). Assets
     * over a different source table pass `fpTable`/`fpCols` — an ANN
     * index over `embeddings.parquet` must go stale when the EMBEDDINGS
     * change, whether or not the documents did. */
@@ -81,8 +81,8 @@ object DedupAssets {
     // table but fingerprinting different columns must not share a cached
     // fingerprint (a collision would silently reuse a stale asset).
     fingerprints(s"$key::$fpTable::${fpCols.mkString(",")}") {
-      val src = Paths.get(key, fpTable)
-      if (Files.exists(src)) {
+      val src = new org.apache.hadoop.fs.Path(key, fpTable)
+      if (src.getFileSystem(s.sparkContext.hadoopConfiguration).exists(src)) {
         val r = s.read.parquet(src.toString)
           .agg(count(lit(1)), bit_xor(xxhash64(fpCols.map(col): _*)))
           .head()
@@ -270,32 +270,27 @@ object DedupAssets {
 
   /** Shared raw n-gram count tables (`asset:ngramcounts2`/`3`) — the LM
     * tier's sufficient statistic, built once per (corpus fingerprint,
-    * order, minCount) and read by every consumer (round-17 verdict ask
+    * order) and read by every consumer (round-17 verdict ask
     * #2). Before this, m43/m89/m124/m138/m142/m144/m145 each
     * re-tokenized and re-counted the corpus per query — per-query the
     * plan was right, but at 100 TB each redundant count pass is a full
     * corpus scan, and the count table (bounded by the realized gram
-    * vocabulary, minCount-prunable) is exactly the slowly-changing
+    * vocabulary) is exactly the slowly-changing
     * asset the bm25post topology exists for. Counts are exact longs and
     * gram strings — parquet round-trips them bit-identically, so every
     * consumer's oracle hash is unchanged by construction. */
-  def ngramCounts(s: SparkSession, dir: String, order: Int,
-                  minCount: Long = 1L): DataFrame = {
+  def ngramCounts(s: SparkSession, dir: String, order: Int): DataFrame = {
     require(order >= 2, s"n-gram order must be >= 2, got $order")
-    val name = s"ngramcounts$order" +
-      (if (minCount != 1L) s"-mc$minCount" else "")
+    val name = s"ngramcounts$order"
     val cols = order match {
       case 2 => Seq("a", "b")
       case 3 => Seq("a", "b", "c")
       case n => (1 to n).map(i => s"g$i")
     }
     materialized(s, name, dir, cols)(order match {
-      case 2 => graft.text.NgramLm.bigramCounts(
-        graft.Tables.documents(s, dir), minCount = minCount)
-      case 3 => graft.text.KneserNey.trigramCounts(
-        graft.Tables.documents(s, dir), minCount = minCount)
-      case n => graft.text.KneserNey.ngramCounts(
-        graft.Tables.documents(s, dir), "text", n, minCount)
+      case 2 => graft.text.NgramLm.bigramCounts(graft.Tables.documents(s, dir))
+      case 3 => graft.text.KneserNey.trigramCounts(graft.Tables.documents(s, dir))
+      case n => graft.text.KneserNey.ngramCounts(graft.Tables.documents(s, dir), "text", n)
     })
   }
 

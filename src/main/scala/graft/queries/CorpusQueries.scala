@@ -563,9 +563,9 @@ object CorpusQueries {
     * sample covers the corpus — which also means the captured-model
     * oracles were unaffected by the switch at fixture scale). */
   private[graft] val bpeModels = new graft.Memo[graft.text.Bpe.Model]
-  private def bpeModel(s: SparkSession, dir: String, nMerges: Int = 40): graft.text.Bpe.Model =
-    bpeModels(s"$dir::$nMerges") {
-      graft.text.Bpe.trainDistributed(Tables.documents(s, dir), nMerges)
+  private def bpeModel(s: SparkSession, dir: String): graft.text.Bpe.Model =
+    bpeModels(dir) {
+      graft.text.Bpe.trainDistributed(Tables.documents(s, dir), 40)
     }
 
   /** WordPiece tokenizer-token accounting (m139): train likelihood-scored
@@ -615,9 +615,9 @@ object CorpusQueries {
   /** One trained WordPiece model per corpus per JVM ([[graft.Memo]]) —
     * the third tokenizer family. */
   private[graft] val wpModels = new graft.Memo[graft.text.WordPiece.Model]
-  private def wpModel(s: SparkSession, dir: String, nMerges: Int = 30): graft.text.WordPiece.Model =
-    wpModels(s"$dir::$nMerges") {
-      graft.text.WordPiece.trainDistributed(Tables.documents(s, dir), nMerges)
+  private def wpModel(s: SparkSession, dir: String): graft.text.WordPiece.Model =
+    wpModels(dir) {
+      graft.text.WordPiece.trainDistributed(Tables.documents(s, dir), 30)
     }
 
   /** One trained unigram-LM tokenizer per corpus per JVM ([[graft.Memo]])
@@ -1263,11 +1263,10 @@ object CorpusQueries {
     * stands in for the planner's query set and is deterministic
     * without any corpus-sized aggregate: the first document's (min
     * doc_id — a scalar partial-agg fold) distinct shingles, first
-    * `probes` by gram order. m149 stays the estimate-quality gate;
+    * 20 by gram order. m149 stays the estimate-quality gate;
     * this row's oracle replays the identical counters + watchlist, so
     * the production path is hash-checked in its own right. */
-  def cmsFrequencyProduction(s: SparkSession, dir: String,
-                             probes: Int = 20): DataFrame = {
+  def cmsFrequencyProduction(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
     val occ = shingleOccurrences(s, dir)
     val merged = CountMin.merge(
@@ -1279,7 +1278,7 @@ object CorpusQueries {
         graft.dedup.NgramJaccard.wordShingleSet(col("text"), lit(3))).as("gram"))
       .filter(col("gram") =!= "")
       .distinct()
-      .orderBy("gram").limit(probes)
+      .orderBy("gram").limit(20)
     CountMin.estimate(merged, watch, "gram")
       .select(col("gram"), col("cms_estimate"))
   }
@@ -1356,9 +1355,9 @@ object CorpusQueries {
     * documented as the thing dropped at scale. Every statistic is a
     * pure function of the item set (no order/partition sensitivity),
     * so the whole chain is hash-certified cross-engine. */
-  def kmvSourceOverlap(s: SparkSession, dir: String,
-                       k: Int = graft.operators.KmvSketch.DefaultK): DataFrame = {
+  def kmvSourceOverlap(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{HyperLogLog, KmvSketch}
+    val k = KmvSketch.DefaultK
     val hashed = Tables.documentsSpread(s, dir)
       .filter(col("text").isNotNull)
       .select(col("source"),
@@ -1407,9 +1406,9 @@ object CorpusQueries {
     * sketch replaces at 100 TB, where the planner reads |sources| × k
     * longs instead. Exchange budget: sources × k longs for the fold,
     * one count-distinct exchange for the certificate leg only. */
-  def kmvCorpusUnionCard(s: SparkSession, dir: String,
-                         k: Int = graft.operators.KmvSketch.DefaultK): DataFrame = {
+  def kmvCorpusUnionCard(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{HyperLogLog, KmvSketch}
+    val k = KmvSketch.DefaultK
     val hashed = Tables.documentsSpread(s, dir)
       .filter(col("text").isNotNull)
       .select(col("source"),
@@ -2122,7 +2121,7 @@ object CorpusQueries {
     Tables.embeddings(s, dir).select(col("vec_id").as("id"),
       Vectors.toDouble(col("embedding")).as("vec"))
 
-  /** nlist ≈ corpus / target cell size — the FAISS/SemDeDup sizing knob.
+  /** nlist ≈ corpus / 512-vector target cell — the FAISS/SemDeDup sizing.
     * Quantizer-cell occupancy must stay BOUNDED as the corpus grows:
     * corpus×corpus consumers (within-cell pair verification, batch k-NN)
     * do O(|cell|) work per row, so a fixed nlist turns linear data growth
@@ -2131,18 +2130,18 @@ object CorpusQueries {
     * driver-SF corpus (≤ ~8k vectors) trains the exact nlist the captured
     * oracles replay; capped so the driver-side Lloyd's state stays a few
     * MB of centroids. */
-  private[graft] def scaledNlist(n: Long, targetCell: Int = 512): Int =
-    math.max(16, math.min(8192, (n / targetCell).toInt))
+  private[graft] def scaledNlist(n: Long): Int =
+    math.max(16, math.min(8192, (n / 512).toInt))
 
-  /** Sign-LSH plane count targeting ~`targetBucket` vectors per bucket:
+  /** Sign-LSH plane count targeting ~512 vectors per bucket:
     * 2^planes buckets at FIXED planes means bucket occupancy — and the
     * in-bucket pairwise scoring — grows linearly with n, turning linear
     * data growth into quadratic total work (the scaledNlist argument).
     * Floored at 8 = the value the seeded-hyperplane oracles inline for
     * every driver SF (first change at n > 128k vectors).
     * ScaledKnobsSpec exercises the above-floor regime. */
-  private[graft] def scaledPlanes(n: Long, targetBucket: Int = 512): Int =
-    math.max(8, math.ceil(math.log(n / targetBucket.toDouble) / math.log(2.0)).toInt)
+  private[graft] def scaledPlanes(n: Long): Int =
+    math.max(8, math.ceil(math.log(n / 512.0) / math.log(2.0)).toInt)
 
   /** SQ8 scalar quantization (m59): per-dimension affine 8-bit codes +
     * reconstruction error over the embeddings table. */

@@ -102,15 +102,15 @@ object LegacySql {
     * partition-invariant, retry-deterministic, identical on a laptop
     * and a 1000-executor cluster, and replayable by any engine with
     * md5. (The same first-48-bits-of-md5 primitive as the gate's row
-    * hashes; xxhash64 would be faster but is not portable.) */
-  def seededIds(s: SparkSession, dir: String, seed: Long = 7L,
-                n: Long = 1000L, bound: Long = 10000L): DataFrame =
-    s.range(n).select(
+    * hashes; xxhash64 would be faster but is not portable.) 1000 rows,
+    * ids in [0, 10000). */
+  def seededIds(s: SparkSession, dir: String, seed: Long = 7L): DataFrame =
+    s.range(1000L).select(
       col("id").as("n"),
       pmod(
         conv(substring(md5(concat(lit(s"$seed:"), col("id").cast("string"))),
           1, 12), 16, 10).cast("long"),
-        lit(bound)).as("user_id"))
+        lit(10000L)).as("user_id"))
 
   // ------------------------------------------------- S3/S5/S6/S7
   /** Mart write-path round-trip: aggregate one day → S5 `dt=` parquet

@@ -28,20 +28,6 @@ object Schemas {
     StructField("event_date", DateType, nullable = false)
   ))
 
-  /** staging_events = rawEvent + loaded_at (table_creation.sql:14). */
-  val stagingEvent: StructType =
-    StructType(rawEvent.fields :+ StructField("loaded_at", TimestampType, nullable = true))
-
-  /** fact_events grain: (date, type, product, user) (table_creation.sql:19-26). */
-  val factEvents: StructType = StructType(Seq(
-    StructField("event_date", DateType, nullable = false),
-    StructField("event_type", StringType, nullable = false),
-    StructField("product_id", LongType, nullable = false),
-    StructField("user_id", LongType, nullable = false),
-    StructField("total_events", LongType, nullable = false),
-    StructField("total_revenue", DoubleType, nullable = true)
-  ))
-
   /** Legacy RetailRocket-shaped events (reference
     * dags/__pycache__/retail_pipeline_assets.cpython-312.pyc.281473178407232):
     * epoch-ms timestamp, visitorid/itemid, event in {view,addtocart,transaction}. */

@@ -51,8 +51,12 @@ object Ann {
       .select("query_id", "rank", "neighbor_id", "sim")
   }
 
+  /** Seed of the LSH hyperplanes; table t draws from Seed + t, as the
+    * m09/m10 oracles inline them. */
+  private val Seed = 42L
+
   /** Deterministic random hyperplanes: `planes` rows of `dim` doubles. */
-  def hyperplanes(planes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
+  def hyperplanes(planes: Int, dim: Int, seed: Long = Seed): Seq[Seq[Double]] = {
     val rng = new scala.util.Random(seed)
     Seq.fill(planes)(Seq.fill(dim)(rng.nextGaussian()))
   }
@@ -73,34 +77,31 @@ object Ann {
 
   /** (row..., table, bucket) — one row per hash table (OR-amplification). */
   private def withBuckets(df: DataFrame, numPlanes: Int, dim: Int,
-                          tables: Int, seed: Long): DataFrame = {
+                          tables: Int): DataFrame = {
     val buckets = array((0 until tables).map(t =>
-      bucketId(col("vec"), hyperplanes(numPlanes, dim, seed + t))): _*)
+      bucketId(col("vec"), hyperplanes(numPlanes, dim, Seed + t))): _*)
     df.select(col("*"), posexplode(buckets).as(Seq("table", "bucket")))
   }
 
-  /** LSH-bucketed ANN: score only candidates sharing a (table, bucket).
-    * Returns the same schema as bruteForceTopK; ranks are within retrieved
-    * candidates, so recall < 1 by design. */
+  /** LSH-bucketed ANN over one hash table: score only candidates sharing
+    * its bucket, so no pair is scored twice. Returns the same schema as
+    * bruteForceTopK; ranks are within retrieved candidates, so recall < 1
+    * by design. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              numPlanes: Int = 8, dim: Int = 64, tables: Int = 1,
-              seed: Long = 42L): DataFrame = {
+              numPlanes: Int = 8, dim: Int = 64): DataFrame = {
     val spark = corpus.sparkSession
-    val q = withBuckets(withNorm(queries), numPlanes, dim, tables, seed)
+    val q = withBuckets(withNorm(queries), numPlanes, dim, 1)
       .select(col("table"), col("bucket"), col("id").as("query_id"),
         col("vec").as("qvec"), col("nrm").as("qnrm"))
-    val c = withBuckets(withNorm(corpus), numPlanes, dim, tables, seed)
+    val c = withBuckets(withNorm(corpus), numPlanes, dim, 1)
     val scored = c.join(broadcast(q), Seq("table", "bucket"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         (GraftFunctions.dot(spark, col("qvec"), col("vec")) /
           (col("qnrm") * col("nrm"))).as("sim"))
-    // collisions in several tables count once; with one table no duplicate
-    // pairs can exist, so skip the extra exchange on the hot path.
-    val deduped = if (tables > 1) scored.distinct() else scored
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
-    deduped.withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "sim")
   }
@@ -157,8 +158,7 @@ object Ann {
     * the verification baseline); numPlanes>0 → LSH buckets with
     * OR-amplified tables (the 100 TB path: only same-bucket pairs ship). */
   def nearDupPairs(vectors: DataFrame, threshold: Double,
-                   numPlanes: Int = 0, dim: Int = 64, tables: Int = 1,
-                   seed: Long = 42L): DataFrame = {
+                   numPlanes: Int = 0, dim: Int = 64, tables: Int = 1): DataFrame = {
     val spark = vectors.sparkSession
     val base =
       if (numPlanes <= 0) {
@@ -167,7 +167,7 @@ object Ann {
         val b = v.select(col("id").as("doc_b"), col("vec").as("vec_b"), col("nrm").as("nrm_b"))
         a.join(b, col("doc_a") < col("doc_b"))
       } else {
-        val bucketed = withBuckets(withNorm(vectors), numPlanes, dim, tables, seed)
+        val bucketed = withBuckets(withNorm(vectors), numPlanes, dim, tables)
         bucketed
           .select(col("table"), col("bucket"), col("id").as("doc_a"),
             col("vec").as("vec_a"), col("nrm").as("nrm_a"))

@@ -40,10 +40,10 @@ object CentroidDrift {
     * input whose vectors are non-empty; per-dimension means over RAGGED
     * vectors would still average over differing denominators, which is a
     * caller error, not a supported mode. */
-  def report(vectors: DataFrame, groupCol: String = "label"): DataFrame = {
+  def report(vectors: DataFrame): DataFrame = {
     val c = vectors
-      .filter(col(groupCol).isNotNull && col("vec").isNotNull)
-      .select(col(groupCol).as("label"), posexplode(col("vec")).as(Seq("pos", "val")))
+      .filter(col("label").isNotNull && col("vec").isNotNull)
+      .select(col("label"), posexplode(col("vec")).as(Seq("pos", "val")))
     // The only corpus-sized aggregate, pinned: two consumers (group
     // centroids + corpus centroid) must not re-explode the vectors.
     val sums = graft.Snapshot.pin(

@@ -27,9 +27,8 @@ object EmbedOutliers {
   /** (vec_id, dist, robust_z, is_outlier): Euclidean distance to the
     * corpus centroid, 0.6745·(d−med)/MAD, and the |z| > 3.5 flag
     * (false when MAD = 0 — a degenerate all-equal cloud). */
-  def report(vecs: DataFrame, idCol: String = "vec_id",
-             vecCol: String = "embedding"): DataFrame = {
-    val xs = vecs.select(col(idCol), Vectors.toDouble(col(vecCol)).as("x"))
+  def report(vecs: DataFrame): DataFrame = {
+    val xs = vecs.select(col("vec_id"), Vectors.toDouble(col("embedding")).as("x"))
       .filter(col("x").isNotNull)
     // Per-dim means folded onto one broadcastable row, in dim order.
     val centroid = xs
@@ -48,10 +47,10 @@ object EmbedOutliers {
       .otherwise(raise_error(concat(
         lit("EmbedOutliers: ragged embedding (dim "), size(col("x")),
         lit(" != corpus dim "), size(col("c")),
-        lit(") at "), col(idCol).cast("string"))))
+        lit(") at "), col("vec_id").cast("string"))))
     val dists = xs.crossJoin(broadcast(centroid))
       .withColumn("dist", dist)
-      .select(col(idCol), col("dist"))
+      .select(col("vec_id"), col("dist"))
     val stats = dists.agg(percentile(col("dist"), lit(0.5)).as("med"))
     val withMed = dists.crossJoin(broadcast(stats))
     val mad = withMed
@@ -62,6 +61,6 @@ object EmbedOutliers {
         when(col("mad") === 0.0, lit(null).cast("double")).otherwise(z))
       .withColumn("is_outlier",
         when(col("mad") === 0.0, lit(false)).otherwise(abs(z) > 3.5))
-      .select(col(idCol), col("dist"), col("robust_z"), col("is_outlier"))
+      .select(col("vec_id"), col("dist"), col("robust_z"), col("is_outlier"))
   }
 }

@@ -38,6 +38,10 @@ import graft.Snapshot.SnapshotOps
   */
 object Ivf {
 
+  /** Training-sample rows: the quantizers train on at most this many
+    * vectors (the ksub/nlist floor aside), coarse and PQ alike. */
+  private[similarity] val TrainCap = 16384
+
   final case class Model(centroids: Seq[Seq[Double]]) {
     def nlist: Int = centroids.size
 
@@ -159,7 +163,7 @@ object Ivf {
     * than `trainCap` (all spec/test scales) training is exact — identical
     * to unsampled Lloyd's. */
   def train(vectors: DataFrame, nlist: Int, iters: Int = 3,
-            trainCap: Int = 16384): Model = {
+            trainCap: Int = TrainCap): Model = {
     require(nlist > 0, "nlist must be positive")
     val sample = vectors
       .orderBy(xxhash64(col("id")).asc, col("id").asc)

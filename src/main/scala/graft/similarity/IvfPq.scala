@@ -60,13 +60,12 @@ object IvfPq {
   /** Coarse quantizer via [[Ivf.train]], then PQ codebooks over the SAME
     * bounded deterministic sample's residuals. */
   def train(vectors: DataFrame, nlist: Int, m: Int, ksub: Int,
-            coarseIters: Int = 3, pqIters: Int = 5,
-            trainCap: Int = 16384): Model = {
+            pqIters: Int = 5): Model = {
     require(nlist > 0 && m > 0 && ksub > 0, "nlist, m, ksub must be positive")
-    val coarse = Ivf.train(vectors, nlist, coarseIters, trainCap)
+    val coarse = Ivf.train(vectors, nlist)
     val sample = vectors
       .orderBy(xxhash64(col("id")).asc, col("id").asc)
-      .limit(math.max(trainCap, ksub * 4))
+      .limit(math.max(Ivf.TrainCap, ksub * 4))
       .select("vec").collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "cannot train on an empty corpus")
     val dim = sample.head.length

@@ -50,13 +50,12 @@ object JlProjection {
     * embedding — the JL guarantee made measurable (ratio concentrates
     * around 1 with spread ~1/√k). Zero-norm vectors carry a null ratio.
     * One projection pass over the pruned (vec_id, embedding) scan. */
-  def normCard(embeddings: DataFrame, d: Int, k: Int,
-               vecCol: String = "embedding"): DataFrame = {
+  def normCard(embeddings: DataFrame, d: Int, k: Int): DataFrame = {
     val sq = (v: Column) =>
       aggregate(transform(v, x => x * x), lit(0.0), (acc, x) => acc + x)
-    val xs = transform(col(vecCol), x => x.cast("double"))
+    val xs = transform(col("embedding"), x => x.cast("double"))
     embeddings
-      .select(col("vec_id"), xs.as("xs"), project(col(vecCol), d, k).as("ys"))
+      .select(col("vec_id"), xs.as("xs"), project(col("embedding"), d, k).as("ys"))
       .select(col("vec_id"), sq(col("xs")).as("norm2_orig"),
         sq(col("ys")).as("norm2_proj"))
       .withColumn("ratio",

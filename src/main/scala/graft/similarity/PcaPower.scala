@@ -56,14 +56,12 @@ object PcaPower {
   /** (dim, loading, eigenvalue): the unit top component (sign fixed so
     * the first nonzero loading is positive) and its eigenvalue (the
     * variance explained along it, computed in a final pass). */
-  def topComponent(vecs: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding",
-                   iterations: Int = 8,
+  def topComponent(vecs: DataFrame, iterations: Int = 8,
                    captureKey: Option[String] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val spark = vecs.sparkSession
     import spark.implicits._
-    val xs = vecs.select(Vectors.toDouble(col(vecCol)).as("x"))
+    val xs = vecs.select(Vectors.toDouble(col("embedding")).as("x"))
       .filter(col("x").isNotNull)
 
     // One pass: per-dimension mean.

@@ -109,12 +109,11 @@ object Pq {
 
   /** Train m per-subspace codebooks of ksub centroids over a bounded
     * deterministic sample of (id, vec). dim must be divisible by m. */
-  def train(vectors: DataFrame, m: Int, ksub: Int, iters: Int = 5,
-            trainCap: Int = 16384): Model = {
+  def train(vectors: DataFrame, m: Int, ksub: Int, iters: Int = 5): Model = {
     require(m > 0 && ksub > 0, "m and ksub must be positive")
     val sample = vectors
       .orderBy(xxhash64(col("id")).asc, col("id").asc)
-      .limit(math.max(trainCap, ksub * 4))
+      .limit(math.max(Ivf.TrainCap, ksub * 4))
       .select("vec").collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "cannot train on an empty corpus")
     val dim = sample.head.length

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * consumes RANKS.
   *
   * Exactness: each list's contribution is the integer
-  * `floor(10⁹ / (c+rank))` — the double division of two exact small
+  * `floor(10⁹ / (c+rank))` with c = 60 — the double division of two exact small
   * integers is correctly rounded and the true quotient is never within
   * an ulp of an integer boundary (the fractional part is a multiple of
   * `1/(c+rank)` ≥ 2⁻¹⁰ for any sane c+k), so the floor equals exact
@@ -27,15 +27,14 @@ object RrfFusion {
   /** Fuse two (query_id, rank, doc_id) lists; returns
     * (query_id, rank, doc_id, rank_a, rank_b, rrf_q9) — the fused top-k
     * with each source list's rank (null where absent). */
-  def fuse(listA: DataFrame, listB: DataFrame, k: Int,
-           c: Long = 60L): DataFrame = {
+  def fuse(listA: DataFrame, listB: DataFrame, k: Int): DataFrame = {
     val a = listA.select(col("query_id"), col("doc_id"),
       col("rank").cast("long").as("rank_a"))
     val b = listB.select(col("query_id"), col("doc_id"),
       col("rank").cast("long").as("rank_b"))
     val joined = a.join(b, Seq("query_id", "doc_id"), "full_outer")
     val contrib = (r: org.apache.spark.sql.Column) =>
-      coalesce(floor(lit(1000000000L) / (lit(c) + r)).cast("long"), lit(0L))
+      coalesce(floor(lit(1000000000L) / (lit(60L) + r)).cast("long"), lit(0L))
     val scoredCol = (contrib(col("rank_a")) + contrib(col("rank_b")))
       .as("rrf_q9")
     val w = Window.partitionBy("query_id")

@@ -31,11 +31,10 @@ object ScalarQuantizer {
   /** (vec_id, dim, code, abs_err): the 8-bit code of every vector
     * component under per-dimension affine bounds, plus the absolute
     * reconstruction error |x − decode(code)|. */
-  def sq8(vecs: DataFrame, idCol: String = "vec_id",
-          vecCol: String = "embedding"): DataFrame = {
+  def sq8(vecs: DataFrame): DataFrame = {
     val comps = vecs
-      .select(col(idCol), posexplode(col(vecCol)).as(Seq("dim", "x0")))
-      .select(col(idCol), col("dim").cast("long").as("dim"),
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x0")))
+      .select(col("vec_id"), col("dim").cast("long").as("dim"),
         col("x0").cast("double").as("x"))
     val bounds = comps.groupBy("dim")
       .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
@@ -47,6 +46,6 @@ object ScalarQuantizer {
       .withColumn("recon",
         col("mn") + col("code").cast("double") / 255.0 * (col("mx") - col("mn")))
       .withColumn("abs_err", abs(col("x") - col("recon")))
-      .select(col(idCol), col("dim"), col("code"), col("abs_err"))
+      .select(col("vec_id"), col("dim"), col("code"), col("abs_err"))
   }
 }

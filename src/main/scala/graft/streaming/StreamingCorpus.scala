@@ -19,17 +19,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamingCorpus {
 
-  /** Gate (lang = en, quality ≥ minQuality) then redact PII — stateless
+  /** Gate ([[TextOps.passesGate]]) then redact PII — stateless
     * (no join, no state store), identical semantics to the batch
     * operators it delegates to. Emits (doc_id, arrival_ts, lang_pred,
     * quality, n_emails, n_ips, n_phones, text_redacted). */
-  def gateAndScrub(docs: DataFrame, minQuality: Double = 0.3): DataFrame = {
+  def gateAndScrub(docs: DataFrame): DataFrame = {
     val gated = docs
       .select(col("doc_id"), col("arrival_ts"), col("text"),
         TextOps.profile(col("text")).as("p"))
       .select(col("doc_id"), col("arrival_ts"), col("text"),
         col("p.lang_pred").as("lang_pred"), col("p.quality").as("quality"))
-      .filter(col("lang_pred") === "en" && col("quality") >= minQuality)
+      .filter(TextOps.passesGate(col("lang_pred"), col("quality")))
     PiiRedact.withRedaction(gated).drop("text")
   }
 
@@ -47,9 +47,8 @@ object StreamingCorpus {
   /** The composed streaming front door: gate → scrub → content dedup on
     * the REDACTED text, so per-document PII variance collapses before
     * fingerprinting (the batch prepareV2 ordering, at ingest time). */
-  def prepareStream(docs: DataFrame, minQuality: Double = 0.3,
-                    horizon: String = "1 day"): DataFrame =
-    dedupByContent(gateAndScrub(docs, minQuality), horizon,
+  def prepareStream(docs: DataFrame, horizon: String = "1 day"): DataFrame =
+    dedupByContent(gateAndScrub(docs), horizon,
       textCol = "text_redacted")
 
   /** Ingest-time LEARNED gate — the m83 classifier applied to arriving
@@ -77,12 +76,12 @@ object StreamingCorpus {
     * with micro-batch size, not corpus size; identical semantics to the
     * batch operator by construction (foreachBatch delegates to it). */
   def nearDupAdmission(docs: DataFrame, indexed: DataFrame,
-                       threshold: Double = 0.6, dfCap: Int = 50)(
+                       threshold: Double = 0.6)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         sink(graft.dedup.IncrementalNearDup.probeIndex(
-          batch, indexed, threshold = threshold, dfCap = dfCap), id)
+          batch, indexed, threshold = threshold), id)
       }
       .start()
 

@@ -19,9 +19,8 @@ object StreamingIngest {
 
   /** Daily event counts as a streaming aggregation (the legacy A6 summary
     * query, incrementalized). */
-  def dailyCounts(spark: SparkSession, rawRoot: String,
-                  maxFilesPerTrigger: Int = 10): DataFrame =
-    Sources.rawEventsStream(spark, rawRoot, maxFilesPerTrigger)
+  def dailyCounts(spark: SparkSession, rawRoot: String): DataFrame =
+    Sources.rawEventsStream(spark, rawRoot)
       .withWatermark("event_time", "1 day")
       .groupBy(window(col("event_time"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -29,16 +28,14 @@ object StreamingIngest {
 
   /** Streaming exact dedup — the ingest-time twin of
     * [[graft.dedup.ExactDedup]]: rows whose key columns repeat within the
-    * watermark horizon are dropped as they arrive, with state bounded by
+    * 1-day `event_time` watermark are dropped as they arrive, with state bounded by
     * the watermark (dropDuplicatesWithinWatermark evicts expired keys —
     * a plain dropDuplicates would grow state forever on an unbounded
     * stream). At 100 TB/day this is the front-door dedup that keeps exact
     * copies from ever landing in the lake; the batch operators own
     * historical/near-dup passes. */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-                  eventTimeCol: String = "event_time",
-                  horizon: String = "1 day"): DataFrame =
-    events.withWatermark(eventTimeCol, horizon)
+  def dedupStream(events: DataFrame, keyCols: Seq[String]): DataFrame =
+    events.withWatermark("event_time", "1 day")
       .dropDuplicatesWithinWatermark(keyCols)
 
   /** Run to completion over all currently-available files and stop

@@ -38,18 +38,18 @@ object Bm25 {
   /** Pre-aggregation token stream: one row per token occurrence, with the
     * doc's token count `dl` computed in the same projection (an array
     * `size` before the explode — no second scan, no doc_id shuffle). */
-  private def tokenStream(docs: DataFrame, textCol: String): DataFrame =
-    docs.filter(col(textCol).isNotNull)
+  private def tokenStream(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        filter(tokens(col(textCol)), t => t =!= "").as("toks"))
+        filter(tokens(col("text")), t => t =!= "").as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))
 
   /** (doc_id, term, tf, dl) postings over non-null-text docs; `dl` is the
     * doc's non-empty token count. Docs with zero tokens contribute no
     * postings but still count in the corpus stats (N, avgdl). */
-  def postings(docs: DataFrame, textCol: String = "text"): DataFrame =
-    tokenStream(docs, textCol)
+  def postings(docs: DataFrame): DataFrame =
+    tokenStream(docs)
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
 
@@ -57,9 +57,9 @@ object Bm25 {
     * avgdl is derived as the exact integer-sum division
     * `sum_dl.toDouble / n_docs` in the scoring expression, so the oracle's
     * division is the same two operands. */
-  def corpusStats(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(size(filter(tokens(col(textCol)), t => t =!= ""))
+  def corpusStats(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(size(filter(tokens(col("text")), t => t =!= ""))
         .cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
 
@@ -69,19 +69,17 @@ object Bm25 {
     * Self-hits (doc_id == query_id) are excluded, matching the ANN tier's
     * convention (m08). Returns (query_id, rank, doc_id, n_terms_hit,
     * score) where score = Σ_terms floor(bm25_term·10⁶) / 10⁶. */
-  def topK(docs: DataFrame, queryTerms: DataFrame, k: Int,
-           k1: Double = 1.2, b: Double = 0.75,
-           textCol: String = "text"): DataFrame = {
+  def topK(docs: DataFrame, queryTerms: DataFrame, k: Int): DataFrame = {
     // broadcast-prune the raw token stream BEFORE the tf aggregate: the
     // only corpus-sized exchange then carries query-term postings (map-
     // side-combined), not the full vocabulary. tf/df over the kept terms
     // are identical to full-postings values — pruning by term drops no
     // occurrence of a kept term.
-    val pruned = tokenStream(docs, textCol)
+    val pruned = tokenStream(docs)
       .join(broadcast(queryTerms.select("term").distinct()), Seq("term"))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-    score(pruned, corpusStats(docs, textCol), queryTerms, k, k1, b)
+    score(pruned, corpusStats(docs), queryTerms, k)
   }
 
   /** Serving path over a STORED postings index (m112): `postings` is the
@@ -93,16 +91,16 @@ object Bm25 {
     * global df for those terms, and everything downstream is identical
     * integer arithmetic. */
   def topKStored(postings: DataFrame, stats: DataFrame,
-                 queryTerms: DataFrame, k: Int,
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame =
+                 queryTerms: DataFrame, k: Int): DataFrame =
     score(
       postings.join(broadcast(queryTerms.select("term").distinct()), Seq("term"))
         .select("doc_id", "dl", "term", "tf"),
-      stats, queryTerms, k, k1, b)
+      stats, queryTerms, k)
 
+  /** The shared scoring tail, at the standard k1 = 1.2, b = 0.75. */
   private def score(pruned: DataFrame, stats: DataFrame,
-                    queryTerms: DataFrame, k: Int,
-                    k1: Double, b: Double): DataFrame = {
+                    queryTerms: DataFrame, k: Int): DataFrame = {
+    val (k1, b) = (1.2, 0.75)
     val df = pruned.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = pruned
       .join(broadcast(df), Seq("term"))
@@ -132,11 +130,10 @@ object Bm25 {
   /** Bag-of-words queries derived from documents: the first `maxTerms`
     * DISTINCT terms of each query doc in order of first appearance —
     * deterministic, SQL-replayable. */
-  def queryBags(queryDocs: DataFrame, maxTerms: Int,
-                textCol: String = "text"): DataFrame = {
-    val first = queryDocs.filter(col(textCol).isNotNull)
+  def queryBags(queryDocs: DataFrame, maxTerms: Int): DataFrame = {
+    val first = queryDocs.filter(col("text").isNotNull)
       .select(col("doc_id").as("query_id"),
-        posexplode(filter(tokens(col(textCol)), t => t =!= "")))
+        posexplode(filter(tokens(col("text")), t => t =!= "")))
       .groupBy("query_id", "col")
       .agg(min("pos").as("first_pos"))
     val w = Window.partitionBy("query_id")

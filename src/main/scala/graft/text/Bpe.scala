@@ -77,19 +77,18 @@ object Bpe {
     syms
   }
 
-  /** Learn `nMerges` ranked merges from a bounded deterministic sample of
-    * `docs`. Words are lowercase whitespace tokens (the corpus contract
+  /** Learn `nMerges` ranked merges from a deterministic 4096-doc sample
+    * of `docs`. Words are lowercase whitespace tokens (the corpus contract
     * shared by every text operator here). Dev/prototype trainer — the
     * production path is [[trainDistributed]], whose pair statistics see
     * the WHOLE corpus through one distributed word-count instead of a
     * fixed-size document sample. */
-  def train(docs: DataFrame, nMerges: Int, textCol: String = "text",
-            sampleDocs: Int = 4096): Model = {
+  def train(docs: DataFrame, nMerges: Int): Model = {
     require(nMerges >= 0, "nMerges must be non-negative") // before any work
-    val texts = docs.filter(col(textCol).isNotNull)
+    val texts = docs.filter(col("text").isNotNull)
       .orderBy(xxhash64(col("doc_id")).asc, col("doc_id").asc)
-      .limit(sampleDocs)
-      .select(lower(trim(col(textCol)))).collect().map(_.getString(0))
+      .limit(4096)
+      .select(lower(trim(col("text")))).collect().map(_.getString(0))
     val wordFreq = scala.collection.mutable.HashMap.empty[String, Long]
     texts.foreach(_.split(" +").foreach { w =>
       if (w.nonEmpty) wordFreq.update(w, wordFreq.getOrElse(w, 0L) + 1L)
@@ -119,15 +118,14 @@ object Bpe {
     * the vocabulary this is BIT-IDENTICAL to [[train]] over the same
     * documents (spec-pinned). */
   def trainDistributed(docs: DataFrame, nMerges: Int,
-                       textCol: String = "text",
-                       maxWords: Int = 1 << 16): Model = {
+                       maxWords: Int = WordTables.MaxWords): Model = {
     // fail BEFORE the corpus word-count runs, not after (mergeLoop's own
     // require would only fire once the distributed pass has been paid)
     require(nMerges >= 0, "nMerges must be non-negative")
     // Word table + cap + drop-mass report shared with the unigram
     // trainer — [[WordTables.withCapped]] owns the "corpus touched
     // ONCE" contract and the no-silent-caps rule (ADVICE r14).
-    WordTables.withCapped(docs, textCol, maxWords, "bpe") { (_, table) =>
+    WordTables.withCapped(docs, maxWords, "bpe") { (_, table) =>
       mergeLoop(table.toMap, nMerges)
     }
   }
@@ -185,13 +183,12 @@ object Bpe {
     * n_bpe_tokens, bpe_per_word) — what a token-budget mix builder reads.
     * One shuffle-free map; the merge table rides the closure; a
     * per-partition word memo amortizes repeated words. */
-  def tokenStats(docs: DataFrame, model: Model,
-                 textCol: String = "text"): DataFrame = {
+  def tokenStats(docs: DataFrame, model: Model): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val ranks = model.ranks
-    val narrowed = docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), lower(trim(col(textCol))))
+    val narrowed = docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), lower(trim(col("text"))))
       .as[(Long, String)]
     narrowed.mapPartitions { it =>
       val memo = scala.collection.mutable.HashMap.empty[String, Int]
@@ -223,12 +220,11 @@ object Bpe {
     * corpus size), which is why a driver-bounded global window is
     * correct here where it would be a scale bug on corpus-sized data
     * (the PrefixSum rule). */
-  def tokenCoverage(docs: DataFrame, model: Model,
-                    textCol: String = "text"): DataFrame = {
+  def tokenCoverage(docs: DataFrame, model: Model): DataFrame = {
     val ranks = model.ranks
     val enc = udf { w: String => encodeWord(w, ranks).toArray }
-    val words = docs.filter(col(textCol).isNotNull)
-      .select(explode(split(lower(trim(col(textCol))), " +")).as("w"))
+    val words = docs.filter(col("text").isNotNull)
+      .select(explode(split(lower(trim(col("text"))), " +")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n_w"))
     val tokens = words

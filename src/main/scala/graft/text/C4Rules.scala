@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Line rules (a line survives iff ALL hold):
   *   - ends in terminal punctuation (`.` `!` `?` `"`);
-  *   - has ≥ `minLineWords` whitespace words (paper: 3);
+  *   - has ≥ 3 whitespace words (the paper's floor);
   *   - does not contain the word "javascript" (the enable-JS banner).
   * Page rules (the doc passes iff ALL hold):
-  *   - ≥ `minSentences` sentences in the KEPT text (paper: 5; sentences
+  *   - ≥ 5 sentences in the KEPT text (the paper's floor; sentences
   *     counted as terminal-punctuation marks `[.!?]` — the cheap proxy
   *     the public C4 reimplementations use in place of a sentence
   *     splitter, which isn't on the cluster);
@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *     the RAW text (page flags look at the page, not the kept lines);
   *   - at least one kept line.
   * The paper's blocklist is the "List of Dirty, Naughty …" (not
-  * shipped); callers pass their own — the default is the two-word
-  * sample the synthetic fixture plants.
+  * shipped); the rules use the two-word sample the synthetic fixture
+  * plants.
   *
   * Scale shape: one codegen'd projection per document — split, filter,
   * rejoin and count entirely inside whole-stage codegen; ZERO exchanges
@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   */
 object C4Rules {
 
-  /** Blocklist sample for the synthetic corpus; production callers pass
-    * the real list (it broadcasts as a literal array either way). */
+  /** Blocklist sample for the synthetic corpus (it broadcasts as a
+    * literal array). */
   val BlocklistSample: Seq[String] = Seq("casino", "jackpot")
 
   /** Per-doc C4 rule card + the rewritten page. Output: (doc_id,
@@ -43,15 +43,13 @@ object C4Rules {
     * has_badword, r_min_sentences, pass, text_clean). Docs that fail
     * still appear (card semantics — the gate is the caller's filter on
     * `pass`); null-text docs are excluded up front (corpus contract). */
-  def c4Rules(docs: DataFrame, textCol: String = "text",
-              minLineWords: Int = 3, minSentences: Int = 5,
-              blocklist: Seq[String] = BlocklistSample): DataFrame = {
-    val t = col(textCol)
+  def c4Rules(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val lines = split(t, "\n")
     val keepLine = (l: Column) =>
       (l.endsWith(".") || l.endsWith("!") || l.endsWith("?") ||
         l.endsWith("\"")) &&
-        size(split(trim(l), " +")) >= minLineWords &&
+        size(split(trim(l), " +")) >= 3 &&
         !l.contains("javascript")
     val kept = filter(lines, keepLine)
     val textClean = array_join(kept, "\n")
@@ -61,11 +59,11 @@ object C4Rules {
     // must not count toward the sentence floor.
     val nSent = length(regexp_replace(textClean, "[^.!?]", "")).cast("long")
     val words = regexp_extract_all(lower(t), lit("[a-z0-9]+"), lit(0))
-    val bad = array(blocklist.map(lit): _*)
+    val bad = array(BlocklistSample.map(lit): _*)
     val hasLorem = t.contains("lorem ipsum").cast("long")
     val hasBrace = (t.contains("{") || t.contains("}")).cast("long")
     val hasBadword = arrays_overlap(words, bad).cast("long")
-    val rSent = (nSent >= minSentences).cast("long")
+    val rSent = (nSent >= 5).cast("long")
     docs.filter(t.isNotNull)
       .select(col("doc_id"), nLines.as("n_lines"), nKept.as("n_kept_lines"),
         nSent.as("n_sentences"), hasLorem.as("has_lorem"),

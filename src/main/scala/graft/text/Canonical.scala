@@ -34,12 +34,12 @@ object Canonical {
     trim(regexp_replace(translate(plain, "\u00A0", " "), "\\s+", " "))
   }
 
-  /** (doc_id, canonical, n_raw_chars, n_canonical_chars) over `textCol`;
+  /** (doc_id, canonical, n_raw_chars, n_canonical_chars) over `text`;
     * null text rows pass through with null canonical (the caller's
     * null policy stays theirs). */
-  def canonicalized(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def canonicalized(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      canonicalize(col(textCol)).as("canonical"),
-      length(col(textCol)).cast("long").as("n_raw_chars"),
-      length(canonicalize(col(textCol))).cast("long").as("n_canonical_chars"))
+      canonicalize(col("text")).as("canonical"),
+      length(col("text")).cast("long").as("n_raw_chars"),
+      length(canonicalize(col("text"))).cast("long").as("n_canonical_chars"))
 }

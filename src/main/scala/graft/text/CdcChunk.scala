@@ -57,10 +57,10 @@ object CdcChunk {
     }
 
   /** (doc_id, chunk_idx, chunk_text, n_tokens) per content-defined chunk. */
-  def chunks(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def chunks(docs: DataFrame): DataFrame =
     docs
-      .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
-      .select(col("doc_id"), explode(cdcUdf(col(textCol))).as("c"))
+      .filter(col("text").isNotNull && trim(col("text")) =!= "")
+      .select(col("doc_id"), explode(cdcUdf(col("text"))).as("c"))
       .select(col("doc_id"), col("c.chunk_idx").as("chunk_idx"),
         col("c.chunk_text").as("chunk_text"), col("c.n_tokens").as("n_tokens"))
 }

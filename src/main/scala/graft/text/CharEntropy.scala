@@ -27,11 +27,11 @@ object CharEntropy {
     * documents; entropy in nats over the character distribution. Runs on
     * the codegen'd [[graft.functions.CharProfile]] expression — the scan,
     * profile and projection fuse into one whole-stage pipeline. */
-  def entropy(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def entropy(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    docs.filter(col(textCol).isNotNull && length(col(textCol)) > 0)
+    docs.filter(col("text").isNotNull && length(col("text")) > 0)
       .select(col("doc_id"),
-        graft.functions.GraftFunctions.charProfile(spark, col(textCol)).as("e"))
+        graft.functions.GraftFunctions.charProfile(spark, col("text")).as("e"))
       .select(col("doc_id"), col("e.n_chars_counted"), col("e.char_types"),
         col("e.char_entropy"))
   }

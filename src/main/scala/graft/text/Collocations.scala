@@ -32,11 +32,10 @@ object Collocations {
   /** (w1, w2, c_xy, c_x, c_y, pmi) for all adjacent-token bigrams with
     * c_xy ≥ minCount. Unigram counts include every token (document-final
     * tokens too) — the textbook marginal, mirrored by the oracle. */
-  def pmiBigrams(docs: DataFrame, minCount: Long = 5L,
-                 textCol: String = "text"): DataFrame = {
+  def pmiBigrams(docs: DataFrame, minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, "minCount must be >= 1")
-    val toks = docs.filter(col(textCol).isNotNull)
-      .select(split(lower(trim(col(textCol))), " +").as("t"))
+    val toks = docs.filter(col("text").isNotNull)
+      .select(split(lower(trim(col("text"))), " +").as("t"))
     val bigrams = toks.select(explode(zip_with(
         slice(col("t"), lit(1), size(col("t")) - 1),
         slice(col("t"), lit(2), size(col("t")) - 1),

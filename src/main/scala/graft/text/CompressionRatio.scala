@@ -28,16 +28,15 @@ import org.apache.spark.sql.functions._
 object CompressionRatio {
 
   /** (doc_id, n_raw_bytes, n_deflated_bytes, compression_ratio) with
-    * ratio = deflated/raw (empty docs report ratio 1.0). */
-  def ratios(docs: DataFrame, textCol: String = "text",
-             level: Int = 6): DataFrame = {
-    require(level >= 1 && level <= 9, "deflate level must be in [1,9]")
+    * ratio = deflated/raw at deflate level 6 (empty docs report ratio
+    * 1.0). */
+  def ratios(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id"), col(textCol).as("t")).as[(Long, String)]
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), col("text").as("t")).as[(Long, String)]
       .mapPartitions { it =>
-        val deflater = new java.util.zip.Deflater(level, false)
+        val deflater = new java.util.zip.Deflater(6, false)
         val buf = new Array[Byte](1 << 16)
         val mapped = it.map { case (id, text) =>
           val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)

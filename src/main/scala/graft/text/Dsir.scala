@@ -73,14 +73,13 @@ object Dsir {
     * Results are BIT-identical to the default plan (spec-pinned). */
   def importanceWeights(docs: DataFrame, isTarget: Column,
                         buckets: Int = 1024, selectFrac: Double = 0.2,
-                        textCol: String = "text",
                         shufflePartitions: Option[Int] = None): DataFrame = {
     require(selectFrac > 0.0 && selectFrac < 1.0, "selectFrac must be in (0,1)")
     require(shufflePartitions.forall(_ > 0), "shufflePartitions must be > 0")
     val t = col("t")
-    val grams = docs.filter(col(textCol).isNotNull)
+    val grams = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), isTarget.as("is_target"),
-        split(lower(trim(col(textCol))), " +").as("t"))
+        split(lower(trim(col("text"))), " +").as("t"))
       .filter(size(t) >= 2)
       .select(col("doc_id"), col("is_target"),
         explode(zip_with(

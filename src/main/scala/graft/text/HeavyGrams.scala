@@ -65,12 +65,11 @@ object HeavyGrams {
     * corpus count reaches floor(N/(k+1)) + 1, where N is the total gram
     * occurrence count. Tokenization is the corpus contract
     * ([[TextOps.tokens]]); docs shorter than w contribute nothing. */
-  def heavyGrams(docs: DataFrame, w: Int = 3, k: Int = 1000,
-                 textCol: String = "text"): DataFrame = {
+  def heavyGrams(docs: DataFrame, w: Int = 3, k: Int = 1000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val t = TextOps.tokens(col(textCol))
-    val grams: Dataset[String] = docs.filter(col(textCol).isNotNull)
+    val t = TextOps.tokens(col("text"))
+    val grams: Dataset[String] = docs.filter(col("text").isNotNull)
       .select(t.as("t"))
       .select(explode(when(size(col("t")) >= w,
         transform(sequence(lit(1), size(col("t")) - w + 1),

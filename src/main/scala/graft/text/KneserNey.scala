@@ -102,16 +102,11 @@ object KneserNey {
   }
 
   /** Raw order-n count table (g1..gn, cnt) — the LM sufficient
-    * statistic; `minCount` prunes the singleton tail at scale (the
-    * [[NgramLm.bigramCounts]] convention). */
-  def ngramCounts(docs: DataFrame, textCol: String = "text", order: Int,
-                  minCount: Long = 1L): DataFrame = {
-    require(minCount >= 1, "minCount must be >= 1")
+    * statistic. */
+  def ngramCounts(docs: DataFrame, textCol: String = "text", order: Int): DataFrame =
     gramsOfN(docs, textCol, order)
       .groupBy((1 to order).map(i => col(s"g$i")): _*)
       .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
-  }
 
   /** The single interpolated-discount estimate D = n1/(n1 + 2·n2),
     * 0-guarded (no 0/0 under ANSI). */
@@ -123,7 +118,7 @@ object KneserNey {
     * Output: (doc_id, n_bigrams|n_trigrams|n_<k>grams, cross_entropy,
     * perplexity); docs with < order tokens are absent. */
   private def knScore(docs: DataFrame, raw: DataFrame, order: Int,
-                      modifiedTop: Boolean, textCol: String): DataFrame = {
+                      modifiedTop: Boolean): DataFrame = {
     require(order >= 2, s"KN order must be >= 2, got $order")
     val n = order
 
@@ -214,7 +209,7 @@ object KneserNey {
           col(c).as(s"g${c.drop(1).toInt + (n - k)}")
         else col(c)
       }: _*)
-    var joined = gramsOfN(docs, textCol, n)
+    var joined = gramsOfN(docs, "text", n)
       .join(raw.withColumnRenamed("cnt", s"cnt$n"),
         (1 to n).map(i => s"g$i"), "left")
       .join(renameTo(ctx(n), n), (1 to (n - 1)).map(i => s"g$i"), "left")
@@ -281,75 +276,63 @@ object KneserNey {
     * (doc_id, n_bigrams, cross_entropy, perplexity) under interpolated
     * KN. Docs with < 2 tokens have no bigrams and are absent (the m43
     * contract). See the object doc for the held-out n1 = 0 edge. */
-  def scoreAgainst(docs: DataFrame, counts: DataFrame,
-                   textCol: String = "text"): DataFrame =
-    knScore(docs, toRaw(counts, 2), 2, modifiedTop = false, textCol)
+  def scoreAgainst(docs: DataFrame, counts: DataFrame): DataFrame =
+    knScore(docs, toRaw(counts, 2), 2, modifiedTop = false)
 
   /** Self-perplexity: train and score on the same corpus — the
     * no-external-LM quality gate under the canon smoothing. Every gram
     * is realized, so no backoff branch can hit a zero: the output is
     * finite by construction. */
-  def selfPerplexity(docs: DataFrame, textCol: String = "text",
-                     minCount: Long = 1L): DataFrame =
-    scoreAgainst(docs, NgramLm.bigramCounts(docs, textCol, minCount), textCol)
+  def selfPerplexity(docs: DataFrame): DataFrame =
+    scoreAgainst(docs, NgramLm.bigramCounts(docs))
 
   /** MODIFIED KN over a bigram count table (a, b, cab) — per-count
     * top-level discounts (the object doc's D1/D2/D3+ ladder). */
-  def modifiedScoreAgainst(docs: DataFrame, counts: DataFrame,
-                           textCol: String = "text"): DataFrame =
-    knScore(docs, toRaw(counts, 2), 2, modifiedTop = true, textCol)
+  def modifiedScoreAgainst(docs: DataFrame, counts: DataFrame): DataFrame =
+    knScore(docs, toRaw(counts, 2), 2, modifiedTop = true)
 
   /** Modified-KN self-perplexity — [[selfPerplexity]] under the KenLM
     * default discounts. */
-  def modifiedSelfPerplexity(docs: DataFrame, textCol: String = "text",
-                             minCount: Long = 1L): DataFrame =
-    modifiedScoreAgainst(docs, NgramLm.bigramCounts(docs, textCol, minCount), textCol)
+  def modifiedSelfPerplexity(docs: DataFrame): DataFrame =
+    modifiedScoreAgainst(docs, NgramLm.bigramCounts(docs))
 
   /** Trigram count table (a, b, c, cabc) — the order-3 LM sufficient
     * statistic ([[ngramCounts]] under the public column names). */
-  def trigramCounts(docs: DataFrame, textCol: String = "text",
-                    minCount: Long = 1L): DataFrame =
-    ngramCounts(docs, textCol, 3, minCount).toDF("a", "b", "c", "cabc")
+  def trigramCounts(docs: DataFrame): DataFrame =
+    ngramCounts(docs, "text", 3).toDF("a", "b", "c", "cabc")
 
   /** TRIGRAM interpolated KN over a count table (a, b, c, cabc) — the
     * order-3 recursion: trigram discounts over the raw table, the
     * bigram level on CONTINUATION counts c'(bc) = N1+(·bc), the m138
     * unigram level, uniform 1/V termination. */
-  def trigramScoreAgainst(docs: DataFrame, counts3: DataFrame,
-                          textCol: String = "text"): DataFrame =
-    knScore(docs, toRaw(counts3, 3), 3, modifiedTop = false, textCol)
+  def trigramScoreAgainst(docs: DataFrame, counts3: DataFrame): DataFrame =
+    knScore(docs, toRaw(counts3, 3), 3, modifiedTop = false)
 
   /** Trigram-KN self-perplexity — the order-3 no-external-LM gate.
     * Docs with < 3 tokens have no trigrams and are absent. */
-  def trigramSelfPerplexity(docs: DataFrame, textCol: String = "text",
-                            minCount: Long = 1L): DataFrame =
-    trigramScoreAgainst(docs, trigramCounts(docs, textCol, minCount), textCol)
+  def trigramSelfPerplexity(docs: DataFrame): DataFrame =
+    trigramScoreAgainst(docs, trigramCounts(docs))
 
   /** TRIGRAM MODIFIED KN (m145) — order 3 with the per-count D1/D2/D3+
     * ladder at the trigram level: the entry point of the configuration
     * public KenLM actually defaults to (modified KN at order 3–5). */
-  def modifiedTrigramScoreAgainst(docs: DataFrame, counts3: DataFrame,
-                                  textCol: String = "text"): DataFrame =
-    knScore(docs, toRaw(counts3, 3), 3, modifiedTop = true, textCol)
+  def modifiedTrigramScoreAgainst(docs: DataFrame, counts3: DataFrame): DataFrame =
+    knScore(docs, toRaw(counts3, 3), 3, modifiedTop = true)
 
   /** Modified trigram-KN self-perplexity. */
-  def modifiedTrigramSelfPerplexity(docs: DataFrame, textCol: String = "text",
-                                    minCount: Long = 1L): DataFrame =
-    modifiedTrigramScoreAgainst(docs, trigramCounts(docs, textCol, minCount), textCol)
+  def modifiedTrigramSelfPerplexity(docs: DataFrame): DataFrame =
+    modifiedTrigramScoreAgainst(docs, trigramCounts(docs))
 
   /** Score held-out docs against an order-n count table in the
     * [[ngramCounts]] (g1..gn, cnt) form — the generic entry point that
     * makes the order-4/5 configurations reachable without new
     * plumbing. */
   def scoreAgainstN(docs: DataFrame, counts: DataFrame, order: Int,
-                    modified: Boolean = false,
-                    textCol: String = "text"): DataFrame =
-    knScore(docs, counts, order, modified, textCol)
+                    modified: Boolean = false): DataFrame =
+    knScore(docs, counts, order, modified)
 
   /** Order-n self-perplexity. */
   def selfPerplexityN(docs: DataFrame, order: Int,
-                      modified: Boolean = false, textCol: String = "text",
-                      minCount: Long = 1L): DataFrame =
-    knScore(docs, ngramCounts(docs, textCol, order, minCount), order,
-      modified, textCol)
+                      modified: Boolean = false): DataFrame =
+    knScore(docs, ngramCounts(docs, "text", order), order, modified)
 }

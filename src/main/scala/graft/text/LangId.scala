@@ -204,13 +204,11 @@ object LangId {
     * fixed-point full-batch GD through the shared fold
     * ([[FixedPointGd.fit]] — driver fold below its gate, one distributed
     * aggregate per iteration above it, deterministic early stop,
-    * bit-identical either way and under any partitioning). `docs` needs
-    * (`langCol`, `textCol`); rows with null label/text or no grams are
-    * excluded. */
-  def train(docs: DataFrame, textCol: String = "text",
-            langCol: String = "lang", iters: Int = 500, lr: Double = 300.0,
-            stopInv: Long = FixedPointGd.DefaultStopInv): Model = {
-    val feats = trainRows(docs, textCol, langCol)
+    * bit-identical either way and under any partitioning) at lr 300
+    * (the [[Model]] note). `docs` needs (`lang`, `text`); rows with
+    * null label/text or no grams are excluded. */
+  def train(docs: DataFrame, iters: Int = 500): Model = {
+    val feats = trainRows(docs, "text", "lang")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // class list: bounded by the number of languages, sorted; the
@@ -221,7 +219,7 @@ object LangId {
       val clsIdx = classes.zipWithIndex.toMap
       val k = classes.length
       val fit = FixedPointGd.fit(feats, k * D, LocalTrainMaxRows,
-        TrainRowsPerPartition, iters, lr, stopInv) {
+        TrainRowsPerPartition, iters, 300.0, FixedPointGd.DefaultStopInv) {
         case (acc, w, (lang, idxs, xs)) => accumulate(acc, w, k, clsIdx(lang), idxs, xs)
       }
       fit.fold(Model(Array.empty, Array.empty, 0L, Array.empty, Array.empty)) { f =>
@@ -301,16 +299,15 @@ object LangId {
     * quantized weights in the closure: (doc_id, lang, pred_lang, margin,
     * n_grams). Null-text docs are excluded (no features — the m83
     * convention); gram-less docs report ('unknown', 0.0, 0). */
-  def score(docs: DataFrame, model: Model, textCol: String = "text",
-            langCol: String = "lang"): DataFrame = {
+  def score(docs: DataFrame, model: Model): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val wq = model.quantized
     val classes = model.classes
     val k = classes.length
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), col(langCol).cast("string"),
-        col(textCol))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), col("lang").cast("string"),
+        col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -361,17 +358,15 @@ object LangId {
     * it by 1e-9/n, invisible at the 6-dp gate); this is the same
     * residual the m89 floor(ppl·1e6) integer key carries, green since
     * its round. */
-  def scoreCalibrated(docs: DataFrame, model: Model,
-                      textCol: String = "text",
-                      langCol: String = "lang"): DataFrame = {
+  def scoreCalibrated(docs: DataFrame, model: Model): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val wq = model.quantized
     val classes = model.classes
     val k = classes.length
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), col(langCol).cast("string"),
-        col(textCol))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), col("lang").cast("string"),
+        col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")

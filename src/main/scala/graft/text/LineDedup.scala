@@ -59,10 +59,10 @@ object LineDedup {
     *
     * Output: (doc_id, text_clean, n_lines, n_struck); docs whose every
     * line lost its race are absent. */
-  def keepFirstLines(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def keepFirstLines(docs: DataFrame): DataFrame = {
     val lines = docs
-      .filter(col(textCol).isNotNull)
-      .select(col("doc_id"), split(col(textCol), "\n").as("ls"))
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), split(col("text"), "\n").as("ls"))
       .select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"),
         posexplode(col("ls")).as(Seq("line_no", "line")))
       .withColumn("h", xxhash64(col("line")))
@@ -82,12 +82,11 @@ object LineDedup {
         (max(col("n_lines")) - count(lit(1))).cast("long").as("n_struck"))
   }
 
-  def dedupLines(docs: DataFrame, minDocs: Int,
-                 textCol: String = "text"): DataFrame = {
+  def dedupLines(docs: DataFrame, minDocs: Int): DataFrame = {
     require(minDocs > 1, "minDocs must be > 1 (1 would drop every line)")
     val lines = docs
-      .filter(col(textCol).isNotNull)
-      .select(col("doc_id"), split(col(textCol), "\n").as("ls"))
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), split(col("text"), "\n").as("ls"))
       .select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"),
         posexplode(col("ls")).as(Seq("line_no", "line")))
     val heavy = lines

@@ -74,11 +74,11 @@ object Luhn {
     * digit runs with ≥ 13 digits, n_cc_valid the subset holding a
     * Luhn-verified block-aligned 13–19-digit window (the runs a scrub
     * would actually redact). */
-  def cardCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def cardCounts(docs: DataFrame): DataFrame = {
     val cands = filter(
-      regexp_extract_all(col(textCol), lit(CandidateRe), lit(0)),
+      regexp_extract_all(col("text"), lit(CandidateRe), lit(0)),
       s => length(digitsOnly(s)) >= 13)
-    docs.filter(col(textCol).isNotNull)
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
         size(cands).cast("long").as("n_candidates"),
         size(filter(cands, s => hasCardWindow(s)))

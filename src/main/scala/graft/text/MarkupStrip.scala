@@ -50,11 +50,11 @@ object MarkupStrip {
     trim(regexp_replace(decoded, "\\s+", " "))
   }
 
-  /** (doc_id, extracted, n_markup_chars, n_text_chars) over `htmlCol`;
+  /** (doc_id, extracted, n_markup_chars, n_text_chars) over `text`;
     * null rows pass through with null output (caller's null policy). */
-  def stripMarkup(docs: DataFrame, htmlCol: String = "text"): DataFrame =
+  def stripMarkup(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      extractText(col(htmlCol)).as("extracted"),
-      length(col(htmlCol)).cast("long").as("n_markup_chars"),
-      length(extractText(col(htmlCol))).cast("long").as("n_text_chars"))
+      extractText(col("text")).as("extracted"),
+      length(col("text")).cast("long").as("n_markup_chars"),
+      length(extractText(col("text"))).cast("long").as("n_text_chars"))
 }

@@ -70,11 +70,10 @@ object MaximalRepeats {
     * whole-short-doc windows); `n_windows` the repeated suffix-prefix
     * groups the span coalesced (= span_len − w + 1 except for short
     * docs). */
-  def spans(docs: DataFrame, w: Int = 10, minDocs: Int = 2,
-            textCol: String = "text"): DataFrame = {
+  def spans(docs: DataFrame, w: Int = 10, minDocs: Int = 2): DataFrame = {
     require(w > 0, "w must be positive")
     require(minDocs > 1, "minDocs must be > 1 (1 flags every position)")
-    val windows = RepeatedWindows.windowFingerprintsRawWithLen(docs, w, textCol)
+    val windows = RepeatedWindows.windowFingerprintsRawWithLen(docs, w)
       .pinned(true)
     val repeated = windows
       .select("fp", "doc_id").distinct()

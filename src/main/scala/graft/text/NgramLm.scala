@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   */
 object NgramLm {
 
-  private[text] def gramsOf(docs: DataFrame, textCol: String): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), " +")
-    docs.filter(col(textCol).isNotNull)
+  private[text] def gramsOf(docs: DataFrame): DataFrame = {
+    val toks = split(lower(trim(col("text"))), " +")
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), explode(zip_with(
@@ -57,10 +57,9 @@ object NgramLm {
   /** Bigram count table (a, b, cab) — the trained LM. `minCount` prunes
     * the singleton tail (at 100 TB the realized-bigram table is the only
     * thing worth shipping; pruned mass still backs off through α). */
-  def bigramCounts(docs: DataFrame, textCol: String = "text",
-                   minCount: Long = 1L): DataFrame = {
+  def bigramCounts(docs: DataFrame, minCount: Long = 1L): DataFrame = {
     require(minCount >= 1, "minCount must be >= 1")
-    gramsOf(docs, textCol)
+    gramsOf(docs)
       .groupBy("a", "b").agg(count(lit(1)).as("cab"))
       .filter(col("cab") >= minCount)
   }
@@ -69,8 +68,7 @@ object NgramLm {
     * cross_entropy, perplexity). Docs with < 2 tokens have no bigrams and
     * are absent (the m22/m32 contract). Perplexity ≥ 1 always: each
     * smoothed p ≤ 1 because c(ab) ≤ c(a) and α ≤ α·V. */
-  def scoreAgainst(docs: DataFrame, counts: DataFrame, alpha: Double = 0.5,
-                   textCol: String = "text"): DataFrame = {
+  def scoreAgainst(docs: DataFrame, counts: DataFrame, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, "alpha must be > 0 (unsmoothed LM cannot score unseen grams)")
     val ctx = counts.groupBy("a").agg(sum("cab").as("ca"))
     val vocab = counts
@@ -81,7 +79,7 @@ object NgramLm {
     // The LM tables are gram-vocabulary-sized — broadcastable for the
     // minCount-pruned models a quality gate ships, NOT for a raw crawl's
     // full bigram table; AQE decides per run (the LineDedup lesson).
-    gramsOf(docs, textCol)
+    gramsOf(docs)
       .join(counts, Seq("a", "b"), "left")
       .join(ctx, Seq("a"), "left")
       .crossJoin(broadcast(vocab))
@@ -94,7 +92,6 @@ object NgramLm {
   /** Self-perplexity: train and score on the same corpus — the no-external-
     * LM quality gate (every gram is seen, so smoothing only tempers the
     * estimates; the tails still separate noise from boilerplate). */
-  def selfPerplexity(docs: DataFrame, alpha: Double = 0.5,
-                     textCol: String = "text"): DataFrame =
-    scoreAgainst(docs, bigramCounts(docs, textCol), alpha, textCol)
+  def selfPerplexity(docs: DataFrame, alpha: Double = 0.5): DataFrame =
+    scoreAgainst(docs, bigramCounts(docs), alpha)
 }

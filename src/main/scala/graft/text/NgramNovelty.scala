@@ -37,11 +37,10 @@ object NgramNovelty {
     * mean_log_freq) where a bigram is "rare" when its corpus count is
     * ≤ `rareMax`. Documents shorter than two tokens have no bigrams and
     * are absent (same contract as m22's NULL-gram exclusion). */
-  def bigramNovelty(docs: DataFrame, rareMax: Long,
-                    textCol: String = "text"): DataFrame = {
+  def bigramNovelty(docs: DataFrame, rareMax: Long): DataFrame = {
     require(rareMax >= 1, "rareMax must be >= 1")
-    val toks = split(lower(trim(col(textCol))), " +")
-    val grams = docs.filter(col(textCol).isNotNull)
+    val toks = split(lower(trim(col("text"))), " +")
+    val grams = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), explode(zip_with(

@@ -49,8 +49,8 @@ object PiiRedact {
     * email whose host embeds a dotted quad counts under both n_emails and
     * n_ips) — audit volume, not replacement count. Null text is excluded
     * up front (corpus contract, as in Repetition). */
-  def withRedaction(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def withRedaction(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.filter(t.isNotNull)
       .withColumn("n_emails", regexp_count(t, lit(EmailRe)).cast("long"))
       .withColumn("n_ips", regexp_count(t, lit(Ipv4Re)).cast("long"))
@@ -59,8 +59,8 @@ object PiiRedact {
   }
 
   /** Per-document redaction projection: (doc_id, counts, masked text). */
-  def redact(docs: DataFrame, textCol: String = "text"): DataFrame =
-    withRedaction(docs, textCol).select(
+  def redact(docs: DataFrame): DataFrame =
+    withRedaction(docs).select(
       col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
       col("text_redacted"))
 }

@@ -47,8 +47,8 @@ import org.apache.spark.sql.functions._
   * language cut — the distillation gap the spec measures. Label: the
   * m02 gate (lang_pred = 'en' AND quality ≥ 0.3). Training is
   * full-batch gradient descent on the regularization-free logistic loss
-  * — the simplest convex recipe that is exactly replayable; the default
-  * (iters = 500, lr = 8) carries the same lr·iters mass as the r14
+  * — the simplest convex recipe that is exactly replayable; iters = 500
+  * (the default) at lr = 8 carries the same lr·iters mass as the r14
   * 2000 × 2.0 recipe (measured same final loss and distillation
   * agreement at sf0.1) while keeping per-iteration loss monotone — the
   * spec's convergence certificate; fewer, larger steps matter once each
@@ -92,6 +92,9 @@ object QualityClassifier {
     * invariant. |loss| ≤ −ln(1e-15) ≈ 34.6 → |q| < 2^59; |e·f| ≤ 1 →
     * |q| ≤ 2^53. */
   private val QScale = FixedPointGd.QScale
+
+  /** The GD step size of both trainers (the object doc's lr = 8). */
+  private val Lr = 8.0
 
   private type ExactAcc = FixedPointGd.ExactAcc
 
@@ -138,7 +141,7 @@ object QualityClassifier {
       .select(col("doc_id") +: keep.map(col) :+ length(t).cast("double").as("nc")
         :+ TextOps.profile(t).as("p"): _*)
       .select(col("doc_id") +: keep.map(col) :+
-        when(col("p.lang_pred") === "en" && col("p.quality") >= 0.3, 1.0)
+        when(TextOps.passesGate(col("p.lang_pred"), col("p.quality")), 1.0)
           .otherwise(0.0).as("y") :+
         least(nw / lit(200.0), lit(1.0)).as("f1") :+
         least(stopRatio * lit(4.0), lit(1.0)).as("f2") :+
@@ -153,11 +156,10 @@ object QualityClassifier {
     * order — content-independent, partition-invariant), full-batch GD,
     * w init 0, the exact-accumulator fold. With `trainCap` covering the
     * corpus this is bit-identical to [[trainDistributed]] at the same
-    * (iters, lr) — spec-pinned. */
-  def train(docs: DataFrame, textCol: String = "text", trainCap: Int = 4096,
-            iters: Int = 500, lr: Double = 8.0,
+    * iters — spec-pinned. */
+  def train(docs: DataFrame, trainCap: Int = 4096, iters: Int = 500,
             stopInv: Long = FixedPointGd.DefaultStopInv): Model = {
-    val sample = featuresOf(docs, textCol)
+    val sample = featuresOf(docs)
       .withColumn("h", md5(concat(lit("qc:"), col("doc_id").cast("string"))))
       .orderBy(col("h"), col("doc_id"))
       .limit(trainCap)
@@ -168,7 +170,7 @@ object QualityClassifier {
           r.getDouble(6))))
     if (sample.isEmpty) return emptyModel
     val (w, losses) = FixedPointGd.loop(sample.length.toLong, NumFeatures + 1,
-      iters, lr, stopInv, { w =>
+      iters, Lr, stopInv, { w =>
         val acc = new ExactAcc(NumFeatures + 2)
         sample.foreach(accumulate(acc, w, _))
         acc.sums
@@ -187,11 +189,9 @@ object QualityClassifier {
     * trainer that sees every document instead of a 4096-doc sample; on
     * a 5k-doc fixture it is spec-pinned bit-identical to [[train]] with
     * `trainCap` ≥ corpus. */
-  def trainDistributed(docs: DataFrame, textCol: String = "text",
-                       iters: Int = 500, lr: Double = 8.0,
-                       stopInv: Long = FixedPointGd.DefaultStopInv): Model =
-    FixedPointGd.fit(trainRows(docs, textCol), NumFeatures + 1,
-        LocalTrainMaxRows, TrainRowsPerPartition, iters, lr, stopInv)(accumulate)
+  def trainDistributed(docs: DataFrame, iters: Int = 500): Model =
+    FixedPointGd.fit(trainRows(docs, "text"), NumFeatures + 1, LocalTrainMaxRows,
+        TrainRowsPerPartition, iters, Lr, FixedPointGd.DefaultStopInv)(accumulate)
       .fold(emptyModel)(f => Model(f.w, f.n, f.losses))
 
   /** The training rows (y, f1..f5) of every doc with text. */
@@ -218,10 +218,9 @@ object QualityClassifier {
     * codegen'd pass, (doc_id, label, logit, pred). `label` is the gate's
     * verdict, `pred` the classifier's (logit ≥ 0) — diffing them is the
     * distillation-error report. */
-  def score(docs: DataFrame, model: Model, textCol: String = "text",
-            keep: Seq[String] = Nil): DataFrame = {
+  def score(docs: DataFrame, model: Model, keep: Seq[String] = Nil): DataFrame = {
     require(model.w.length == NumFeatures + 1, "weight/feature arity mismatch")
-    val f = featuresOf(docs, textCol, keep)
+    val f = featuresOf(docs, keep = keep)
     // left-associated w0 + w1·f1 + … exactly as the oracle SQL writes it
     val z = lit(model.w(0)) + lit(model.w(1)) * col("f1") +
       lit(model.w(2)) * col("f2") + lit(model.w(3)) * col("f3") +
@@ -231,14 +230,8 @@ object QualityClassifier {
       (z >= 0.0).cast("long").as("pred"): _*)
   }
 
-  /** Train-then-score with per-run oracle capture (the [[graft.similarity.PcaPower]]
-    * captureKey recipe): the exact weights this run scored with are what
-    * the DuckDB replay inlines. */
-  def trainScore(docs: DataFrame, captureKey: Option[String] = None): DataFrame = {
-    val model = train(docs)
-    captureKey.foreach(k => graft.OracleCapture.put(k, model.w.toSeq))
-    score(docs, model)
-  }
+  /** Train ([[train]]) then score the same docs. */
+  def trainScore(docs: DataFrame): DataFrame = score(docs, train(docs))
 
   /** Decision-threshold grid for [[rocReport]] — data-independent logit
     * cuts (every value exactly representable, so the grid is identical
@@ -246,16 +239,6 @@ object QualityClassifier {
   val RocThresholds: Seq[Double] =
     Seq(-2.0, -1.5, -1.0, -0.5, 0.0, 0.5, 1.0, 1.5, 2.0)
 
-  /** Operating-characteristic report (m86): confusion counts + TPR / FPR /
-    * precision of `logit ≥ t` against the gate label, per threshold — the
-    * curve a rollout reads to PICK the threshold (the m85-style QA dial
-    * for the learned gate; `pred` in [[score]] is just the t = 0 point).
-    *
-    * Scale shape: one scoring pass; each row fans out to the |grid| = 9
-    * threshold rows inside its partition (codegen explode) and the
-    * partial aggregation collapses them before the exchange — 9 rows per
-    * partition cross the wire, 9 rows come out. No driver-side loop, no
-    * second corpus scan per threshold. */
   /** Calibration / reliability report (m98): per probability decile, how
     * the classifier's predicted probability compares to the observed
     * positive rate — the reliability-diagram table (DeGroot & Fienberg
@@ -297,12 +280,22 @@ object QualityClassifier {
       .drop("n_total")
   }
 
-  def rocReport(docs: DataFrame, model: Model,
-                thresholds: Seq[Double] = RocThresholds): DataFrame = {
+  /** Operating-characteristic report (m86): confusion counts + TPR / FPR /
+    * precision of `logit ≥ t` against the gate label, per threshold of
+    * [[RocThresholds]] — the curve a rollout reads to PICK the threshold
+    * (the m85-style QA dial for the learned gate; `pred` in [[score]] is
+    * just the t = 0 point).
+    *
+    * Scale shape: one scoring pass; each row fans out to the |grid| = 9
+    * threshold rows inside its partition (codegen explode) and the
+    * partial aggregation collapses them before the exchange — 9 rows per
+    * partition cross the wire, 9 rows come out. No driver-side loop, no
+    * second corpus scan per threshold. */
+  def rocReport(docs: DataFrame, model: Model): DataFrame = {
     require(model.w.length == NumFeatures + 1, "weight/feature arity mismatch")
     val scored = score(docs, model)
     scored
-      .select(explode(array(thresholds.map(lit): _*)).as("threshold"),
+      .select(explode(array(RocThresholds.map(lit): _*)).as("threshold"),
         col("label"), col("logit"))
       .select(col("threshold"), col("label"), (col("logit") >= col("threshold")).as("p"))
       .groupBy("threshold")

@@ -63,11 +63,10 @@ object RepeatedWindows {
     * twice — half the fingerprint bytes in the pinned snapshot and in
     * both exchanges; `lower(hex(fp))` restores the oracle's hex form on
     * the (repetition-mass-bounded) output. */
-  def windowFingerprintsRaw(docs: DataFrame, w: Int,
-                            textCol: String = "text"): DataFrame =
+  def windowFingerprintsRaw(docs: DataFrame, w: Int): DataFrame =
     // narrow projection of the WithLen pass; the drop happens BEFORE any
     // consumer pins/shuffles, so [[flag]]'s snapshot stays 3 columns
-    windowFingerprintsRawWithLen(docs, w, textCol)
+    windowFingerprintsRawWithLen(docs, w)
       .select("doc_id", "window_idx", "fp")
 
   /** [[windowFingerprintsRaw]] plus the document's token count on every
@@ -79,12 +78,11 @@ object RepeatedWindows {
     * in the consumer's snapshot; [[flag]]'s hot path keeps the narrower
     * relation. n_tokens equals `size(split(lower(trim(text)), " +"))`
     * exactly (same tokenizer, differential-spec pinned). */
-  def windowFingerprintsRawWithLen(docs: DataFrame, w: Int,
-                                   textCol: String = "text"): DataFrame = {
+  def windowFingerprintsRawWithLen(docs: DataFrame, w: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), col(textCol))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -117,17 +115,15 @@ object RepeatedWindows {
   /** Hex-fingerprint view of [[windowFingerprintsRaw]] — the public
     * (doc_id, window_idx, fp STRING) contract, row-identical to
     * [[windowFingerprintsColumns]] (differential-spec pinned). */
-  def windowFingerprints(docs: DataFrame, w: Int,
-                         textCol: String = "text"): DataFrame =
-    windowFingerprintsRaw(docs, w, textCol)
+  def windowFingerprints(docs: DataFrame, w: Int): DataFrame =
+    windowFingerprintsRaw(docs, w)
       .withColumn("fp", lower(hex(col("fp"))))
 
   /** The readable Column-expression reference for the window pass —
     * semantics documentation and the differential-spec baseline. */
-  def windowFingerprintsColumns(docs: DataFrame, w: Int,
-                                textCol: String = "text"): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), " +")
-    docs.filter(col(textCol).isNotNull)
+  def windowFingerprintsColumns(docs: DataFrame, w: Int): DataFrame = {
+    val toks = split(lower(trim(col("text"))), " +")
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"),
         when(size(col("t")) <= w, array(array_join(col("t"), " ")))
@@ -149,11 +145,10 @@ object RepeatedWindows {
     * twice was the dominant cost of the lazy form. Snapshot release
     * follows the [[graft.operators.PrefixSum]] policy (Bench/Verify
     * unpersist between queries). */
-  def flag(docs: DataFrame, w: Int, minDocs: Int = 2,
-           textCol: String = "text"): DataFrame = {
+  def flag(docs: DataFrame, w: Int, minDocs: Int = 2): DataFrame = {
     require(w > 0, "w must be positive")
     require(minDocs > 1, "minDocs must be > 1 (1 flags every window)")
-    val windows = windowFingerprintsRaw(docs, w, textCol).pinned(true)
+    val windows = windowFingerprintsRaw(docs, w).pinned(true)
     val repeated = windows
       .select("fp", "doc_id").distinct()
       .groupBy("fp").agg(count(lit(1)).as("df"))

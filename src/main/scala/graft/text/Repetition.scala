@@ -38,10 +38,10 @@ object Repetition {
     * Null text is excluded up front (the corpus contract; same policy as
     * Sessionize's null-ts rows) so engines that drop null groups and
     * engines that propagate null rows cannot diverge. */
-  def collapseRuns(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), " +")
+  def collapseRuns(docs: DataFrame): DataFrame = {
+    val toks = split(lower(trim(col("text"))), " +")
     docs
-      .filter(col(textCol).isNotNull)
+      .filter(col("text").isNotNull)
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"), collapsed(col("t")).as("k"),
         size(col("t")).cast("long").as("n_tokens"))

@@ -43,12 +43,11 @@ object SourceDivergence {
     * convention), other_frac = the source's token mass outside the
     * corpus top-`vocab`. Sources identical to the corpus mixture score
     * ~0; drifted sources score high. */
-  def klBySource(docs: DataFrame, textCol: String = "text",
-                 sourceCol: String = "source", vocab: Int = 256): DataFrame = {
+  def klBySource(docs: DataFrame, sourceCol: String = "source", vocab: Int = 256): DataFrame = {
     require(vocab >= 1, s"vocabulary size must be >= 1, got $vocab")
-    val toks = docs.filter(col(textCol).isNotNull)
+    val toks = docs.filter(col("text").isNotNull)
       .select(col(sourceCol).as("source"),
-        explode(split(lower(trim(col(textCol))), " +")).as("tok"))
+        explode(split(lower(trim(col("text"))), " +")).as("tok"))
       .filter(length(col("tok")) > 0)
     // Pin the only corpus-sized aggregate: four branches consume it.
     val counts = Snapshot.pin(

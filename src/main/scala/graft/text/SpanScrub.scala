@@ -44,12 +44,10 @@ object SpanScrub {
 
   /** (doc_id, n_tokens, n_removed, scrubbed_text) for every non-null-text
     * document: tokens covered by any cross-document repeated W-window
-    * (fingerprint in ≥ `minDocs` distinct docs) are removed. */
-  def scrub(docs: DataFrame, w: Int, minDocs: Int = 2,
-            textCol: String = "text"): DataFrame =
+    * (fingerprint in ≥ 2 distinct docs) are removed. */
+  def scrub(docs: DataFrame, w: Int): DataFrame =
     scrubWith(docs,
-      RepeatedWindows.flag(docs, w, minDocs, textCol).select("doc_id", "window_idx"),
-      w, textCol)
+      RepeatedWindows.flag(docs, w).select("doc_id", "window_idx"), w)
 
   /** Keep-FIRST exact-substring dedup (m97) — the keep-one-copy policy of
     * Lee et al. 2022 (public) that [[scrub]]'s cut-all policy deliberately
@@ -69,15 +67,14 @@ object SpanScrub {
     * cut list. Determinism is the min(struct) total order — task
     * scheduling can never decide which copy survives (pinned in
     * PartitionInvarianceSpec). */
-  def keepFirstSpans(docs: DataFrame, w: Int, minDocs: Int = 2,
-                     textCol: String = "text"): DataFrame = {
+  def keepFirstSpans(docs: DataFrame, w: Int): DataFrame = {
     // flagged feeds TWO consumers (the winner aggregate and the cut
     // join); without the pin each reference re-expands the windows ⋈
     // repeated join as its own subtree (round 21 — the Dsir duplicated-
     // subtree finding). flagged is bounded by the repetition mass, so
     // the lazy pin stores a small table and halves the join work.
     val flagged = graft.Snapshot.pin(
-      RepeatedWindows.flag(docs, w, minDocs, textCol), eager = false)
+      RepeatedWindows.flag(docs, w), eager = false)
     val winners = flagged
       .groupBy("fp")
       .agg(min(struct(col("doc_id"), col("window_idx"))).as("f"))
@@ -87,7 +84,7 @@ object SpanScrub {
       .filter(!(col("doc_id") === col("f_doc") &&
         col("window_idx") === col("f_no")))
       .select("doc_id", "window_idx")
-    scrubWith(docs, cuts, w, textCol)
+    scrubWith(docs, cuts, w)
   }
 
   /** The rewrite stage alone, over an externally supplied flagged-window
@@ -95,18 +92,17 @@ object SpanScrub {
     * rebuild whatever flagged the windows (cross-doc repetition in
     * [[scrub]], benchmark overlap in
     * [[graft.dedup.Decontaminate.exciseSpans]]). */
-  def scrubWith(docs: DataFrame, flagged: DataFrame, w: Int,
-                textCol: String = "text"): DataFrame = {
+  def scrubWith(docs: DataFrame, flagged: DataFrame, w: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val cuts = flagged
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("window_idx"))).as("cut_idx"))
     val wB = w
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), col(textCol))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), col("text"))
       .join(cuts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col(textCol),
+      .select(col("doc_id"), col("text"),
         coalesce(col("cut_idx"), array().cast("array<long>")).as("cut_idx"))
       .as[(Long, String, Seq[Long])]
       .mapPartitions { it =>

@@ -70,13 +70,13 @@ object TextOps {
   }
 
   /** N-gram language ID heuristic: English iff the stopword token ratio
-    * clears a threshold. A real pipeline would score character n-grams per
+    * reaches 0.03. A real pipeline would score character n-grams per
     * language; the operator shape (pure projection, no shuffle) is the same. */
-  def langId(text: Column, threshold: Double = 0.03): Column = {
+  def langId(text: Column): Column = {
     val nTok = wordCount(text).cast("double")
     val stopRatio = stopwordCount(text).cast("double") / greatest(nTok, lit(1.0))
     when(nTok === 0.0, lit("unknown"))
-      .when(stopRatio >= threshold, lit("en"))
+      .when(stopRatio >= 0.03, lit("en"))
       .otherwise(lit("unknown"))
   }
 
@@ -197,8 +197,8 @@ object TextOps {
   /** Full text-stats projection over a documents table — production path,
     * one [[profile]] evaluation per row (the two-level select keeps
     * CollapseProject from inlining the non-cheap UDF once per field). */
-  def textStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def textStats(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(
         col("doc_id"),
         length(t).cast("long").as("n_chars"),
@@ -222,10 +222,9 @@ object TextOps {
     * ~n_tokens/stride rows, so output size is predictable at any scale.
     * Tokens are the space-split of trim(lower(text)), consistent with the
     * stopword/shingle tokenization. */
-  def chunk(docs: DataFrame, textCol: String = "text",
-            size: Int = 50, stride: Int = 40): DataFrame = {
+  def chunk(docs: DataFrame, size: Int = 50, stride: Int = 40): DataFrame = {
     require(stride > 0 && size > 0, "size and stride must be positive")
-    val toks = split(lower(trim(col(textCol))), " +")
+    val toks = split(lower(trim(col("text"))), " +")
     docs
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"), posexplode(
@@ -249,9 +248,8 @@ object TextOps {
     * web-page length — the paper's 50 would reject most of the fixture)
     * and the stopword probe reuses the repo-wide 14-word
     * [[Stopwords]] list so every text operator shares one vocabulary.
-    * Callers wanting the paper's exact filter decisions pass
-    * minWords = 50 and their own list. Rules:
-    *  - word count in [minWords, maxWords];
+    * Callers wanting the paper's word floor pass minWords = 50. Rules:
+    *  - word count in [minWords, 100000];
     *  - mean word length in [3, 10] (characters of [a-z0-9]+ runs over
     *    their count);
     *  - ≥ 80% of words contain at least one alphabetic character;
@@ -259,18 +257,16 @@ object TextOps {
     * Output: per-doc rule bits (BIGINT 0/1 — engine-portable) plus the
     * AND verdict. One projection pass, no shuffle; every expression is
     * replayed verbatim by the DuckDB oracle. */
-  def gopherRules(docs: DataFrame, textCol: String = "text",
-                  minWords: Long = 10, maxWords: Long = 100000,
-                  stopwords: Seq[String] = Stopwords): DataFrame = {
-    val t = col(textCol)
+  def gopherRules(docs: DataFrame, minWords: Long = 10): DataFrame = {
+    val t = col("text")
     val words = regexp_extract_all(lower(t), lit("[a-z0-9]+"), lit(0))
     val nWords = size(words).cast("long")
     val meanLen = length(array_join(words, "")).cast("double") /
       greatest(nWords.cast("double"), lit(1.0))
     val alphaWords = size(filter(words, w => w.rlike("[a-z]"))).cast("double")
-    val sw = array(stopwords.map(lit): _*)
+    val sw = array(Stopwords.map(lit): _*)
     val distinctStops = size(array_intersect(array_distinct(tokens(t)), sw))
-    val rWordCount = (nWords >= minWords && nWords <= maxWords).cast("long")
+    val rWordCount = (nWords >= minWords && nWords <= 100000L).cast("long")
     val rMeanLen = (meanLen >= 3.0 && meanLen <= 10.0).cast("long")
     val rAlpha = (alphaWords / greatest(nWords.cast("double"), lit(1.0)) >= 0.8).cast("long")
     val rStops = (distinctStops >= 2).cast("long")
@@ -286,25 +282,21 @@ object TextOps {
   /** Line-level Gopher rules (m92) — the MassiveText rules [[gopherRules]]
     * cannot see in single-line text, run over newline-structured documents
     * (Rae et al. 2021, public):
-    *  - ellipsis-line fraction: share of lines ending in "..." ≤
-    *    maxEllipsisFrac (boilerplate "read more..." truncation markers);
+    *  - ellipsis-line fraction: share of lines ending in "..." ≤ 0.25
+    *    (boilerplate "read more..." truncation markers);
     *  - bullet-line fraction: share of lines starting with a bullet
-    *    ("- ", "* ", "• ") ≤ maxBulletFrac (nav/list scrapings);
+    *    ("- ", "* ", "• ") ≤ 0.25 (nav/list scrapings);
     *  - duplicate-line fraction: (n_lines − distinct lines) / n_lines ≤
-    *    maxDupLineFrac (the within-doc repetition probe).
-    * Default thresholds are TIGHTENED from the paper's (0.3 / 0.9 / 0.3)
-    * so the synthetic fixture exercises both branches of every rule —
-    * the paper's values are reachable via the parameters, and the
+    *    0.1 (the within-doc repetition probe).
+    * The thresholds are TIGHTENED from the paper's (0.3 / 0.9 / 0.3) so
+    * the synthetic fixture exercises both branches of every rule — the
     * deviation is deliberate and documented, like [[gopherRules]]'s.
     * Output: per-doc line counts, fractions, rule bits (BIGINT 0/1) and
     * the AND verdict. One projection pass, no shuffle: the fractions are
     * integer-count divisions, so both engines compute identical doubles.
     */
-  def lineRules(docs: DataFrame, textCol: String = "text",
-                maxEllipsisFrac: Double = 0.25,
-                maxBulletFrac: Double = 0.25,
-                maxDupLineFrac: Double = 0.1): DataFrame = {
-    val lines = split(col(textCol), "\n")
+  def lineRules(docs: DataFrame): DataFrame = {
+    val lines = split(col("text"), "\n")
     val n = org.apache.spark.sql.functions.size(lines).cast("long")
     val nDouble = n.cast("double")
     val nEll = org.apache.spark.sql.functions.size(
@@ -318,13 +310,13 @@ object TextOps {
     val ellFrac = nEll.cast("double") / nDouble
     val bulFrac = nBul.cast("double") / nDouble
     val dupFrac = nDup.cast("double") / nDouble
-    docs.filter(col(textCol).isNotNull)
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"), n.as("n_lines"),
         ellFrac.as("ellipsis_frac"), bulFrac.as("bullet_frac"),
         dupFrac.as("dup_line_frac"),
-        (ellFrac <= maxEllipsisFrac).cast("long").as("r_ellipsis_lines"),
-        (bulFrac <= maxBulletFrac).cast("long").as("r_bullet_lines"),
-        (dupFrac <= maxDupLineFrac).cast("long").as("r_dup_lines"))
+        (ellFrac <= 0.25).cast("long").as("r_ellipsis_lines"),
+        (bulFrac <= 0.25).cast("long").as("r_bullet_lines"),
+        (dupFrac <= 0.1).cast("long").as("r_dup_lines"))
       .withColumn("pass",
         (col("r_ellipsis_lines") === 1L && col("r_bullet_lines") === 1L &&
           col("r_dup_lines") === 1L).cast("long"))
@@ -363,13 +355,13 @@ object TextOps {
     * the hash picks the bucket. Sums are exact integer counts, so the
     * fractions are single IEEE divisions — bit-identical cross-engine.
     */
-  def repetitionRules(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def repetitionRules(docs: DataFrame): DataFrame = {
     val topNs = Seq(2, 3, 4)
     val dupNs = Seq(5, 6, 7, 8, 9, 10)
     val topThr = Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
     val dupThr = Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
       9 -> 0.11, 10 -> 0.10)
-    val t = tokens(col(textCol))
+    val t = tokens(col("text"))
     val perN = array((topNs ++ dupNs).map { n =>
       struct(lit(n).as("n"),
         when(org.apache.spark.sql.functions.size(col("t")) >= n,
@@ -379,7 +371,7 @@ object TextOps {
             i => array_join(slice(col("t"), i, lit(n)), " ")))
           .otherwise(array().cast("array<string>")).as("grams"))
     }: _*)
-    val grams = docs.filter(col(textCol).isNotNull)
+    val grams = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), t.as("t"))
       .select(col("doc_id"),
         length(array_join(col("t"), " ")).cast("long").as("total_chars"),
@@ -439,11 +431,11 @@ object TextOps {
     * [[repetitionRules]] aggregate handles, which is why the readable
     * form stays the reference and the fallback. Row policy matches it:
     * docs with < 2 tokens produce no row. */
-  def repetitionRulesCompiled(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def repetitionRulesCompiled(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), tokens(col(textCol)).as("t"))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), tokens(col("text")).as("t"))
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         it.flatMap { case (id, toksSeq) =>
@@ -527,11 +519,11 @@ object TextOps {
     * so the DuckDB oracle (lead()-gap per-gram union for the top family,
     * gaps-and-islands sweep for the dup family) replays bit-for-bit.
     */
-  def repetitionRulesUnion(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def repetitionRulesUnion(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), tokens(col(textCol)).as("t"))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), tokens(col("text")).as("t"))
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         it.map { case (id, toksSeq) =>
@@ -621,13 +613,18 @@ object TextOps {
       .toDF()
   }
 
+  /** The corpus gate over a [[profile]]'s fields: English, quality at
+    * least 0.3. The batch pipelines, the streaming front door and the
+    * quality classifier's weak label all test this one predicate. */
+  def passesGate(langPred: Column, quality: Column): Column =
+    langPred === "en" && quality >= 0.3
+
   /** Language + quality gate — production path for filter pipelines. */
-  def langQualityGate(docs: DataFrame, textCol: String = "text",
-                      lang: String = "en", minQuality: Double = 0.3): DataFrame =
-    docs.select(col("doc_id"), profile(col(textCol)).as("p"))
+  def langQualityGate(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), profile(col("text")).as("p"))
       .select(col("doc_id"), col("p.lang_pred").as("lang_pred"),
         col("p.quality").as("quality"))
-      .filter(col("lang_pred") === lang && col("quality") >= minQuality)
+      .filter(passesGate(col("lang_pred"), col("quality")))
 }
 
 /** m109 output row — top-level so the `Encoder` derives outside the

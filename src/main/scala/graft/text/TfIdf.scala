@@ -36,16 +36,16 @@ object TfIdf {
 
   /** (doc_id, rank, term, tf, score) with rank ≤ k per document;
     * score = tf · ln((N+1)/(df+1)), N = docs with ≥1 token. */
-  def topTerms(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = {
+  def topTerms(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val tf = docs.filter(col(textCol).isNotNull)
+    val tf = docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        explode(split(lower(trim(col(textCol))), " +")).as("term"))
+        explode(split(lower(trim(col("text"))), " +")).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(sum(least(col("tf"), lit(1L))).as("df"))
     val nDocs = docs
-      .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
+      .filter(col("text").isNotNull && trim(col("text")) =!= "")
       .agg(countDistinct(col("doc_id")).cast("double").as("nd"))
     val score = col("tf").cast("double") *
       log((col("nd") + 1.0) / (col("df").cast("double") + 1.0))

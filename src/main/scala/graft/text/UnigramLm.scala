@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — the [[Bpe.trainDistributed]] contract:
   *  - TRAIN touches the corpus ONCE: a distributed (word, count)
-  *    aggregate whose exchange is vocabulary-bounded (top-`maxWords` by
+  *    aggregate whose exchange is vocabulary-bounded (top-2^16 words by
   *    count — a count bound, not a corpus fraction); seeding, EM and
   *    pruning then run on that sufficient statistic (unigram EM's
   *    expected counts are freq-weighted sums over DISTINCT words — the
@@ -69,15 +69,14 @@ object UnigramLm {
   }
 
   /** Train on the full corpus: one vocabulary-bounded distributed word
-    * count, then seed → EM → prune → EM on the word table. */
-  def train(docs: DataFrame, vocabSize: Int = 200, maxPieceLen: Int = 8,
-            emIters: Int = 4, seedCap: Int = 5000,
-            textCol: String = "text", maxWords: Int = 1 << 16): Model = {
-    require(vocabSize > 0 && maxPieceLen > 0 && emIters >= 0)
+    * count, then seed (the top 5000 substrings of up to 8 chars) → EM →
+    * prune → EM on the word table. */
+  def train(docs: DataFrame, vocabSize: Int = 200, emIters: Int = 4): Model = {
+    require(vocabSize > 0 && emIters >= 0)
     // Word table + cap + drop-mass report shared with the BPE trainer
     // ([[WordTables.withCapped]] — one implementation of the corpus
     // tokenization contract and the no-silent-caps rule).
-    WordTables.withCapped(docs, textCol, maxWords, "unigram") { (wf, rows) =>
+    WordTables.withCapped(docs, WordTables.MaxWords, "unigram") { (wf, rows) =>
       // Required chars from the UNCAPPED (persisted) table: encode
       // coverage for every corpus word, even ones the count cap drops
       // from the EM statistics.
@@ -88,7 +87,7 @@ object UnigramLm {
         scala.collection.immutable.ArraySeq.unsafeWrapArray(
           rows.sortBy(_._1)), // fixed EM fold order
         scala.collection.immutable.ArraySeq.unsafeWrapArray(requiredChars),
-        vocabSize, maxPieceLen, emIters, seedCap)
+        vocabSize, 8, emIters, 5000)
     }
   }
 
@@ -373,12 +372,11 @@ object UnigramLm {
     * report shape, so BPE and unigram budgets diff column-for-column.
     * One shuffle-free pass; model rides the closure; per-partition word
     * memo. */
-  def tokenStats(docs: DataFrame, model: Model,
-                 textCol: String = "text"): DataFrame = {
+  def tokenStats(docs: DataFrame, model: Model): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val narrowed = docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), lower(trim(col(textCol))))
+    val narrowed = docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), lower(trim(col("text"))))
       .as[(Long, String)]
     narrowed.mapPartitions { it =>
       val memo = scala.collection.mutable.HashMap.empty[String, Int]

@@ -98,10 +98,9 @@ object WordPiece {
     * contract (one word-count exchange, count-bounded table, loud drop
     * report) with the BPE and unigram trainers. */
   def trainDistributed(docs: DataFrame, nMerges: Int,
-                       textCol: String = "text",
-                       maxWords: Int = 1 << 16): Model = {
+                       maxWords: Int = WordTables.MaxWords): Model = {
     require(nMerges >= 0, "nMerges must be non-negative")
-    WordTables.withCapped(docs, textCol, maxWords, "wordpiece") { (_, table) =>
+    WordTables.withCapped(docs, maxWords, "wordpiece") { (_, table) =>
       mergeLoop(table.toMap, nMerges)
     }
   }
@@ -179,12 +178,11 @@ object WordPiece {
     * closed-vocabulary tokenizer, plus the UNK count that vocabulary's
     * coverage gaps show up as. One shuffle-free map; per-partition word
     * memo. */
-  def tokenStats(docs: DataFrame, model: Model,
-                 textCol: String = "text"): DataFrame = {
+  def tokenStats(docs: DataFrame, model: Model): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val narrowed = docs.filter(col(textCol).isNotNull)
-      .select(col("doc_id").cast("long"), lower(trim(col(textCol))))
+    val narrowed = docs.filter(col("text").isNotNull)
+      .select(col("doc_id").cast("long"), lower(trim(col("text"))))
       .as[(Long, String)]
     narrowed.mapPartitions { it =>
       val memo = scala.collection.mutable.HashMap.empty[String, (Int, Int)]

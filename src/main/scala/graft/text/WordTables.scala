@@ -19,16 +19,19 @@ import org.apache.spark.sql.functions._
   */
 private[text] object WordTables {
 
+  /** The production word-table cap of every tokenizer trainer. */
+  val MaxWords: Int = 1 << 16
+
   /** Run `body` with (the persisted UNCAPPED word-frequency frame, the
     * collected top-`maxWords` rows in (count desc, word asc) order —
     * uncapped when `maxWords` ≤ 0). When the cap binds, reports the
     * dropped vocabulary size and frequency mass to stderr under `tag`
     * before `body` runs. */
-  def withCapped[T](docs: DataFrame, textCol: String, maxWords: Int,
+  def withCapped[T](docs: DataFrame, maxWords: Int,
                     tag: String)
                    (body: (DataFrame, Array[(String, Long)]) => T): T = {
-    val wf = docs.filter(col(textCol).isNotNull)
-      .select(explode(split(lower(trim(col(textCol))), " +")).as("w"))
+    val wf = docs.filter(col("text").isNotNull)
+      .select(explode(split(lower(trim(col("text"))), " +")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("f"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -38,15 +38,12 @@ object GenData {
     element_at(array(vs.map(lit): _*),
       (pmod(xxhash64(col("id"), lit(salt)), lit(vs.size)) + 1).cast("int"))
 
-  /** Standard normal from two id-derived uniforms (Box–Muller). */
-  private def gauss(salt: Int): Column =
-    sqrt(lit(-2.0) * log(lit(1.0) - u(salt))) * cos(lit(2.0 * math.Pi) * u(salt + 7919))
-
   /** Zipf source picker: inverse-CDF over the 20 cumulative masses
-    * (driver-side constants), applied to the same u(33) uniform the
-    * uniform mix hashes from — deterministic per doc id. */
-  private def zipfSource(uCol: Column, nSrc: Int = 20, s: Double = 1.54): Column = {
-    val mass = (1 to nSrc).map(k => 1.0 / math.pow(k, s))
+    * (driver-side constants, exponent 1.54), applied to the same u(33)
+    * uniform the uniform mix hashes from — deterministic per doc id. */
+  private def zipfSource(uCol: Column): Column = {
+    val nSrc = 20
+    val mass = (1 to nSrc).map(k => 1.0 / math.pow(k, 1.54))
     val total = mass.sum
     val cum = mass.scanLeft(0.0)(_ + _).tail.map(_ / total)
     // src0 gets the head mass; the final otherwise catches u up to 1.0

@@ -9,7 +9,9 @@ package graft.tools
   * executor compute), which is the §1 "empirical" loop without a UI.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <query> [query...]
-  * Runs two passes per query: pass 1 warms codegen, pass 2 is printed.
+  * Runs two passes per query and prints both: pass 1 is cold (codegen,
+  * and any model or asset the query builds once per JVM, so a memoized
+  * trainer's jobs show there), pass 2 is warm.
   * Env: SPARK_GRAFT_CPUS (see [[Harness.session]]).
   */
 object JobProfile {
@@ -25,8 +27,9 @@ object JobProfile {
     * A job that starts before an earlier one ends prints `overlap=`,
     * the time it shares with those jobs, instead of a negative gap.
     * `jobs` must be in start order, as [[Harness.StatsListener.jobs]]
-    * returns them. */
-  def report(name: String, wall: Double, jobs: Seq[Harness.Job]): Seq[String] = {
+    * returns them. The header names the pass; pass 1 is marked cold. */
+  def report(name: String, pass: Int, wall: Double,
+             jobs: Seq[Harness.Job]): Seq[String] = {
     var prevEnd = 0L
     var unionMs = 0L
     val lines = jobs.map { j =>
@@ -45,7 +48,8 @@ object JobProfile {
       }
     }
     val union = unionMs / 1e3
-    (f"\n===== $name%s  wall=$wall%.3fs (pass $Passes of $Passes) =====" +: lines) :+
+    val cold = if (pass == 1) ", cold" else ""
+    (f"\n===== $name%s  wall=$wall%.3fs (pass $pass of $Passes$cold) =====" +: lines) :+
       f"  jobs=${jobs.size}%d  union(job)=$union%.3fs  wall-union=${wall - union}%.3fs (driver/plan/gaps)"
   }
 
@@ -58,17 +62,16 @@ object JobProfile {
     args.drop(1).foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(
         name, sys.error(s"unknown query: $name"))
-      var wall = 0.0
-      (1 to Passes).foreach { _ =>
+      (1 to Passes).foreach { pass =>
         listener.quiesce()
         listener.reset()
         val t0 = System.nanoTime()
         Harness.materialize(fn(spark, dir))
-        wall = (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
         Harness.releaseSnapshots(spark)
+        listener.quiesce()
+        report(name, pass, wall, listener.jobs).foreach(println)
       }
-      listener.quiesce()
-      report(name, wall, listener.jobs).foreach(println)
     }
     spark.stop()
   }

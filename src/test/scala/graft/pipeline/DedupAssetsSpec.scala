@@ -130,6 +130,27 @@ class DedupAssetsSpec extends SparkSpec {
     }
   }
 
+  test("stable asset root: a corpus dir given as a file:// URI rebuilds when its documents change") {
+    val root = java.nio.file.Files.createTempDirectory("graft-uri-root")
+    val corpus = java.nio.file.Files.createTempDirectory("graft-uri-corpus")
+    def write(docs: (Long, String)*): Unit = docs.toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+    def bigrams() = DedupAssets.ngramCounts(spark, s"file://$corpus", 2)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    write((1L, "a b a b"))
+    sys.props("graft.dedup.assetRoot") = root.toString
+    try {
+      bigrams() shouldBe Set(("a", "b", 2L), ("b", "a", 1L))
+      // rewritten at the same URI: a fresh "JVM" must not reuse the asset
+      write((1L, "c d"))
+      DedupAssets.reset()
+      bigrams() shouldBe Set(("c", "d", 1L))
+    } finally {
+      sys.props.remove("graft.dedup.assetRoot")
+      DedupAssets.reset()
+    }
+  }
+
   test("asset consumers match their pre-asset direct computations") {
     // m62/m66/m70 read the stored asset; their results must be what the
     // direct pair-graph rebuild produced (the round-7 hash-green shape).

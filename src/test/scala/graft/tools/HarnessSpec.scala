@@ -41,7 +41,7 @@ class HarnessSpec extends SparkSpec {
     listener.onJobStart(SparkListenerJobStart(7, 1000L, Seq.empty))
     listener.onJobStart(SparkListenerJobStart(8, 2000L, Seq.empty))
     listener.onJobEnd(SparkListenerJobEnd(8, 2500L, JobSucceeded))
-    val lines = JobProfile.report("q", 1.0, listener.jobs)
+    val lines = JobProfile.report("q", 2, 1.0, listener.jobs)
     lines.filter(_.contains("(no end event)")).map(_.trim.split("\\s+").take(2).mkString(" ")) shouldBe
       Seq("job 7")
     lines.last should include("jobs=2")
@@ -55,11 +55,11 @@ class HarnessSpec extends SparkSpec {
     listener.onJobEnd(SparkListenerJobEnd(1, 2000L, JobSucceeded))
     listener.onJobEnd(SparkListenerJobEnd(2, 2500L, JobSucceeded))
     // a summed 2.000 s would leave the driver gap 0.5 s too small
-    val last = JobProfile.report("q", 2.0, listener.jobs).last
+    val last = JobProfile.report("q", 2, 2.0, listener.jobs).last
     last should include("union(job)=1.500s")
     last should include("wall-union=0.500s")
     // job 2 shares [1500, 2000] with job 1: an overlap, never a negative gap
-    val lines = JobProfile.report("q", 2.0, listener.jobs)
+    val lines = JobProfile.report("q", 2, 2.0, listener.jobs)
     lines.find(_.trim.split("\\s+").take(2).mkString(" ") == "job 2").get should
       include("overlap=0.500s")
     lines.filter(_.contains("gap=-")) shouldBe empty
