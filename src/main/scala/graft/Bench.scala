@@ -153,7 +153,7 @@ object Bench {
               // m84's exact params, so the warm pass reuses this build
               materialize(graft.similarity.AnnAssets.ivfPqIndex(spark, sfDir,
                 graft.queries.CorpusQueries.vectors(spark, sfDir),
-                nlist = 16, m = 8, ksub = 16)._2)),
+                nlist = 16, ksub = 16)._2)),
             "asset:bm25post" -> (() =>
               // the m112 inverted index: tokenize + aggregate, term-sorted
               materialize(graft.text.Bm25Assets.index(spark, sfDir)._1)),

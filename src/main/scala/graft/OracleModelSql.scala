@@ -50,6 +50,8 @@ object OracleModelSql {
   /** Scala's shortest-round-trip Double printing; DuckDB parses back the
     * identical bits. */
   private def lit(x: Double): String = x.toString
+  /** A SQL string literal's body: each quote doubled. */
+  private def esc(s: String): String = s.replace("'", "''")
   private def arr(xs: Seq[Double]): String = xs.map(lit).mkString("[", ", ", "]")
 
   /** |c|² with the same left-to-right summation as Ivf.Model.flat. */
@@ -363,7 +365,6 @@ object OracleModelSql {
     * CTE iterates over DISTINCT words — the same Zipf amortization as the
     * engine's per-partition memo. */
   private def bpeEncodeCtes(merges: Seq[(String, String)]): String = {
-    def esc(s: String) = s.replace("'", "''")
     val mv = merges.zipWithIndex
       .map { case ((a, b), r) => s"($r, '${esc(a)}', '${esc(b)}')" }.mkString(", ")
     val sep = "chr(31)"
@@ -430,7 +431,6 @@ object OracleModelSql {
       "FROM documents) s USING (doc_id) GROUP BY 1"
 
   private def unigramEncodeCtes(pieces: Seq[(String, Double)]): String = {
-    def esc(s: String) = s.replace("'", "''")
     // ::DOUBLE on every cost: DuckDB would otherwise infer a DECIMAL
     // type from the first literal and fail or round the rest
     val pv = pieces.map { case (p, c) => s"('${esc(p)}', ${lit(c)}::DOUBLE)" }
@@ -512,7 +512,6 @@ object OracleModelSql {
       "FROM documents) s USING (doc_id) GROUP BY 1"
 
   private def wordPieceEncodeCtes(pieces: Seq[(Boolean, String)]): String = {
-    def esc(s: String) = s.replace("'", "''")
     // pieces are STRUCTURALLY typed (isCont, net) — no string-prefix
     // classification, so '#'-bearing corpora can't alias a bare piece
     // with a continuation piece (review r16); net ≥ 1 char by the Model
@@ -769,7 +768,7 @@ object OracleModelSql {
       "CAST(l1 / (l1 + l0) >= 0.5 AS BIGINT) AS ds_label FROM post"
   }
 
-  /** m137/m67: replay the trained language-ID SCORING pass from the
+  /* m137/m67: replay the trained language-ID SCORING pass from the
     * captured quantized weights — grams via correlated
     * unnest(generate_series) + substr, buckets via the identical
     * md5-first-48-bits arithmetic (('0x' ∥ hex12)::BIGINT % D), per-doc
@@ -778,18 +777,17 @@ object OracleModelSql {
     * the [[graft.text.LangId.score]] closure, including the planted
     * labeled block regenerated from the same (phrase, 1 + i % 3)
     * formula. Training stays spec-pinned (the m40/m83 convention). */
-  private def langEsc(s: String) = s.replace("'", "''")
 
   /** CASE i % 5 → language code / raw phrase — shared by the planted
     * and the labeled corpus CTEs. */
   private def langCaseLang: String =
     graft.text.LangId.PlantedPhrases.zipWithIndex
-      .map { case ((l, _), j) => s"WHEN $j THEN '${langEsc(l)}'" }
+      .map { case ((l, _), j) => s"WHEN $j THEN '${esc(l)}'" }
       .mkString(s"CASE i % ${graft.text.LangId.PlantedPhrases.size} ", " ", " END")
   private def langCasePhrase(trailingSpace: Boolean): String =
     graft.text.LangId.PlantedPhrases.zipWithIndex
       .map { case ((_, p), j) =>
-        s"WHEN $j THEN '${langEsc(p)}${if (trailingSpace) " " else ""}'" }
+        s"WHEN $j THEN '${esc(p)}${if (trailingSpace) " " else ""}'" }
       .mkString(s"CASE i % ${graft.text.LangId.PlantedPhrases.size} ", " ", " END")
 
   /** The m137 scoring corpus: every real doc plus the planted labeled
@@ -825,7 +823,6 @@ object OracleModelSql {
     * [[graft.text.LangId.score]] closure. */
   private def langIdChain(classes: Seq[String], wq: Seq[Seq[Long]],
                           corpusCtes: String): String = {
-    def esc(s: String) = langEsc(s)
     val k = classes.size
     val d = graft.text.LangId.D
     val wcols = (0 until k).map(c => s"w$c").mkString(", ")
@@ -880,7 +877,7 @@ object OracleModelSql {
   def langIdConfusion(classes: Seq[String], wq: Seq[Seq[Long]], off: Long,
                       support: Seq[Long]): String = {
     val supRows = classes.zip(support)
-      .map { case (c, n) => s"('${langEsc(c)}', $n)" }.mkString(", ")
+      .map { case (c, n) => s"('${esc(c)}', $n)" }.mkString(", ")
     langIdCtes(classes, wq, off) +
       s", sup(cls, sup_n) AS (VALUES $supRows), " +
       "c AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs " +

@@ -89,7 +89,6 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

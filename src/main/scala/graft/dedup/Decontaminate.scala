@@ -28,7 +28,7 @@ object Decontaminate {
     * contaminated document ([[contaminated]]'s verdict), cut the
     * contaminated span out and keep the rest — the surgical policy a
     * pipeline applies when a good document merely QUOTES an eval item.
-    * A corpus W-token window is contaminated iff its fingerprint appears
+    * A corpus 8-token window is contaminated iff its fingerprint appears
     * among the benchmark's windows (same stride-1 window walk on both
     * sides, [[graft.text.RepeatedWindows]]'s); the cut is
     * [[graft.text.SpanScrub]]'s coverage-union rewrite, so overlapping
@@ -38,7 +38,8 @@ object Decontaminate {
     * sized and BROADCAST into a semi join against the corpus windows
     * (whose text never leaves its document — only 16-byte fps move);
     * the rewrite is the m82 join + O(L) sweep. */
-  def exciseSpans(corpus: DataFrame, benchmark: DataFrame, w: Int = 8): DataFrame = {
+  def exciseSpans(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
+    val w = 8
     val corpusWindows = graft.text.RepeatedWindows
       .windowFingerprintsRaw(corpus, w)
     val benchFps = graft.text.RepeatedWindows

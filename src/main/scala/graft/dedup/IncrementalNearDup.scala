@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * [[graft.pipeline.DedupAssets]] (with a stable asset root, once per
   * corpus fingerprint ACROSS ingest JVMs), so a second ingest pays only
   * the batch-sized probe: batch grams shuffle, the standing index is a
-  * sorted-parquet scan, and the pair space is bounded by dfCap × batch
+  * sorted-parquet scan, and the pair space is bounded by 50 × batch
   * grams. DedupAssetsSpec and IncrementalNearDupSpec pin the reuse.
   */
 object IncrementalNearDup {
@@ -38,11 +38,12 @@ object IncrementalNearDup {
 
   /** The standing-index halves: capped (gram, ids) postings and per-doc
     * KEPT-gram sizes (index_id, n_i) — everything a future ingest needs,
-    * none of the corpus text. */
-  def buildIndex(indexed: DataFrame, dfCap: Int): (DataFrame, DataFrame) = {
+    * none of the corpus text. A gram in more than 50 index docs (the df
+    * cap) has no posting list. */
+  def buildIndex(indexed: DataFrame): (DataFrame, DataFrame) = {
     val postings = grams(indexed, "index_id")
       .groupBy("gram")
-      .agg(graft.functions.CappedCollect.cappedIds(dfCap)(col("index_id")).as("ids"))
+      .agg(graft.functions.CappedCollect.cappedIds(50)(col("index_id")).as("ids"))
       .filter(col("ids").isNotNull)
     val sizes = postings.select(explode(col("ids")).as("index_id"))
       .groupBy("index_id").agg(count(lit(1)).as("n_i"))
@@ -72,8 +73,8 @@ object IncrementalNearDup {
     * inline (one-shot shape; recurring ingests use
     * [[probeStoredIndex]]). */
   def probeIndex(batch: DataFrame, indexed: DataFrame,
-                 threshold: Double = 0.6, dfCap: Int = 50): DataFrame = {
-    val (postings, sizes) = buildIndex(indexed, dfCap)
+                 threshold: Double = 0.6): DataFrame = {
+    val (postings, sizes) = buildIndex(indexed)
     probePostings(batch, postings, sizes, threshold)
   }
 
@@ -89,7 +90,7 @@ object IncrementalNearDup {
                        threshold: Double = 0.6): DataFrame = {
     val postings = graft.pipeline.DedupAssets.materialized(
       s, "neardup-postings", indexKey, Seq("gram"))(
-      buildIndex(indexed, 50)._1)
+      buildIndex(indexed)._1)
     // sizes derive from the STORED postings, so they can never disagree
     // with them (and a warm postings asset makes this build corpus-free)
     val sizes = graft.pipeline.DedupAssets.materialized(

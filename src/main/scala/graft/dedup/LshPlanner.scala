@@ -24,16 +24,17 @@ import org.apache.spark.sql.functions._
   * exchanges beyond the trivial local window for the argmin flag. */
 object LshPlanner {
 
-  /** One row per (bands, rows) factorization of `totalHashes`:
+  /** The MinHash budget H and the target Jaccard threshold t. */
+  private val TotalHashes = 128
+  private val Threshold = 0.8
+
+  /** One row per (bands, rows) factorization of [[TotalHashes]]:
     * (bands, rows_per_band, fp_area, fn_area, cost, best). `best` marks
     * the cost argmin (ties to fewer bands). */
-  def plan(spark: SparkSession, totalHashes: Int = 128,
-           threshold: Double = 0.8): DataFrame = {
-    require(totalHashes >= 1, "totalHashes must be >= 1")
-    require(threshold > 0 && threshold < 1, "threshold must be in (0, 1)")
+  def plan(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val pairs = (1 to totalHashes).filter(totalHashes % _ == 0)
-      .map(b => (b, totalHashes / b))
+    val pairs = (1 to TotalHashes).filter(TotalHashes % _ == 0)
+      .map(b => (b, TotalHashes / b))
     val df = pairs.toDF("bands", "rows_per_band")
     // Midpoint grid s_i = (i + 0.5)/200, folded in index order.
     val grid = transform(sequence(lit(0), lit(199)),
@@ -42,9 +43,9 @@ object LshPlanner {
       lit(1.0) - pow(lit(1.0) - pow(s, col("rows_per_band").cast("double")),
         col("bands").cast("double"))
     val fp = aggregate(grid, lit(0.0), (acc, s) =>
-      acc + when(s < lit(threshold), pCand(s)).otherwise(lit(0.0))) * lit(0.005)
+      acc + when(s < lit(Threshold), pCand(s)).otherwise(lit(0.0))) * lit(0.005)
     val fn = aggregate(grid, lit(0.0), (acc, s) =>
-      acc + when(s >= lit(threshold), lit(1.0) - pCand(s)).otherwise(lit(0.0))) * lit(0.005)
+      acc + when(s >= lit(Threshold), lit(1.0) - pCand(s)).otherwise(lit(0.0))) * lit(0.005)
     val scored = df.select(col("bands"), col("rows_per_band"),
       fp.as("fp_area"), fn.as("fn_area"),
       (lit(0.5) * fp + lit(0.5) * fn).as("cost"))

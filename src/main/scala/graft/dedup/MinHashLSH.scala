@@ -30,10 +30,13 @@ object MinHashLSH {
     * oracle's inlined literals must draw the same permutations. */
   private val Seed = 42L
 
+  /** Hash functions per production signature. */
+  private val NumHashes = 64
+
   /** The (a,b) pairs exposed for the SQL-replay oracle: SparkEntry inlines
     * them as literals so DuckDB replays the exact signature permutations
     * without replicating the seeded RNG. */
-  private[graft] def hashParams(): Seq[(Long, Long)] = params(64)
+  private[graft] def hashParams(): Seq[(Long, Long)] = params(NumHashes)
 
   /** Deterministic (a,b) parameter pairs for the k hash functions,
     * a ∈ [1, p), b ∈ [0, p). */
@@ -86,17 +89,17 @@ object MinHashLSH {
 
   private def pmodP(h: Long): Long = ((h % P) + P) % P
 
-  /** k-wide minhash signature (array<bigint>) of a shingle array, as a
+  /** 128-wide minhash signature (array<bigint>) of a shingle array, as a
     * single Column. Test-only (`private[dedup]`): it hashes shingles with
     * xxhash64 while the production path ([[signatures]] /
     * [[bandedSignatures]]) uses FNV-1a, so the two produce intentionally
-    * incompatible signatures and must never be mixed. Also O(k)
+    * incompatible signatures and must never be mixed. Also 128
     * re-evaluations of the shingle pipeline per row (Catalyst inlines the
     * shared subtree into every coordinate). */
-  private[dedup] def signature(shingleCol: Column, k: Int = 64): Column = {
+  private[dedup] def signature(shingleCol: Column): Column = {
     // Shingle hashes reduced into [0, p) keep a·x + b within 62 bits.
     val hashes = transform(shingleCol, s => pmod(xxhash64(s), lit(P)))
-    val sigs: Seq[Column] = params(k).map { case (a, b) =>
+    val sigs: Seq[Column] = params(128).map { case (a, b) =>
       array_min(transform(hashes, h => pmod(h * lit(a) + lit(b), lit(P))))
     }
     array(sigs: _*)
@@ -104,7 +107,7 @@ object MinHashLSH {
 
   /** (doc_id, sig) signatures for a whole corpus — the production path:
     * ONE compiled pass per document computes the shingle hashes and folds
-    * them straight into the k running minima. The signature is a pure
+    * them straight into the 64 running minima. The signature is a pure
     * per-row function of the text, so this needs NO shuffle at all —
     * round 2 shipped explode + k min-aggregates (one exchange of k longs
     * per doc even after map-side partials, plus a 64-expression hash-agg
@@ -113,20 +116,20 @@ object MinHashLSH {
     * scan-bound. Values are bit-identical (same (a,b) params, same
     * shingle hashes, min is order-free); docs with no shingles are
     * dropped, as the explode formulation did implicitly. */
-  def signatures(docs: DataFrame, numHashes: Int = 64): DataFrame = {
-    val ps = params(numHashes)
+  def signatures(docs: DataFrame): DataFrame = {
+    val ps = params(NumHashes)
     val as = ps.map(_._1).toArray
     val bs = ps.map(_._2).toArray
     val sigUdf = udf { text: String =>
       val hs = shingleHashArray(text, 3)
       if (hs.isEmpty) null
       else {
-        val sig = Array.fill(numHashes)(Long.MaxValue)
+        val sig = Array.fill(NumHashes)(Long.MaxValue)
         var i = 0
         while (i < hs.length) {
           val x = hs(i)
           var j = 0
-          while (j < numHashes) {
+          while (j < NumHashes) {
             // a·x + b stays under 2^62 (x < 2^31, a < 2^31) and is
             // non-negative, so % is already pmod.
             val v = (as(j) * x + bs(j)) % P
@@ -149,12 +152,12 @@ object MinHashLSH {
   }
 
   /** (doc_id, band, band_hash) — one row per band per doc. */
-  def bandedSignatures(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) — otherwise " +
+  def bandedSignatures(docs: DataFrame, bands: Int): DataFrame = {
+    require(NumHashes % bands == 0,
+      s"bands ($bands) must divide numHashes ($NumHashes) — otherwise " +
         "trailing signature coordinates are silently dropped")
-    val rows = numHashes / bands
-    signatures(docs, numHashes)
+    val rows = NumHashes / bands
+    signatures(docs)
       .select(col("doc_id"), posexplode(
         array((0 until bands).map(b =>
           xxhash64(concat_ws(",", lit(b) +: (0 until rows).map(r =>
@@ -169,9 +172,9 @@ object MinHashLSH {
     * buckets are a recall trade the caller opts into, as in production
     * dedup systems.
     */
-  def candidatePairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
+  def candidatePairs(docs: DataFrame, bands: Int = 16,
                      bucketCap: Int = 1000): DataFrame = {
-    val banded = bandedSignatures(docs, numHashes, bands)
+    val banded = bandedSignatures(docs, bands)
     // cappedIds also bounds the aggregation buffer at bucketCap+1 ids, so
     // a viral bucket is dropped without ever materializing its full list.
     val capped = banded
@@ -208,7 +211,7 @@ object MinHashLSH {
   def bucketDropReport(docs: DataFrame,
                        bucketCaps: Seq[Int] = Seq(1000)): DataFrame = {
     require(bucketCaps.nonEmpty, "bucketCaps must list at least one cap")
-    val sizes = bandedSignatures(docs, 64, 16)
+    val sizes = bandedSignatures(docs, 16)
       .groupBy("band", "band_hash").agg(count(lit(1)).as("c"))
     sizes
       .select(col("band"), col("c"),
@@ -233,8 +236,8 @@ object MinHashLSH {
     * EAGER ([[PairVerify.withFeature]]): candidate generation and the
     * shingle walk run AT CALL TIME — call when the result will be
     * consumed, and release snapshots afterwards in long-lived sessions. */
-  def verifiedPairs(docs: DataFrame, threshold: Double = 0.7): DataFrame =
-    verifiedPairsOver(docs, candidatePairs(docs), threshold)
+  def verifiedPairs(docs: DataFrame): DataFrame =
+    verifiedPairsOver(docs, candidatePairs(docs), 0.5)
 
   /** Verify stage over an externally supplied candidate table — the
     * production split: candidate GENERATION is the expensive banded

@@ -170,14 +170,13 @@ object NgramJaccard {
     * reported so the consumer can tell "A inside B" from "B inside A".
     *
     * Scale shape: identical to [[invertedIndexPairs]] (one capped
-    * posting exchange, pair expansion inside it, df > dfCap stop-grams
+    * posting exchange, pair expansion inside it, df > 50 stop-grams
     * dropped before any pair exists); only the final scoring projection
     * differs, and the posting pin is the same. Sizes are over KEPT
     * grams — the same pruned-shingle convention the Jaccard tier and its
     * oracle use. */
-  def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
-                       dfCap: Int = 50): DataFrame =
-    sharedGramCounts(docs, dfCap, postingPin(docs))
+  def containmentPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame =
+    sharedGramCounts(docs, 50, postingPin(docs))
       .withColumn("containment_a", col("shared").cast("double") / col("n_a"))
       .withColumn("containment_b", col("shared").cast("double") / col("n_b"))
       .filter(greatest(col("containment_a"), col("containment_b")) >= threshold)

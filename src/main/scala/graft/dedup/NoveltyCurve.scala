@@ -33,7 +33,7 @@ object NoveltyCurve {
     * corpus slice in ingestion order. Docs with NULL/blank text occupy
     * ingestion slots (they count in n_docs) but contribute no shingles,
     * the [[NgramJaccard]] empty-content policy. */
-  def curve(docs: DataFrame, w: Int = 3, buckets: Int = 10): DataFrame = {
+  def curve(docs: DataFrame, buckets: Int = 10): DataFrame = {
     val base = docs.filter(col("text").isNotNull)
     // exclusive running count of ones == 0-based global ingestion rank
     val ranked = graft.operators.PrefixSum.exclusiveRunningTotals(
@@ -44,7 +44,7 @@ object NoveltyCurve {
         ((col("running") * buckets) / col("n_all")).cast("long").as("bucket"))
     val firstDoc = base
       .select(col("doc_id"),
-        explode(NgramJaccard.wordShingleSet(col("text"), lit(w))).as("gram"))
+        explode(NgramJaccard.wordShingleSet(col("text"), lit(3))).as("gram"))
       .select(col("doc_id"), md5(col("gram")).as("h"))
       .groupBy("h").agg(min("doc_id").as("doc_id"))
     val perBucketDocs = deciled.groupBy("bucket")

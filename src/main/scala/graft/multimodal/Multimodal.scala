@@ -147,19 +147,18 @@ object Multimodal {
   final case class MediaFrame(doc_id: Long, frame_idx: Long, frame: Array[Byte])
 
   /** Frame sampling — the video-side analogue of text chunking: treat the
-    * byte stream as fixed-size frames and emit every `stride`-th one.
+    * byte stream as 16-byte frames and emit every 2nd one.
     * The slicer is the stand-in for a demuxer (the 1→many generate
-    * shape, output cardinality ≈ bytes / (frameBytes · stride), is what
+    * shape, output cardinality ≈ bytes / (16 · 2), is what
     * survives to production). A trailing partial frame is dropped, as a
     * demuxer drops a truncated frame. */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int = 32,
-                   stride: Int = 4): Dataset[MediaFrame] = {
-    require(frameBytes > 0 && stride > 0, "frameBytes and stride must be positive")
+  def sampleFrames(media: Dataset[MediaRow]): Dataset[MediaFrame] = {
+    val frameBytes = 16
     val spark = media.sparkSession
     import spark.implicits._
     media.flatMap { r =>
       val n = r.media.length / frameBytes
-      (0 until n by stride).iterator.map { i =>
+      (0 until n by 2).iterator.map { i =>
         MediaFrame(r.doc_id, i.toLong,
           java.util.Arrays.copyOfRange(r.media, i * frameBytes, (i + 1) * frameBytes))
       }

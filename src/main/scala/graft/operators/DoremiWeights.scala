@@ -46,21 +46,21 @@ object DoremiWeights {
   private val Eta = 1.0
   private val Smoothing = 0.01
 
-  /** One MW step from uniform init: (domain, n_docs, n_bigrams, ce,
-    * excess, weight). `ce` = pooled per-bigram cross-entropy under the
+  /** One MW step from uniform init over the `lang` domains: (domain,
+    * n_docs, n_bigrams, ce, excess, weight). `ce` = pooled per-bigram cross-entropy under the
     * corpus bigram LM; `excess` = max(0, ce − corpus-pooled ce);
     * `weight` = (1−c)·exp(η·excess)/Σ + c/K, η = 1, c = 0.01, over the
     * add-0.5 bigram LM. Docs with
     * < 2 tokens carry no bigrams and are absent from every pool (the
     * m43 contract); a domain whose docs are all bigram-free is absent. */
-  def weights(docs: DataFrame, domainCol: String = "lang"): DataFrame = {
-    val scored = graft.text.NgramLm.selfPerplexity(docs, 0.5)
+  def weights(docs: DataFrame): DataFrame = {
+    val scored = graft.text.NgramLm.selfPerplexity(docs)
       .select(col("doc_id"), col("n_bigrams"),
         // m89's cross-engine quantization: floor on the identical double
         // is bit-stable where a decimal round was not
         floor(col("cross_entropy") * col("n_bigrams").cast("double") * lit(1e6))
           .cast("long").as("q"))
-      .join(docs.select(col("doc_id"), col(domainCol).as("domain")), Seq("doc_id"))
+      .join(docs.select(col("doc_id"), col("lang").as("domain")), Seq("doc_id"))
     // Eagerly pin the K-row domain pool (the m110 rule): totals, excess
     // and the MW normalizer are four consumers — without the pin each
     // re-derives the whole corpus-sized LM chain.

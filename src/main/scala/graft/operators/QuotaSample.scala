@@ -109,15 +109,14 @@ object QuotaSample {
   private[operators] def temperatureTarget(n: Column, minN: Column): Column =
     ceil(sqrt(n.cast("double") * minN.cast("double"))).cast("long")
 
-  def temperatureRebalance(df: DataFrame, groupCol: String,
-                           keyCol: String): DataFrame = {
+  def temperatureRebalance(df: DataFrame, groupCol: String): DataFrame = {
     // Group key cast to string ONCE here — the ranked frame feeds both
     // the target derivation and the selection, so the join keys are
     // built the same way by construction.
     val ranked = GroupedRanks.withRankAndCount(
       df.select(col(groupCol).cast("string").as("grp"),
-        col(keyCol).cast("long").as("key"),
-        md5(col(keyCol).cast("string").cast("binary")).as("ord")),
+        col("doc_id").cast("long").as("key"),
+        md5(col("doc_id").cast("string").cast("binary")).as("ord")),
       "grp", Seq(col("ord"), col("key")),
       rankCol = "__qs_rk", countCol = "__qs_n")
     // Per-group counts come off the rank pass's n column: the distinct
@@ -133,12 +132,13 @@ object QuotaSample {
     ranked
       .join(broadcast(targets), Seq("grp"))
       .filter(col("__qs_rk") < col("target")) // 0-based rk < target ≡ rank ≤ target
-      .select(col("key").as(keyCol), col("grp").as(groupCol),
+      .select(col("key").as("doc_id"), col("grp").as(groupCol),
         (col("__qs_rk") + 1L).as("rk"), col("target"))
   }
 
-  /** Token-budget variant: keep rows per group, in the same deterministic
-    * md5(key) order, while the tokens accumulated BEFORE a row stay under
+  /** Token-budget variant over (doc_id, source, n_tokens) rows: keep rows
+    * per source, in the same deterministic md5(doc_id) order, while the
+    * tokens accumulated BEFORE a row stay under
     * `budget` — so each group lands within one document of its target mix
     * weight, and a group whose first document exceeds the budget still
     * contributes that one document (never silently empty).
@@ -150,16 +150,15 @@ object QuotaSample {
     * task's sort — true by construction when budgets are per-source mix
     * targets (docs ≫ budget get cut by the very window being computed, so
     * pre-filtering on weight < budget bounds the sort input when needed). */
-  def tokenBudgetSample(df: DataFrame, groupCol: String, keyCol: String,
-                        weightCol: String, budget: Long): DataFrame = {
+  def tokenBudgetSample(df: DataFrame, budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val w = Window.partitionBy(groupCol)
-      .orderBy(md5(col(keyCol).cast("string").cast("binary")), col(keyCol))
+    val w = Window.partitionBy("source")
+      .orderBy(md5(col("doc_id").cast("string").cast("binary")), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     df.withColumn("cum_before",
-        coalesce(sum(col(weightCol)).over(w), lit(0L)).cast("long"))
+        coalesce(sum(col("n_tokens")).over(w), lit(0L)).cast("long"))
       .filter(col("cum_before") < budget)
-      .select(col(keyCol), col(groupCol), col(weightCol).cast("long").as(weightCol),
+      .select(col("doc_id"), col("source"), col("n_tokens").cast("long").as("n_tokens"),
         col("cum_before"))
   }
 }

@@ -41,19 +41,18 @@ object RetailOps {
 
   // ------------------------------------------------------------------- A1
   /** Fact build (retail_pipeline_assets.py:60-70): filter one date then
-    * GROUP BY (date, type, product, user) with COUNT(*) + conditional SUM
-    * (decimal-exact, [[exactSum]]). */
-  def factBuild(staging: DataFrame, dateCol: String, typeCol: String,
-                keyCols: Seq[String], valueCol: String,
+    * GROUP BY (event_date, event_type, product, user) with COUNT(*) +
+    * conditional SUM (decimal-exact, [[exactSum]]). */
+  def factBuild(staging: DataFrame, keyCols: Seq[String], valueCol: String,
                 purchaseKind: String = Purchase): DataFrame = {
     // purchaseKind parameterized: the legacy RetailRocket schema calls the
     // revenue event "transaction", and a hard-coded literal would silently
     // zero total_revenue there.
     staging
-      .groupBy((dateCol +: typeCol +: keyCols).map(col): _*)
+      .groupBy(("event_date" +: "event_type" +: keyCols).map(col): _*)
       .agg(
         count(lit(1)).as("total_events"),
-        exactSum(purchaseRevenue(col(typeCol) === purchaseKind, col(valueCol)))
+        exactSum(purchaseRevenue(col("event_type") === purchaseKind, col(valueCol)))
           .as("total_revenue"))
   }
 
@@ -147,9 +146,9 @@ object RetailOps {
     * coalesce pads to 'na' exactly like the reference's python loop.
     * (`try_element_at`, not `element_at`: ANSI mode — Spark 4 default —
     * makes the latter throw on out-of-bounds instead of returning NULL.) */
-  def splitHierarchy(src: Column, sep: String = "\\.", levels: Int = 3): Seq[Column] = {
+  def splitHierarchy(src: Column, sep: String = "\\."): Seq[Column] = {
     val arr = split(src, sep)
-    (1 to levels).map(i => coalesce(try_element_at(arr, lit(i)), lit("na")))
+    (1 to 3).map(i => coalesce(try_element_at(arr, lit(i)), lit("na")))
   }
 
   // ------------------------------------------------------------------- P8
@@ -167,11 +166,11 @@ object RetailOps {
   def epochMsToTimestamp(epochMs: Column): Column = timestamp_millis(epochMs)
 
   // ------------------------------------------------------------- A6 + T2/F7
-  /** Daily event counts (legacy pyc): GROUP BY DATE(ts), event ORDER BY both. */
-  def dailyEventCounts(events: DataFrame, tsCol: String, typeCol: String): DataFrame =
-    events.groupBy(to_date(col(tsCol)).as("event_date"), col(typeCol))
+  /** Daily event counts (legacy pyc): GROUP BY DATE(ts), event_type ORDER BY both. */
+  def dailyEventCounts(events: DataFrame): DataFrame =
+    events.groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("event_date"), col(typeCol))
+      .orderBy(col("event_date"), col("event_type"))
 
   /** Stratified sample for dataset balancing (training-data prep): keep
     * each stratum at its own fraction, deterministically. Implemented as a
@@ -180,16 +179,16 @@ object RetailOps {
     * data is partitioned or re-read, so downstream runs are reproducible
     * and the operator stays a codegen'd scan-level filter (no RNG state,
     * no shuffle, pushdown-friendly). Hash uniformity makes the kept share
-    * of each stratum converge to its fraction. */
-  def stratifiedSample(df: DataFrame, stratumCol: String, keyCol: String,
-                       fractions: Map[String, Double]): DataFrame = {
+    * of each stratum converge to its fraction. The stratum is column
+    * `cls`, the row key column `id`. */
+  def stratifiedSample(df: DataFrame, fractions: Map[String, Double]): DataFrame = {
     require(fractions.values.forall(f => f >= 0.0 && f <= 1.0),
       "fractions must be in [0,1]")
     // xxhash64 → [0,1) via the positive 2^63 range.
-    val u = (pmod(xxhash64(col(keyCol), lit(42L)), lit(Long.MaxValue)).cast("double")
+    val u = (pmod(xxhash64(col("id"), lit(42L)), lit(Long.MaxValue)).cast("double")
       / lit(Long.MaxValue.toDouble))
     val frac = fractions.foldLeft(lit(0.0)) { case (acc, (k, f)) =>
-      when(col(stratumCol) === k, lit(f)).otherwise(acc)
+      when(col("cls") === k, lit(f)).otherwise(acc)
     }
     df.filter(u < frac)
   }

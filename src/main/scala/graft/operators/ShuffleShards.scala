@@ -24,16 +24,16 @@ import graft.Snapshot.SnapshotOps
   */
 object ShuffleShards {
 
-  /** (keyCol, pos, shard): pos is the 0-based rank in the shuffled order,
-    * shard = pos % numShards. `keyCol` must be unique and integral. */
-  def shuffleShards(df: DataFrame, keyCol: String, numShards: Int): DataFrame = {
+  /** (doc_id, pos, shard): pos is the 0-based rank in the shuffled order,
+    * shard = pos % numShards. `doc_id` must be unique and integral. */
+  def shuffleShards(df: DataFrame, numShards: Int): DataFrame = {
     require(numShards > 0, "numShards must be positive")
     val spark = df.sparkSession
     import spark.implicits._
     val p = spark.sessionState.conf.numShufflePartitions
     val ranged = df
-      .select(md5(col(keyCol).cast("string").cast("binary")).as("ord"),
-        col(keyCol).cast("long").as("key"))
+      .select(md5(col("doc_id").cast("string").cast("binary")).as("ord"),
+        col("doc_id").cast("long").as("key"))
       .repartitionByRange(p, col("ord"), col("key"))
       .sortWithinPartitions("ord", "key")
       .pinned(true)
@@ -53,6 +53,6 @@ object ShuffleShards {
       var pos = bc.value(pid)
       it.map { case (_, k) => val at = pos; pos += 1; (k, at, at % n) }
     }
-    spark.createDataset(out).toDF(keyCol, "pos", "shard")
+    spark.createDataset(out).toDF("doc_id", "pos", "shard")
   }
 }

@@ -41,12 +41,13 @@ object SkewJoin {
   }
 
   /** Two-phase (partial → final) aggregation for a skewed group-by count:
-    * group on (key, salt) first so one hot key is pre-reduced by n tasks,
+    * group on (key, salt in [0, 8)) first so one hot key is pre-reduced
+    * by 8 tasks,
     * then re-aggregate on the key alone. Spark's own partial aggregation
     * already does this per-partition; explicit salting helps when the
     * per-partition cardinality is too high for map-side combine to bite. */
-  def saltedCount(df: DataFrame, key: Column, n: Int): DataFrame =
-    df.groupBy(key.as("k"), pmod(hash(monotonically_increasing_id()), lit(n)).as(SaltCol))
+  def saltedCount(df: DataFrame, key: Column): DataFrame =
+    df.groupBy(key.as("k"), pmod(hash(monotonically_increasing_id()), lit(8)).as(SaltCol))
       .agg(count(lit(1)).as("partial"))
       .groupBy(col("k"))
       .agg(sum("partial").as("n"))

@@ -34,24 +34,24 @@ object SnapshotMerge {
 
   /** Fold `snaps` (version → snapshot, ascending versions) into the
     * provenance state table, fingerprinting each row by the md5 of its
-    * text (null text as ""): (key, fp, first_seen_version,
+    * text (null text as ""): (doc_id, fp, first_seen_version,
     * last_changed_version, last_seen_version, status). Keys must be
     * unique within each snapshot (exact-dedup first, the m44 rule). */
-  def mergeAll(snaps: Seq[(Long, DataFrame)], keyCol: String = "doc_id"): DataFrame = {
+  def mergeAll(snaps: Seq[(Long, DataFrame)]): DataFrame = {
     require(snaps.nonEmpty, "need at least one snapshot")
     require(snaps.map(_._1) == snaps.map(_._1).sorted, "versions must ascend")
     val fps = snaps.map { case (v, df) =>
-      (v, df.select(col(keyCol), md5(coalesce(col("text"), lit(""))).as("snap_fp")))
+      (v, df.select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("snap_fp")))
     }
     val (v0, f0) = fps.head
-    val init = f0.select(col(keyCol), col("snap_fp").as("fp"),
+    val init = f0.select(col("doc_id"), col("snap_fp").as("fp"),
       lit(v0).as("first_seen_version"), lit(v0).as("last_changed_version"),
       lit(v0).as("last_seen_version"), lit("added").as("status"))
     fps.tail.foldLeft(init) { case (state, (v, f)) =>
       val inSnap = col("snap_fp").isNotNull
       val inState = col("fp").isNotNull
-      state.join(f, Seq(keyCol), "full_outer").select(
-        col(keyCol),
+      state.join(f, Seq("doc_id"), "full_outer").select(
+        col("doc_id"),
         coalesce(col("snap_fp"), col("fp")).as("fp"),
         when(!inState, lit(v)).otherwise(col("first_seen_version"))
           .as("first_seen_version"),

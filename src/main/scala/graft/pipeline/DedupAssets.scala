@@ -290,7 +290,7 @@ object DedupAssets {
     materialized(s, name, dir, cols)(order match {
       case 2 => graft.text.NgramLm.bigramCounts(graft.Tables.documents(s, dir))
       case 3 => graft.text.KneserNey.trigramCounts(graft.Tables.documents(s, dir))
-      case n => graft.text.KneserNey.ngramCounts(graft.Tables.documents(s, dir), "text", n)
+      case n => graft.text.KneserNey.ngramCounts(graft.Tables.documents(s, dir), n)
     })
   }
 

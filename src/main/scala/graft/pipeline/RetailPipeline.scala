@@ -45,8 +45,7 @@ class RetailPipeline(spark: SparkSession, rawRoot: String, martRoot: String,
       .filter(col("event_date") === to_date(lit(date)))
 
     // fact_events (A1): 4-key grain, conditional revenue.
-    val fact = RetailOps.factBuild(staging, "event_date", "event_type",
-      Seq("product_id", "user_id"), "price")
+    val fact = RetailOps.factBuild(staging, Seq("product_id", "user_id"), "price")
 
     // dim_user (A4/P5): DISTINCT projection of non-null users.
     val dimUser = staging

@@ -335,7 +335,7 @@ object CorpusQueries {
     graft.operators.QuotaSample.temperatureRebalance(
       Tables.documents(s, dir).withColumn("domain",
         concat(lit("d"), length(col("doc_id").cast("string")))),
-      groupCol = "domain", keyCol = "doc_id")
+      groupCol = "domain")
 
   /** UniMax budget allocation (m100) over the m34 skewed grouping (the
     * corpus's real sources are uniform — uniform sources waterfill
@@ -396,7 +396,7 @@ object CorpusQueries {
     // (0.28 s + 0.36 s — JobProfile); per-doc grams never leave their
     // row, so the spread is result-invariant as everywhere
     graft.operators.DoremiWeights.weights(
-      Tables.documentsSpread(s, dir), domainCol = "lang")
+      Tables.documentsSpread(s, dir))
 
   /** Neyman audit allocation (m115): minimum-variance per-source sample
     * sizes for a 100-doc manual audit of char mass, over the same m34
@@ -505,7 +505,7 @@ object CorpusQueries {
   /** Deterministic global shuffle into 8 training shards (m36). */
   def shuffleShards(s: SparkSession, dir: String): DataFrame =
     graft.operators.ShuffleShards.shuffleShards(
-      Tables.documents(s, dir), keyCol = "doc_id", numShards = 8)
+      Tables.documents(s, dir), numShards = 8)
 
   /** The split fractions shared by the m39 query and its oracle. */
   val SplitFractions: Seq[(String, Double)] =
@@ -1059,7 +1059,7 @@ object CorpusQueries {
         concat(lit("qq"), substring(col("text"), 3, 1000000)))
         .otherwise(col("text")))
     graft.operators.SnapshotMerge.mergeAll(
-      Seq((1L, v1), (2L, docs), (3L, v3)), keyCol = "doc_id")
+      Seq((1L, v1), (2L, docs), (3L, v3)))
   }
 
   /** Deterministic Unicode augmentation for m50: the corpus is ASCII, so
@@ -1124,7 +1124,7 @@ object CorpusQueries {
     * stored ≡ direct in DedupAssetsSpec). */
   def lmPerplexity(s: SparkSession, dir: String): DataFrame =
     graft.text.NgramLm.scoreAgainst(Tables.documentsSpread(s, dir),
-      graft.pipeline.DedupAssets.ngramCounts(s, dir, 2), alpha = 0.5)
+      graft.pipeline.DedupAssets.ngramCounts(s, dir, 2))
 
   /** Interpolated Kneser–Ney self-perplexity (m138): the smoothing the
     * public perplexity-filter canon ships (CCNet's KenLM models) —
@@ -1595,7 +1595,7 @@ object CorpusQueries {
     // the LM counts come from the shared asset (the m43 note) — the
     // bucket build re-scans the corpus once for scoring, never to count
     val scored = graft.text.NgramLm.scoreAgainst(docs,
-        graft.pipeline.DedupAssets.ngramCounts(s, dir, 2), alpha = 0.5)
+        graft.pipeline.DedupAssets.ngramCounts(s, dir, 2))
       .select(col("doc_id"), col("perplexity"))
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
@@ -1695,7 +1695,7 @@ object CorpusQueries {
     val docs = Tables.documentsSpread(s, dir)
     val bags = graft.text.Bm25.queryBags(
       docs.filter(col("doc_id") < 10), maxTerms = 8)
-    graft.text.Bm25.topK(docs, bags, k = 10)
+    graft.text.Bm25.topK(docs, bags)
   }
 
   /** The m113 fixture: [[augmentedDocs]] plus QUOTE docs (doc_id + 4·off,
@@ -1875,7 +1875,7 @@ object CorpusQueries {
     val aug = withSyntheticDups(Tables.documents(s, dir), docOff(s, dir))
     graft.dedup.Decontaminate.exciseSpans(
       corpus = aug.filter(col("doc_id") >= 50),
-      benchmark = aug.filter(col("doc_id") < 50), w = 8)
+      benchmark = aug.filter(col("doc_id") < 50))
   }
 
   /** Bloom-prefiltered decontamination (m46): m25's exact semantics —
@@ -1895,9 +1895,7 @@ object CorpusQueries {
     val n = Tables.documents(s, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),
         size(split(lower(trim(col("text"))), " +")).cast("long").as("n_tokens"))
-    graft.operators.QuotaSample.tokenBudgetSample(
-      n, groupCol = "source", keyCol = "doc_id",
-      weightCol = "n_tokens", budget = 500L)
+    graft.operators.QuotaSample.tokenBudgetSample(n, budget = 500L)
   }
 
   /** Token-offset sequence packing (m26): assign each doc its global
@@ -2048,7 +2046,7 @@ object CorpusQueries {
 
   def lshRecallAuditOver(docs: DataFrame): DataFrame =
     bandedRecall(NgramJaccard.invertedIndexPairs(docs, threshold = 0.5, dfCap = 50),
-      MinHashLSH.verifiedPairs(docs, threshold = 0.5))
+      MinHashLSH.verifiedPairs(docs))
 
   /** LSH candidate PRECISION audit (m99) — the other half of the m85
     * dial: m85 asks "which true pairs did banding miss", this asks "how
@@ -2221,7 +2219,7 @@ object CorpusQueries {
     * argmin — the design card the audit tier (m85/m98/m99) validates
     * after the fact. */
   def lshPlan(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.LshPlanner.plan(s, totalHashes = 128, threshold = 0.8)
+    graft.dedup.LshPlanner.plan(s)
 
   /** LSH bucketCap drop card (m130): per (cap, band), how many buckets
     * and how much row mass the viral-bucket cap drops — the observability
@@ -2359,7 +2357,7 @@ object CorpusQueries {
     val docs = Tables.documentsSpread(s, dir)
     graft.text.NgramLm.scoreAgainst(
       docs.filter(col("doc_id") >= 100),
-      graft.pipeline.DedupAssets.refBigramCounts(s, dir), alpha = 0.5)
+      graft.pipeline.DedupAssets.refBigramCounts(s, dir))
   }
 
   /** Token burstiness card (m123): for the corpus top-100 tokens by
@@ -2511,7 +2509,7 @@ object CorpusQueries {
     // ran as 2 AQE-coalesced tasks; per-pair sims + min/max agg are
     // partition-invariant, and the model above trains on the unspread frame
     graft.similarity.SemanticDedup.dropNearDups(
-      Tables.spread(all, "id", Tables.CorpusSpread), model, threshold = 0.99)
+      Tables.spread(all, "id", Tables.CorpusSpread), model)
   }
 
   /** Product-quantized ADC top-k (m37): train codebooks on the corpus,
@@ -2565,7 +2563,7 @@ object CorpusQueries {
   def annStoredProbe(s: SparkSession, dir: String): DataFrame = {
     val all = vectors(s, dir)
     val (model, enc) = graft.similarity.AnnAssets.ivfPqIndex(
-      s, dir, all, nlist = 16, m = 8, ksub = 16)
+      s, dir, all, nlist = 16, ksub = 16)
     graft.OracleCapture.put("m84_ann_stored_probe", model)
     graft.similarity.IvfPq.topK(all.filter(col("id") < 10), enc, model,
       k = 5, nprobe = 4)
@@ -2603,8 +2601,7 @@ object CorpusQueries {
     val model = graft.similarity.Ivf.train(all, nlist = 16, iters = 2)
     graft.OracleCapture.put("m74_ann_tuning_sweep", model)
     graft.similarity.TuningSweep.ivfRecallCurve(
-      all.filter(col("id") < 10), all, model, k = 5,
-      nprobes = Seq(1, 2, 4, 16))
+      all.filter(col("id") < 10), all, model, nprobes = Seq(1, 2, 4, 16))
   }
 
   /** Embedding outlier report (m78): distance-to-centroid + robust MAD
@@ -2634,7 +2631,7 @@ object CorpusQueries {
     // bucket-pair side spread (measured m10 −17 %): hyperplanes are seeded
     // and data-oblivious, within-bucket cosines per-pair exact — the
     // spread only raises the scoring stage's parallelism
-    Ann.nearDupPairs(Tables.spread(all, "id", Tables.CorpusSpread), threshold = 0.99,
+    Ann.nearDupPairs(Tables.spread(all, "id", Tables.CorpusSpread),
       numPlanes = scaledPlanes(all.count()), tables = 3)
   }
 
@@ -3021,7 +3018,7 @@ object CorpusQueries {
     * [[embeddingNearDups]]'s LSH mode. */
   def embedNearDupExact(s: SparkSession, dir: String): DataFrame = {
     val corpus = withPerturbedDups(vectors(s, dir), vecOff(s, dir))
-    Ann.bruteForceNearDups(corpus.filter(col("id") < 100), corpus, threshold = 0.99)
+    Ann.bruteForceNearDups(corpus.filter(col("id") < 100), corpus)
   }
 
   /** End-to-end corpus prep (gate → dedup → cluster → canonical → chunk)

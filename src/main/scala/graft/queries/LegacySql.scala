@@ -87,7 +87,7 @@ object LegacySql {
       .select(col("event_date"), col("event_type"), col("product_id"),
         col("p_size").as("category_id"), col("p_brand").as("brand"),
         col("user_id"), col("user_session"), col("price"))
-    RetailOps.factBuild(staged, "event_date", "event_type",
+    RetailOps.factBuild(staged,
       Seq("product_id", "category_id", "brand", "user_id", "user_session"),
       "price")
   }

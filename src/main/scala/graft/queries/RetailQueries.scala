@@ -58,7 +58,7 @@ object RetailQueries {
   def factBuild(s: SparkSession, dir: String): DataFrame =
     RetailOps.factBuild(
       Tables.events(s, dir).withColumn("event_date", to_date(col("ts"))),
-      "event_date", "event_type", Seq("user_id"), "value")
+      Seq("user_id"), "value")
 
   // A2 + P6 — daily revenue summary: exact COUNT(DISTINCT) + ratios.
   def dailyRevenue(s: SparkSession, dir: String): DataFrame =
@@ -102,7 +102,7 @@ object RetailQueries {
 
   // F1 — split-with-default hierarchy levels.
   def splitHierarchy(s: SparkSession, dir: String): DataFrame = {
-    val parts = RetailOps.splitHierarchy(col("p_name"), " ", 3)
+    val parts = RetailOps.splitHierarchy(col("p_name"), " ")
     Tables.part(s, dir).select(
       col("p_partkey"), parts(0).as("category"),
       parts(1).as("sub_category1"), parts(2).as("sub_category2"))
@@ -132,7 +132,7 @@ object RetailQueries {
 
   // A6 + T2 — daily event counts with global ORDER BY (range-partitioned sort).
   def dailyEventCounts(s: SparkSession, dir: String): DataFrame =
-    RetailOps.dailyEventCounts(Tables.events(s, dir), "ts", "event_type")
+    RetailOps.dailyEventCounts(Tables.events(s, dir))
 
   // S8/T3 — deterministic head-n sample (ORDER BY key LIMIT n → top-k plan).
   def headSample(s: SparkSession, dir: String): DataFrame =

@@ -45,4 +45,3 @@ final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                        event_type: String, value: Double, props: String)
 final case class Document(doc_id: Long, text: String, lang: String,
                           source: String, n_chars: Long)
-final case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)

@@ -27,6 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
+  /** The cosine at or above which two vectors are near duplicates. */
+  private val NearDupCos = 0.99
+
   private def withNorm(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     df.withColumn("nrm", sqrt(GraftFunctions.dot(spark, col("vec"), col("vec"))))
@@ -135,12 +138,11 @@ object Ann {
   }
 
   /** Exact threshold search for a (small, broadcast) probe set: every
-    * corpus vector with cosine ≥ threshold against each probe, self-match
+    * corpus vector with cosine ≥ [[NearDupCos]] against each probe, self-match
     * excluded. The oracle-checkable exact baseline next to [[nearDupPairs]]
     * (whose LSH mode is the at-scale path): the corpus side streams in one
     * scan, so cost is O(probes × corpus) dot products with no shuffle. */
-  def bruteForceNearDups(probes: DataFrame, corpus: DataFrame,
-                         threshold: Double): DataFrame = {
+  def bruteForceNearDups(probes: DataFrame, corpus: DataFrame): DataFrame = {
     val spark = corpus.sparkSession
     val p = withNorm(probes)
       .select(col("id").as("probe_id"), col("vec").as("pvec"), col("nrm").as("pnrm"))
@@ -150,15 +152,15 @@ object Ann {
       .select(col("probe_id"), col("id").as("neighbor_id"),
         (GraftFunctions.dot(spark, col("pvec"), col("vec")) /
           (col("pnrm") * col("nrm"))).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= NearDupCos)
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold, doc_a < doc_b.
+  /** Embedding near-duplicate pairs: cosine ≥ [[NearDupCos]], doc_a < doc_b.
     * numPlanes=0 → exact all-pairs (O(n²) scored with the codegen'd dot —
     * the verification baseline); numPlanes>0 → LSH buckets with
     * OR-amplified tables (the 100 TB path: only same-bucket pairs ship). */
-  def nearDupPairs(vectors: DataFrame, threshold: Double,
-                   numPlanes: Int = 0, dim: Int = 64, tables: Int = 1): DataFrame = {
+  def nearDupPairs(vectors: DataFrame, numPlanes: Int = 0, dim: Int = 64,
+                   tables: Int = 1): DataFrame = {
     val spark = vectors.sparkSession
     val base =
       if (numPlanes <= 0) {
@@ -179,7 +181,7 @@ object Ann {
     val pairs = base.select(col("doc_a"), col("doc_b"),
         (GraftFunctions.dot(spark, col("vec_a"), col("vec_b")) /
           (col("nrm_a") * col("nrm_b"))).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= NearDupCos)
     // exact mode and single-table LSH cannot produce duplicate pairs.
     if (numPlanes > 0 && tables > 1) pairs.distinct() else pairs
   }

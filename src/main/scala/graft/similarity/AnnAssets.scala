@@ -38,15 +38,18 @@ import org.apache.spark.sql.functions._
   */
 object AnnAssets {
 
+  /** PQ subspaces per vector; part of the asset tag. */
+  private val SubSpaces = 8
+
   /** Stored (model, encoded-index reader) for `vectors` (id, vec) at
     * `dir`'s embeddings table. */
   def ivfPqIndex(s: SparkSession, dir: String, vectors: DataFrame,
-                 nlist: Int, m: Int, ksub: Int): (IvfPq.Model, DataFrame) = {
-    val tag = s"n${nlist}m${m}k$ksub"
+                 nlist: Int, ksub: Int): (IvfPq.Model, DataFrame) = {
+    val tag = s"n${nlist}m${SubSpaces}k$ksub"
     val modelRows = graft.pipeline.DedupAssets.materialized(
       s, s"annmodel-$tag", dir, Seq("part", "i", "j"),
       fpTable = "embeddings.parquet", fpCols = Seq("vec_id", "embedding")) {
-      toRows(s, IvfPq.train(vectors, nlist, m, ksub))
+      toRows(s, IvfPq.train(vectors, nlist, SubSpaces, ksub))
     }
     val model = fromRows(modelRows)
     val enc = graft.pipeline.DedupAssets.materialized(

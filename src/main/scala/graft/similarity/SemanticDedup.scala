@@ -30,10 +30,10 @@ import org.apache.spark.sql.functions._
 object SemanticDedup {
 
   /** Vectors to DROP: (vec_id, keeper_id, sim) for every vector with a
-    * smaller-id within-cell neighbor at cosine ≥ `threshold`. keeper_id is
+    * smaller-id within-cell neighbor at cosine ≥ 0.99. keeper_id is
     * the smallest such neighbor (the cluster's representative pointer),
     * sim the best similarity seen. Input schema: (id, vec: array<double>). */
-  def dropNearDups(vectors: DataFrame, model: Ivf.Model, threshold: Double,
+  def dropNearDups(vectors: DataFrame, model: Ivf.Model,
                    nprobeAssign: Int = 2): DataFrame = {
     require(nprobeAssign >= 1, "nprobeAssign must be >= 1")
     val spark = vectors.sparkSession
@@ -50,7 +50,7 @@ object SemanticDedup {
       .select(col("id_a"), col("id_b"),
         (GraftFunctions.dot(spark, col("va"), col("vb")) /
           (col("na") * col("nb"))).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= 0.99)
       .groupBy(col("id_b").as("vec_id"))
       .agg(min(col("id_a")).as("keeper_id"), max(col("sim")).as("sim"))
   }

@@ -26,15 +26,18 @@ import graft.Snapshot.SnapshotOps
   */
 object TuningSweep {
 
+  /** The k of the recall@k every setting is scored at. */
+  private val K = 5
+
   /** (nprobe, k, n_queries, mean_recall): recall@k of IVF retrieval vs
     * the exact top-k, averaged over the query set, one row per tested
     * nprobe (ascending). */
   def ivfRecallCurve(queries: DataFrame, corpus: DataFrame, model: Ivf.Model,
-                     k: Int, nprobes: Seq[Int]): DataFrame = {
+                     nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1), "nprobes must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val exact = Ann.bruteForceTopK(queries, corpus, k)
+    val exact = Ann.bruteForceTopK(queries, corpus, K)
       .select(col("query_id"), col("neighbor_id"))
       .pinned(true)
     val nQ = queries.count()
@@ -62,7 +65,7 @@ object TuningSweep {
     val w = Window.partitionBy("np", "query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     val approx = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= K)
       .select(col("np"), col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
     // per-(setting, query) overlap with the exact set, then mean over ALL
     // queries (a query with no approx hits contributes 0 via the left join)
@@ -73,7 +76,7 @@ object TuningSweep {
         count(lit(1))).as("recall"))
       .groupBy("np")
       .agg((sum(col("recall")) / nQ).as("mean_recall"))
-      .select(col("np").as("nprobe"), lit(k.toLong).as("k"),
+      .select(col("np").as("nprobe"), lit(K.toLong).as("k"),
         lit(nQ).as("n_queries"), col("mean_recall"))
       .orderBy("nprobe")
   }

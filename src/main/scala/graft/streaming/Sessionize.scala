@@ -11,11 +11,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * analysis) but its batch stack can't express incrementally.
   *
   * `flatMapGroupsWithState` keyed by user: events extend an open session
-  * until `gapSeconds` of silence; the session is emitted on timeout (or
+  * until [[GapSeconds]] of silence; the session is emitted on timeout (or
   * stream end). State per key is one small case class — bounded by active
   * users, the canonical scale profile for this operator.
   */
 object Sessionize {
+
+  /** The silence that closes a session: 30 minutes. */
+  private val GapSeconds = 1800L
 
   final case class SessionEvent(user_id: Long, event_time: Timestamp, event_type: String)
 
@@ -31,14 +34,13 @@ object Sessionize {
     * Implemented as an interval merge: the batch's (sorted) events fold
     * into session intervals, which then merge with the open session from
     * state in interval order. A late (within-watermark) event therefore
-    * joins the open session only if it lands within `gapSeconds` of it on
+    * joins the open session only if it lands within [[GapSeconds]] of it on
     * EITHER side — an event older than (session_start − gap) forms its own
     * closed session instead of regressing session_start past the gap
     * boundary. */
   def updateState(userId: Long, events: Iterator[SessionEvent],
-                  state: GroupState[SessionState],
-                  gapSeconds: Long): Iterator[UserSession] = {
-    val gapMs = gapSeconds * 1000
+                  state: GroupState[SessionState]): Iterator[UserSession] = {
+    val gapMs = GapSeconds * 1000
     val sorted = events.toSeq.sortBy(_.event_time.getTime)
     val batchSessions = sorted.foldLeft(List.empty[SessionState]) { (acc, e) =>
       val t = e.event_time.getTime
@@ -98,7 +100,7 @@ object Sessionize {
     * millis through the session timezone, and a DST-shifting zone would
     * corrupt gaps/durations around transitions, so NTZ input requires the
     * session pinned to UTC (enforced, not just documented). */
-  def batchSessions(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
+  def batchSessions(events: DataFrame, gapSeconds: Long = GapSeconds): DataFrame = {
     if (events.schema("ts").dataType ==
         org.apache.spark.sql.types.TimestampNTZType) {
       val tz = events.sparkSession.conf.get("spark.sql.session.timeZone")
@@ -134,8 +136,7 @@ object Sessionize {
 
   /** Streaming sessionization: watermarked event-time state with per-key
     * timeouts. Input must carry (user_id, event_time, event_type). */
-  def sessions(spark: SparkSession, events: Dataset[SessionEvent],
-               gapSeconds: Long = 1800): Dataset[UserSession] = {
+  def sessions(spark: SparkSession, events: Dataset[SessionEvent]): Dataset[UserSession] = {
     import spark.implicits._
     events
       .withWatermark("event_time", "1 hour")
@@ -143,6 +144,6 @@ object Sessionize {
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(
         (k: Long, it: Iterator[SessionEvent], st: GroupState[SessionState]) =>
-          updateState(k, it, st, gapSeconds))
+          updateState(k, it, st))
   }
 }

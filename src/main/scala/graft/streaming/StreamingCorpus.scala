@@ -34,22 +34,20 @@ object StreamingCorpus {
   }
 
   /** Ingest-time exact dedup: drop any document whose content fingerprint
-    * was already seen within the watermark horizon. `textCol` names the
+    * was already seen within the one-hour watermark horizon. `textCol` names the
     * content column to fingerprint — [[prepareStream]] passes the
     * SCRUBBED text, mirroring batch v2's scrub-before-dedup order. */
-  def dedupByContent(docs: DataFrame, horizon: String = "1 day",
-                     textCol: String = "text"): DataFrame =
+  def dedupByContent(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs
       .withColumn("fingerprint", TextOps.fingerprint(col(textCol)))
-      .withWatermark("arrival_ts", horizon)
+      .withWatermark("arrival_ts", "1 hour")
       .dropDuplicatesWithinWatermark("fingerprint")
 
   /** The composed streaming front door: gate → scrub → content dedup on
     * the REDACTED text, so per-document PII variance collapses before
     * fingerprinting (the batch prepareV2 ordering, at ingest time). */
-  def prepareStream(docs: DataFrame, horizon: String = "1 day"): DataFrame =
-    dedupByContent(gateAndScrub(docs), horizon,
-      textCol = "text_redacted")
+  def prepareStream(docs: DataFrame): DataFrame =
+    dedupByContent(gateAndScrub(docs), textCol = "text_redacted")
 
   /** Ingest-time LEARNED gate — the m83 classifier applied to arriving
     * documents. Scoring is a pure literal-weights projection, so the
@@ -75,13 +73,12 @@ object StreamingCorpus {
     * ingest round) — the stream holds no state store, so cost scales
     * with micro-batch size, not corpus size; identical semantics to the
     * batch operator by construction (foreachBatch delegates to it). */
-  def nearDupAdmission(docs: DataFrame, indexed: DataFrame,
-                       threshold: Double = 0.6)(
+  def nearDupAdmission(docs: DataFrame, indexed: DataFrame)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         sink(graft.dedup.IncrementalNearDup.probeIndex(
-          batch, indexed, threshold = threshold), id)
+          batch, indexed, threshold = 0.5), id)
       }
       .start()
 
@@ -110,7 +107,7 @@ object StreamingCorpus {
     * leaves the previous version in place. Single-writer contract: one
     * streaming query owns a store at a time (foreachBatch is already
     * serialized within a query). */
-  def hllRegisterStream(docs: DataFrame, groupCol: String,
+  def hllRegisterStream(docs: DataFrame,
                         hashCol: org.apache.spark.sql.Column,
                         storeDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -118,12 +115,12 @@ object StreamingCorpus {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val s = batch.sparkSession
         import graft.operators.HyperLogLog
-        val fresh = HyperLogLog.registers(batch, Seq(groupCol), hashCol)
+        val fresh = HyperLogLog.registers(batch, Seq("source"), hashCol)
         val versions = completeVersions(storeDir)
         val merged = versions.lastOption.map(p => s.read.parquet(p.toString)) match {
           case Some(standing) =>
             HyperLogLog.merge(standing.unionByName(fresh),
-              keepCols = Seq(groupCol))
+              keepCols = Seq("source"))
           case None => fresh
         }
         val next = versions.lastOption
@@ -154,7 +151,7 @@ object StreamingCorpus {
     * across chunks and a restart). Versioned-store mechanics (store-
     * monotone `v<n>`, `_SUCCESS`-complete reads, keep-latest-two
     * retirement, single-writer) are shared with the HLL store. */
-  def kmvSketchStream(docs: DataFrame, groupCol: String,
+  def kmvSketchStream(docs: DataFrame,
                       hashCol: org.apache.spark.sql.Column,
                       storeDir: String, checkpoint: String,
                       k: Int = graft.operators.KmvSketch.DefaultK)
@@ -171,7 +168,7 @@ object StreamingCorpus {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val s = batch.sparkSession
         import graft.operators.KmvSketch
-        val fresh = batch.select(col(groupCol), hashCol.as("h"))
+        val fresh = batch.select(col("source"), hashCol.as("h"))
         val versions = completeVersions(storeDir)
         val all = versions.lastOption.map(p => s.read.parquet(p.toString)) match {
           case Some(standing) =>
@@ -193,14 +190,14 @@ object StreamingCorpus {
             // the k smallest of a union are always inside the union of
             // the per-side k smallest, so this IS the sketch merge
             fresh.unionByName(
-              standing.select(col(groupCol), explode(col("sk")).as("h")))
+              standing.select(col("source"), explode(col("sk")).as("h")))
           case None => fresh
         }
         // sk_k rides in the store so a consumer built with a DIFFERENT
         // k fails loudly instead of silently mis-estimating (a saturated
         // k=64 sketch read as k=256 reports its size as the EXACT
         // distinct count — review r19c)
-        val merged = all.groupBy(groupCol)
+        val merged = all.groupBy("source")
           .agg(KmvSketch.kMin(k)(col("h")).as("sk"))
           .withColumn("sk_k", lit(k))
         val next = versions.lastOption

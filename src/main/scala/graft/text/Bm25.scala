@@ -63,13 +63,13 @@ object Bm25 {
         .cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
 
-  /** Top-k BM25 retrieval. `queryTerms` is a small (query_id, term)
+  /** Top-10 BM25 retrieval. `queryTerms` is a small (query_id, term)
     * bag-of-words table (duplicate terms within a query should be
     * pre-deduped by the caller — each (query_id, term) row scores once).
     * Self-hits (doc_id == query_id) are excluded, matching the ANN tier's
     * convention (m08). Returns (query_id, rank, doc_id, n_terms_hit,
     * score) where score = Σ_terms floor(bm25_term·10⁶) / 10⁶. */
-  def topK(docs: DataFrame, queryTerms: DataFrame, k: Int): DataFrame = {
+  def topK(docs: DataFrame, queryTerms: DataFrame): DataFrame = {
     // broadcast-prune the raw token stream BEFORE the tf aggregate: the
     // only corpus-sized exchange then carries query-term postings (map-
     // side-combined), not the full vocabulary. tf/df over the kept terms
@@ -79,7 +79,7 @@ object Bm25 {
       .join(broadcast(queryTerms.select("term").distinct()), Seq("term"))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-    score(pruned, corpusStats(docs), queryTerms, k)
+    score(pruned, corpusStats(docs), queryTerms, 10)
   }
 
   /** Serving path over a STORED postings index (m112): `postings` is the

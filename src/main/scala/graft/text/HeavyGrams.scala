@@ -61,11 +61,12 @@ object HeavyGrams {
     a
   }
 
-  /** (gram, n, total_grams, threshold) — every word w-gram whose EXACT
+  /** (gram, n, total_grams, threshold) — every word 3-gram whose EXACT
     * corpus count reaches floor(N/(k+1)) + 1, where N is the total gram
     * occurrence count. Tokenization is the corpus contract
-    * ([[TextOps.tokens]]); docs shorter than w contribute nothing. */
-  def heavyGrams(docs: DataFrame, w: Int = 3, k: Int = 1000): DataFrame = {
+    * ([[TextOps.tokens]]); docs shorter than 3 words contribute nothing. */
+  def heavyGrams(docs: DataFrame, k: Int = 1000): DataFrame = {
+    val w = 3
     val spark = docs.sparkSession
     import spark.implicits._
     val t = TextOps.tokens(col("text"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * serving every registered smoothing tier: interpolated bigram (m138),
   * modified bigram (m142), interpolated trigram (m144) and modified
   * trigram (m145 — the order-3 entry point of KenLM's production
-  * default), with any higher order reachable through [[selfPerplexityN]]
+  * default), with any higher order reachable through [[scoreAgainstN]]
   * (spec-pinned at order 4). Round 16 carried these as three parallel
   * implementations with triplicated statistics plumbing; the recursion
   * is uniform in order, so now it is written once.
@@ -79,10 +79,9 @@ object KneserNey {
     * codegen projection, no window. Tokenization is the house rule
     * (trim → lower → split on space runs); docs with < n tokens carry
     * no grams and are absent. */
-  private[text] def gramsOfN(docs: DataFrame, textCol: String,
-                             n: Int): DataFrame = {
+  private[text] def gramsOfN(docs: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"n-gram order must be >= 2, got $n")
-    val toks = split(lower(trim(col(textCol))), " +")
+    val toks = split(lower(trim(col("text"))), " +")
     def sl(i: Int) = slice(col("t"), lit(i), size(col("t")) - (n - 1))
     val first = transform(sl(1), x => struct(x.as("g1")))
     val zipped = (2 to n).foldLeft(first) { (acc, i) =>
@@ -90,7 +89,7 @@ object KneserNey {
         struct((1 until i).map(j => s.getField(s"g$j").as(s"g$j")) :+
           x.as(s"g$i"): _*))
     }
-    docs.filter(col(textCol).isNotNull)
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= n)
       .select(col("doc_id"), explode(zipped).as("g"))
@@ -103,8 +102,8 @@ object KneserNey {
 
   /** Raw order-n count table (g1..gn, cnt) — the LM sufficient
     * statistic. */
-  def ngramCounts(docs: DataFrame, textCol: String = "text", order: Int): DataFrame =
-    gramsOfN(docs, textCol, order)
+  def ngramCounts(docs: DataFrame, order: Int): DataFrame =
+    gramsOfN(docs, order)
       .groupBy((1 to order).map(i => col(s"g$i")): _*)
       .agg(count(lit(1)).as("cnt"))
 
@@ -209,7 +208,7 @@ object KneserNey {
           col(c).as(s"g${c.drop(1).toInt + (n - k)}")
         else col(c)
       }: _*)
-    var joined = gramsOfN(docs, "text", n)
+    var joined = gramsOfN(docs, n)
       .join(raw.withColumnRenamed("cnt", s"cnt$n"),
         (1 to n).map(i => s"g$i"), "left")
       .join(renameTo(ctx(n), n), (1 to (n - 1)).map(i => s"g$i"), "left")
@@ -279,27 +278,15 @@ object KneserNey {
   def scoreAgainst(docs: DataFrame, counts: DataFrame): DataFrame =
     knScore(docs, toRaw(counts, 2), 2, modifiedTop = false)
 
-  /** Self-perplexity: train and score on the same corpus — the
-    * no-external-LM quality gate under the canon smoothing. Every gram
-    * is realized, so no backoff branch can hit a zero: the output is
-    * finite by construction. */
-  def selfPerplexity(docs: DataFrame): DataFrame =
-    scoreAgainst(docs, NgramLm.bigramCounts(docs))
-
   /** MODIFIED KN over a bigram count table (a, b, cab) — per-count
     * top-level discounts (the object doc's D1/D2/D3+ ladder). */
   def modifiedScoreAgainst(docs: DataFrame, counts: DataFrame): DataFrame =
     knScore(docs, toRaw(counts, 2), 2, modifiedTop = true)
 
-  /** Modified-KN self-perplexity — [[selfPerplexity]] under the KenLM
-    * default discounts. */
-  def modifiedSelfPerplexity(docs: DataFrame): DataFrame =
-    modifiedScoreAgainst(docs, NgramLm.bigramCounts(docs))
-
   /** Trigram count table (a, b, c, cabc) — the order-3 LM sufficient
     * statistic ([[ngramCounts]] under the public column names). */
   def trigramCounts(docs: DataFrame): DataFrame =
-    ngramCounts(docs, "text", 3).toDF("a", "b", "c", "cabc")
+    ngramCounts(docs, 3).toDF("a", "b", "c", "cabc")
 
   /** TRIGRAM interpolated KN over a count table (a, b, c, cabc) — the
     * order-3 recursion: trigram discounts over the raw table, the
@@ -308,20 +295,11 @@ object KneserNey {
   def trigramScoreAgainst(docs: DataFrame, counts3: DataFrame): DataFrame =
     knScore(docs, toRaw(counts3, 3), 3, modifiedTop = false)
 
-  /** Trigram-KN self-perplexity — the order-3 no-external-LM gate.
-    * Docs with < 3 tokens have no trigrams and are absent. */
-  def trigramSelfPerplexity(docs: DataFrame): DataFrame =
-    trigramScoreAgainst(docs, trigramCounts(docs))
-
   /** TRIGRAM MODIFIED KN (m145) — order 3 with the per-count D1/D2/D3+
     * ladder at the trigram level: the entry point of the configuration
     * public KenLM actually defaults to (modified KN at order 3–5). */
   def modifiedTrigramScoreAgainst(docs: DataFrame, counts3: DataFrame): DataFrame =
     knScore(docs, toRaw(counts3, 3), 3, modifiedTop = true)
-
-  /** Modified trigram-KN self-perplexity. */
-  def modifiedTrigramSelfPerplexity(docs: DataFrame): DataFrame =
-    modifiedTrigramScoreAgainst(docs, trigramCounts(docs))
 
   /** Score held-out docs against an order-n count table in the
     * [[ngramCounts]] (g1..gn, cnt) form — the generic entry point that
@@ -330,9 +308,4 @@ object KneserNey {
   def scoreAgainstN(docs: DataFrame, counts: DataFrame, order: Int,
                     modified: Boolean = false): DataFrame =
     knScore(docs, counts, order, modified)
-
-  /** Order-n self-perplexity. */
-  def selfPerplexityN(docs: DataFrame, order: Int,
-                      modified: Boolean = false): DataFrame =
-    knScore(docs, ngramCounts(docs, "text", order), order, modified)
 }

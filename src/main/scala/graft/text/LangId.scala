@@ -208,7 +208,7 @@ object LangId {
     * (the [[Model]] note). `docs` needs (`lang`, `text`); rows with
     * null label/text or no grams are excluded. */
   def train(docs: DataFrame, iters: Int = 500): Model = {
-    val feats = trainRows(docs, "text", "lang")
+    val feats = trainRows(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // class list: bounded by the number of languages, sorted; the
@@ -231,13 +231,12 @@ object LangId {
 
   /** The training rows (label, sorted bucket ids, normalized counts) —
     * the sufficient statistic of every labeled doc with grams. */
-  private[text] def trainRows(docs: DataFrame, textCol: String,
-                              langCol: String): RDD[(String, Array[Int], Array[Double])] = {
+  private[text] def trainRows(docs: DataFrame): RDD[(String, Array[Int], Array[Double])] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
-      .filter(col(langCol).isNotNull && col(textCol).isNotNull)
-      .select(col(langCol).cast("string"), col(textCol))
+      .filter(col("lang").isNotNull && col("text").isNotNull)
+      .select(col("lang").cast("string"), col("text"))
       .as[(String, String)]
       .rdd.mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")

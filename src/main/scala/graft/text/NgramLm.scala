@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions._
   */
 object NgramLm {
 
+  /** The add-α smoothing mass α. */
+  private val Alpha = 0.5
+
   private[text] def gramsOf(docs: DataFrame): DataFrame = {
     val toks = split(lower(trim(col("text"))), " +")
     docs.filter(col("text").isNotNull)
@@ -68,14 +71,13 @@ object NgramLm {
     * cross_entropy, perplexity). Docs with < 2 tokens have no bigrams and
     * are absent (the m22/m32 contract). Perplexity ≥ 1 always: each
     * smoothed p ≤ 1 because c(ab) ≤ c(a) and α ≤ α·V. */
-  def scoreAgainst(docs: DataFrame, counts: DataFrame, alpha: Double = 0.5): DataFrame = {
-    require(alpha > 0, "alpha must be > 0 (unsmoothed LM cannot score unseen grams)")
+  def scoreAgainst(docs: DataFrame, counts: DataFrame): DataFrame = {
     val ctx = counts.groupBy("a").agg(sum("cab").as("ca"))
     val vocab = counts
       .select(explode(array(col("a"), col("b"))).as("tok"))
       .agg(countDistinct(col("tok")).cast("double").as("v"))
-    val p = (coalesce(col("cab"), lit(0L)).cast("double") + lit(alpha)) /
-      (coalesce(col("ca"), lit(0L)).cast("double") + lit(alpha) * col("v"))
+    val p = (coalesce(col("cab"), lit(0L)).cast("double") + lit(Alpha)) /
+      (coalesce(col("ca"), lit(0L)).cast("double") + lit(Alpha) * col("v"))
     // The LM tables are gram-vocabulary-sized — broadcastable for the
     // minCount-pruned models a quality gate ships, NOT for a raw crawl's
     // full bigram table; AQE decides per run (the LineDedup lesson).
@@ -89,9 +91,10 @@ object NgramLm {
       .withColumn("perplexity", exp(col("cross_entropy")))
   }
 
-  /** Self-perplexity: train and score on the same corpus — the no-external-
-    * LM quality gate (every gram is seen, so smoothing only tempers the
-    * estimates; the tails still separate noise from boilerplate). */
-  def selfPerplexity(docs: DataFrame, alpha: Double = 0.5): DataFrame =
-    scoreAgainst(docs, bigramCounts(docs), alpha)
+  /** Self-perplexity: train and score on the same corpus at add-0.5
+    * smoothing — the no-external-LM quality gate (every gram is seen, so
+    * smoothing only tempers the estimates; the tails still separate noise
+    * from boilerplate). */
+  def selfPerplexity(docs: DataFrame): DataFrame =
+    scoreAgainst(docs, bigramCounts(docs))
 }

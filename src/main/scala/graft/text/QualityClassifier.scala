@@ -132,9 +132,8 @@ object QualityClassifier {
     * compiled profile pass, null text excluded (no features to score).
     * `keep` columns pass through untouched — the streaming front door
     * carries `arrival_ts` this way. */
-  def featuresOf(docs: DataFrame, textCol: String = "text",
-                 keep: Seq[String] = Nil): DataFrame = {
-    val t = col(textCol)
+  def featuresOf(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
+    val t = col("text")
     val nw = col("p.n_words").cast("double")
     val stopRatio = col("p.n_stopwords").cast("double") / greatest(nw, lit(1.0))
     docs.filter(t.isNotNull)
@@ -190,14 +189,13 @@ object QualityClassifier {
     * a 5k-doc fixture it is spec-pinned bit-identical to [[train]] with
     * `trainCap` ≥ corpus. */
   def trainDistributed(docs: DataFrame, iters: Int = 500): Model =
-    FixedPointGd.fit(trainRows(docs, "text"), NumFeatures + 1, LocalTrainMaxRows,
+    FixedPointGd.fit(trainRows(docs), NumFeatures + 1, LocalTrainMaxRows,
         TrainRowsPerPartition, iters, Lr, FixedPointGd.DefaultStopInv)(accumulate)
       .fold(emptyModel)(f => Model(f.w, f.n, f.losses))
 
   /** The training rows (y, f1..f5) of every doc with text. */
-  private[text] def trainRows(docs: DataFrame,
-                              textCol: String): RDD[(Double, Array[Double])] =
-    featuresOf(docs, textCol)
+  private[text] def trainRows(docs: DataFrame): RDD[(Double, Array[Double])] =
+    featuresOf(docs)
       .select("y", "f1", "f2", "f3", "f4", "f5")
       .rdd
       .map(r => (r.getDouble(0),

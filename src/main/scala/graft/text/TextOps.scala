@@ -217,22 +217,22 @@ object TextOps {
 
   /** Sliding-window document chunking — the standard training-data prep
     * step (context-window shards with overlap). Chunk i covers tokens
-    * [i·stride, i·stride + size); starts run while they land inside the
+    * [40·i, 40·i + 50); starts run while they land inside the
     * doc. Pure per-row generate (explode) — no shuffle, and each doc emits
-    * ~n_tokens/stride rows, so output size is predictable at any scale.
+    * ~n_tokens/40 rows, so output size is predictable at any scale.
     * Tokens are the space-split of trim(lower(text)), consistent with the
     * stopword/shingle tokenization. */
-  def chunk(docs: DataFrame, size: Int = 50, stride: Int = 40): DataFrame = {
-    require(stride > 0 && size > 0, "size and stride must be positive")
+  def chunk(docs: DataFrame): DataFrame = {
+    val stride = 40
     val toks = split(lower(trim(col("text"))), " +")
     docs
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"), posexplode(
-        transform(sequence(lit(0), floor((org.apache.spark.sql.functions.size(col("t")) - 1) / stride).cast("int")),
-          i => slice(col("t"), i * stride + 1, lit(size)))).as(Seq("chunk_idx", "c")))
+        transform(sequence(lit(0), floor((size(col("t")) - 1) / stride).cast("int")),
+          i => slice(col("t"), i * stride + 1, lit(50)))).as(Seq("chunk_idx", "c")))
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         array_join(col("c"), " ").as("chunk_text"),
-        org.apache.spark.sql.functions.size(col("c")).cast("long").as("n_tokens"))
+        size(col("c")).cast("long").as("n_tokens"))
   }
 
   /** Gopher-style rule card (m91) — the published MassiveText per-document
@@ -244,12 +244,12 @@ object TextOps {
     * Parameter deviations from the paper, stated explicitly: the paper's
     * word-count band is 50–100k with a specific 8-word stopword list
     * ("the, be, to, of, and, that, have, with", ≥2 present); here
-    * minWords defaults to 10 (the synthetic corpus median is far below
+    * the word floor is 10 (the synthetic corpus median is far below
     * web-page length — the paper's 50 would reject most of the fixture)
     * and the stopword probe reuses the repo-wide 14-word
     * [[Stopwords]] list so every text operator shares one vocabulary.
-    * Callers wanting the paper's word floor pass minWords = 50. Rules:
-    *  - word count in [minWords, 100000];
+    * Rules:
+    *  - word count in [10, 100000];
     *  - mean word length in [3, 10] (characters of [a-z0-9]+ runs over
     *    their count);
     *  - ≥ 80% of words contain at least one alphabetic character;
@@ -257,7 +257,7 @@ object TextOps {
     * Output: per-doc rule bits (BIGINT 0/1 — engine-portable) plus the
     * AND verdict. One projection pass, no shuffle; every expression is
     * replayed verbatim by the DuckDB oracle. */
-  def gopherRules(docs: DataFrame, minWords: Long = 10): DataFrame = {
+  def gopherRules(docs: DataFrame): DataFrame = {
     val t = col("text")
     val words = regexp_extract_all(lower(t), lit("[a-z0-9]+"), lit(0))
     val nWords = size(words).cast("long")
@@ -266,7 +266,7 @@ object TextOps {
     val alphaWords = size(filter(words, w => w.rlike("[a-z]"))).cast("double")
     val sw = array(Stopwords.map(lit): _*)
     val distinctStops = size(array_intersect(array_distinct(tokens(t)), sw))
-    val rWordCount = (nWords >= minWords && nWords <= 100000L).cast("long")
+    val rWordCount = (nWords >= 10L && nWords <= 100000L).cast("long")
     val rMeanLen = (meanLen >= 3.0 && meanLen <= 10.0).cast("long")
     val rAlpha = (alphaWords / greatest(nWords.cast("double"), lit(1.0)) >= 0.8).cast("long")
     val rStops = (distinctStops >= 2).cast("long")

@@ -235,7 +235,7 @@ object UnigramLm {
         val maxLNow = math.min(maxPieceLen, probs.keysIterator.map(_.length).max)
         val freq = scala.collection.mutable.HashMap.empty[String, Long]
         table.foreach { case (w, f) =>
-          viterbiPieces(w, costNow, maxLNow, excludeFullSpan = false).foreach { s =>
+          viterbiPieces(w, costNow, maxLNow).foreach { s =>
             freq.update(s, freq.getOrElse(s, 0L) + f)
           }
         }
@@ -311,9 +311,9 @@ object UnigramLm {
   /** Viterbi best segmentation as the piece list (for the prune's freq
     * statistic); Nil for an empty or unreachable string. */
   private def viterbiPieces(word: String, cost: Map[String, Double],
-                            maxLen: Int, excludeFullSpan: Boolean): Seq[String] = {
+                            maxLen: Int): Seq[String] = {
     if (word.isEmpty) return Nil
-    val (_, back) = viterbiDp(word, cost, maxLen, excludeFullSpan)
+    val (_, back) = viterbiDp(word, cost, maxLen, excludeFullSpan = false)
     if (back(word.length) < 0) return Nil
     val buf = scala.collection.mutable.ListBuffer.empty[String]
     var i = word.length

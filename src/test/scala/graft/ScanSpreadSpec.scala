@@ -133,7 +133,7 @@ class ScanSpreadSpec extends SparkSpec {
     width shouldBe 4L
     for (pairsOf <- Seq[DataFrame => DataFrame](
       dedup.NgramJaccard.invertedIndexPairs(_, threshold = 0.5, dfCap = 50),
-      dedup.NgramJaccard.containmentPairs(_, threshold = 0.5, dfCap = 50))) {
+      dedup.NgramJaccard.containmentPairs(_, threshold = 0.5))) {
       val unpinned = rows(pairsOf(docs))
       withSpread {
         val pinned = pairsOf(docs)

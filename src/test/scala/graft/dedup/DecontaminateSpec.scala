@@ -50,7 +50,7 @@ class DecontaminateSpec extends SparkSpec {
       (301L, quote),                     // whole doc = eval item
       (302L, "completely unrelated text about training data pipelines at scale today")
     ).toDF("doc_id", "text")
-    val out = Decontaminate.exciseSpans(corpus, benchmark, w = 8)
+    val out = Decontaminate.exciseSpans(corpus, benchmark)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     // embedded: exactly the 13 quoted tokens are removed, prefix+suffix survive

@@ -40,7 +40,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("MinHashLSH finds exact and near duplicates, not unrelated docs") {
-    val pairs = MinHashLSH.verifiedPairs(docs, threshold = 0.5)
+    val pairs = MinHashLSH.verifiedPairs(docs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     pairs should contain((1L, 2L))
     pairs.map(p => Set(p._1, p._2)) should not contain Set(1L, 4L)
@@ -48,7 +48,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("MinHashLSH jaccard of an exact pair is 1.0") {
-    val j = MinHashLSH.verifiedPairs(docs, threshold = 0.5)
+    val j = MinHashLSH.verifiedPairs(docs)
       .filter($"doc_a" === 1L && $"doc_b" === 2L)
       .select("jaccard").as[Double].collect()(0)
     j shouldBe 1.0
@@ -57,7 +57,7 @@ class DedupSpec extends SparkSpec {
   test("MinHashLSH signature approximates jaccard (property)") {
     // sig agreement fraction ≈ true jaccard for a 1-word-changed doc.
     val sig = docs.select($"doc_id",
-      MinHashLSH.signature(MinHashLSH.shingles($"text"), k = 128).as("sig"))
+      MinHashLSH.signature(MinHashLSH.shingles($"text")).as("sig"))
     val Seq(s1, s3) = sig.filter($"doc_id".isin(1L, 3L)).orderBy("doc_id")
       .select("sig").as[Seq[Long]].collect().toSeq
     val agree = s1.zip(s3).count { case (a, b) => a == b } / 128.0
@@ -223,7 +223,7 @@ class DedupSpec extends SparkSpec {
 
   test("bands must divide numHashes (no silent coordinate drop)") {
     an[IllegalArgumentException] should be thrownBy
-      MinHashLSH.candidatePairs(docs, numHashes = 64, bands = 12)
+      MinHashLSH.candidatePairs(docs, bands = 12)
   }
 
   test("bucketCap drops pathological buckets (scale guard)") {

@@ -66,7 +66,7 @@ class IncrementalNearDupSpec extends SparkSpec {
     val batch = Seq((100L, "common boiler plate only zz")).toDF("doc_id", "text")
     // The shared shingles all contain the viral prefix; with the gram
     // dropped at df > 50 nothing reaches the threshold.
-    val out = IncrementalNearDup.probeIndex(batch, index, threshold = 0.3, dfCap = 50)
+    val out = IncrementalNearDup.probeIndex(batch, index, threshold = 0.3)
     out.collect().length shouldBe 0
   }
 }

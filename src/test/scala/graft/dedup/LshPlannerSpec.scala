@@ -5,7 +5,7 @@ import graft.SparkSpec
 class LshPlannerSpec extends SparkSpec {
 
   test("every factorization appears, areas are valid, exactly one best") {
-    val out = LshPlanner.plan(spark, totalHashes = 128, threshold = 0.8)
+    val out = LshPlanner.plan(spark)
       .collect()
     out.map(r => (r.getInt(0), r.getInt(1))).toSet shouldBe
       Set((1, 128), (2, 64), (4, 32), (8, 16), (16, 8), (32, 4), (64, 2), (128, 1))
@@ -17,7 +17,7 @@ class LshPlannerSpec extends SparkSpec {
   }
 
   test("the degenerate splits are never optimal: b=H admits everything, r=H nothing") {
-    val out = LshPlanner.plan(spark, totalHashes = 128, threshold = 0.8)
+    val out = LshPlanner.plan(spark)
       .collect().map(r => (r.getInt(0), r)).toMap
     // one row per band (r=1): P(candidate) = 1-(1-s)^128 ~ 1 everywhere -> huge FP
     out(128).getDouble(2) should be > 0.7
@@ -28,7 +28,7 @@ class LshPlannerSpec extends SparkSpec {
   }
 
   test("the chosen split's S-curve midpoint sits near the target threshold") {
-    val best = LshPlanner.plan(spark, totalHashes = 128, threshold = 0.8)
+    val best = LshPlanner.plan(spark)
       .filter("best").collect().head
     val (b, r) = (best.getInt(0), best.getInt(1))
     // the half-probability similarity (1-(1-s^r)^b = 0.5 at

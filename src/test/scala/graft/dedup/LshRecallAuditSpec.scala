@@ -28,7 +28,7 @@ class LshRecallAuditSpec extends SparkSpec {
     // recompute both sides directly and band them in the spec
     val truth = NgramJaccard.invertedIndexPairs(corpus, threshold = 0.5, dfCap = 50)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val det = MinHashLSH.verifiedPairs(corpus, threshold = 0.5)
+    val det = MinHashLSH.verifiedPairs(corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     truth should not be empty
     val expected = truth.groupBy { case (_, j) => math.min(math.floor(j * 10.0) / 10.0, 0.9) }

@@ -16,7 +16,7 @@ class NoveltyCurveSpec extends SparkSpec {
       (6L, "pi rho sigma"), (7L, "tau upsilon phi"),
       (8L, "chi psi omega"), (9L, "")
     ).toDF("doc_id", "text")
-    val out = NoveltyCurve.curve(docs, w = 3, buckets = 10).orderBy("bucket")
+    val out = NoveltyCurve.curve(docs, buckets = 10).orderBy("bucket")
       .collect()
     out.map(_.getAs[Long]("bucket")).toSeq shouldBe (0L to 9L)
     out.foreach(_.getAs[Long]("n_docs") shouldBe 1L)
@@ -38,7 +38,7 @@ class NoveltyCurveSpec extends SparkSpec {
       (2L, "b c d"),     // gram "b c d" already seen in doc 0
       (3L, "h i j")      // new
     ).toDF("doc_id", "text")
-    val out = NoveltyCurve.curve(docs, w = 3, buckets = 2).orderBy("bucket")
+    val out = NoveltyCurve.curve(docs, buckets = 2).orderBy("bucket")
       .collect()
     out.map(_.getAs[Long]("new_grams")).toSeq shouldBe Seq(3L, 1L)
     out.map(_.getAs[Long]("n_docs")).toSeq shouldBe Seq(2L, 2L)
@@ -49,7 +49,7 @@ class NoveltyCurveSpec extends SparkSpec {
       (0L, "a b c"), (1L, null.asInstanceOf[String]), (2L, "d e f"),
       (3L, "g h i")
     ).toDF("doc_id", "text")
-    val out = NoveltyCurve.curve(docs, w = 3, buckets = 3).orderBy("bucket")
+    val out = NoveltyCurve.curve(docs, buckets = 3).orderBy("bucket")
       .collect()
     out.map(_.getAs[Long]("n_docs")).sum shouldBe 3L
   }

@@ -101,7 +101,7 @@ class MultimodalSpec extends SparkSpec {
     // keeps 0, 2, 4; the 4-byte tail is dropped.
     val bytes = Array.tabulate[Byte](100)(_.toByte)
     val media = Seq(Multimodal.MediaRow(1L, bytes, "application/octet-stream", 100L)).toDS()
-    val frames = Multimodal.sampleFrames(media, frameBytes = 16, stride = 2)
+    val frames = Multimodal.sampleFrames(media)
       .collect().sortBy(_.frame_idx)
     frames.map(_.frame_idx) shouldBe Array(0L, 2L, 4L)
     frames.foreach(_.frame.length shouldBe 16)

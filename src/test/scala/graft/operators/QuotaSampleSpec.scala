@@ -56,7 +56,7 @@ class QuotaSampleSpec extends SparkSpec {
       (10L, "b", 9000L), // single doc over budget — still kept
       (20L, "c", 100L)
     ).toDF("doc_id", "source", "n_tokens")
-    val r = QuotaSample.tokenBudgetSample(df, "source", "doc_id", "n_tokens", 500L)
+    val r = QuotaSample.tokenBudgetSample(df, 500L)
       .collect()
     r.foreach(_.getAs[Long]("cum_before") should be < 500L)
     val bySource = r.groupBy(_.getAs[String]("source")).view.mapValues(_.length).toMap
@@ -68,7 +68,7 @@ class QuotaSampleSpec extends SparkSpec {
   test("temperatureRebalance: big groups shrink toward sqrt(n*min), small kept whole") {
     val df = ((0 until 100).map(i => (i.toLong, "big")) ++
       (100 until 109).map(i => (i.toLong, "small"))).toDF("doc_id", "domain")
-    val r = QuotaSample.temperatureRebalance(df, "domain", "doc_id").collect()
+    val r = QuotaSample.temperatureRebalance(df, "domain").collect()
     val byGroup = r.groupBy(_.getAs[String]("domain")).view.mapValues(_.length).toMap
     byGroup("big") shouldBe 30 // ceil(sqrt(100*9))
     byGroup("small") shouldBe 9 // min group survives intact
@@ -113,7 +113,7 @@ class QuotaSampleSpec extends SparkSpec {
         .collect().map(r => (r.getAs[Long]("key"), r.getAs[String]("grp"),
           r.getAs[Long]("rk"), r.getAs[Long]("target"))).toSet
     }
-    val got = QuotaSample.temperatureRebalance(df, "domain", "doc_id")
+    val got = QuotaSample.temperatureRebalance(df, "domain")
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("domain"),
         r.getAs[Long]("rk"), r.getAs[Long]("target"))).toSet
     got shouldBe windowForm
@@ -126,7 +126,7 @@ class QuotaSampleSpec extends SparkSpec {
     // Both sides of the targets join must build the string key the same
     // way — a native-vs-string mismatch would ride implicit coercion.
     val df = (0 until 60).map(i => (i.toLong, (i % 3).toLong)).toDF("doc_id", "bucket")
-    val r = QuotaSample.temperatureRebalance(df, "bucket", "doc_id").collect()
+    val r = QuotaSample.temperatureRebalance(df, "bucket").collect()
     r.length shouldBe 60 // uniform groups: target = n, everything kept
     r.map(_.getAs[String]("bucket")).toSet shouldBe Set("0", "1", "2")
   }
@@ -134,9 +134,9 @@ class QuotaSampleSpec extends SparkSpec {
   test("tokenBudgetSample: deterministic across partitionings") {
     val df = (0 until 200).map(i => (i.toLong, s"s${i % 5}", (i % 17 + 1).toLong))
       .toDF("doc_id", "source", "n_tokens")
-    val a = QuotaSample.tokenBudgetSample(df.repartition(13), "source", "doc_id", "n_tokens", 50L)
+    val a = QuotaSample.tokenBudgetSample(df.repartition(13), 50L)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    val b = QuotaSample.tokenBudgetSample(df.coalesce(1), "source", "doc_id", "n_tokens", 50L)
+    val b = QuotaSample.tokenBudgetSample(df.coalesce(1), 50L)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
     a shouldBe b
   }

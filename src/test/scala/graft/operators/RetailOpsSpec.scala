@@ -96,7 +96,7 @@ class RetailOpsSpec extends SparkSpec {
       ("2019-10-01", "purchase", 1L, 2.5),
       ("2019-10-01", "view", 1L, 99.0)
     ).toDF("event_date", "event_type", "user_id", "value")
-    val out = RetailOps.factBuild(df, "event_date", "event_type", Seq("user_id"), "value")
+    val out = RetailOps.factBuild(df, Seq("user_id"), "value")
       .orderBy("event_type")
       .select("event_type", "total_events", "total_revenue")
       .as[(String, Long, Double)].collect().toSeq
@@ -108,7 +108,7 @@ class RetailOpsSpec extends SparkSpec {
       ("2015-06-01", "transaction", 9L, 7.5),
       ("2015-06-01", "view", 9L, 3.0)
     ).toDF("event_date", "event_type", "visitorid", "value")
-    val out = RetailOps.factBuild(df, "event_date", "event_type",
+    val out = RetailOps.factBuild(df,
         Seq("visitorid"), "value", purchaseKind = "transaction")
       .agg(sum("total_revenue")).as[Double].collect()(0)
     out shouldBe 7.5
@@ -118,16 +118,16 @@ class RetailOpsSpec extends SparkSpec {
     val df = (1L to 4000L).map(i => (i, if (i % 4 == 0) "minor" else "major"))
       .toDF("id", "cls")
     val fr = Map("major" -> 0.1, "minor" -> 1.0)
-    val s1 = RetailOps.stratifiedSample(df, "cls", "id", fr).collect().map(_.getLong(0)).sorted
-    val s2 = RetailOps.stratifiedSample(df.repartition(7), "cls", "id", fr)
+    val s1 = RetailOps.stratifiedSample(df, fr).collect().map(_.getLong(0)).sorted
+    val s2 = RetailOps.stratifiedSample(df.repartition(7), fr)
       .collect().map(_.getLong(0)).sorted
     s2 shouldBe s1 // same rows regardless of partitioning
-    val byCls = RetailOps.stratifiedSample(df, "cls", "id", fr)
+    val byCls = RetailOps.stratifiedSample(df, fr)
       .groupBy("cls").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     byCls("minor") shouldBe 1000L // fraction 1.0 keeps every row
     byCls("major").toDouble / 3000 shouldBe 0.1 +- 0.03 // hash-uniform
     // strata not listed default to fraction 0 (dropped)
-    RetailOps.stratifiedSample(df, "cls", "id", Map("minor" -> 1.0))
+    RetailOps.stratifiedSample(df, Map("minor" -> 1.0))
       .filter(col("cls") === "major").count() shouldBe 0L
   }
 }

@@ -32,7 +32,7 @@ class SkewJoinSpec extends SparkSpec {
   test("saltedCount equals plain groupBy count") {
     val plain = skewed.groupBy($"k").count()
       .select($"k", $"count".as("n")).orderBy("k").collect()
-    val salted = SkewJoin.saltedCount(skewed, $"k", n = 8)
+    val salted = SkewJoin.saltedCount(skewed, $"k")
       .select($"k".as("k"), $"n").orderBy("k").collect()
     salted.map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
       plain.map(r => (r.getLong(0), r.getLong(1))).toSeq

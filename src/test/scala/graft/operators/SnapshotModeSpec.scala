@@ -53,7 +53,7 @@ class SnapshotModeSpec extends SparkSpec {
     import spark.implicits._
     val keys = (1L to 500L).toDF("doc_id")
     assertModeInvariant(
-      ShuffleShards.shuffleShards(keys, "doc_id", numShards = 7))
+      ShuffleShards.shuffleShards(keys, numShards = 7))
   }
 
   test("pagerank: identical in reliable mode") {

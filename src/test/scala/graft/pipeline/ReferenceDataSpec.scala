@@ -63,8 +63,7 @@ class ReferenceDataSpec extends SparkSpec {
 
   test("fact build over the real day: revenue only from purchases, grain holds") {
     val staged = Sources.rawEventsCsv(spark, root, "2019-10-05")
-    val fact = RetailOps.factBuild(staged, "event_date", "event_type",
-      Seq("product_id", "user_id"), "price")
+    val fact = RetailOps.factBuild(staged, Seq("product_id", "user_id"), "price")
     val total = fact.agg(
       sum("total_events").as("e"),
       sum(when(col("event_type") =!= "purchase", col("total_revenue")).otherwise(0.0)).as("nonpurchase_rev"))

@@ -89,7 +89,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     // the DIRECT chain — the asset-backed query would reuse the first
     // partitioning's stored build and make the check vacuous
     assertInvariant((s, d) => graft.dedup.MinHashLSH.verifiedPairs(
-      CorpusQueries.augmentedDocs(s, d), threshold = 0.5))
+      CorpusQueries.augmentedDocs(s, d)))
   }
 
   test("m14 inverted-index jaccard pairs identical across partitionings") {

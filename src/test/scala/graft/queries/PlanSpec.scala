@@ -760,8 +760,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("m138: KN DIRECT build — exchanges carry gram keys and count partials, never text; scalars broadcast") {
     // the BUILD-shape pin (what asset:ngramcounts2 + a fresh-count run
     // pays); the served queries below scan the stored asset instead
-    val p = plan(graft.text.KneserNey.selfPerplexity(
-      graft.Tables.documents(spark, dir)))
+    val docs = graft.Tables.documents(spark, dir)
+    val p = plan(graft.text.KneserNey.scoreAgainst(docs,
+      graft.text.NgramLm.bigramCounts(docs)))
     // every KN statistic is a re-aggregation of the bigram count table:
     // the corpus-sized exchanges carry (a, b) keys with map-side partial
     // counts, and the 1-row discount/vocab frame rides a broadcast —
@@ -800,8 +801,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("m144: trigram-KN DIRECT build — exchanges carry gram keys and count partials, never text") {
-    val p = plan(graft.text.KneserNey.trigramSelfPerplexity(
-      graft.Tables.documents(spark, dir)))
+    val docs = graft.Tables.documents(spark, dir)
+    val p = plan(graft.text.KneserNey.trigramScoreAgainst(docs,
+      graft.text.KneserNey.trigramCounts(docs)))
     p should include("partial_count")
     p should include("BroadcastNestedLoopJoin")
     (p should not).include("CartesianProduct")

@@ -45,7 +45,7 @@ class PplBucketsSpec extends SparkSpec {
       (i, "the cat sat on the mat and the cat sat on the mat again " + s"x$i", "src"))
     val noise = Seq((99L, "qz vj xk wp br tn md lc gf hs dq zv kx pw rb nt dm cl fg sh", "src"))
     val docs = (fluent ++ noise).toDF("doc_id", "text", "source")
-    val scored = graft.text.NgramLm.selfPerplexity(docs, alpha = 0.5)
+    val scored = graft.text.NgramLm.selfPerplexity(docs)
       .select(col("doc_id"), col("perplexity"))
       .join(docs.select("doc_id", "source"), Seq("doc_id"))
     val noisePpl = scored.filter(col("doc_id") === 99L).head().getDouble(1)

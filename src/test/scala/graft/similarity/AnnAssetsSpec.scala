@@ -18,7 +18,7 @@ class AnnAssetsSpec extends SparkSpec {
     val all = vecs()
     val fresh = IvfPq.train(all, nlist = 16, m = 8, ksub = 16)
     val (loaded, enc) = AnnAssets.ivfPqIndex(spark, dir, all,
-      nlist = 16, m = 8, ksub = 16)
+      nlist = 16, ksub = 16)
     // training is deterministic, parquet doubles are exact → equality
     loaded.coarse.centroids shouldBe fresh.coarse.centroids
     loaded.pq.codebooks shouldBe fresh.pq.codebooks
@@ -33,7 +33,7 @@ class AnnAssetsSpec extends SparkSpec {
   test("encoded asset is cell-clustered (sorted shards by cell, id)") {
     DedupAssets.reset()
     val (_, enc) = AnnAssets.ivfPqIndex(spark, dir, vecs(),
-      nlist = 16, m = 8, ksub = 16)
+      nlist = 16, ksub = 16)
     // within each stored shard file, rows are (cell, id)-ordered
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(input_file_name())
@@ -57,7 +57,7 @@ class AnnAssetsSpec extends SparkSpec {
       def modelDirs = java.nio.file.Files.list(root).toArray
         .map(_.toString).count(_.contains("annmodel"))
       def build() = AnnAssets.ivfPqIndex(spark, corpus.toString,
-        vecs(corpus.toString), nlist = 4, m = 8, ksub = 4)
+        vecs(corpus.toString), nlist = 4, ksub = 4)
       build()
       modelDirs shouldBe 1
       // "new JVM": memo cleared, stored asset reused → still one dir

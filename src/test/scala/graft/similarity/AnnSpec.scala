@@ -41,13 +41,13 @@ class AnnSpec extends SparkSpec {
   }
 
   test("nearDupPairs exact mode finds only the close pair") {
-    val pairs = Ann.nearDupPairs(vecs, threshold = 0.99)
+    val pairs = Ann.nearDupPairs(vecs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     pairs shouldBe Set((0L, 2L))
   }
 
   test("nearDupPairs LSH mode agrees on the close pair (same-bucket)") {
-    val pairs = Ann.nearDupPairs(vecs, threshold = 0.99, numPlanes = 2, dim = 4)
+    val pairs = Ann.nearDupPairs(vecs, numPlanes = 2, dim = 4)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     pairs shouldBe Set((0L, 2L))
   }

@@ -40,7 +40,7 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("recall and precision vs brute-force exact pairs") {
     val model = Ivf.train(corpus, nlist = 4, iters = 2)
-    val got = SemanticDedup.dropNearDups(corpus, model, threshold = 0.99)
+    val got = SemanticDedup.dropNearDups(corpus, model)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val want = exactDrops(0.99)
 
@@ -65,10 +65,10 @@ class SemanticDedupSpec extends SparkSpec {
     val pair = Seq((1L, Seq(0.001, 1.0)), (2L, Seq(-0.001, 1.0))).toDF("id", "vec")
     pair.select(Ivf.cellId($"vec", model)).as[Int].collect().toSet.size shouldBe 2
 
-    val single = SemanticDedup.dropNearDups(pair, model, 0.99, nprobeAssign = 1)
+    val single = SemanticDedup.dropNearDups(pair, model, nprobeAssign = 1)
     single.count() shouldBe 0 // the boundary miss multi-probe exists to fix
 
-    val multi = SemanticDedup.dropNearDups(pair, model, 0.99, nprobeAssign = 2)
+    val multi = SemanticDedup.dropNearDups(pair, model, nprobeAssign = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     multi.toSeq shouldBe Seq((2L, 1L))
   }
@@ -78,7 +78,7 @@ class SemanticDedupSpec extends SparkSpec {
     // min/max aggregation must emit it once.
     val model = Ivf.Model(Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0)))
     val pair = Seq((1L, Seq(0.0, 1.0)), (2L, Seq(0.0, 1.0001))).toDF("id", "vec")
-    val out = SemanticDedup.dropNearDups(pair, model, 0.99, nprobeAssign = 2).collect()
+    val out = SemanticDedup.dropNearDups(pair, model, nprobeAssign = 2).collect()
     out.length shouldBe 1
     out.head.getLong(0) shouldBe 2L
     out.head.getLong(1) shouldBe 1L
@@ -87,6 +87,6 @@ class SemanticDedupSpec extends SparkSpec {
   test("below-threshold neighbors are not dropped") {
     val model = Ivf.Model(Seq(Seq(1.0, 0.0)))
     val apart = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.7, 0.7))).toDF("id", "vec")
-    SemanticDedup.dropNearDups(apart, model, 0.99).count() shouldBe 0
+    SemanticDedup.dropNearDups(apart, model).count() shouldBe 0
   }
 }

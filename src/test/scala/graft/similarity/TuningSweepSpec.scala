@@ -14,7 +14,7 @@ class TuningSweepSpec extends SparkSpec {
   test("recall is monotone in nprobe and reaches exactly 1.0 at full probe") {
     val model = Ivf.train(all, nlist = 8, iters = 2)
     val out = TuningSweep.ivfRecallCurve(
-        all.filter(col("id") < 8), all, model, k = 5, nprobes = Seq(1, 2, 8))
+        all.filter(col("id") < 8), all, model, nprobes = Seq(1, 2, 8))
       .collect().sortBy(_.getLong(0))
     out.map(_.getLong(0)).toSeq shouldBe Seq(1L, 2L, 8L)
     val recalls = out.map(_.getDouble(3))

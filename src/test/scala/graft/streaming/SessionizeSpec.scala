@@ -14,7 +14,7 @@ class SessionizeSpec extends SparkSpec {
   test("streaming sessionization closes sessions on gap and counts purchases") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SessionEvent]
-    val query = sessions(spark, input.toDS(), gapSeconds = 1800)
+    val query = sessions(spark, input.toDS())
       .writeStream.format("memory").queryName("sessions_out")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
 
@@ -93,7 +93,7 @@ class SessionizeSpec extends SparkSpec {
   test("late within-gap event extends the session backwards, never regresses the end") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SessionEvent]
-    val query = sessions(spark, input.toDS(), gapSeconds = 1800)
+    val query = sessions(spark, input.toDS())
       .writeStream.format("memory").queryName("sessions_late")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
 
@@ -118,7 +118,7 @@ class SessionizeSpec extends SparkSpec {
   test("late event older than session_start - gap opens its own session") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SessionEvent]
-    val query = sessions(spark, input.toDS(), gapSeconds = 1800)
+    val query = sessions(spark, input.toDS())
       .writeStream.format("memory").queryName("sessions_toolate")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
 

@@ -41,7 +41,7 @@ class StreamingCorpusSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val base = "the quick brown fox jumps over the lazy dog and runs to a barn"
     val input = MemoryStream[StreamDoc]
-    val q = StreamingCorpus.prepareStream(input.toDF(), horizon = "1 hour")
+    val q = StreamingCorpus.prepareStream(input.toDF())
       .select("doc_id")
       .writeStream.format("memory").queryName("prepared").outputMode("append").start()
     // Same content, distinct PII — identical only after redaction.
@@ -95,7 +95,7 @@ class StreamingCorpusSpec extends SparkSpec {
       StreamDoc(12L, ts(2), "one two three four five six"))
     val flagged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val input = MemoryStream[StreamDoc]
-    val q = StreamingCorpus.nearDupAdmission(input.toDF(), index, threshold = 0.5) {
+    val q = StreamingCorpus.nearDupAdmission(input.toDF(), index) {
       (pairs, _) =>
         flagged ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -124,14 +124,14 @@ class StreamingCorpusSpec extends SparkSpec {
     val in1 = MemoryStream[StreamDoc]
     val q1 = StreamingCorpus.hllRegisterStream(
       in1.toDF().select(col("text"), expr("concat('src', doc_id % 3)").as("source")),
-      "source", HyperLogLog.hash48(col("text")), store, ckpt)
+      HyperLogLog.hash48(col("text")), store, ckpt)
     in1.addData(docs.take(40): _*); q1.processAllAvailable()
     in1.addData(docs.slice(40, 80): _*); q1.processAllAvailable()
     q1.stop()
     val in2 = MemoryStream[StreamDoc] // a fresh query on the same store
     val q2 = StreamingCorpus.hllRegisterStream(
       in2.toDF().select(col("text"), expr("concat('src', doc_id % 3)").as("source")),
-      "source", HyperLogLog.hash48(col("text")),
+      HyperLogLog.hash48(col("text")),
       store, java.nio.file.Files.createTempDirectory("graft-hll-ckpt2").toString)
     in2.addData(docs.drop(80): _*); q2.processAllAvailable()
     q2.stop()
@@ -171,14 +171,14 @@ class StreamingCorpusSpec extends SparkSpec {
     val in1 = MemoryStream[StreamDoc]
     val q1 = StreamingCorpus.kmvSketchStream(
       in1.toDF().select(col("text"), expr("concat('src', doc_id % 3)").as("source")),
-      "source", HyperLogLog.hash48(col("text")), store, ckpt, k)
+      HyperLogLog.hash48(col("text")), store, ckpt, k)
     in1.addData(docs.take(40): _*); q1.processAllAvailable()
     in1.addData(docs.slice(40, 80): _*); q1.processAllAvailable()
     q1.stop()
     val in2 = MemoryStream[StreamDoc] // a fresh query on the same store
     val q2 = StreamingCorpus.kmvSketchStream(
       in2.toDF().select(col("text"), expr("concat('src', doc_id % 3)").as("source")),
-      "source", HyperLogLog.hash48(col("text")),
+      HyperLogLog.hash48(col("text")),
       store, java.nio.file.Files.createTempDirectory("graft-kmv-ckpt2").toString, k)
     in2.addData(docs.drop(80): _*); q2.processAllAvailable()
     q2.stop()
@@ -214,7 +214,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val q = StreamingCorpus.kmvSketchStream(
       in.toDF().select(col("text"),
         expr("CASE WHEN doc_id < 100 THEN 'src0' ELSE 'src1' END").as("source")),
-      "source", HyperLogLog.hash48(col("text")), store,
+      HyperLogLog.hash48(col("text")), store,
       java.nio.file.Files.createTempDirectory("graft-kmv-card-ckpt").toString)
     in.addData(docs: _*); q.processAllAvailable(); q.stop()
     // incoming batch: items 8..12 ({8,9} already in src0, all 5 in src1)
@@ -247,7 +247,7 @@ class StreamingCorpusSpec extends SparkSpec {
     val in2 = MemoryStream[StreamDoc]
     val q2 = StreamingCorpus.kmvSketchStream(
       in2.toDF().select(col("text"), lit("src0").as("source")),
-      "source", HyperLogLog.hash48(col("text")), store,
+      HyperLogLog.hash48(col("text")), store,
       java.nio.file.Files.createTempDirectory("graft-kmv-card-ckpt2").toString,
       k = 64)
     in2.addData(StreamDoc(999L, ts(0), "item-99"))
@@ -261,7 +261,7 @@ class StreamingCorpusSpec extends SparkSpec {
   test("content dedup drops exact copies across micro-batches within the horizon") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StreamDoc]
-    val q = StreamingCorpus.dedupByContent(input.toDF(), horizon = "1 hour")
+    val q = StreamingCorpus.dedupByContent(input.toDF())
       .select("doc_id")
       .writeStream.format("memory").queryName("content_dedup").outputMode("append").start()
     input.addData(StreamDoc(1L, ts(0), "same text"), StreamDoc(2L, ts(1), "other text"))

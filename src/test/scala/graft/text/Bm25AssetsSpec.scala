@@ -20,7 +20,7 @@ class Bm25AssetsSpec extends SparkSpec {
     val (post, stats) = Bm25Assets.index(spark, dir)
     val stored = Bm25.topKStored(post, stats, bags, k = 10)
       .collect().map(_.toString).sorted.toSeq
-    val fresh = Bm25.topK(docs, bags, k = 10)
+    val fresh = Bm25.topK(docs, bags)
       .collect().map(_.toString).sorted.toSeq
     stored shouldBe fresh
     stored.nonEmpty shouldBe true

@@ -53,7 +53,7 @@ class Bm25Spec extends SparkSpec {
 
   test("topK: hand-checked scores, self-hit excluded, n_terms_hit counted") {
     val bags = Bm25.queryBags(docs.filter(col("doc_id") === 0), maxTerms = 8)
-    val out = Bm25.topK(docs, bags, k = 10).collect()
+    val out = Bm25.topK(docs, bags).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("rank"), r.getAs[Long]("n_terms_hit"),
           r.getAs[Double]("score"))).toMap
@@ -71,7 +71,7 @@ class Bm25Spec extends SparkSpec {
       (0L, "x y"), (1L, "x x x"), (2L, "x z q"), (3L, "p q r")
     ).toDF("doc_id", "text")
     val bags = Seq((0L, "x")).toDF("query_id", "term")
-    val out = Bm25.topK(corpus, bags, k = 10).collect()
+    val out = Bm25.topK(corpus, bags).collect()
       .map(r => r.getAs[Long]("rank") -> r.getAs[Long]("doc_id")).toMap
     out(1L) shouldBe 1L // tf=3 outranks tf=1 (dl difference is second-order here)
     out(2L) shouldBe 2L

@@ -35,14 +35,14 @@ class FixedPointGdFitSpec extends SparkSpec {
 
   test("QualityClassifier rows: driver fold ≡ 3-partition distributed fold, bit for bit") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").repartition(6)
-    bothBranches(QualityClassifier.trainRows(docs, "text"),
+    bothBranches(QualityClassifier.trainRows(docs),
       QualityClassifier.NumFeatures + 1, QualityClassifier.LocalTrainMaxRows,
       QualityClassifier.TrainRowsPerPartition, 8.0)(QualityClassifier.accumulate)
   }
 
   test("LangId rows: driver fold ≡ 3-partition distributed fold, bit for bit") {
     val docs = graft.queries.CorpusQueries.syntheticLangDocs(spark, 0L).repartition(6)
-    val rows = LangId.trainRows(docs, "text", "lang")
+    val rows = LangId.trainRows(docs)
     val clsIdx = rows.map(_._1).distinct().collect().sorted.zipWithIndex.toMap
     val k = clsIdx.size
     k shouldBe LangId.PlantedPhrases.size

@@ -7,7 +7,7 @@ class GopherRulesSpec extends SparkSpec {
   import spark.implicits._
 
   private def rules(rows: (Long, String)*) =
-    TextOps.gopherRules(rows.toDF("doc_id", "text"), minWords = 10)
+    TextOps.gopherRules(rows.toDF("doc_id", "text"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
       .toMap

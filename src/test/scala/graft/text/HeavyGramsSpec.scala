@@ -7,7 +7,7 @@ class HeavyGramsSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(k: Int, rows: (Long, String)*): Map[String, Row] =
-    HeavyGrams.heavyGrams(rows.toDF("doc_id", "text"), w = 3, k = k)
+    HeavyGrams.heavyGrams(rows.toDF("doc_id", "text"), k = k)
       .collect().map(r => r.getAs[String]("gram") -> r).toMap
 
   test("a planted heavy phrase surfaces with its EXACT count; singletons do not") {

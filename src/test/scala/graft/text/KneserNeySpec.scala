@@ -23,7 +23,8 @@ class KneserNeySpec extends SparkSpec {
   private val pBC = 5.0 / 12
 
   test("self-perplexity matches the hand-computed interpolated KN model") {
-    val out = KneserNey.selfPerplexity(docs((1L, "a b a"), (2L, "a b c")))
+    val d = docs((1L, "a b a"), (2L, "a b c"))
+    val out = KneserNey.scoreAgainst(d, NgramLm.bigramCounts(d))
       .orderBy("doc_id").collect()
     val h1 = -(math.log(pAB) + math.log(pBA)) / 2
     val h2 = -(math.log(pAB) + math.log(pBC)) / 2
@@ -75,7 +76,8 @@ class KneserNeySpec extends SparkSpec {
     // Corpus "x y": one bigram type, count 1 → n1=1, n2=0, D=1.
     // p_cont(y) = max(1−1,0)/1 + 1·1/1·(1/2) = 1/2;
     // p(y|x)   = max(1−1,0)/1 + 1·1/1·(1/2) = 1/2.
-    val out = KneserNey.selfPerplexity(docs((1L, "x y"))).collect()
+    val d = docs((1L, "x y"))
+    val out = KneserNey.scoreAgainst(d, NgramLm.bigramCounts(d)).collect()
     out.length shouldBe 1
     out(0).getAs[Double]("cross_entropy") shouldBe -math.log(0.5) +- 1e-12
   }
@@ -86,7 +88,7 @@ class KneserNeySpec extends SparkSpec {
       (2L, "buy now buy now buy now buy now"),
       (3L, "buy now buy now buy now buy now"),
       (4L, "quarterly glacier permits lapsed unexpectedly"))
-    val byDoc = KneserNey.selfPerplexity(corpus)
+    val byDoc = KneserNey.scoreAgainst(corpus, NgramLm.bigramCounts(corpus))
       .select("doc_id", "perplexity").as[(Long, Double)].collect().toMap
     byDoc(1L) should be < byDoc(4L)
     byDoc.values.foreach(_ should be >= 1.0)
@@ -96,17 +98,18 @@ class KneserNeySpec extends SparkSpec {
     val corpus = docs(
       (1L, "the cat sat on the mat"), (2L, "the dog sat on the log"),
       (3L, "a cat and a dog"), (4L, "on and on and on"))
-    val base = KneserNey.selfPerplexity(corpus)
+    val base = KneserNey.scoreAgainst(corpus, NgramLm.bigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
-    val re = KneserNey.selfPerplexity(corpus.repartition(7))
+    val parts = corpus.repartition(7)
+    val re = KneserNey.scoreAgainst(parts, NgramLm.bigramCounts(parts))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     re.keySet shouldBe base.keySet
     base.foreach { case (k, v) => re(k) shouldBe v +- 1e-12 }
   }
 
   test("docs with fewer than two tokens are absent (the m43 contract)") {
-    val out = KneserNey.selfPerplexity(
-      docs((1L, "solo"), (2L, ""), (3L, "a pair here")))
+    val d = docs((1L, "solo"), (2L, ""), (3L, "a pair here"))
+    val out = KneserNey.scoreAgainst(d, NgramLm.bigramCounts(d))
       .select("doc_id").as[Long].collect()
     out.toSet shouldBe Set(3L)
   }
@@ -158,7 +161,8 @@ class KneserNeySpec extends SparkSpec {
   // λ(a) = D2·1/2 = 1 → p(b|a) = 0 + 1·(1/3) = 1/3;
   // λ(b) = D1·2/2 = 0.5 → p(a|b) = (1−0.5)/2 + 0.5·(1/3) = 5/12.
   test("modified KN matches the hand-computed per-count discounts") {
-    val out = KneserNey.modifiedSelfPerplexity(docs((1L, "a b a"), (2L, "a b c")))
+    val d = docs((1L, "a b a"), (2L, "a b c"))
+    val out = KneserNey.modifiedScoreAgainst(d, NgramLm.bigramCounts(d))
       .orderBy("doc_id").collect()
     val h = -(math.log(1.0 / 3) + math.log(5.0 / 12)) / 2
     out(0).getAs[Double]("cross_entropy") shouldBe h +- 1e-12
@@ -187,9 +191,9 @@ class KneserNeySpec extends SparkSpec {
 
   test("on an all-singleton corpus modified KN equals interpolated KN (both discounts = 1)") {
     val corpus = docs((1L, "p q r"), (2L, "s t u"), (3L, "v w x"))
-    val a = KneserNey.selfPerplexity(corpus)
+    val a = KneserNey.scoreAgainst(corpus, NgramLm.bigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
-    val b = KneserNey.modifiedSelfPerplexity(corpus)
+    val b = KneserNey.modifiedScoreAgainst(corpus, NgramLm.bigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     b.keySet shouldBe a.keySet
     a.foreach { case (k, v) => b(k) shouldBe v +- 1e-12 }
@@ -204,7 +208,8 @@ class KneserNeySpec extends SparkSpec {
   //   p₃(a|ab) = (2−1/3)/2 + (1/3)(1/2)·0.5 = 11/12
   //   p₃(b|ba) = (1−1/3)/1 + (1/3)(1/1)·0.5 = 5/6
   test("trigram KN matches the hand-computed order-3 recursion") {
-    val out = KneserNey.trigramSelfPerplexity(docs((1L, "a b a b a"))).collect()
+    val d = docs((1L, "a b a b a"))
+    val out = KneserNey.trigramScoreAgainst(d, KneserNey.trigramCounts(d)).collect()
     out.length shouldBe 1
     val h = -(math.log(11.0 / 12) + math.log(5.0 / 6) + math.log(11.0 / 12)) / 3
     out(0).getAs[Long]("n_trigrams") shouldBe 3
@@ -246,9 +251,10 @@ class KneserNeySpec extends SparkSpec {
   test("trigram KN is invariant to input partitioning") {
     val corpus = docs((1L, "the cat sat on the mat"), (2L, "the dog sat on the log"),
       (3L, "a cat and a dog sat"), (4L, "on and on and on it went"))
-    val base = KneserNey.trigramSelfPerplexity(corpus)
+    val base = KneserNey.trigramScoreAgainst(corpus, KneserNey.trigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
-    val re = KneserNey.trigramSelfPerplexity(corpus.repartition(7))
+    val parts = corpus.repartition(7)
+    val re = KneserNey.trigramScoreAgainst(parts, KneserNey.trigramCounts(parts))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     re.keySet shouldBe base.keySet
     base.foreach { case (k, v) => re(k) shouldBe v +- 1e-12 }
@@ -257,9 +263,10 @@ class KneserNeySpec extends SparkSpec {
   test("modified KN is invariant to input partitioning") {
     val corpus = docs((1L, "a a a a a"), (2L, "a b a b a b"),
       (3L, "a c b c"), (4L, "d a d"))
-    val base = KneserNey.modifiedSelfPerplexity(corpus)
+    val base = KneserNey.modifiedScoreAgainst(corpus, NgramLm.bigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
-    val re = KneserNey.modifiedSelfPerplexity(corpus.repartition(7))
+    val parts = corpus.repartition(7)
+    val re = KneserNey.modifiedScoreAgainst(parts, NgramLm.bigramCounts(parts))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     base.foreach { case (k, v) => re(k) shouldBe v +- 1e-12 }
   }
@@ -274,7 +281,8 @@ class KneserNeySpec extends SparkSpec {
   // Context (b,a): c=1, one singleton type → λ = D1·1/1 = 1/3 →
   //   p(b|ba) = (1−1/3)/1 + (1/3)·0.5 = 5/6.
   test("trigram modified KN matches the hand-computed D-ladder") {
-    val out = KneserNey.modifiedTrigramSelfPerplexity(docs((1L, "a b a b a")))
+    val d = docs((1L, "a b a b a"))
+    val out = KneserNey.modifiedTrigramScoreAgainst(d, KneserNey.trigramCounts(d))
       .collect()
     out.length shouldBe 1
     val h = -(math.log(0.5) + math.log(5.0 / 6) + math.log(0.5)) / 3
@@ -301,8 +309,8 @@ class KneserNeySpec extends SparkSpec {
     // (D3+ = 3−0 = 3). Every realized trigram is then FULLY discounted
     // (c − D_c = 0 at c = 2 and 3), λ = 1 for both contexts, and the
     // score is pure backoff: p₂ = 0.5 everywhere → ce = ln 2, finite.
-    val out = KneserNey.modifiedTrigramSelfPerplexity(
-      docs((1L, "a b a b a b a"))).collect()
+    val d = docs((1L, "a b a b a b a"))
+    val out = KneserNey.modifiedTrigramScoreAgainst(d, KneserNey.trigramCounts(d)).collect()
     out.length shouldBe 1
     out(0).getAs[Double]("cross_entropy") shouldBe math.log(2.0) +- 1e-12
   }
@@ -312,7 +320,8 @@ class KneserNeySpec extends SparkSpec {
     // D1 = 1−2·1·(0/2) = 1, D2 := 0 (guard), D3+ = Y = 1. Singleton
     // contexts: λ = D1 = 1 → pure backoff to the (all-singleton) bigram
     // level, itself fully discounted → the continuation/uniform floor.
-    val out = KneserNey.modifiedTrigramSelfPerplexity(docs((1L, "p q r s")))
+    val d = docs((1L, "p q r s"))
+    val out = KneserNey.modifiedTrigramScoreAgainst(d, KneserNey.trigramCounts(d))
       .collect()
     out.length shouldBe 1
     val ce = out(0).getAs[Double]("cross_entropy")
@@ -324,9 +333,10 @@ class KneserNeySpec extends SparkSpec {
   test("trigram modified KN is invariant to input partitioning") {
     val corpus = docs((1L, "the cat sat on the mat"), (2L, "the dog sat on the log"),
       (3L, "a cat and a dog sat"), (4L, "on and on and on it went"))
-    val base = KneserNey.modifiedTrigramSelfPerplexity(corpus)
+    val base = KneserNey.modifiedTrigramScoreAgainst(corpus, KneserNey.trigramCounts(corpus))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
-    val re = KneserNey.modifiedTrigramSelfPerplexity(corpus.repartition(7))
+    val parts = corpus.repartition(7)
+    val re = KneserNey.modifiedTrigramScoreAgainst(parts, KneserNey.trigramCounts(parts))
       .select("doc_id", "cross_entropy").as[(Long, Double)].collect().toMap
     re.keySet shouldBe base.keySet
     base.foreach { case (k, v) => re(k) shouldBe v +- 1e-12 }
@@ -339,9 +349,9 @@ class KneserNeySpec extends SparkSpec {
     // fixture's shape one order up. Σ_w p₄(w|aba) over V = {a,b} = 1.
     val corpus = docs((1L, "a b a b a b"))
     for (modified <- Seq(false, true)) {
-      val lm = KneserNey.ngramCounts(corpus, "text", 4)
+      val lm = KneserNey.ngramCounts(corpus, 4)
       val held = docs((1L, "a b a a"), (2L, "a b a b"))
-      val scored = KneserNey.selfPerplexityN(corpus, 4, modified).collect()
+      val scored = KneserNey.scoreAgainstN(corpus, lm, 4, modified).collect()
       scored.length shouldBe 1
       scored(0).getAs[Long]("n_4grams") shouldBe 3
       scored(0).getAs[Double]("perplexity") should be >= 1.0

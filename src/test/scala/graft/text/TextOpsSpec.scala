@@ -43,7 +43,7 @@ class TextOpsSpec extends SparkSpec {
   test("chunking: sliding windows with overlap, last partial window kept") {
     val words = (1 to 85).map(i => s"w$i")
     val df = Seq((1L, words.mkString(" ")), (2L, "tiny doc")).toDF("doc_id", "text")
-    val out = TextOps.chunk(df, size = 50, stride = 40)
+    val out = TextOps.chunk(df)
       .orderBy("doc_id", "chunk_idx")
       .select("doc_id", "chunk_idx", "n_tokens", "chunk_text")
       .as[(Long, Long, Long, String)].collect()

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""List the defaulted parameters of the Scala sources under src/main.
+"""Census of the one-value parameters of the Scala sources under src/main.
 
 A defaulted parameter is one declared `name: Type = value` in a `def`
 or a class constructor. It is "set" when some call passes a value for
@@ -10,12 +10,25 @@ simple name in src/main, src/test and perfbench/src; `new C(...)`,
 A call `Owner.name(...)` counts only for the `name` of the object or
 class `Owner` when one defines it, and an unqualified `name(...)` only
 for a `name` in the same file when there is one; every other call
-counts for each `name` in src/main, so the list errs towards keeping.
+counts for each `name` in src/main, so the lists err towards keeping.
+
+Two more lists name the parameters with one value in use:
+- required parameters that every call passes the same literal;
+- defaulted parameters whose calls, between the values they pass and
+  the default the others leave in place, use one literal.
+A literal is a string, number, character, `true` or `false`. A
+parameter is never listed when some call passes it a non-literal, when
+the method is reached as a function value (`Owner.name` or `name _`
+with no argument list), when a call leaves it out without a default
+(another overload or a partial application), when the method is an
+`override` or one of several overloads in its object, or when it is a
+vararg or a `copy`-set class field.
 
 Usage: python3 tools/main_knobs.py [repo root]     (defaults to .)
 Prints the number of defaulted parameters in src/main, then one
 "<file>:<line> <method or class>.<param> = <default>" row for each that
-no call sets.
+no call sets, then one "<file>:<line> <method or class>.<param> <- <literal>"
+row for each parameter of the two one-value lists.
 """
 import os
 import re
@@ -177,8 +190,9 @@ def owner_at(spans, i):
 
 
 def definitions(text, code):
-    """Yield (name, kind, owner, defaulted) for every def and class, with
-    defaulted = [(group index, param index, param, line, default)]."""
+    """Yield (name, kind, owner, override, params) for every def and
+    class, with params = [(group index, param index, param, line,
+    default or None, vararg)]."""
     spans = owner_spans(code)
     for kind, rx in (("def", DEF_RE), ("class", CLASS_RE)):
         for m in rx.finditer(code):
@@ -190,27 +204,30 @@ def definitions(text, code):
             owner = owner_at(spans, m.start()) if kind == "def" else name
             if kind == "def" and name == "apply":
                 name = owner or name
-            defaulted = []
+            modifiers = code[max(0, m.start() - 40):m.start()]
+            override = kind == "def" and re.search(r"\boverride\s+(?:\w+\s+)*$", modifiers) is not None
+            params = []
             for g, (s, e) in enumerate(param_groups(code, j)):
                 for p, (ps, pe) in enumerate(split_top(code, s, e)):
                     d = default_at(code, ps, pe)
-                    if d < 0:
-                        continue
-                    pname = re.search(IDENT + r"(?=\s*:)", code[ps:d])
-                    pname = pname.group(0) if pname else code[ps:d].strip()
+                    head = code[ps:d if d >= 0 else pe]
+                    pname = re.search(IDENT + r"(?=\s*:)", head)
+                    pname = pname.group(0) if pname else head.strip()
                     line = code.count("\n", 0, ps + len(code[ps:pe]) - len(code[ps:pe].lstrip())) + 1
-                    default = " ".join(text[d + 1:pe].split())
-                    defaulted.append((g, p, pname, line, default))
-            yield name, kind, owner, defaulted
+                    default = " ".join(text[d + 1:pe].split()) if d >= 0 else None
+                    params.append((g, p, pname, line, default, head.rstrip().endswith("*")))
+            yield name, kind, owner, override, params
 
 
-def calls(code, name):
+def calls(text, code, name):
     """Yield, per call of `name`, its qualifier (the identifier before
-    `.name`, or None) and a list of (positional indices, named set)."""
+    `.name`, or None) and a list of argument groups, each a pair
+    (positional {index: argument}, named {param: argument}); a use of
+    `name` as a function value yields groups None."""
     rx = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])")
     for m in rx.finditer(code):
         before = code[max(0, m.start() - 12):m.start()]
-        if re.search(r"\b(def|class|object|trait|type)\s+$", before):
+        if re.search(r"\b(def|class|object|trait|type|val|var|import)\s+$", before):
             continue
         q = re.search(r"(" + IDENT + r")\s*\.\s*$", code[max(0, m.start() - 80):m.start()])
         qual = q.group(1) if q else None
@@ -222,23 +239,33 @@ def calls(code, name):
         groups = []
         while j < len(code) and code[j] == "(":
             e = close_of(code, j)
-            named, pos = set(), set()
+            named, pos = {}, {}
             for k, (s, ae) in enumerate(split_top(code, j + 1, e - 1)):
                 nm = re.match(r"\s*(" + IDENT + r")\s*=(?![=>])", code[s:ae])
                 if nm:
-                    named.add(nm.group(1))
+                    named[nm.group(1)] = text[s + nm.end():ae].strip()
                 else:
-                    pos.add(k)
+                    pos[k] = text[s:ae].strip()
             groups.append((pos, named))
             j = e
             k = j
             while k < len(code) and code[k] in " \t":
                 k += 1
             if k < len(code) and code[k] == "{":
-                groups.append(({0}, set()))
+                groups.append(({0: "{...}"}, {}))
                 break
         if groups:
             yield qual, groups
+        elif code[j:j + 1] in (")", ",", "_", "}") or (qual and code[j:j + 1] in ("\n", "")):
+            yield qual, None
+
+
+LITERAL_RE = re.compile(r'-?(?:\d[\d_]*(?:\.\d+)?(?:[eE][-+]?\d+)?[LlFfDd]?)'
+                        r'|"(?:[^"\\\n]|\\.)*"|\'(?:[^\'\\]|\\.[^\']*)\'|true|false')
+
+
+def is_literal(arg):
+    return LITERAL_RE.fullmatch(arg) is not None
 
 
 def copy_names(code):
@@ -259,8 +286,9 @@ def scala_files(root, sub):
                 yield os.path.join(dirpath, f)
 
 
-def main(argv):
-    root = argv[0] if argv else "."
+def census(root):
+    """(defaulted count, never-set rows, one-literal required rows,
+    one-value defaulted rows) for the sources under `root`."""
     sources = {}
     for sub in CALLER_DIRS:
         for p in scala_files(root, sub):
@@ -270,21 +298,23 @@ def main(argv):
     main_dir = os.path.join(root, "src/main") + os.sep
     owners_of = {}
     files_of = {}
+    overloads = {}
     defs = []
     for p, (text, code) in sources.items():
         if p.startswith(main_dir):
-            for name, kind, owner, defaulted in definitions(text, code):
+            for name, kind, owner, override, params in definitions(text, code):
                 owners_of.setdefault(name, set()).add(owner)
                 files_of.setdefault(name, set()).add(p)
-                defs += [(p, name, kind, owner) + d for d in defaulted]
+                overloads[(p, owner, name)] = overloads.get((p, owner, name), 0) + 1
+                defs += [(p, name, kind, owner, override) + d for d in params]
     copied = set().union(*(copy_names(code) for _, code in sources.values()))
     call_cache = {}
 
     def call_list(name):
         """(file, qualifier, groups) of every call of `name`."""
         if name not in call_cache:
-            call_cache[name] = [(p, q, c) for p, (_, code) in sources.items()
-                                for q, c in calls(code, name)]
+            call_cache[name] = [(p, q, c) for p, (text, code) in sources.items()
+                                for q, c in calls(text, code, name)]
         return call_cache[name]
 
     def reaches(p, owner, name, cp, qual):
@@ -295,18 +325,65 @@ def main(argv):
             return cp == p
         return True
 
-    never = []
-    for p, name, kind, owner, g, i, pname, line, default in defs:
+    def values_in_use(p, name, owner, g, i, pname, default):
+        """(arguments passed, whether some call leaves the default) over
+        every call that reaches the parameter, or None when unsure."""
+        passed, left = [], False
+        for cp, qual, groups in call_list(name):
+            if not reaches(p, owner, name, cp, qual):
+                continue
+            if groups is None or len(groups) <= g:
+                return None
+            pos, named = groups[g]
+            arg = pos.get(i, named.get(pname))
+            if arg is not None:
+                passed.append(arg)
+            elif default is None:
+                return None
+            else:
+                left = True
+        return passed, left
+
+    never, required, defaulted = [], [], []
+    for p, name, kind, owner, override, g, i, pname, line, default, vararg in defs:
+        where = f"{os.path.relpath(p, root)}:{line} {name}.{pname}"
         if kind == "class" and pname in copied:
             continue
-        set_by = any(reaches(p, owner, name, cp, qual) and len(groups) > g
-                     and (i in groups[g][0] or pname in groups[g][1])
-                     for cp, qual, groups in call_list(name))
-        if not set_by:
-            never.append(f"{os.path.relpath(p, root)}:{line} {name}.{pname} = {default}")
-    print(f"defaulted parameters in src/main: {len(defs)}")
+        if default is not None and not any(
+                reaches(p, owner, name, cp, qual) and groups and len(groups) > g
+                and (i in groups[g][0] or pname in groups[g][1])
+                for cp, qual, groups in call_list(name)):
+            never.append(f"{where} = {default}")
+            continue
+        if override or vararg or overloads[(p, owner, name)] > 1:
+            continue
+        use = values_in_use(p, name, owner, g, i, pname, default)
+        if not use or not use[0]:
+            continue
+        passed, left = use
+        values = set(passed) | ({default} if left else set())
+        if len(values) == 1 and all(is_literal(v) for v in values):
+            value = values.pop()
+            if default is None:
+                required.append(f"{where} <- {value} ({len(passed)} calls)")
+            else:
+                defaulted.append(f"{where} = {default} <- {value} ({len(passed)} setting calls)")
+    n_defaulted = sum(1 for d in defs if d[9] is not None)
+    return n_defaulted, never, required, defaulted
+
+
+def main(argv):
+    root = argv[0] if argv else "."
+    n_defaulted, never, required, defaulted = census(root)
+    print(f"defaulted parameters in src/main: {n_defaulted}")
     print(f"never set by a call in {', '.join(CALLER_DIRS)}: {len(never)}")
     for row in never:
+        print(row)
+    print(f"required, every call passes one literal: {len(required)}")
+    for row in required:
+        print(row)
+    print(f"defaulted, one value in use: {len(defaulted)}")
+    for row in defaulted:
         print(row)
 
 
