@@ -21,7 +21,7 @@ import graft.Snapshot.SnapshotOps
   * Scale notes per stage are on the operators themselves; composing them
   * adds no new shuffles beyond their own (the gate and chunker are pure
   * projections/generates; dedup stages exchange fingerprints, posting
-  * hashes and id pairs — never document text).
+  * hashes, posting id lists and id pairs — never document text).
   */
 object CorpusPipeline {
 

@@ -190,8 +190,8 @@ object DedupAssets {
     materialized(s, "pairs", dir, Seq("doc_a", "doc_b"))(
       graft.dedup.NgramJaccard.invertedIndexPairs(
         graft.queries.CorpusQueries.augmentedDocs(s, dir),
-        // the gated posting pin (NgramJaccard doc) applies: the pair
-        // expansion was the build's dominant single-task stage
+        // the gated posting pin (NgramJaccard doc) applies: the posting
+        // build and the per-doc co-occurrence count keep its width
         threshold = 0.5, dfCap = 50))
 
   /** The ≥ 0.6 slice of [[pairsLoose]] that curation reads. */

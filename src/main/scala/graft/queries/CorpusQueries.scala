@@ -29,9 +29,10 @@ object CorpusQueries {
     * m72 treating 40k organic docs as the "new batch" (6 GB of spill)
     * because 10000 was hardcoded against a 50k-id corpus. Cached per
     * (dir, table): one narrow max() scan per JVM — fixture plumbing, not
-    * a production operator. */
+    * a production operator. `df` is by name: a warm key builds no frame,
+    * so it runs no parquet schema job either. */
   private val offsets = new graft.Memo[Long]
-  private def synthOffset(df: DataFrame, key: String, idCol: String): Long =
+  private def synthOffset(df: => DataFrame, key: String, idCol: String): Long =
     offsets(key) {
       val mx = Option(df.agg(max(col(idCol))).head().get(0))
         .fold(0L)(_.asInstanceOf[Long])
@@ -1716,8 +1717,8 @@ object CorpusQueries {
     * contained direction where the symmetric m14 tier is blind. */
   def containmentPairs(s: SparkSession, dir: String): DataFrame =
     graft.dedup.NgramJaccard.containmentPairs(
-      // the gated posting pin (NgramJaccard doc) applies: the pair
-      // expansion ran 0.48 s over 4 AQE-coalesced tasks at sf0.1
+      // the gated posting pin (NgramJaccard doc) applies: the posting
+      // build and the per-doc co-occurrence count keep its width
       Tables.spread(quotedAugmentedDocs(s, dir), "doc_id", Tables.CorpusSpread))
 
   /** Stored-index BM25 probe (m112): same queries, same k as m103, but

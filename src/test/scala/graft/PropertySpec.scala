@@ -125,25 +125,62 @@ object PropertySpec extends Properties("graft") {
       got == want
     }
 
+  // Three random token docs over a three-word alphabet plus a copy of each
+  // with one token replaced: the copies put pairs near every threshold
+  // below, and most grams recur across docs, so a dfCap of 3 drops some.
+  private val nearDupTextsGen: Gen[List[String]] = for {
+    base <- Gen.listOfN(3, Gen.listOfN(8, Gen.oneOf("aa", "bb", "cc")))
+    edits <- Gen.listOfN(3, Gen.zip(Gen.choose(0, 7), Gen.oneOf("aa", "bb", "cc", "dd")))
+  } yield base.map(_.mkString(" ")) ++
+    base.zip(edits).map { case (b, (i, w)) => b.updated(i, w).mkString(" ") }
+
+  /** Each doc's word 3-shingles minus those in more than `dfCap` docs. */
+  private def keptShingles(texts: List[String], dfCap: Int): List[Set[String]] = {
+    val sets = texts.map(_.split(" ").sliding(3).map(_.mkString(" ")).toSet)
+    val df = sets.flatten.groupBy(identity).map { case (g, gs) => g -> gs.size }
+    sets.map(_.filter(df(_) <= dfCap))
+  }
+
+  /** (ia, ib, |A∩B|, |A|, |B|) for every pair sharing a kept shingle. */
+  private def naiveOverlaps(texts: List[String], dfCap: Int) = {
+    val kept = keptShingles(texts, dfCap).zipWithIndex
+    for {
+      (sa, ia) <- kept; (sb, ib) <- kept
+      if ia < ib
+      inter = (sa & sb).size
+      if inter > 0
+    } yield (ia.toLong, ib.toLong, inter, sa.size, sb.size)
+  }
+
   property("inverted-index jaccard equals the naive all-pairs shingle jaccard") =
-    forAll(Gen.listOfN(6, Gen.listOfN(8, Gen.oneOf("aa", "bb", "cc", "dd"))
-      .map(_.mkString(" ")))) { texts =>
+    forAll(nearDupTextsGen) { texts =>
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-      val got = graft.dedup.NgramJaccard
-        .invertedIndexPairs(docs, threshold = 0.0, dfCap = 100)
-        .select("doc_a", "doc_b", "jaccard")
-        .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-      def shingleSet(t: String) =
-        t.split(" ").sliding(3).map(_.mkString(" ")).toSet
-      val want = (for {
-        (a, ia) <- texts.zipWithIndex; (b, ib) <- texts.zipWithIndex
-        if ia < ib
-        sa = shingleSet(a); sb = shingleSet(b)
-        inter = (sa & sb).size
-        if inter > 0
-      } yield (ia.toLong, ib.toLong) ->
-        inter.toDouble / (sa.size + sb.size - inter)).toMap
-      got == want
+      // (0.0, 100) keeps every co-occurring pair; the rest cut at the
+      // per-doc bound and drop the grams in more than 3 docs
+      Prop.all(Seq(0.0 -> 100, 0.1 -> 3, 0.5 -> 3, 0.6 -> 3, 0.9 -> 3).map { case (t, cap) =>
+        val got = graft.dedup.NgramJaccard
+          .invertedIndexPairs(docs, threshold = t, dfCap = cap)
+          .select("doc_a", "doc_b", "jaccard")
+          .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+        val want = naiveOverlaps(texts, cap)
+          .map { case (a, b, i, na, nb) => (a, b) -> i.toDouble / (na + nb - i) }
+          .filter(_._2 >= t).toMap
+        (got == want) :| s"threshold $t, dfCap $cap"
+      }: _*)
+    }
+
+  property("containment pairs equal the naive all-pairs shingle containment") =
+    forAll(nearDupTextsGen) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      Prop.all(Seq(0.1, 0.5, 0.6, 0.9).map { t =>
+        val got = graft.dedup.NgramJaccard.containmentPairs(docs, threshold = t)
+          .as[(Long, Long, Long, Long, Long, Double, Double)].collect().toSet
+        val want = naiveOverlaps(texts, 50)
+          .map { case (a, b, i, na, nb) =>
+            (a, b, na.toLong, nb.toLong, i.toLong, i.toDouble / na, i.toDouble / nb) }
+          .filter(r => math.max(r._6, r._7) >= t).toSet
+        (got == want) :| s"threshold $t"
+      }: _*)
     }
 
   property("qualityScore ∈ [0,1] and langId total for arbitrary strings") =

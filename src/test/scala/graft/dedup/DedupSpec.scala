@@ -141,6 +141,26 @@ class DedupSpec extends SparkSpec {
       .count() should be > 0L
   }
 
+  test("pairs exactly at the bound survive; one just below it does not") {
+    val t = 0.6
+    val bound = Seq(
+      // B ⊂ A: n_a = 5, n_b = shared = 3 → shared = t·n_a and J = 3/5 = t
+      (1L, "a1 a2 a3 a4 a5 a6 a7"), (2L, "a1 a2 a3 a4 a5"),
+      // n_a = n_b = 8, shared = 6 → J = 6/10 = t
+      (3L, "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10"), (4L, "b1 b2 b3 b4 b5 b6 b7 b8 x1 x2"),
+      // n_a = 5, n_b = 4, shared = 3: both sides pass shared/n ≥ t, J = 3/6
+      (5L, "c1 c2 c3 c4 c5 c6 c7"), (6L, "c1 c2 c3 c4 c5 y1"),
+      // n_a = n_b = 5, shared = 3: containment t on both sides, J = 3/7
+      (7L, "d1 d2 d3 d4 d5 d6 d7"), (8L, "d1 d2 d3 d4 d5 z1 z2")).toDF("doc_id", "text")
+    NgramJaccard.invertedIndexPairs(bound, threshold = t)
+      .as[(Long, Long, Double)].collect().toSet shouldBe
+      Set((1L, 2L, 0.6), (3L, 4L, 0.6))
+    NgramJaccard.containmentPairs(bound, threshold = t)
+      .as[(Long, Long, Long, Long, Long, Double, Double)].collect().toSet shouldBe Set(
+        (1L, 2L, 5L, 3L, 3L, 0.6, 1.0), (3L, 4L, 8L, 8L, 6L, 0.75, 0.75),
+        (5L, 6L, 5L, 4L, 3L, 0.6, 0.75), (7L, 8L, 5L, 5L, 3L, 0.6, 0.6))
+  }
+
   test("dedup clusters: chain and triangle components converge to min label") {
     // chain 10-20-30-40 (diameter 3, needs >1 propagation round),
     // triangle 1-2-3, isolated pair 7-8.

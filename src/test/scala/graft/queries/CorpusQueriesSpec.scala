@@ -378,4 +378,20 @@ class CorpusQueriesSpec extends SparkSpec {
     out("s1") shouldBe ((3L, 3L))
     out("s2") shouldBe ((1L, 1L))
   }
+
+  test("a warm docOff/vecOff runs no Spark job: the memo answers before any frame is built") {
+    val dir = sf("sf0.001")
+    val (doc, vec) = (CorpusQueries.docOff(spark, dir), CorpusQueries.vecOff(spark, dir))
+    val sc = spark.sparkContext
+    assert(org.apache.spark.graft.BenchListenerBus.drain(sc, 60000L),
+      "listener bus did not drain")
+    val listener = new graft.tools.Harness.StatsListener(sc)
+    sc.addSparkListener(listener)
+    try {
+      CorpusQueries.docOff(spark, dir) shouldBe doc
+      CorpusQueries.vecOff(spark, dir) shouldBe vec
+      listener.quiesce()
+      listener.jobs shouldBe empty
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -974,8 +974,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("m113: containment pairs shuffle hashed shingles and id lists, never text") {
     val p = plan(CorpusQueries.containmentPairs(spark, dir))
-    // the m14 capped-posting shape: ONE gram exchange builds the posting
-    // list, pair expansion explodes inside it (no second corpus shuffle)
+    // the m14 kernel: a gram exchange builds the capped posting lists, a
+    // doc exchange carries their id arrays to the per-doc count, and only
+    // bound survivors and per-doc sizes reach the pair join
     val exchanges = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
     (exchanges should not).include("text#")
     (p should not).include("CartesianProduct")
